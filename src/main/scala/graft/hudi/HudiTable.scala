@@ -171,19 +171,20 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
 
   /** One action tuple of the driver-side replay:
     * (instant, partitionPath, fileId, path(null for replaces), size, isAdd). */
-  private type LocalAction = (String, String, String, String, Long, Boolean)
+  private[hudi] type LocalAction = (String, String, String, String, Long, Boolean)
 
   /** Driver-side parse of the given instants' commit metadata — None
     * when the instant files' cumulative size is over budget (or any
     * instant is unlisted), which sends the caller to [[actionsDF]]. */
-  private def localActions(instantTimes: Seq[String]): Option[Seq[LocalAction]] = {
+  private[hudi] def localActions(instantTimes: Seq[String]): Option[Seq[LocalAction]] = {
     val byTime = timeline.completedInstants().map(i => i.time -> i).toMap
     if (instantTimes.exists(t => !byTime.contains(t))) return None
     val fsys = timeline.hoodieDir.getFileSystem(hconf)
     def lens(dir: Path): Map[String, Long] =
       if (!fsys.exists(dir)) Map.empty
       else fsys.listStatus(dir).iterator.map(s => s.getPath.getName -> s.getLen).toMap
-    val sizes = lens(timeline.hoodieDir) ++ lens(timeline.archivedDir)
+    // active copy wins, as reads resolve it (HudiTimeline.existingInstantFile)
+    val sizes = lens(timeline.archivedDir) ++ lens(timeline.hoodieDir)
     val fileSizes = instantTimes.map(t => sizes.get(byTime(t).fileName))
     if (fileSizes.exists(_.isEmpty)) return None
     if (fileSizes.flatten.sum > MaxLocalReplayBytes) return None

@@ -43,21 +43,6 @@ object DataFileFormat {
   }
 }
 
-/** Table formats we translate between (ref `TableFormat.java:26-37`). */
-sealed abstract class TableFormat(val name: String)
-object TableFormat {
-  case object Delta extends TableFormat("delta")
-  case object Iceberg extends TableFormat("iceberg")
-  case object Hudi extends TableFormat("hudi")
-  val all: Seq[TableFormat] = Seq(Delta, Iceberg, Hudi)
-  def fromName(s: String): TableFormat = s.toLowerCase match {
-    case "delta"   => Delta
-    case "iceberg" => Iceberg
-    case "hudi"    => Hudi
-    case other     => throw new IllegalArgumentException(s"unknown table format: $other")
-  }
-}
-
 // Partition transforms live in PartitionTransform.scala:
 // TimeGranularity / PartitionFieldDef / PartitionTransform (spec parse,
 // value codecs, Delta generated-column expressions, Iceberg ordinals).

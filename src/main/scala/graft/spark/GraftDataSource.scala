@@ -1,14 +1,11 @@
 package graft.spark
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
-import graft.delta.DeltaTable
-import graft.hudi.HudiTable
-import graft.iceberg.IcebergTable
+import graft.sync.FormatTable
 
 /**
  * `spark.read.format("graft")` / `df.write.format("graft")` — the
@@ -20,7 +17,7 @@ import graft.iceberg.IcebergTable
  *
  * Read options:
  *  - `format`: delta | iceberg | hudi (default: detect from the table's
- *    marker directory `_delta_log` / `metadata` / `.hoodie`)
+ *    marker directory, in [[graft.sync.FormatTable]] order)
  *  - `versionAsOf`: time travel — a Delta version, Iceberg snapshot id,
  *    or Hudi instant
  *  - `timestampAsOf`: time travel by wall clock (epoch millis or
@@ -44,22 +41,12 @@ final class GraftDataSource
   // `spark.readStream.format("graft").load(path)` — the table's change
   // feed as micro-batches (snapshot first, then per-commit adds).
 
-  private def streamSource(
-      spark: SparkSession, parameters: Map[String, String]): (String, String) = {
-    val opts = caseInsensitive(parameters)
-    val path = opts.getOrElse("path",
-      throw new IllegalArgumentException("graft stream needs a path: .load(<tablePath>)"))
-    val fmt = opts.get("format").map(_.toLowerCase)
-      .getOrElse(GraftDataSource.detectFormat(spark, path))
-    (fmt, path)
-  }
-
   override def sourceSchema(
       sqlContext: SQLContext,
       schema: Option[StructType],
       providerName: String,
       parameters: Map[String, String]): (String, StructType) = {
-    val (fmt, path) = streamSource(sqlContext.sparkSession, parameters)
+    val (fmt, path) = tableOf(sqlContext.sparkSession, parameters, "stream", "load")
     // an explicit .schema(...) is the pin authority (the cross-JVM
     // restart escape hatch); otherwise prefer a schema already pinned
     // by a checkpointed stream over this table in this JVM, so a
@@ -75,7 +62,7 @@ final class GraftDataSource
       schema: Option[StructType],
       providerName: String,
       parameters: Map[String, String]): org.apache.spark.sql.execution.streaming.Source = {
-    val (fmt, path) = streamSource(sqlContext.sparkSession, parameters)
+    val (fmt, path) = tableOf(sqlContext.sparkSession, parameters, "stream", "load")
     val opts = caseInsensitive(parameters)
     def intOpt(k: String): Option[Int] = opts.get(k.toLowerCase).map { v =>
       val n = v.toInt
@@ -98,11 +85,8 @@ final class GraftDataSource
       partitionColumns: Seq[String],
       outputMode: org.apache.spark.sql.streaming.OutputMode)
       : org.apache.spark.sql.execution.streaming.Sink = {
+    val (fmt, path) = tableOf(sqlContext.sparkSession, parameters, "stream sink", "start")
     val opts = caseInsensitive(parameters)
-    val path = opts.getOrElse("path",
-      throw new IllegalArgumentException("graft stream sink needs a path: .start(<tablePath>)"))
-    val fmt = opts.get("format").map(_.toLowerCase)
-      .getOrElse(GraftDataSource.detectFormat(sqlContext.sparkSession, path))
     val partCols =
       if (partitionColumns.nonEmpty) partitionColumns
       else opts.get("partitionby").toSeq
@@ -114,28 +98,13 @@ final class GraftDataSource
   override def createRelation(
       sqlContext: SQLContext, parameters: Map[String, String]): BaseRelation = {
     val spark = sqlContext.sparkSession
+    val (fmt, path) = tableOf(spark, parameters, "source", "load")
     val opts = caseInsensitive(parameters)
-    val path = opts.getOrElse("path",
-      throw new IllegalArgumentException("graft source needs a path: .load(<tablePath>)"))
-    val fmt = opts.get("format").map(_.toLowerCase)
-      .getOrElse(GraftDataSource.detectFormat(spark, path))
     val asOf = opts.get("versionasof")
     val tsOf = opts.get("timestampasof").map(GraftDataSource.parseTimestampMillis)
     require(asOf.isEmpty || tsOf.isEmpty,
       "versionAsOf and timestampAsOf are mutually exclusive")
-    val df = fmt match {
-      case "delta" =>
-        val t = DeltaTable.forPath(spark, path)
-        t.toDF(asOf.map(_.toLong).orElse(tsOf.map(t.versionForTimestamp)))
-      case "iceberg" =>
-        val t = IcebergTable.forPath(spark, path)
-        t.toDF(asOf.map(_.toLong).orElse(
-          tsOf.map(ts => t.currentMetadata.snapshotForTimestamp(ts).snapshotId)))
-      case "hudi" =>
-        val t = HudiTable.forPath(spark, path)
-        t.toDF(asOf.orElse(tsOf.map(t.instantForTimestamp)))
-      case other => throw new IllegalArgumentException(s"unknown graft format: $other")
-    }
+    val df = fmt.open(spark, path).read(asOf, tsOf)
     GraftDataSource.fsRelationOf(df).getOrElse(throw new UnsupportedOperationException(
       s"table at $path plans as multiple relations (mixed data-file formats); " +
         "read it through the library API (e.g. IcebergTable.forPath(...).toDF())"))
@@ -150,40 +119,31 @@ final class GraftDataSource
     val opts = caseInsensitive(parameters)
     val path = opts.getOrElse("path",
       throw new IllegalArgumentException("graft sink needs a path: .save(<tablePath>)"))
-    val fmt = opts.getOrElse("format",
-      throw new IllegalArgumentException("graft sink needs .option(\"format\", delta|iceberg|hudi)"))
-      .toLowerCase
+    val fmt = FormatTable(opts.getOrElse("format",
+      throw new IllegalArgumentException(
+        s"graft sink needs .option(\"format\", ${FormatTable.all.mkString("|")})")))
     val partCols = opts.get("partitionby").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val df = data.toDF()
-    val exists = GraftDataSource.tableExists(spark, path, fmt)
-    (mode, exists) match {
+    val table = fmt.open(spark, path)
+    (mode, table.exists) match {
       case (SaveMode.ErrorIfExists, true) =>
         throw new IllegalArgumentException(s"graft $fmt table already exists at $path")
       case (SaveMode.Ignore, true) => ()
-      case (m, true) =>
-        val over = m == SaveMode.Overwrite
-        fmt match {
-          case "delta" =>
-            val t = DeltaTable.forPath(spark, path)
-            if (over) t.overwrite(df, partCols) else t.append(df, partCols)
-          case "iceberg" =>
-            val t = IcebergTable.forPath(spark, path)
-            if (over) t.overwrite(df, partCols) else t.append(df, partCols)
-          case "hudi" =>
-            val t = HudiTable.forPath(spark, path)
-            if (over) t.overwrite(df, partCols) else t.append(df, partCols)
-          case other => throw new IllegalArgumentException(s"unknown graft format: $other")
-        }
-      case (_, false) =>
-        fmt match {
-          case "delta"   => DeltaTable.create(spark, path, df, partCols)
-          case "iceberg" => IcebergTable.create(spark, path, df, partCols)
-          case "hudi"    => HudiTable.create(spark, path, df, partCols)
-          case other => throw new IllegalArgumentException(s"unknown graft format: $other")
-        }
+      case (m, true) => table.write(df, partCols, overwrite = m == SaveMode.Overwrite)
+      case (_, false) => table.create(df, partCols)
     }
-    createRelation(sqlContext, parameters + ("format" -> fmt))
+    createRelation(sqlContext, parameters + ("format" -> fmt.name))
+  }
+
+  /** The `path` option, and the explicit `format` option or else the
+    * format the table's marker names. `what` and `call` word the error. */
+  private def tableOf(spark: SparkSession, parameters: Map[String, String],
+      what: String, call: String): (FormatTable, String) = {
+    val opts = caseInsensitive(parameters)
+    val path = opts.getOrElse("path",
+      throw new IllegalArgumentException(s"graft $what needs a path: .$call(<tablePath>)"))
+    (opts.get("format").map(FormatTable(_)).getOrElse(FormatTable.detect(spark, path)), path)
   }
 
   private def caseInsensitive(m: Map[String, String]): Map[String, String] =
@@ -202,29 +162,6 @@ object GraftDataSource {
     else
       java.time.LocalDateTime.parse(t.replace(' ', 'T'))
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-  }
-
-  /** Identify a table by its metadata marker directory. */
-  def detectFormat(spark: SparkSession, path: String): String = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(p, "_delta_log"))) "delta"
-    else if (fs.exists(new Path(p, ".hoodie"))) "hudi"
-    else if (fs.exists(new Path(p, "metadata"))) "iceberg"
-    else throw new IllegalArgumentException(
-      s"no graft table at $path (no _delta_log/.hoodie/metadata marker); " +
-        "pass .option(\"format\", ...) to create one")
-  }
-
-  def tableExists(spark: SparkSession, path: String, fmt: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = fmt match {
-      case "delta" => "_delta_log"
-      case "hudi" => ".hoodie"
-      case _ => "metadata"
-    }
-    fs.exists(new Path(p, marker))
   }
 
   /** The single file-scan relation of a planned table read, if the plan

@@ -260,12 +260,7 @@ object SyncEngine {
         * specs in any form [[graft.model.PartitionTransform.parse]]
         * accepts, including the CLI's `path:type[:format]`. */
       partitionSpec: Option[Seq[String]] = None): SyncSource = {
-    val base = format.toLowerCase match {
-      case "delta"   => deltaSource(DeltaTable.forPath(spark, path))
-      case "iceberg" => icebergSource(IcebergTable.forPath(spark, path))
-      case "hudi"    => hudiSource(HudiTable.forPath(spark, path))
-      case other     => throw new IllegalArgumentException(s"unknown source format: $other")
-    }
+    val base = FormatTable(format).open(spark, path).source
     partitionSpec.filter(_.nonEmpty) match {
       case None => base
       case Some(specs) =>
@@ -276,6 +271,7 @@ object SyncEngine {
           def sourceId = base.sourceId
           def dataRoot = base.dataRoot
           def schema = base.schema
+          override def schemaAtVersion(v: String) = base.schemaAtVersion(v)
           def partitionColumns: Seq[String] = normalized
           def currentVersion = base.currentVersion
           def versionExists(v: String) = base.versionExists(v)
@@ -285,6 +281,7 @@ object SyncEngine {
           def changes(v: String) = base.changes(v)
           override def inflightVersions = base.inflightVersions
           override def recordKeyFields = base.recordKeyFields
+          override def physicalNames = base.physicalNames
           override def laterOf(a: String, b: String) = base.laterOf(a, b)
           override def statisticsProps(v: String) = base.statisticsProps(v)
         }
@@ -292,12 +289,7 @@ object SyncEngine {
   }
 
   def targetFor(spark: SparkSession, format: String, path: String): SyncTarget =
-    format.toLowerCase match {
-      case "delta"   => deltaTarget(spark, path)
-      case "iceberg" => icebergTarget(spark, path)
-      case "hudi"    => hudiTarget(spark, path)
-      case other     => throw new IllegalArgumentException(s"unknown target format: $other")
-    }
+    FormatTable(format).open(spark, path).target
 }
 
 /** A table format viewed as a sync source: versioned history + canonical
@@ -394,7 +386,7 @@ trait SyncTarget {
 // ---------------------------------------------------------------- Delta
 
 private final class DeltaSource(t: DeltaTable) extends SyncSource {
-  def format = "delta"
+  def format = FormatTable.Delta.name
   def sourceId = s"delta:${t.tablePath}"
   def dataRoot: String = t.dataRoot
   private def defs = {
@@ -465,7 +457,7 @@ private final class DeltaSource(t: DeltaTable) extends SyncSource {
 }
 
 private final class DeltaTarget(spark: SparkSession, val targetPath: String) extends SyncTarget {
-  def format = "delta"
+  def format = FormatTable.Delta.name
   private def table = DeltaTable.forPath(spark, targetPath)
   private def exists = table.log.latestVersion().nonEmpty
   def syncState(): Map[String, String] =
@@ -498,7 +490,7 @@ private final class DeltaTarget(spark: SparkSession, val targetPath: String) ext
 // -------------------------------------------------------------- Iceberg
 
 private final class IcebergSource(t: IcebergTable) extends SyncSource {
-  def format = "iceberg"
+  def format = FormatTable.Iceberg.name
   def sourceId = s"iceberg:${t.tablePath}"
   def dataRoot: String = t.dataRoot
   def schema: StructType = t.sparkSchema
@@ -555,7 +547,7 @@ private final class IcebergSource(t: IcebergTable) extends SyncSource {
 }
 
 private final class IcebergTarget(spark: SparkSession, val targetPath: String) extends SyncTarget {
-  def format = "iceberg"
+  def format = FormatTable.Iceberg.name
   private def table = IcebergTable.forPath(spark, targetPath)
   private def exists = table.log.latestVersion().nonEmpty
   /** Repair a corrupt current snapshot BEFORE consulting sync state:
@@ -593,7 +585,7 @@ private final class HudiSource(t: HudiTable,
       * replacecommit replays through the SAME incremental feed and the
       * views re-converge — no watermark reset needed. */
     readOptimized: Boolean = false) extends SyncSource {
-  def format = "hudi"
+  def format = FormatTable.Hudi.name
   def sourceId = s"hudi:${t.tablePath}"
   def dataRoot: String = t.dataRoot
   def schema: StructType = t.schemaAt(None)
@@ -643,7 +635,7 @@ private final class HudiSource(t: HudiTable,
 }
 
 private final class HudiTarget(spark: SparkSession, val targetPath: String) extends SyncTarget {
-  def format = "hudi"
+  def format = FormatTable.Hudi.name
   private def table = HudiTable.forPath(spark, targetPath)
   private def exists = table.timeline.exists
   def syncState(): Map[String, String] =

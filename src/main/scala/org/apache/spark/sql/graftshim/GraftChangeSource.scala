@@ -7,9 +7,7 @@ import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
-import graft.delta.DeltaTable
-import graft.hudi.HudiTable
-import graft.iceberg.IcebergTable
+import graft.sync.FormatTable
 
 /**
  * A stream position: `snap` is the snapshot the stream started from,
@@ -55,11 +53,8 @@ object GraftStreamOffset {
  *  - `maxCommitsPerTrigger` caps how many commits each later batch
  *    spans, so a restart after a long gap drains the backlog in bounded
  *    batches instead of one cluster-sized replay.
- *  - the tail poll is incremental where the format allows it: Delta
- *    probes only versions after the current position (contiguous
- *    numbering) instead of re-listing the full `_delta_log`; Iceberg
- *    reads one metadata.json; Hudi lists the active timeline only
- *    (archival keeps it bounded).
+ *  - the tail poll is incremental where the format allows it (see
+ *    each codec's `FormatTable.tokensAfter`).
  *
  * Offsets are self-describing ([[GraftStreamOffset]]), so a restart
  * that lost the in-memory position replays correctly from the engine's
@@ -72,7 +67,7 @@ object GraftStreamOffset {
  * any non-replayable history gap.
  */
 final class GraftChangeSource(
-    spark: SparkSession, fmt: String, path: String,
+    spark: SparkSession, fmt: FormatTable, path: String,
     /** The engine-provided source-private state dir; None = schema-only use. */
     metadataPath: Option[String] = None,
     maxCommitsPerTrigger: Option[Int] = None,
@@ -86,54 +81,8 @@ final class GraftChangeSource(
   import java.nio.charset.StandardCharsets.UTF_8
   import org.apache.hadoop.fs.Path
 
-  /** Commit tokens oldest → newest (full listing — stream start only). */
-  private def tokens: Seq[String] = fmt match {
-    case "delta"   => DeltaTable.forPath(spark, path).log.listVersions().map(_.toString)
-    case "iceberg" => IcebergTable.forPath(spark, path).snapshotIds.map(_.toString)
-    case "hudi"    => HudiTable.forPath(spark, path).instants
-  }
-
-  /** Tokens strictly after `tail` — the per-trigger poll. */
-  private def tokensAfter(tail: String): Seq[String] = fmt match {
-    case "delta" =>
-      val log = DeltaTable.forPath(spark, path).log
-      val after = log.listVersionsAfter(tail.toLong)
-      // the contiguous probe stops at the first hole, so when log
-      // retention expired `tail+1` the poll would return empty FOREVER —
-      // a silent stall. A checkpoint past the tail proves newer versions
-      // exist beyond the hole (log cleanup requires one): fail with the
-      // same non-replayable-gap error as the Iceberg branch below.
-      if (after.isEmpty) log.lastCheckpoint().filter(_ > tail.toLong).foreach { cp =>
-        throw new IllegalStateException(
-          s"GraftChangeSource[$fmt] $path: commits ${tail.toLong + 1}..$cp " +
-          s"were expired by log retention while the stream was down " +
-          s"(version ${tail.toLong + 1} is missing but a checkpoint " +
-          s"exists at $cp). The history gap is not replayable; restart " +
-          "the stream from a fresh checkpoint.")
-      }
-      after.map(_.toString)
-    case _ =>
-      // iceberg: one metadata.json read; hudi: active-timeline listing.
-      // Snapshot ids are not ordered by value — split on log position.
-      val ts = tokens
-      val i = ts.indexOf(tail)
-      if (i >= 0) ts.drop(i + 1)
-      else if (fmt == "hudi")
-        // Hudi instants are time-ordered strings, so a tail that has
-        // been archived off the active timeline still orders correctly
-        // against the instants that remain.
-        ts.filter(_ > tail)
-      else
-        // Iceberg snapshot ids are random longs: if the tail expired
-        // out of the metadata log there is no order to recover the
-        // unseen suffix from — a value comparison would emit an
-        // arbitrary subset. Fail the stream rather than lose data.
-        throw new IllegalStateException(
-          s"GraftChangeSource[$fmt] $path: stream position $tail is no " +
-          "longer in the table's snapshot log (snapshots expired?). " +
-          "The history gap is not replayable; restart the stream from " +
-          "a fresh checkpoint.")
-  }
+  /** Each call re-reads the table's metadata, so polls see new commits. */
+  private def table = fmt.open(spark, path)
 
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
@@ -167,7 +116,7 @@ final class GraftChangeSource(
             .asInstanceOf[StructType]
           finally in.close()
         }.toOption
-      val hadRegistryEntry = GraftChangeSource.pinnedRegistry.containsKey((fmt, path))
+      val hadRegistryEntry = GraftChangeSource.pinnedRegistry.containsKey((fmt.name, path))
       def persist(s: StructType): StructType = {
         fsys.mkdirs(p.getParent)
         val tmp = new Path(p.getParent, ".graft-schema-tmp")
@@ -183,14 +132,14 @@ final class GraftChangeSource(
       val pinned = userSchema match {
         case Some(u) => if (persisted.contains(u)) u else persist(u)
         case None => persisted.getOrElse(
-          persist(GraftChangeSource.currentTableSchema(spark, fmt, path)))
+          persist(table.read().schema))
       }
-      GraftChangeSource.pinnedRegistry.put((fmt, path), pinned)
+      GraftChangeSource.pinnedRegistry.put((fmt.name, path), pinned)
       // a persisted pin that analysis could not have seen (no in-JVM
       // registry entry, no explicit schema) only works if the table
       // still matches it
       if (userSchema.isEmpty && persisted.isDefined && !hadRegistryEntry &&
-          GraftChangeSource.currentTableSchema(spark, fmt, path) != pinned)
+          table.read().schema != pinned)
         throw new IllegalStateException(
           s"GraftChangeSource[$fmt] $path: the table's schema changed " +
           s"while the stream was down, and this restart runs in a fresh " +
@@ -245,11 +194,7 @@ final class GraftChangeSource(
   private def chunksFor(snapTok: String): Int = maxFilesPerTrigger match {
     case None => 1
     case Some(m) =>
-      val files = fmt match {
-        case "delta"   => DeltaTable.forPath(spark, path).snapshotFileCount(Some(snapTok.toLong))
-        case "iceberg" => IcebergTable.forPath(spark, path).snapshotFileCount(Some(snapTok.toLong))
-        case "hudi"    => HudiTable.forPath(spark, path).snapshotFileCount(Some(snapTok))
-      }
+      val files = table.snapshotFileCount(snapTok)
       math.max(1, math.ceil(files.toDouble / m).toInt)
   }
 
@@ -261,7 +206,7 @@ final class GraftChangeSource(
   @volatile private var availableNowFence: Option[String] = None
 
   override def prepareForTriggerAvailableNow(): Unit = synchronized {
-    availableNowFence = tokens.lastOption
+    availableNowFence = table.tokens.lastOption
   }
 
   /** The per-trigger caps are constructor options (`maxFilesPerTrigger`
@@ -270,7 +215,7 @@ final class GraftChangeSource(
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
   override def reportLatestOffset(): OffsetV2 =
-    tokens.lastOption.map(t => GraftStreamOffset(t, 1, 0, t)).orNull
+    table.tokens.lastOption.map(t => GraftStreamOffset(t, 1, 0, t)).orNull
 
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = synchronized {
     // the engine's own start offset is authoritative when the
@@ -287,7 +232,7 @@ final class GraftChangeSource(
       case None =>
         // under AvailableNow, snapshot the fence token (not a commit
         // that may have landed since prepare)
-        availableNowFence.orElse(tokens.lastOption).map { snapTok =>
+        availableNowFence.orElse(table.tokens.lastOption).map { snapTok =>
           // chunked batch 0 only on a genuinely fresh stream; after a
           // lost position file, propose a plain offset — getBatch then
           // derives the correct span from the engine's own offsets
@@ -297,7 +242,7 @@ final class GraftChangeSource(
       case Some(p) if !p.complete =>
         Some(p.copy(chunk = p.chunk + 1))
       case Some(p) =>
-        val after = tokensAfter(p.tail)
+        val after = table.tokensAfter(p.tail)
         val fresh = availableNowFence match {
           case Some(f) =>
             val i = after.indexOf(f)
@@ -334,7 +279,7 @@ final class GraftChangeSource(
     // expired it while the stream was down (this call may be the
     // engine's restart replay of the last batch), fail with a NAMED
     // gap instead of a raw metadata error — same posture on restart
-    // as the tail poll's in-flight check in tokensAfter
+    // as the tail poll's in-flight check in FormatTable.tokensAfter
     def reconstruct[A](what: => A): A = try what catch {
       case e: IllegalStateException if e.getMessage != null &&
           e.getMessage.contains("not replayable") => throw e
@@ -348,8 +293,8 @@ final class GraftChangeSource(
           "fresh checkpoint.", e)
     }
     val parts =
-      chunkRange.map(k => reconstruct(snapshotChunk(snapOwner.snap, k, snapOwner.chunks))) ++
-        (if (tailTo != tailFrom) Seq(reconstruct(changesBetween(tailFrom, tailTo))) else Seq.empty)
+      chunkRange.map(k => reconstruct(table.snapshotChunk(snapOwner.snap, k, snapOwner.chunks))) ++
+        (if (tailTo != tailFrom) Seq(reconstruct(table.changes(tailFrom, tailTo))) else Seq.empty)
     val batch = parts.reduceOption(_ unionByName _).getOrElse(
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
     // keep the advisory position in sync with what the engine replayed
@@ -387,18 +332,6 @@ final class GraftChangeSource(
       .internalCreateDataFrame(aligned.queryExecution.toRdd, schema, isStreaming = true)
   }
 
-  private def changesBetween(fromExclusive: String, toInclusive: String): DataFrame = fmt match {
-    case "delta"   => DeltaTable.forPath(spark, path).changesAsDF(fromExclusive.toLong, toInclusive.toLong)
-    case "iceberg" => IcebergTable.forPath(spark, path).changesAsDF(fromExclusive.toLong, toInclusive.toLong)
-    case "hudi"    => HudiTable.forPath(spark, path).changesAsDF(fromExclusive, toInclusive)
-  }
-
-  private def snapshotChunk(token: String, chunk: Int, totalChunks: Int): DataFrame = fmt match {
-    case "delta"   => DeltaTable.forPath(spark, path).snapshotChunkDF(Some(token.toLong), chunk, totalChunks)
-    case "iceberg" => IcebergTable.forPath(spark, path).snapshotChunkDF(Some(token.toLong), chunk, totalChunks)
-    case "hudi"    => HudiTable.forPath(spark, path).snapshotChunkDF(Some(token), chunk, totalChunks)
-  }
-
   override def commit(end: OffsetV1): Unit = ()
   override def stop(): Unit = ()
 }
@@ -422,18 +355,11 @@ object GraftChangeSource {
     * checkpoint pin is untouched). */
   def forgetPin(fmt: String, path: String): Unit = pinnedRegistry.remove((fmt, path))
 
-  def currentTableSchema(
-      spark: SparkSession, fmt: String, path: String): StructType = fmt match {
-    case "delta"   => DeltaTable.forPath(spark, path).toDF().schema
-    case "iceberg" => IcebergTable.forPath(spark, path).toDF().schema
-    case "hudi"    => HudiTable.forPath(spark, path).toDF().schema
-  }
-
   /** What analysis should see: the pinned schema when a source over
     * this table already resolved one in this JVM, else the table's
     * current schema (a genuinely fresh stream pins exactly that). */
   def analysisSchema(
-      spark: SparkSession, fmt: String, path: String): StructType =
-    Option(pinnedRegistry.get((fmt, path)))
-      .getOrElse(currentTableSchema(spark, fmt, path))
+      spark: SparkSession, fmt: FormatTable, path: String): StructType =
+    Option(pinnedRegistry.get((fmt.name, path)))
+      .getOrElse(fmt.open(spark, path).read().schema)
 }

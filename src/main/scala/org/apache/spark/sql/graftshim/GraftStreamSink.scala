@@ -5,9 +5,7 @@ import org.apache.spark.sql.classic.{DataFrame => ClassicDF, SparkSession => Cla
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.delta.DeltaTable
-import graft.hudi.HudiTable
-import graft.iceberg.IcebergTable
+import graft.sync.FormatTable
 
 /**
  * V1 Structured Streaming sink: `df.writeStream.format("graft")` lands
@@ -25,22 +23,15 @@ import graft.iceberg.IcebergTable
  */
 final class GraftStreamSink(
     spark: SparkSession,
-    fmt: String,
+    fmt: FormatTable,
     path: String,
     partitionColumns: Seq[String],
     outputMode: OutputMode) extends Sink {
 
   private val BatchKey = "graft.stream.batchId"
 
-  private def lastBatchId: Option[Long] = {
-    if (!graft.spark.GraftDataSource.tableExists(spark, path, fmt)) return None
-    val v = fmt match {
-      case "delta"   => DeltaTable.forPath(spark, path).lastCommitProp(BatchKey)
-      case "iceberg" => IcebergTable.forPath(spark, path).tableProperty(BatchKey)
-      case "hudi"    => HudiTable.forPath(spark, path).lastCommitProp(BatchKey)
-    }
-    v.map(_.toLong)
-  }
+  private def lastBatchId: Option[Long] = Some(fmt.open(spark, path))
+    .filter(_.exists).flatMap(_.lastCommitProp(BatchKey)).map(_.toLong)
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     if (lastBatchId.exists(batchId <= _)) return // replayed batch — already landed
@@ -50,22 +41,8 @@ final class GraftStreamSink(
     val session = spark.asInstanceOf[ClassicSession]
     val batchDf: ClassicDF = session.internalCreateDataFrame(
       data.asInstanceOf[ClassicDF].queryExecution.toRdd, data.schema, isStreaming = false)
-    val props = Map(BatchKey -> batchId.toString)
-    val over = outputMode == OutputMode.Complete()
-    fmt match {
-      case "delta" =>
-        val t = DeltaTable.forPath(spark, path)
-        if (over) t.overwrite(batchDf, partitionColumns, props)
-        else t.append(batchDf, partitionColumns, props)
-      case "iceberg" =>
-        val t = IcebergTable.forPath(spark, path)
-        if (over) t.overwrite(batchDf, partitionColumns, props)
-        else t.append(batchDf, partitionColumns, props)
-      case "hudi" =>
-        val t = HudiTable.forPath(spark, path)
-        if (over) t.overwrite(batchDf, partitionColumns, props)
-        else t.append(batchDf, partitionColumns, props)
-    }
+    fmt.open(spark, path).write(batchDf, partitionColumns,
+      overwrite = outputMode == OutputMode.Complete(), Map(BatchKey -> batchId.toString))
   }
 
   override def toString: String = s"GraftStreamSink[$fmt @ $path]"

@@ -224,6 +224,19 @@ class HudiTableSpec extends SparkTestBase {
     assert(rows.count() == src.filter(col("o_orderkey").between(1, 50)).count())
   }
 
+  test("local-replay fence sizes an instant by its active copy, not an archived twin") {
+    val dir = tmpDir("hudi_fence")
+    val t = HudiTable.create(spark, s"$dir/t", spark.read.parquet(s"$sf0001/nation.parquet"))
+    val inst = t.timeline.completedInstants().last
+    // reads resolve the active copy; a stale archived twin past the
+    // 4 MB budget must not push the replay onto the distributed path
+    val fs = t.timeline.hoodieDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(t.timeline.archivedDir)
+    val out = fs.create(new org.apache.hadoop.fs.Path(t.timeline.archivedDir, inst.fileName))
+    try out.write(Array.fill(5 << 20)(' '.toByte)) finally out.close()
+    assert(t.localActions(Seq(inst.time)).exists(_.nonEmpty))
+  }
+
   test("instantForTimestamp resolves to the latest instant at or before") {
     val dir = tmpDir("hudi_ts")
     val src = spark.read.parquet(s"$sf0001/region.parquet")

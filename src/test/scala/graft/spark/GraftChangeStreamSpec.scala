@@ -324,7 +324,7 @@ class GraftChangeStreamSpec extends SparkTestBase {
     val o = orders
     val t = DeltaTable.create(spark, s"$dir/t", o.limit(10))
     val src = new org.apache.spark.sql.graftshim.GraftChangeSource(
-      spark, "delta", s"$dir/t", metadataPath = Some(s"$dir/state"))
+      spark, graft.sync.FormatTable.Delta, s"$dir/t", metadataPath = Some(s"$dir/state"))
     assert(src.getOffset.isDefined) // position: snapshot at version 0
     // retention expires v1..v2 underneath the running stream; v3 + a
     // checkpoint remain — the poll must error, not idle forever

@@ -3,7 +3,8 @@ package graft.spark
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.delta.DeltaTable
+import graft.hudi.HudiTable
+import graft.iceberg.IcebergTable
 
 class GraftDataSourceSpec extends SparkTestBase {
 
@@ -43,11 +44,23 @@ class GraftDataSourceSpec extends SparkTestBase {
     val dir = tmpDir("ds_timetravel")
     val o = spark.read.parquet(s"$sf0001/orders.parquet")
       .select(col("o_orderkey"), col("o_totalprice"))
-    val t = DeltaTable.create(spark, s"$dir/t", o.filter(col("o_orderkey") % 2 === 0))
-    t.append(o.filter(col("o_orderkey") % 2 === 1), Seq.empty)
-    val v0 = spark.read.format("graft").option("versionAsOf", "0").load(s"$dir/t")
-    assert(v0.count() == o.filter(col("o_orderkey") % 2 === 0).count())
-    assert(spark.read.format("graft").load(s"$dir/t").count() == o.count())
+    val even = o.filter(col("o_orderkey") % 2 === 0)
+    for (fmt <- Seq("delta", "iceberg", "hudi")) {
+      val path = s"$dir/$fmt"
+      even.write.format("graft").option("format", fmt).save(path)
+      o.filter(col("o_orderkey") % 2 === 1).write.format("graft")
+        .option("format", fmt).mode("append").save(path)
+      // the first commit's token: a Delta version, an Iceberg snapshot
+      // id, a Hudi instant time
+      val first = fmt match {
+        case "delta"   => "0"
+        case "iceberg" => IcebergTable.forPath(spark, path).snapshotIds.head.toString
+        case "hudi"    => HudiTable.forPath(spark, path).instants.head
+      }
+      val v0 = spark.read.format("graft").option("versionAsOf", first).load(path)
+      assert(v0.count() == even.count(), s"$fmt versionAsOf")
+      assert(spark.read.format("graft").load(path).count() == o.count(), s"$fmt latest")
+    }
   }
 
   test("timestampAsOf resolves the latest commit at-or-before, per format") {

@@ -62,7 +62,7 @@ class GraftStreamSinkSpec extends SparkTestBase {
       // checkpoint never advanced — on restart the runtime re-delivers the
       // same batch id, which must be a no-op
       val sink = new org.apache.spark.sql.graftshim.GraftStreamSink(
-        spark, fmt, s"$dir/t", Seq.empty, org.apache.spark.sql.streaming.OutputMode.Append())
+        spark, graft.sync.FormatTable(fmt), s"$dir/t", Seq.empty, org.apache.spark.sql.streaming.OutputMode.Append())
       val dup = spark.range(100, 102).select(col("id"))
       sink.addBatch(0L, dup)
       assert(count() == 2, s"$fmt: replayed batch 0 must be skipped")

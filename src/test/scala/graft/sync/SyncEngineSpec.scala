@@ -27,6 +27,24 @@ class SyncEngineSpec extends SparkTestBase {
     assert(tgt.currentMetadata.properties(SyncEngine.VersionProp) == "0")
   }
 
+  test("a partitionSpec override keeps the source's physical names and per-version schema") {
+    val dir = tmpDir("sync_override_cm")
+    val src = DeltaTable.create(spark, s"$dir/src", orders, Seq("o_orderstatus"))
+    src.enableColumnMapping()
+    src.renameColumn("o_totalprice", "price")
+    val base = SyncEngine.sourceFor(spark, "delta", s"$dir/src")
+    val wrapped = SyncEngine.sourceFor(spark, "delta", s"$dir/src", Some(Seq("o_orderstatus")))
+    assert(wrapped.physicalNames.nonEmpty && wrapped.physicalNames == base.physicalNames)
+    assert(wrapped.schemaAtVersion("0").fieldNames.contains("o_totalprice"))
+    assert(wrapped.schema.fieldNames.contains("price"))
+    // Delta and Hudi targets cannot carry the physical-name mapping
+    for (fmt <- Seq("delta", "hudi")) {
+      val e = intercept[IllegalArgumentException](
+        SyncEngine.sync(wrapped, SyncEngine.targetFor(spark, fmt, s"$dir/$fmt")))
+      assert(e.getMessage.contains("cannot sync a column-mapped"), s"$fmt: ${e.getMessage}")
+    }
+  }
+
   test("incremental re-sync after append replays only the pending commit") {
     val dir = tmpDir("sync_d2i_inc")
     val src = DeltaTable.create(spark, s"$dir/src", orders.filter(col("o_orderkey") % 2 === 0))
