@@ -169,14 +169,10 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * the distributed path (guide §1.2/§7.3). */
   private val MaxLocalReplayBytes = 4L * 1024 * 1024
 
-  /** One action tuple of the driver-side replay:
-    * (instant, partitionPath, fileId, path(null for replaces), size, isAdd). */
-  private[hudi] type LocalAction = (String, String, String, String, Long, Boolean)
-
   /** Driver-side parse of the given instants' commit metadata — None
     * when the instant files' cumulative size is over budget (or any
     * instant is unlisted), which sends the caller to [[actionsDF]]. */
-  private[hudi] def localActions(instantTimes: Seq[String]): Option[Seq[LocalAction]] = {
+  private[hudi] def localActions(instantTimes: Seq[String]): Option[Seq[HudiTable.LocalAction]] = {
     val byTime = timeline.completedInstants().map(i => i.time -> i).toMap
     if (instantTimes.exists(t => !byTime.contains(t))) return None
     val fsys = timeline.hoodieDir.getFileSystem(hconf)
@@ -191,10 +187,11 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     Some(instantTimes.sorted.flatMap { t =>
       val m = timeline.readCommitMetadata(byTime(t))
       val adds = m.partitionToWriteStats.toSeq.flatMap { case (pp, stats) =>
-        stats.map(st => (t, pp, st.fileId, st.path, st.fileSizeInBytes, true))
+        stats.map(st => HudiTable.LocalAction(
+          t, pp, st.fileId, st.path, st.fileSizeInBytes, isAdd = true, st.numWrites))
       }
       val reps = m.partitionToReplaceFileIds.toSeq.flatMap { case (pp, ids) =>
-        ids.map(fid => (t, pp, fid, null: String, 0L, false))
+        ids.map(fid => HudiTable.LocalAction(t, pp, fid, null, 0L, isAdd = false, 0L))
       }
       adds ++ reps
     })
@@ -209,10 +206,10 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * (partitionPath, fileId) the newest instant wins, live iff a write
     * (same rule as the distributed window; log files never compete for
     * the base slot). Rows sorted by (partitionPath, fileId). */
-  private def localSliceRows(acts: Seq[LocalAction]): Seq[org.apache.spark.sql.Row] = {
+  private def localSliceRows(acts: Seq[HudiTable.LocalAction]): Seq[org.apache.spark.sql.Row] = {
     val state = scala.collection.mutable.HashMap[
       (String, String), (String, Boolean, String, Long)]()
-    acts.foreach { case (t, pp, fid, path, size, isAdd) =>
+    acts.foreach { case HudiTable.LocalAction(t, pp, fid, path, size, isAdd, _) =>
       if (path == null || !path.contains(".log.")) {
         val k = (pp, fid)
         if (state.get(k).forall(_._1 <= t)) state(k) = (t, isAdd, path, size)
@@ -222,6 +219,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
       org.apache.spark.sql.Row(t, pp, fid, path, size)
     }
   }
+
+  private def slicesDF(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
+    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, sliceSchema)
 
   /**
    * Live base files at `asOf`: per file group the newest action wins;
@@ -235,18 +235,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     // another writer has started but not finished its first commit) is
     // an EMPTY table, not an error: a racing reader must see no live
     // slices rather than crash on `no instants selected`.
-    if (upTo.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("instant", StringType), StructField("partitionPath", StringType),
-          StructField("fileId", StringType), StructField("path", StringType),
-          StructField("size", LongType))))
+    if (upTo.isEmpty) return slicesDF(Seq.empty)
     localActions(upTo) match {
-      case Some(acts) =>
-        return spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(localSliceRows(acts)).asJava,
-          sliceSchema)
+      case Some(acts) => return slicesDF(localSliceRows(acts))
       case None => ()
     }
     val w = Window.partitionBy(col("partitionPath"), col("fileId"))
@@ -352,7 +343,8 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
         // distributed replay job over the same instant files
         val logAdds: Seq[(String, String, String, Long)] = localActions(upTo) match {
           case Some(acts) => acts.collect {
-            case (t, pp, _, path, size, true) if path != null && path.contains(".log.") =>
+            case HudiTable.LocalAction(t, pp, _, path, size, true, _)
+                if path != null && path.contains(".log.") =>
               (t, pp, path, size)
           }
           case None => actionsDF(upTo)
@@ -563,7 +555,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
       // driver-side fast path: the former per-instant distributed
       // replay cost one Spark job PER commit in the range
       val acts = localActions(Seq(inst)) match {
-        case Some(la) => la.collect { case (_, pp, _, path, size, true) => (path, pp, size) }
+        case Some(la) => la.collect {
+          case HudiTable.LocalAction(_, pp, _, path, size, true, _) => (path, pp, size)
+        }
         case None => actionsDF(Seq(inst)).filter(col("isAdd"))
           .select("path", "partitionPath", "size").collect().toSeq
           .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
@@ -976,11 +970,22 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
   /** Read side of `commitProps`: latest value across completed
     * commits, newest-first. */
   def lastCommitProp(key: String): Option[String] =
-    timeline.completedInstants()
-      .filter(i => Set("commit", "replacecommit", "deltacommit").contains(i.action))
-      .reverseIterator
-      .flatMap(i => timeline.readCommitMetadata(i).extraMetadata.get(key))
-      .nextOption()
+    extraMetadataNewestFirst().flatMap(_._2.get(key)).nextOption()
+
+  /** (instant, extraMetadata) newest-first over `among` — time-ordered
+    * completed data instants, all of them by default. The one walk-back
+    * behind commit props and statistics pointers; each caller keeps its
+    * own selection rule. Lazy: a caller that stops early reads only the
+    * instants it consumed. */
+  private[graft] def extraMetadataNewestFirst(
+      among: Seq[HudiInstant] = timeline.completedInstants())
+      : Iterator[(HudiInstant, Map[String, String])] =
+    among.reverseIterator.map(i => i -> timeline.readCommitMetadata(i).extraMetadata)
+
+  /** A commit's statistics pointer: the native ANALYZE key, else the
+    * sync-carried one — the newest of either wins on the table side. */
+  private def statsPointer(em: Map[String, String]): Option[String] =
+    em.get(HudiTable.StatsPathKey).orElse(em.get(graft.model.SyncCas.StatsPathProp))
 
   // ------------------------------------------------- statistics (ANALYZE)
 
@@ -1063,15 +1068,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     // stale and its sidecar would orphan. And never delete what the
     // resolution walk reaches NOW — a competitor may already have
     // registered past us, making its (newer) file the live one.
-    val superseded = timeline.completedInstants()
-      .filter(i => Set("commit", "replacecommit", "deltacommit").contains(i.action))
-      .filter(i => committed.exists(i.time < _))
-      .reverseIterator
-      .flatMap { i =>
-        val em = timeline.readCommitMetadata(i).extraMetadata
-        em.get(HudiTable.StatsPathKey)
-          .orElse(em.get(graft.model.SyncCas.StatsPathProp))
-      }
+    val superseded = extraMetadataNewestFirst(
+        timeline.completedInstants().filter(i => committed.exists(i.time < _)))
+      .flatMap(e => statsPointer(e._2))
       .nextOption()
     val liveNow = resolvedStatsRegistration.map(_._1)
     superseded.filter(p => p != statsPath.toString && !liveNow.contains(p))
@@ -1090,15 +1089,8 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * registration, or to analyzed-never. */
   private def resolvedStatsRegistration: Option[(String, Map[String, String])] = {
     val fsys = new Path(tablePath).getFileSystem(hconf)
-    timeline.completedInstants()
-      .filter(i => Set("commit", "replacecommit", "deltacommit").contains(i.action))
-      .reverseIterator
-      .flatMap { i =>
-        val em = timeline.readCommitMetadata(i).extraMetadata
-        em.get(HudiTable.StatsPathKey)
-          .orElse(em.get(graft.model.SyncCas.StatsPathProp))
-          .map(p => (p, em))
-      }
+    extraMetadataNewestFirst()
+      .flatMap { case (_, em) => statsPointer(em).map(p => (p, em)) }
       .find { case (p, _) => fsys.exists(new Path(p)) }
   }
 
@@ -1705,12 +1697,29 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
       .map(i => timeline.readCommitMetadata(i).extraMetadata)
       .getOrElse(Map.empty)
 
-  /** Normalized absolute path → recorded write count, from the commit
-    * metadata's own write stats — one timeline listing for the whole
-    * loop (listing per instant is O(commits²) metadata-store
-    * round-trips). Shared by [[snapshotDataFiles]] (the sync layer) and
+  /** Live base files of the current snapshot as (partitionPath, path,
+    * size), plus normalized absolute path → recorded write count from
+    * the commit metadata's own write stats. Under the replay fence ONE
+    * driver-side replay yields both, reading each instant file once;
+    * over it, the distributed slice replay plus [[writeCountsByPath]].
+    * Shared by [[snapshotDataFiles]] (the sync layer) and
     * [[planningFacts]] (the planner), so the two can never count rows
     * differently. */
+  private def liveFilesWithCounts(): (Seq[(String, String, Long)], Map[String, Long]) =
+    localActions(instants) match {
+      case Some(acts) =>
+        val counts = acts.iterator.filter(_.isAdd)
+          .map(a => HudiTable.normalize(absoluteOf(a.path)) -> a.numWrites).toMap
+        (localSliceRows(acts).map(r => (r.getString(1), r.getString(3), r.getLong(4))), counts)
+      case None =>
+        val files = fileSlicesDF(None).select("partitionPath", "path", "size").collect().toSeq
+          .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
+        (files, writeCountsByPath())
+    }
+
+  /** Normalized absolute path → recorded write count over the whole
+    * timeline — one listing for the loop (listing per instant is
+    * O(commits²) metadata-store round-trips). */
   private def writeCountsByPath(): Map[String, Long] = {
     val completedByTime = timeline.completedInstants().map(i => i.time -> i).toMap
     instants.flatMap { t =>
@@ -1731,17 +1740,16 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * write count — unknown rows mean no planning fact. */
   def planningFacts(): Option[(Double, Double)] = {
     if (isMor && hasLogFiles(None)) return None
-    val counts = writeCountsByPath()
-    val files = fileSlicesDF(None).select("path", "size").collect().toSeq
+    val (files, counts) = liveFilesWithCounts()
     if (files.isEmpty) return None
     var rows = 0.0
     var bytes = 0.0
-    files.foreach { r =>
-      counts.get(HudiTable.normalize(absoluteOf(r.getString(0)))) match {
+    files.foreach { case (_, path, size) =>
+      counts.get(HudiTable.normalize(absoluteOf(path))) match {
         case Some(n) if n >= 0 => rows += n.toDouble
         case _ => return None
       }
-      bytes += (if (r.isNullAt(1)) 0.0 else r.getLong(1).toDouble)
+      bytes += size.toDouble
     }
     Some((rows, bytes))
   }
@@ -1767,7 +1775,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
         "formats cannot express; run compactMor() first, or opt into the " +
         "read-optimized view (hudiSource(t, readOptimized = true)) whose target " +
         "lags the snapshot by the un-compacted log mutations")
-    val counts = writeCountsByPath()
+    val (files, counts) = liveFilesWithCounts()
     val statsByFile: Map[(String, String), Seq[graft.model.ColumnStatRow]] =
       HudiColStats.read(spark, tablePath, instants) match {
         case None => Map.empty
@@ -1782,15 +1790,14 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
             totalSize = r.getLong(7))).toSeq).toMap
       }
     val partCols = partitionColumns
-    fileSlicesDF(None).select("partitionPath", "path", "size").collect().toSeq.map { r =>
-      val abs = absoluteOf(r.getString(1))
+    files.map { case (pp, path, size) =>
+      val abs = absoluteOf(path)
       graft.model.InternalDataFile(
         physicalPath = abs,
-        partitionValues = HudiTable.parsePartitionPath(r.getString(0), partCols),
-        fileSizeBytes = if (r.isNullAt(2)) 0L else r.getLong(2),
+        partitionValues = HudiTable.parsePartitionPath(pp, partCols),
+        fileSizeBytes = size,
         recordCount = counts.getOrElse(HudiTable.normalize(abs), -1L),
-        columnStats = statsByFile.getOrElse(
-          (r.getString(0), new Path(abs).getName), Seq.empty),
+        columnStats = statsByFile.getOrElse((pp, new Path(abs).getName), Seq.empty),
         lastModified = 0L)
     }
   }
@@ -2109,6 +2116,17 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
 }
 
 object HudiTable {
+
+  /** One action of the driver-side replay: a write stat (`isAdd`, with
+    * its recorded `numWrites`) or a replaced file group (`path` null). */
+  private[hudi] final case class LocalAction(
+      instant: String,
+      partitionPath: String,
+      fileId: String,
+      path: String,
+      size: Long,
+      isAdd: Boolean,
+      numWrites: Long)
 
   /** Per-table monitor making a sync commit's validate→publish atomic
     * WITHIN one JVM — the analog of real Hudi's InProcessLockProvider

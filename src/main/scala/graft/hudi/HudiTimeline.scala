@@ -1,5 +1,6 @@
 package graft.hudi
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 import java.time.{Instant, LocalDateTime, ZoneId}
 import java.time.format.{DateTimeFormatter, DateTimeFormatterBuilder}
@@ -149,13 +150,21 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
 
   // ------------------------------------------------------------- metadata
 
-  /** Raw JSON of any completed instant (active or archived). */
-  def readInstantJson(i: HudiInstant): String = {
-    val in = fs.open(existingInstantFile(i))
+  /** Active copy first, the archived one when the active file is gone. */
+  private def activeThenArchived[A](i: HudiInstant)(f: Path => A): A =
+    try f(new Path(hoodieDir, i.fileName))
+    catch { case _: FileNotFoundException => f(new Path(archivedDir, i.fileName)) }
+
+  private def readJson(p: Path): String = {
+    val in = fs.open(p)
+    instantFilesOpened.incrementAndGet()
     try new String(
       org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
     finally in.close()
   }
+
+  /** Raw JSON of any completed instant (active or archived). */
+  def readInstantJson(i: HudiInstant): String = activeThenArchived(i)(readJson)
 
   /** Parsed-commit memo: completed instant files publish put-if-absent
     * and are never rewritten, so one parse serves every reader — the
@@ -168,15 +177,18 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
   private val commitMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, HudiCommitMetadata]()
 
+  /** One status call resolves the file (active dir first) and keys the
+    * memo; a cold read then opens that same path. */
   def readCommitMetadata(i: HudiInstant): HudiCommitMetadata = {
-    val st = try fs.getFileStatus(existingInstantFile(i)) catch {
-      case _: java.io.FileNotFoundException =>
-        return HudiCommitCodec.fromJson(readInstantJson(i)) // raced archival: direct read resolves
-    }
+    val st = activeThenArchived(i)(fs.getFileStatus)
     if (commitMetaCache.size > 256) commitMetaCache.clear()
     commitMetaCache.computeIfAbsent(
       s"${i.fileName}:${st.getLen}:${st.getModificationTime}",
-      _ => HudiCommitCodec.fromJson(readInstantJson(i)))
+      _ => HudiCommitCodec.fromJson(
+        try readJson(st.getPath) catch {
+          // raced archival: the active file moved after the status call
+          case _: FileNotFoundException => readInstantJson(i)
+        }))
   }
 
   /**
@@ -301,6 +313,10 @@ object HudiTimeline {
     allocated
       .computeIfAbsent(tablePath, _ => new java.util.concurrent.atomic.AtomicLong(0L))
       .updateAndGet(prev => math.max(prev + 1L, candidate))
+
+  /** Instant files opened for reading, JVM-wide — the read-count
+    * witness of the sync source's one-read-per-pass contract. */
+  private[graft] val instantFilesOpened = new java.util.concurrent.atomic.AtomicLong(0)
 
   private val CompletedRe = "^(\\d{14}|\\d{17})\\.(commit|replacecommit|deltacommit)$".r
   private val AnyCompletedRe =

@@ -144,11 +144,11 @@ object StreamQueries {
       catch { case e: Throwable => restoreAll(); throw e }
     // a hung stream must FAIL the query, not silently hand back a
     // partially-filled sink; stop() in finally so a timed-out or thrown
-    // query never leaks its execution thread
+    // query never leaks its execution thread; the confs are restored
+    // even when stop() itself throws
     try require(q.awaitTermination(300000), s"stream $sink did not drain within 300s")
     finally {
-      q.stop()
-      restoreAll()
+      try q.stop() finally restoreAll()
       // batch-count × per-batch breakdown for the measurement logs
       q.recentProgress.foreach(p => System.err.println(
         s"[stream] $sink batch=${p.batchId} rows=${p.numInputRows} durationMs=${p.durationMs}"))

@@ -616,22 +616,54 @@ private final class HudiSource(t: HudiTable,
     t.properties.get("hoodie.table.recordkey.fields")
       .orElse(t.latestCommitExtraMetadata.get(SyncEngine.RecordKeyProp))
       .toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+  @volatile private var lastWalk: Option[HudiSource.StatsWalk] = None
+
   /** The registration's extraMetadata walk-back, bounded AT the synced
     * instant (the Delta source's closest-analyzed-ancestor twin);
-    * sync-carried pointers chain through unchanged. */
+    * sync-carried pointers chain through unchanged, and a native
+    * pointer anywhere at or below the version wins over a carried one.
+    *
+    * One newest-first walk resolves all three keys and stops once the
+    * native and partition keys are found (the carried key only matters
+    * without a native one). Completed instant files never change, so
+    * the walk is kept: a later version walks only the instants the
+    * last walk did not cover — during a replay, the commits after the
+    * previous one. A lower version (the late-completed backlog), or a
+    * kept hit whose instant is gone (rolled back), walks the whole
+    * timeline again. */
   override def statisticsProps(version: String): Map[String, String] = {
-    def at(key: String): Option[String] =
-      t.timeline.completedInstants()
-        .filter(i => Set("commit", "replacecommit", "deltacommit").contains(i.action))
-        .filter(_.time <= version)
-        .reverseIterator
-        .flatMap(i => t.timeline.readCommitMetadata(i).extraMetadata.get(key))
-        .nextOption()
-    at(HudiTable.StatsPathKey).orElse(at(SyncEngine.StatsPathProp))
+    val upTo = t.timeline.completedInstants().filter(_.time <= version)
+    val times = upTo.iterator.map(_.time).toSet
+    val prior = lastWalk.filter(w =>
+      w.version <= version && w.hits.valuesIterator.forall(h => times(h._1)))
+    val fresh = upTo.filterNot(i => prior.exists(_.covered(i.time)))
+    val found = scala.collection.mutable.Map[String, (String, String)]()
+    val walk = t.extraMetadataNewestFirst(fresh)
+    while (!(found.contains(HudiTable.StatsPathKey) &&
+        found.contains(SyncEngine.PartitionStatsPathProp)) && walk.hasNext) {
+      val (i, em) = walk.next()
+      HudiSource.StatsKeys.foreach(k =>
+        if (!found.contains(k)) em.get(k).foreach(v => found(k) = (i.time, v)))
+    }
+    // a late-completed instant may sort below a kept hit: newest wins
+    val hits = prior.fold(found.toMap)(w => (w.hits.keySet ++ found.keySet).iterator
+      .map(k => k -> (w.hits.get(k) ++ found.get(k)).maxBy(_._1)).toMap)
+    lastWalk = Some(HudiSource.StatsWalk(version, times, hits))
+    def value(k: String) = hits.get(k).map(_._2)
+    value(HudiTable.StatsPathKey).orElse(value(SyncEngine.StatsPathProp))
       .map(p => Map(SyncEngine.StatsPathProp -> p)).getOrElse(Map.empty) ++
-      at(SyncEngine.PartitionStatsPathProp)
+      value(SyncEngine.PartitionStatsPathProp)
         .map(p => Map(SyncEngine.PartitionStatsPathProp -> p)).getOrElse(Map.empty)
   }
+}
+
+private object HudiSource {
+  /** What a statistics walk proved at or below `version`: the instants
+    * it covered, and the newest (instant, value) per key. */
+  final case class StatsWalk(
+      version: String, covered: Set[String], hits: Map[String, (String, String)])
+  val StatsKeys: Seq[String] =
+    Seq(HudiTable.StatsPathKey, SyncEngine.StatsPathProp, SyncEngine.PartitionStatsPathProp)
 }
 
 private final class HudiTarget(spark: SparkSession, val targetPath: String) extends SyncTarget {
