@@ -55,7 +55,9 @@ object Bench {
     // whole passes, transient contention hits different queries per pass
     // and the min recovers the true number.
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
-    def onePass(): Seq[(String, Double)] = named.map { case (name, fn) =>
+    // a query that throws has no time: None, never the elapsed time of
+    // its failure
+    def onePass(): Map[String, Option[Double]] = named.map { case (name, fn) =>
       // quiesce between queries: leftover cached RDDs and pending
       // broadcast/shuffle cleanup otherwise bleed into this one's wall
       // clock (late-alphabet queries were paying for the whole run's
@@ -63,96 +65,126 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }
-    val pass1 = onePass().toMap
-    val pass2 = onePass().toMap
-    val results = named.map { case (name, _) =>
-      val (a, b) = (pass1(name), pass2(name))
-      // min is the reported time; max/min spread flags contended runs
-      // (spread >> 1 on many queries ⇒ the box, not the plans, moved)
-      name -> (math.min(a, b), math.max(a, b) / math.max(math.min(a, b), 1e-9))
-    }
-    // The driver keeps only the LAST 2000 chars of stdout, so the line
-    // is built to survive that window WITH the per-query map (the r16
-    // compact-line compromise starved the driver's PERF of per-query
-    // data two rounds running — verdict item 1): ROOT-locale fixed
-    // decimals (a comma-decimal JVM locale would emit invalid JSON),
-    // short unique query keys (the id prefix before the first '_';
-    // colliding prefixes disambiguate with the next segment's first
-    // letter), 2dp under 1 s / 1dp above with trailing zeros trimmed,
-    // and stdout-only short names (cal/fix/idx) for the setup-phase
-    // timings. BENCH.json keeps the untrimmed rendition (full key
-    // names, 2dp everywhere, spread outliers, per-pass totals).
-    def num(v: Double, dp: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-    def qnum(v: Double): String = {
-      val s = if (v >= 1) num(v, 1) else num(v, 2)
-      if (!s.contains('.')) s
-      else {
-        val t = s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
-        if (t.isEmpty) "0" else t
-      }
-    }
-    val prefixCounts = results.groupBy(_._1.takeWhile(_ != '_')).view.mapValues(_.size)
-    def keyOf(k: String): String = {
-      val p = k.takeWhile(_ != '_')
-      if (prefixCounts.getOrElse(p, 0) == 1) p
-      else {
-        // e.g. x04_hudi_to_iceberg_sync -> x04_h, x04_tri_... -> x04_t;
-        // if even that collides, the full name is the safe fallback
-        val short = k.split('_').take(2) match {
-          case Array(a, b) if b.nonEmpty => s"${a}_${b.head}"
-          case _ => k
+      val ok =
+        try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: $e")
+          false
         }
-        val clash = results.exists { case (other, _) =>
-          other != k && other.takeWhile(_ != '_') == p &&
-            (other.split('_').take(2) match {
-              case Array(a, b) if b.nonEmpty => s"${a}_${b.head}" == short
-              case _ => false
-            })
-        }
-        if (clash) k else short
-      }
+      name -> Option.when(ok)((System.nanoTime() - t0) / 1e9)
+    }.toMap
+    val pass1 = onePass()
+    val pass2 = onePass()
+    // min is the reported time; max/min spread flags contended runs
+    // (spread >> 1 on many queries ⇒ the box, not the plans, moved). A
+    // query that failed in either pass is null in both renditions and
+    // left out of every total.
+    val results: Seq[(String, Option[(Double, Double)])] = named.map { case (name, _) =>
+      name -> (for (a <- pass1(name); b <- pass2(name))
+        yield (math.min(a, b), math.max(a, b) / math.max(math.min(a, b), 1e-9)))
     }
-    val qsFile = results.map { case (k, (v, _)) => "\"" + keyOf(k) + "\":" + num(v, 2) }
+    val times = results.map { case (k, r) => k -> r.map(_._1) }
+    val failed = results.collect { case (k, None) => k }
+    val ok = results.collect { case (k, Some(_)) => k }
+    // BENCH.json keeps the untrimmed rendition: full query names, 2dp
+    // everywhere, spread outliers, per-pass totals
+    val qsFile = queryMap(times, identity, num(_, 2))
+    val spreads = results.collect { case (k, Some((_, s))) if s >= 1.5 => (k, s) }
+      .sortBy(-_._2).take(10)
+      .map { case (k, s) => "\"" + k + "\":" + num(s, 2) }
       .mkString("{", ",", "}")
-    val qsStdout = results.map { case (k, (v, _)) => "\"" + keyOf(k) + "\":" + qnum(v) }
-      .mkString("{", ",", "}")
-    val spreads = results.filter(_._2._2 >= 1.5).sortBy(-_._2._2).take(10)
-      .map { case (k, (_, s)) => "\"" + keyOf(k) + "\":" + num(s, 2) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2._1).sum else 0.0
+    val total = times.flatMap(_._2).sum
     // per-pass totals let a reader separate box drift from plan drift at
     // a glance: both passes slow ⇒ the box was busy for the whole run;
     // one pass slow ⇒ transient contention the min already absorbed
-    val p1Total = named.map(n => pass1(n._1)).sum
-    val p2Total = named.map(n => pass2(n._1)).sum
+    val p1Total = ok.map(pass1(_).get).sum
+    val p2Total = ok.map(pass2(_).get).sum
     val head = s""""metric":"total","value":${num(total, 3)},"unit":"sec","sf":"$sfDir","calibration_sec":${num(calibrationSec, 3)},"fixture_build_sec":${num(fixtureSec, 3)},"index_build_sec":${num(indexBuildSec, 3)},"pass1_total":${num(p1Total, 3)},"pass2_total":${num(p2Total, 3)}"""
     val fullLine = s"""{$head,"spread_outliers":$spreads,"queries":$qsFile}"""
-    // stdout rendition: required contract fields + the setup timings
-    // under short keys + the per-query map. If a future query count
-    // pushes it past the tail window, degrade deterministically (drop
-    // the setup extras first — they stay in BENCH.json — and only then
-    // the per-query map, never the contract fields).
-    val stdoutHead = s""""metric":"total","value":${num(total, 2)},"unit":"sec","sf":"$sfDir""""
-    val extras = s""","cal":${num(calibrationSec, 2)},"fix":${num(fixtureSec, 0)},"idx":${num(indexBuildSec, 1)}"""
-    val candidates = Seq(
-      s"""{$stdoutHead$extras,"queries":$qsStdout}""",
-      s"""{$stdoutHead,"queries":$qsStdout}""",
-      s"""{$stdoutHead$extras,"queries_file":"BENCH.json","query_count":${results.size}}""")
-    val stdoutLine = candidates.find(_.length <= 1990).getOrElse(candidates.last)
+    val line = stdoutLine(stdoutRungs(sfDir, total, calibrationSec, fixtureSec, indexBuildSec, times))
     // the JSON is this process's FINAL stdout line: spark.stop() first,
     // so no shutdown logging can trail it and a line-oriented parser
     // (not just a regex scrape) finds it
     spark.stop()
-    println(stdoutLine)
+    println(line)
     System.out.flush()
     try {
       val p = java.nio.file.Paths.get("BENCH.json")
       java.nio.file.Files.write(p, (fullLine + "\n").getBytes(
         java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Exception => () } // file drop is best-effort; stdout already has it
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] failed queries: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
+
+  /** Whatever scrapes the bench line keeps only the LAST 2000 chars of
+    * stdout. */
+  private[graft] val StdoutBudget = 1990
+
+  /** ROOT-locale fixed decimals: a comma-decimal JVM locale would emit
+    * invalid JSON. */
+  private[graft] def num(v: Double, dp: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+
+  /** Stdout per-query time: 2dp under 1 s, 1dp above, trailing zeros
+    * trimmed. */
+  private[graft] def qnum(v: Double): String = {
+    val s = if (v >= 1) num(v, 1) else num(v, 2)
+    if (!s.contains('.')) s
+    else {
+      val t = s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
+      if (t.isEmpty) "0" else t
+    }
+  }
+
+  /** `{"key":time,...}` with JSON `null` for a query that failed. */
+  private[graft] def queryMap(
+      times: Seq[(String, Option[Double])], key: String => String, fmt: Double => String): String =
+    times.map { case (k, v) => "\"" + key(k) + "\":" + v.map(fmt).getOrElse("null") }
+      .mkString("{", ",", "}")
+
+  /** Short unique stdout keys: the id prefix before the first '_';
+    * colliding prefixes disambiguate with the next segment's first
+    * letter (x04_hudi_to_iceberg_sync -> x04_h, x04_tri_... -> x04_t),
+    * and if even that collides the full name is the safe fallback. */
+  private[graft] def shortKeys(names: Seq[String]): Map[String, String] = {
+    def prefix(k: String) = k.takeWhile(_ != '_')
+    def twoSeg(k: String): Option[String] = k.split('_').take(2) match {
+      case Array(a, b) if b.nonEmpty => Some(s"${a}_${b.head}")
+      case _ => None
+    }
+    val prefixCounts = names.groupBy(prefix).view.mapValues(_.size)
+    names.map { k =>
+      val p = prefix(k)
+      k -> (if (prefixCounts(p) == 1) p
+      else twoSeg(k) match {
+        case Some(short) if !names.exists(o => o != k && prefix(o) == p && twoSeg(o).contains(short)) =>
+          short
+        case _ => k
+      })
+    }.toMap
+  }
+
+  /** The stdout degradation ladder, best rung first: required contract
+    * fields + the setup timings under short keys (cal/fix/idx) + the
+    * per-query map; then without the setup extras (they stay in
+    * BENCH.json); then without the per-query map. The contract fields
+    * are never dropped; [[stdoutLine]] picks the rung to print. */
+  private[graft] def stdoutRungs(
+      sfDir: String, total: Double, calibrationSec: Double, fixtureSec: Double,
+      indexBuildSec: Double, times: Seq[(String, Option[Double])]): Seq[String] = {
+    val qs = queryMap(times, shortKeys(times.map(_._1)), qnum)
+    val head = s""""metric":"total","value":${num(total, 2)},"unit":"sec","sf":"$sfDir""""
+    val extras = s""","cal":${num(calibrationSec, 2)},"fix":${num(fixtureSec, 0)},"idx":${num(indexBuildSec, 1)}"""
+    Seq(
+      s"""{$head$extras,"queries":$qs}""",
+      s"""{$head,"queries":$qs}""",
+      s"""{$head$extras,"queries_file":"BENCH.json","query_count":${times.size}}""")
+  }
+
+  /** The first rung that fits [[StdoutBudget]], else the last. */
+  private[graft] def stdoutLine(rungs: Seq[String]): String =
+    rungs.find(_.length <= StdoutBudget).getOrElse(rungs.last)
 }

@@ -80,7 +80,7 @@ object PlanBench {
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val line = names.map { n =>
       val vals = ps.map(_(n)).filterNot(_.isNaN)
-      if (vals.isEmpty) s""""$n":"err""""
+      if (vals.isEmpty) s""""$n":null"""
       else s""""$n":${num(vals.min)}"""
     }.mkString("{", ",", "}")
     spark.stop()

@@ -506,7 +506,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
 
   /**
    * Raw add/remove actions of all commits ≤ `asOf` as a DataFrame with a
-   * `version` column — the input to distributed replay.
+   * `version` column — the input to the checkpointed (window) replay.
    */
   def actionsDF(asOf: Option[Long]): DataFrame = {
     val all = listVersions()
@@ -567,14 +567,6 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     }
   }
 
-  /** Byte budget for the driver-side replay fast path: a JSON tail under
-    * this is metadata-sized and parses on the driver in single-digit ms,
-    * where the distributed replay pays a full job + shuffle of scheduler
-    * latency. Size-fenced, not mode-fenced: the same cutoff is right on a
-    * real cluster (guide §1.2 — don't schedule cluster work for KB-scale
-    * metadata; §7.3 — metadata-only driver work is expected there). */
-  private val MaxLocalReplayBytes = 4L * 1024 * 1024
-
   private def snapshotSchema: StructType = StructType(Seq(
     StructField("path", StringType),
     StructField("version", LongType),
@@ -584,24 +576,16 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     StructField("stats", StringType),
     StructField("deletionVector", dvSchema)))
 
-  /** Driver-side replay when no checkpoint applies and the JSON tail is
-    * under [[MaxLocalReplayBytes]] — same last-action-per-path rule as
-    * the window in the distributed path (within one version the add
-    * outranks the remove of the same path), rows sorted by path for a
-    * deterministic file order. Returns None (→ distributed replay) for
-    * checkpointed or large logs, so a 100 TB table with millions of add
-    * entries still replays as a job, never a driver loop. */
+  /** Driver-side replay of a JSON-only log — same last-action-per-path
+    * rule as the window in the checkpointed replay (within one version
+    * the add outranks the remove of the same path), rows sorted by path
+    * for a deterministic file order. None when a checkpoint applies:
+    * only the window replay reads a parquet checkpoint. */
   private def localSnapshotRows(asOf: Option[Long]): Option[Seq[org.apache.spark.sql.Row]] = {
-    if (!fs.exists(logPath)) return None
-    if (resolveCheckpoint(asOf).nonEmpty) return None
-    val commits = fs.listStatus(logPath).toSeq
-      .filter(_.getPath.getName.matches("\\d{20}\\.json"))
-      .map(st => (version(st.getPath.getName), st.getLen))
-      .filter { case (v, _) => asOf.forall(v <= _) }
-      .sortBy(_._1)
-    if (commits.isEmpty || commits.iterator.map(_._2).sum > MaxLocalReplayBytes) return None
+    val commits = listVersions().filter(v => asOf.forall(v <= _))
+    if (commits.isEmpty || resolveCheckpoint(asOf).nonEmpty) return None
     val state = scala.collection.mutable.HashMap[String, (Long, Boolean, AddFile)]()
-    commits.foreach { case (v, _) =>
+    commits.foreach { v =>
       readActions(v).foreach {
         case a: AddFile =>
           val cur = state.get(a.path)
@@ -622,10 +606,10 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
 
   /**
    * Live files at `asOf` (default: latest): per path, the newest action
-   * wins; the file is live iff that action is an add. Metadata-small
-   * JSON-only logs replay on the driver (a LocalRelation — `.collect()`
-   * runs no job); checkpointed or large logs replay distributed with
-   * one shuffle on path and no driver-side state.
+   * wins; the file is live iff that action is an add. A JSON-only log
+   * replays on the driver (a LocalRelation — `.collect()` runs no job);
+   * a checkpointed log replays as a window over checkpoint + JSON tail,
+   * one shuffle on path.
    */
   def snapshotFilesDF(asOf: Option[Long] = None): DataFrame = {
     localSnapshotRows(asOf) match {

@@ -4,7 +4,6 @@ import java.util.UUID
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,9 +26,8 @@ final case class HudiFileSlice(
 /**
  * Native Hudi COW table — the third format plane (ref
  * `core/.../hudi/HudiDataFileExtractor.java:113-256` reads the timeline
- * through Hudi's FS view on the driver; here replay is a distributed
- * DataFrame job over the commit metadata files, the same shape as our
- * Delta log replay so a 10^5-commit timeline plans on executors).
+ * through Hudi's FS view on the driver; here too the replay folds the
+ * commit metadata on the driver, whatever the timeline's size).
  *
  * Snapshot semantics (COW): a file group is (partitionPath, fileId);
  * the live base file of a group is the one written by the latest
@@ -123,69 +121,17 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
 
   private def hconf = spark.sparkContext.hadoopConfiguration
 
-  /** Spark parse schema for commit metadata JSON (distributed replay). */
-  private val commitSchema = StructType(Seq(
-    StructField("partitionToWriteStats", MapType(StringType, ArrayType(StructType(Seq(
-      StructField("fileId", StringType),
-      StructField("path", StringType),
-      StructField("fileSizeInBytes", LongType),
-      StructField("numWrites", LongType)))))),
-    StructField("partitionToReplaceFileIds", MapType(StringType, ArrayType(StringType)))))
-
-  /** Raw per-commit adds/replaces for instants in (from, to] (or all ≤ to)
-    * as a DataFrame — the distributed replay input. */
-  private def actionsDF(instantTimes: Seq[String]): DataFrame = {
-    require(instantTimes.nonEmpty, s"no instants selected on $tablePath")
+  /** The timeline replay: the given instants' commit metadata, parsed on
+    * the driver through the memoized [[HudiTimeline.readCommitMetadata]],
+    * in instant order — each write stat as an add (with its recorded
+    * `numWrites`), each replaced file group as a replace. Every snapshot,
+    * slice and change read folds over this one sequence. */
+  private[hudi] def localActions(instantTimes: Seq[String]): Seq[HudiTable.LocalAction] = {
+    if (instantTimes.isEmpty) return Seq.empty
     val byTime = timeline.completedInstants().map(i => i.time -> i).toMap
-    val paths = instantTimes.map(t => timeline.existingInstantFile(byTime(t)).toString)
-    val raw = spark.read.option("wholetext", "true").text(paths: _*)
-      .withColumn("instant",
-        regexp_extract(input_file_name(), "(\\d{14,17})\\.(commit|replacecommit|deltacommit)$", 1))
-      .withColumn("meta", from_json(col("value"), commitSchema))
-    val adds = raw
-      .select(col("instant"),
-        explode(col("meta.partitionToWriteStats")).as(Seq("partitionPath", "stats")))
-      .select(col("instant"), col("partitionPath"), explode(col("stats")).as("st"))
-      .select(col("instant"), col("partitionPath"),
-        col("st.fileId").as("fileId"), col("st.path").as("path"),
-        col("st.fileSizeInBytes").as("size"), lit(true).as("isAdd"))
-    val replaces = raw
-      .filter(col("meta.partitionToReplaceFileIds").isNotNull)
-      .select(col("instant"),
-        explode(col("meta.partitionToReplaceFileIds")).as(Seq("partitionPath", "ids")))
-      .select(col("instant"), col("partitionPath"), explode(col("ids")).as("fileId"),
-        lit(null).cast(StringType).as("path"), lit(null).cast(LongType).as("size"),
-        lit(false).as("isAdd"))
-    adds.unionByName(replaces)
-  }
-
-  /** Byte budget for the driver-side timeline replay below — the same
-    * posture as DeltaLog's local snapshot replay: commit metadata under
-    * this parses on the driver (through the memoized
-    * [[HudiTimeline.readCommitMetadata]]) in single-digit ms, where the
-    * distributed replay pays a full Spark job + shuffle of scheduler
-    * latency PER snapshot access. Size-fenced, not mode-fenced: a
-    * timeline whose commit files carry millions of write stats stays on
-    * the distributed path (guide §1.2/§7.3). */
-  private val MaxLocalReplayBytes = 4L * 1024 * 1024
-
-  /** Driver-side parse of the given instants' commit metadata — None
-    * when the instant files' cumulative size is over budget (or any
-    * instant is unlisted), which sends the caller to [[actionsDF]]. */
-  private[hudi] def localActions(instantTimes: Seq[String]): Option[Seq[HudiTable.LocalAction]] = {
-    val byTime = timeline.completedInstants().map(i => i.time -> i).toMap
-    if (instantTimes.exists(t => !byTime.contains(t))) return None
-    val fsys = timeline.hoodieDir.getFileSystem(hconf)
-    def lens(dir: Path): Map[String, Long] =
-      if (!fsys.exists(dir)) Map.empty
-      else fsys.listStatus(dir).iterator.map(s => s.getPath.getName -> s.getLen).toMap
-    // active copy wins, as reads resolve it (HudiTimeline.existingInstantFile)
-    val sizes = lens(timeline.archivedDir) ++ lens(timeline.hoodieDir)
-    val fileSizes = instantTimes.map(t => sizes.get(byTime(t).fileName))
-    if (fileSizes.exists(_.isEmpty)) return None
-    if (fileSizes.flatten.sum > MaxLocalReplayBytes) return None
-    Some(instantTimes.sorted.flatMap { t =>
-      val m = timeline.readCommitMetadata(byTime(t))
+    instantTimes.sorted.flatMap { t =>
+      val m = timeline.readCommitMetadata(byTime.getOrElse(t,
+        throw new IllegalStateException(s"$t is not a completed instant of $tablePath")))
       val adds = m.partitionToWriteStats.toSeq.flatMap { case (pp, stats) =>
         stats.map(st => HudiTable.LocalAction(
           t, pp, st.fileId, st.path, st.fileSizeInBytes, isAdd = true, st.numWrites))
@@ -194,7 +140,22 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
         ids.map(fid => HudiTable.LocalAction(t, pp, fid, null, 0L, isAdd = false, 0L))
       }
       adds ++ reps
-    })
+    }
+  }
+
+  /** Live base files of a replay: per (partitionPath, fileId) the newest
+    * action wins, and the group is live iff that action is a write; log
+    * files never compete for the base slot. Sorted by (partitionPath,
+    * fileId). */
+  private def liveBases(acts: Seq[HudiTable.LocalAction]): Seq[HudiTable.LocalAction] = {
+    val state = scala.collection.mutable.HashMap[(String, String), HudiTable.LocalAction]()
+    acts.foreach { a =>
+      if (a.path == null || !a.path.contains(".log.")) {
+        val k = (a.partitionPath, a.fileId)
+        if (state.get(k).forall(_.instant <= a.instant)) state(k) = a
+      }
+    }
+    state.valuesIterator.filter(_.isAdd).toSeq.sortBy(a => (a.partitionPath, a.fileId))
   }
 
   private def sliceSchema: StructType = StructType(Seq(
@@ -202,52 +163,17 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     StructField("fileId", StringType), StructField("path", StringType),
     StructField("size", LongType)))
 
-  /** The [[fileSlicesDF]] fold over driver-side actions: per
-    * (partitionPath, fileId) the newest instant wins, live iff a write
-    * (same rule as the distributed window; log files never compete for
-    * the base slot). Rows sorted by (partitionPath, fileId). */
-  private def localSliceRows(acts: Seq[HudiTable.LocalAction]): Seq[org.apache.spark.sql.Row] = {
-    val state = scala.collection.mutable.HashMap[
-      (String, String), (String, Boolean, String, Long)]()
-    acts.foreach { case HudiTable.LocalAction(t, pp, fid, path, size, isAdd, _) =>
-      if (path == null || !path.contains(".log.")) {
-        val k = (pp, fid)
-        if (state.get(k).forall(_._1 <= t)) state(k) = (t, isAdd, path, size)
-      }
-    }
-    state.toSeq.filter(_._2._2).sortBy(_._1).map { case ((pp, fid), (t, _, path, size)) =>
-      org.apache.spark.sql.Row(t, pp, fid, path, size)
-    }
-  }
-
-  private def slicesDF(rows: Seq[org.apache.spark.sql.Row]): DataFrame =
-    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, sliceSchema)
-
   /**
-   * Live base files at `asOf`: per file group the newest action wins;
-   * the group is live iff that action is a write (not a replace). One
-   * shuffle on (partitionPath, fileId), no driver-side state.
+   * Live base files at `asOf` as a local relation (collecting it runs
+   * no job). A created-but-never-committed table (hoodie.properties
+   * present, zero completed instants — the concurrent-bootstrap window)
+   * is an EMPTY table: a racing reader sees no live slices.
    */
   def fileSlicesDF(asOf: Option[String] = None): DataFrame = {
     val upTo = asOf.map(a => instants.filter(_ <= a)).getOrElse(instants)
-    // A created-but-never-committed table (hoodie.properties present,
-    // zero completed instants — the concurrent-bootstrap window where
-    // another writer has started but not finished its first commit) is
-    // an EMPTY table, not an error: a racing reader must see no live
-    // slices rather than crash on `no instants selected`.
-    if (upTo.isEmpty) return slicesDF(Seq.empty)
-    localActions(upTo) match {
-      case Some(acts) => return slicesDF(localSliceRows(acts))
-      case None => ()
-    }
-    val w = Window.partitionBy(col("partitionPath"), col("fileId"))
-      .orderBy(col("instant").desc)
-    actionsDF(upTo)
-      // MOR log files never compete for the BASE slot of their group
-      .filter(col("path").isNull || !col("path").contains(".log."))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("isAdd"))
-      .drop("rn", "isAdd")
+    val rows = liveBases(localActions(upTo)).map(a =>
+      org.apache.spark.sql.Row(a.instant, a.partitionPath, a.fileId, a.path, a.size))
+    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, sliceSchema)
   }
 
   // ------------------------------------------------------- merge-on-read
@@ -331,42 +257,24 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * the slice whose base instant its name carries (Hudi file-slice
     * rule), so logs of a replaced/compacted group never leak forward. */
   def fileSlices(asOf: Option[String] = None): Seq[HudiFileSlice] = {
-    val bases = fileSlicesDF(asOf)
-      .select("partitionPath", "fileId", "instant", "path", "size")
-      .collect().toSeq
     val upTo = asOf.map(a => instants.filter(_ <= a)).getOrElse(instants)
+    val acts = localActions(upTo)
     val logs: Map[(String, String, String), Seq[HudiLogFileRef]] =
-      if (!isMor || upTo.isEmpty) Map.empty
-      else {
-        // same driver-side fast path as fileSlicesDF: the log adds come
-        // out of the ALREADY-PARSED commit metadata instead of a second
-        // distributed replay job over the same instant files
-        val logAdds: Seq[(String, String, String, Long)] = localActions(upTo) match {
-          case Some(acts) => acts.collect {
-            case HudiTable.LocalAction(t, pp, _, path, size, true, _)
-                if path != null && path.contains(".log.") =>
-              (t, pp, path, size)
-          }
-          case None => actionsDF(upTo)
-            .filter(col("isAdd") && col("path").contains(".log."))
-            .select("instant", "partitionPath", "path", "size").collect().toSeq
-            .map(r => (r.getString(0), r.getString(1), r.getString(2),
-              if (r.isNullAt(3)) 0L else r.getLong(3)))
-        }
-        logAdds
-          .flatMap { case (inst, pp, path, size) =>
-            val name = new Path(path).getName
-            HudiLogFormat.parseLogFileName(name).map { case (fid, baseInstant, ver) =>
-              (pp, fid, baseInstant) -> HudiLogFileRef(path, inst, ver, size)
+      if (!isMor) Map.empty
+      else acts
+        .collect {
+          case HudiTable.LocalAction(inst, pp, _, path, size, true, _)
+              if path != null && path.contains(".log.") =>
+            HudiLogFormat.parseLogFileName(new Path(path).getName).map {
+              case (fid, baseInstant, ver) =>
+                (pp, fid, baseInstant) -> HudiLogFileRef(path, inst, ver, size)
             }
-          }
-          .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-      }
-    bases.map { r =>
-      val (pp, fid, inst) = (r.getString(0), r.getString(1), r.getString(2))
-      HudiFileSlice(pp, fid, inst, r.getString(3),
-        if (r.isNullAt(4)) 0L else r.getLong(4),
-        logs.getOrElse((pp, fid, inst), Seq.empty).sortBy(l => (l.instant, l.version)))
+        }
+        .flatten.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    liveBases(acts).map { b =>
+      HudiFileSlice(b.partitionPath, b.fileId, b.instant, b.path, b.size,
+        logs.getOrElse((b.partitionPath, b.fileId, b.instant), Seq.empty)
+          .sortBy(l => (l.instant, l.version)))
     }
   }
 
@@ -551,17 +459,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     val schema = schemaAt(Some(toInclusive))
     def finish(df: DataFrame, t: org.apache.spark.sql.Column, inst: String): DataFrame =
       df.withColumn("_change_type", t).withColumn("_commit_instant", lit(inst))
+    val addsByInstant = localActions(range).filter(_.isAdd).groupBy(_.instant)
     val parts: Seq[DataFrame] = range.flatMap { inst =>
-      // driver-side fast path: the former per-instant distributed
-      // replay cost one Spark job PER commit in the range
-      val acts = localActions(Seq(inst)) match {
-        case Some(la) => la.collect {
-          case HudiTable.LocalAction(_, pp, _, path, size, true, _) => (path, pp, size)
-        }
-        case None => actionsDF(Seq(inst)).filter(col("isAdd"))
-          .select("path", "partitionPath", "size").collect().toSeq
-          .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
-      }
+      val acts = addsByInstant.getOrElse(inst, Seq.empty).map(a => (a.path, a.partitionPath, a.size))
       val (logs, bases) = acts.partition(f => HudiLogFormat.isLogPath(f._1))
       val baseDF =
         if (bases.isEmpty) None
@@ -908,10 +808,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
   def changesAsDF(fromExclusive: String, toInclusive: String): DataFrame = {
     val range = instants.filter(t => t > fromExclusive && t <= toInclusive)
     require(range.nonEmpty, s"no instants in ($fromExclusive, $toInclusive] of $tablePath")
-    val added = actionsDF(range)
-      .filter(col("isAdd"))
-      .select("path", "partitionPath", "size").collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
+    val added = localActions(range).filter(_.isAdd).map(a => (a.path, a.partitionPath, a.size))
     require(added.forall(f => !HudiLogFormat.isLogPath(f._1)),
       s"instants ($fromExclusive, $toInclusive] of $tablePath append MOR log blocks, " +
         "which are row mutations, not added rows; run compactMor() and read the " +
@@ -1699,34 +1596,15 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
 
   /** Live base files of the current snapshot as (partitionPath, path,
     * size), plus normalized absolute path → recorded write count from
-    * the commit metadata's own write stats. Under the replay fence ONE
-    * driver-side replay yields both, reading each instant file once;
-    * over it, the distributed slice replay plus [[writeCountsByPath]].
-    * Shared by [[snapshotDataFiles]] (the sync layer) and
-    * [[planningFacts]] (the planner), so the two can never count rows
-    * differently. */
-  private def liveFilesWithCounts(): (Seq[(String, String, Long)], Map[String, Long]) =
-    localActions(instants) match {
-      case Some(acts) =>
-        val counts = acts.iterator.filter(_.isAdd)
-          .map(a => HudiTable.normalize(absoluteOf(a.path)) -> a.numWrites).toMap
-        (localSliceRows(acts).map(r => (r.getString(1), r.getString(3), r.getLong(4))), counts)
-      case None =>
-        val files = fileSlicesDF(None).select("partitionPath", "path", "size").collect().toSeq
-          .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
-        (files, writeCountsByPath())
-    }
-
-  /** Normalized absolute path → recorded write count over the whole
-    * timeline — one listing for the loop (listing per instant is
-    * O(commits²) metadata-store round-trips). */
-  private def writeCountsByPath(): Map[String, Long] = {
-    val completedByTime = timeline.completedInstants().map(i => i.time -> i).toMap
-    instants.flatMap { t =>
-      val m = timeline.readCommitMetadata(completedByTime(t))
-      m.partitionToWriteStats.valuesIterator.flatten.map(ws =>
-        HudiTable.normalize(absoluteOf(ws.path)) -> ws.numWrites)
-    }.toMap
+    * the commit metadata's own write stats — both from ONE replay, so
+    * each instant file is read once. Shared by [[snapshotDataFiles]]
+    * (the sync layer) and [[planningFacts]] (the planner), so the two
+    * can never count rows differently. */
+  private def liveFilesWithCounts(): (Seq[(String, String, Long)], Map[String, Long]) = {
+    val acts = localActions(instants)
+    val counts = acts.iterator.filter(_.isAdd)
+      .map(a => HudiTable.normalize(absoluteOf(a.path)) -> a.numWrites).toMap
+    (liveBases(acts).map(a => (a.partitionPath, a.path, a.size)), counts)
   }
 
   /** Planning-time (live rows, live bytes) of the current snapshot —
@@ -2117,7 +1995,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
 
 object HudiTable {
 
-  /** One action of the driver-side replay: a write stat (`isAdd`, with
+  /** One action of the timeline replay: a write stat (`isAdd`, with
     * its recorded `numWrites`) or a replaced file group (`path` null). */
   private[hudi] final case class LocalAction(
       instant: String,

@@ -103,16 +103,17 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
   /** Completed data instants (commit + replacecommit), time-ordered,
     * active AND archived — metadata-backed replay needs the full
     * history, exactly as Delta replay reads checkpointed versions.
-    * Fixed-width instant strings sort chronologically as strings. */
+    * Fixed-width instant strings sort chronologically as strings. An
+    * instant caught mid-archival (in both directories) is listed once. */
   def completedInstants(): Seq[HudiInstant] =
     (listCompleted(hoodieDir, CompletedRe) ++ listCompleted(archivedDir, CompletedRe))
-      .sortBy(_.time)
+      .distinct.sortBy(_.time)
 
   /** Every completed instant of any action (data + rollback/restore/
     * clean), active + archived, time-ordered. */
   def allCompletedInstants(): Seq[HudiInstant] =
     (listCompleted(hoodieDir, AnyCompletedRe) ++ listCompleted(archivedDir, AnyCompletedRe))
-      .sortBy(_.time)
+      .distinct.sortBy(_.time)
 
   /** Completed instants still on the ACTIVE timeline (archival bound). */
   def activeCompletedInstants(): Seq[HudiInstant] =

@@ -38,6 +38,14 @@ object ManifestEntry {
   val ContentData = 0
   val ContentPositionDeletes = 1
   val ContentEqualityDeletes = 2
+
+  /** The replay rule for two entries of one file path: true when `a`
+    * supersedes `b` — the higher sequence number wins; on a tie the
+    * delete wins. Every reconcile (snapshot, rollup, manifest rewrite)
+    * elects with it. */
+  def supersedes(a: ManifestEntry, b: ManifestEntry): Boolean =
+    if (a.sequenceNumber != b.sequenceNumber) a.sequenceNumber > b.sequenceNumber
+    else a.status == StatusDeleted
 }
 
 /** Transport form of one manifest-list entry (one manifest file). */

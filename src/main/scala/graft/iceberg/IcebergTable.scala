@@ -19,12 +19,12 @@ import graft.util.StagedWrites
  * queries identically (the reference's core contract, ref
  * `ITOneTableClient.java:748-813`).
  *
- * Scale shape: the manifest LIST is driver-side (one row per manifest),
- * manifest READS fan out over executors — at 10^6 files a snapshot has
- * hundreds of manifests each holding thousands of entries, so planning
- * parallelizes while the driver never materializes per-file stats
- * (ref `IcebergSourceClient.java:133-168` plans via the Iceberg library
- * on one thread; this is the distributed re-expression).
+ * Scale shape: snapshot reads and change reads reconcile the manifest
+ * list and its manifests on the driver, as the reference plans through
+ * the Iceberg library on one thread (ref
+ * `IcebergSourceClient.java:133-168`). Only the maintenance jobs
+ * (partition statistics, manifest rewrite, orphan removal) fan manifest
+ * reads out over executors.
  */
 final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataLog) {
 
@@ -390,10 +390,10 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * counters, and `last_updated_snapshot_id`. Engines read this for
    * partition-pruning estimates without touching manifests.
    *
-   * Scale: manifests are read in the SAME distributed job shape as the
-   * scan (newest-entry-per-path election included) and the rollup
-   * reduces per (partition, spec) BEFORE the collect — the driver only
-   * ever holds one row per partition, never the file list.
+   * Scale: manifests are read in a distributed job that elects the
+   * newest entry per path by the scan's rule ([[ManifestEntry.supersedes]])
+   * and reduces per (partition, spec) BEFORE the collect — the driver
+   * only ever holds one row per partition, never the file list.
    */
   def writePartitionStatistics(): IcebergPartitionStatisticsFile = {
     val (_, meta0) = log.readLatest().getOrElse(
@@ -439,11 +439,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
           .flatMap { case (p, sid) =>
             IcebergManifests.readManifest(conf.value, new Path(p)).map((_, sid)) }
           .map { case (e, sid) => (e.filePath, (e, sid)) }
-          .reduceByKey { (a, b) =>
-            if (a._1.sequenceNumber != b._1.sequenceNumber) {
-              if (a._1.sequenceNumber > b._1.sequenceNumber) a else b
-            } else if (a._1.status == ManifestEntry.StatusDeleted) a else b
-          }
+          .reduceByKey((a, b) => if (ManifestEntry.supersedes(a._1, b._1)) a else b)
           .values
           .filter { case (e, _) => e.status != ManifestEntry.StatusDeleted }
           .map { case (e, sid) =>
@@ -749,73 +745,30 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       case None => scan
     }).toDF()
 
-  /** Live manifest entries of a snapshot (executor-side manifest reads).
-    * Reconciliation is per-path latest-sequence-wins — a carried add
-    * manifest plus a later delete manifest for the same file resolves
-    * to deleted, the same replay rule as the Delta log (one shuffle on
-    * path, no driver-side state until survivors).
-    *
-    * `pred` (partition/range pruning from the scan builder) runs on the
-    * EXECUTORS after reconciliation, so at 10^6 files the driver
-    * collects only the pruned survivors — never every entry's bounds
-    * maps. Reconcile-then-filter order matters: a delete entry must
-    * cancel its add even when neither matches the predicate. */
-  /** All entries of the given manifests — driver-side under the same
-    * byte fence as [[liveEntries]] (the manifest list carries lengths),
-    * distributed beyond it. Used by the per-snapshot change paths,
-    * which otherwise paid one Spark job PER replayed snapshot. */
-  private def readEntries(infos: Seq[ManifestFileInfo]): Seq[ManifestEntry] = {
-    val paths = infos.map(_.manifestPath).distinct
-    if (paths.isEmpty) Seq.empty
-    else if (infos.iterator.map(_.manifestLength).sum <= IcebergTable.MaxLocalManifestBytes)
-      paths.flatMap(p => IcebergManifests.readManifest(hconf, new Path(p)))
-    else {
-      val conf = new SerializableConfiguration(hconf)
-      spark.sparkContext.parallelize(paths, math.min(paths.size, 64))
-        .flatMap(p => IcebergManifests.readManifest(conf.value, new Path(p)))
-        .collect().toSeq
-    }
-  }
+  /** All entries of the given manifests, read on the driver — the
+    * per-snapshot change paths' input. */
+  private def readEntries(infos: Seq[ManifestFileInfo]): Seq[ManifestEntry] =
+    infos.map(_.manifestPath).distinct.flatMap(p => IcebergManifests.readManifest(hconf, new Path(p)))
 
+  /** Live manifest entries of a snapshot, reconciled on the driver: per
+    * path the [[ManifestEntry.supersedes]] winner — a carried add
+    * manifest plus a later delete manifest for the same file resolves
+    * to deleted. `pred` (partition/range pruning from the scan builder)
+    * runs after reconciliation: a delete entry must cancel its add even
+    * when neither matches the predicate. Sorted by path. */
   private[iceberg] def liveEntries(
       snapshotId: Option[Long],
       pred: ManifestEntry => Boolean = _ => true): Seq[ManifestEntry] = {
     val meta = currentMetadata
     val snap = snapshotId.map(meta.snapshot).orElse(meta.currentSnapshot).getOrElse(
       throw new IllegalStateException(s"empty iceberg table: $tablePath"))
-    val manifests = IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))
-    val conf = new SerializableConfiguration(hconf)
-    val paths = manifests.map(_.manifestPath)
-    if (paths.isEmpty) return Seq.empty
-    def newer(a: ManifestEntry, b: ManifestEntry): ManifestEntry =
-      if (a.sequenceNumber != b.sequenceNumber) {
-        if (a.sequenceNumber > b.sequenceNumber) a else b
-      } else if (a.status == ManifestEntry.StatusDeleted) a else b
-    // metadata-small snapshots reconcile on the driver: the manifest
-    // list carries each manifest's byte length, so the fence costs no
-    // extra I/O, and a driver-side fold replaces a Spark job + a
-    // reduceByKey SHUFFLE per snapshot access (guide §1.2/§7.3 — same
-    // posture as the Delta/Hudi log replays). Large snapshots keep the
-    // distributed reconcile that matters at 100 TB manifest counts.
-    if (manifests.iterator.map(_.manifestLength).sum <= IcebergTable.MaxLocalManifestBytes) {
-      val state = scala.collection.mutable.HashMap[String, ManifestEntry]()
-      paths.foreach { p =>
-        IcebergManifests.readManifest(hconf, new Path(p)).foreach { e =>
-          state(e.filePath) = state.get(e.filePath).map(newer(_, e)).getOrElse(e)
-        }
-      }
-      return state.valuesIterator
-        .filter(e => e.status != ManifestEntry.StatusDeleted && pred(e))
-        .toSeq.sortBy(_.filePath)
+    val state = scala.collection.mutable.HashMap[String, ManifestEntry]()
+    readEntries(IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))).foreach { e =>
+      if (state.get(e.filePath).forall(cur => !ManifestEntry.supersedes(cur, e))) state(e.filePath) = e
     }
-    spark.sparkContext
-      .parallelize(paths, math.min(paths.size, 64))
-      .flatMap(p => IcebergManifests.readManifest(conf.value, new Path(p)))
-      .map(e => (e.filePath, e))
-      .reduceByKey(newer)
-      .values
+    state.valuesIterator
       .filter(e => e.status != ManifestEntry.StatusDeleted && pred(e))
-      .collect().toSeq
+      .toSeq.sortBy(_.filePath)
   }
 
   /**
@@ -829,33 +782,16 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val fromIdx = ids.indexOf(fromSnapshotExclusive)
     val toIdx = ids.indexOf(toSnapshotInclusive)
     require(fromIdx >= 0 && toIdx > fromIdx, s"bad snapshot range on $tablePath")
-    val conf = new SerializableConfiguration(hconf)
     val targets = ids.slice(fromIdx + 1, toIdx + 1).toSet
     val manifestInfos = ids.slice(fromIdx + 1, toIdx + 1)
       .flatMap(id => IcebergManifests.readManifestList(hconf, new Path(meta.snapshot(id).manifestList)))
       .filter(m => targets.contains(m.addedSnapshotId))
-    val manifestPaths = manifestInfos.map(_.manifestPath).distinct
-    def keep(e: ManifestEntry): Boolean =
-      e.status == ManifestEntry.StatusAdded && targets.contains(e.snapshotId) &&
+    val added = readEntries(manifestInfos)
+      .filter(e => e.status == ManifestEntry.StatusAdded && targets.contains(e.snapshotId) &&
         // the change feed reports added DATA; delete files added in the
         // range are row-level tombstones, not new rows
-        e.content == ManifestEntry.ContentData
-    // driver-side read for metadata-small ranges (same fence/posture as
-    // liveEntries) — the distributed path cost a job per change-feed call
-    val added: Seq[ManifestEntry] =
-      if (manifestInfos.iterator.map(_.manifestLength).sum <= IcebergTable.MaxLocalManifestBytes)
-        manifestPaths
-          .flatMap(p => IcebergManifests.readManifest(hconf, new Path(p)))
-          .filter(keep)
-          .groupBy(_.filePath).map(_._2.head).toSeq.sortBy(_.filePath)
-      else spark.sparkContext
-        .parallelize(manifestPaths, math.max(1, math.min(manifestPaths.size, 64)))
-        .flatMap(p => IcebergManifests.readManifest(conf.value, new Path(p)))
-        .filter(keep)
-        .map(e => (e.filePath, e))
-        .reduceByKey((a, _) => a)
-        .values
-        .collect().toSeq
+        e.content == ManifestEntry.ContentData)
+      .groupBy(_.filePath).map(_._2.head).toSeq.sortBy(_.filePath)
     readFiles(added)
   }
 
@@ -1961,20 +1897,16 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // spec evolution: an entry's partition tuple is shaped by the spec of
     // the manifest that carried it, and reads materialize identity values
     // per the manifest's partition-spec-id — so the consolidation must
-    // stay per-spec. Replay latest-sequence-wins like liveEntries, but
-    // carry each winning entry's manifest spec id through.
+    // stay per-spec. Elect by liveEntries' rule (ManifestEntry.supersedes),
+    // but carry each winning entry's manifest spec id through.
     val conf = new SerializableConfiguration(hconf)
-    def newer(a: (Int, ManifestEntry), b: (Int, ManifestEntry)): (Int, ManifestEntry) =
-      if (a._2.sequenceNumber != b._2.sequenceNumber) {
-        if (a._2.sequenceNumber > b._2.sequenceNumber) a else b
-      } else if (a._2.status == ManifestEntry.StatusDeleted) a else b
     val live: Seq[(Int, ManifestEntry)] = spark.sparkContext
       .parallelize(manifests.map(m => (m.manifestPath, m.partitionSpecId)),
         math.min(manifests.size, 64))
       .flatMap { case (p, sid) =>
         IcebergManifests.readManifest(conf.value, new Path(p)).map(e => (sid, e)) }
       .map { case (sid, e) => (e.filePath, (sid, e)) }
-      .reduceByKey(newer)
+      .reduceByKey((a, b) => if (ManifestEntry.supersedes(a._2, b._2)) a else b)
       .values
       .filter(_._2.status != ManifestEntry.StatusDeleted)
       .map { case (sid, e) => (sid, e.copy(status = ManifestEntry.StatusExisting)) }
@@ -2407,14 +2339,6 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
 }
 
 object IcebergTable {
-
-  /** Byte budget for driver-side manifest reconciliation in
-    * [[IcebergTable.liveEntries]] — the avro manifests under this parse
-    * on the driver in single-digit ms, where the distributed
-    * reduceByKey pays a job + shuffle of scheduler latency per
-    * snapshot access. Size-fenced from the manifest list's own
-    * `manifest_length` field (no extra I/O). */
-  private[iceberg] val MaxLocalManifestBytes = 4L * 1024 * 1024
 
   /** Tolerant timestamp-value parse shared by the partition-statistics
     * WRITER (manifest value strings → typed rollup values) and the

@@ -224,17 +224,24 @@ class HudiTableSpec extends SparkTestBase {
     assert(rows.count() == src.filter(col("o_orderkey").between(1, 50)).count())
   }
 
-  test("local-replay fence sizes an instant by its active copy, not an archived twin") {
-    val dir = tmpDir("hudi_fence")
-    val t = HudiTable.create(spark, s"$dir/t", spark.read.parquet(s"$sf0001/nation.parquet"))
+  test("replay reads the active copy, not a garbage archived twin") {
+    val dir = tmpDir("hudi_twin")
+    val src = spark.read.parquet(s"$sf0001/nation.parquet")
+    val t = HudiTable.create(spark, s"$dir/t", src)
     val inst = t.timeline.completedInstants().last
-    // reads resolve the active copy; a stale archived twin past the
-    // 4 MB budget must not push the replay onto the distributed path
+    // mid-archival both copies exist; reads resolve the active one, so a
+    // 5 MB archived twin that is not even JSON must never be parsed
     val fs = t.timeline.hoodieDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(t.timeline.archivedDir)
     val out = fs.create(new org.apache.hadoop.fs.Path(t.timeline.archivedDir, inst.fileName))
-    try out.write(Array.fill(5 << 20)(' '.toByte)) finally out.close()
-    assert(t.localActions(Seq(inst.time)).exists(_.nonEmpty))
+    try out.write(Array.fill(5 << 20)('#'.toByte)) finally out.close()
+    val fresh = HudiTable.forPath(spark, s"$dir/t")
+    assert(fresh.instants == Seq(inst.time))
+    assert(fresh.fileSlices().map(_.basePath) == t.fileSlices().map(_.basePath))
+    assert(fresh.toDF().except(src).isEmpty && src.except(fresh.toDF()).isEmpty)
+    val feed = fresh.changeFeed("0", inst.time)
+    assert(feed.filter(col("_change_type") === "insert").count() == src.count())
+    assert(feed.count() == src.count())
   }
 
   test("instantForTimestamp resolves to the latest instant at or before") {
