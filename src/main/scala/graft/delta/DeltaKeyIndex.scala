@@ -63,10 +63,7 @@ object DeltaKeyIndex {
     val p = configPath(tablePath)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val s = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-    finally in.close()
+    val s = graft.util.MetaFiles.readUtf8(fs, p)
     def field(k: String): Option[String] =
       s""""$k"\\s*:\\s*("([^"]*)"|(\\d+))""".r.findFirstMatchIn(s)
         .map(m => Option(m.group(2)).getOrElse(m.group(3)))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.MetaFiles
+
 /**
  * Native `_delta_log` reader/writer (no Delta runtime — SURVEY.md §7).
  *
@@ -51,15 +53,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     Iterator.iterate(v + 1)(_ + 1).takeWhile(x => fs.exists(commitFile(x))).toSeq
 
   /** Driver-side read of a single commit's actions (metadata-sized). */
-  def readActions(v: Long): Seq[DeltaAction] = {
-    val in = fs.open(commitFile(v))
-    try {
-      val content = new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-      content.split("\n").filter(_.nonEmpty).toSeq
-        .flatMap(DeltaActionCodec.fromJsonLine)
-    } finally in.close()
-  }
+  def readActions(v: Long): Seq[DeltaAction] =
+    MetaFiles.readUtf8(fs, commitFile(v)).split("\n").filter(_.nonEmpty).toSeq
+      .flatMap(DeltaActionCodec.fromJsonLine)
 
   /**
    * Atomically commit actions as the given version. Returns false only
@@ -119,18 +115,14 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     // delete→rename gap of a concurrent publish) and any residual tear
     // on filesystems without atomic rename degrade to None — full JSON
     // replay, slower but never wrong.
-    val in = try fs.open(lastCheckpointPath) catch {
-      case _: java.io.FileNotFoundException => return None
-    }
     try {
-      val content = new String(
-        org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-      val node = mapper.readTree(content)
+      val node = mapper.readTree(MetaFiles.readUtf8(fs, lastCheckpointPath))
       Option(node.get("version")).map(v =>
         (v.asLong(), Option(node.get("parts")).filterNot(_.isNull).map(_.asInt())))
     } catch {
-      case _: java.io.EOFException | _: com.fasterxml.jackson.core.JacksonException => None
-    } finally in.close()
+      case _: java.io.FileNotFoundException | _: java.io.EOFException |
+          _: com.fasterxml.jackson.core.JacksonException => None
+    }
   }
 
   /** Discover the newest checkpoint at or before `asOf` and its layout.
@@ -181,12 +173,8 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
         .select(col("sidecar.path")).collect().map(_.getString(0)).toSeq
     }
 
-  private def readJsonLines(p: Path): Seq[String] = {
-    val in = fs.open(p)
-    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty).toSeq
-    finally in.close()
-  }
+  private def readJsonLines(p: Path): Seq[String] =
+    MetaFiles.readUtf8(fs, p).split("\n").filter(_.nonEmpty).toSeq
 
   /** Non-file actions of a checkpoint (metaData + protocol), layout-
     * aware: V2 keeps them in the top-level file; classic layouts carry
@@ -425,14 +413,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     * string that happens to contain the marker decodes to its REAL
     * action and the partial function skips it — semantics unchanged. */
   private def readFirstAction[A](v: Long, marker: String)(
-      pf: PartialFunction[DeltaAction, A]): Option[A] = {
-    val in = fs.open(commitFile(v))
-    val content = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-    finally in.close()
-    content.split("\n").iterator.filter(_.contains(marker))
+      pf: PartialFunction[DeltaAction, A]): Option[A] =
+    MetaFiles.readUtf8(fs, commitFile(v)).split("\n").iterator.filter(_.contains(marker))
       .flatMap(DeltaActionCodec.fromJsonLine).collectFirst(pf)
-  }
 
   def metadataAt(asOf: Option[Long]): (DeltaMetadata, Long) = {
     val versions = listVersions()

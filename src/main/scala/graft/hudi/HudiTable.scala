@@ -1575,14 +1575,18 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
   /** Instants the incremental sync feed replays, time-ordered: data
     * commits plus rollback/restore (whose change sets are removals);
     * clean stays a feed no-op (ref `HudiDataFileExtractor.java:244-250`). */
-  def syncInstants: Seq[String] =
-    timeline.allCompletedInstants().filter(i => HudiTable.FeedActions(i.action)).map(_.time)
+  def syncInstants: Seq[String] = syncInstants(timeline.allCompletedInstants())
+
+  /** [[syncInstants]] of an already listed [[HudiTimeline.allCompletedInstants]]. */
+  def syncInstants(completed: Seq[HudiInstant]): Seq[String] =
+    completed.filter(i => HudiTable.FeedActions(i.action)).map(_.time)
 
   /** Retention fence input: the earliest commit whose files the latest
     * clean still retains, if any clean has run (ref
-    * `core/.../hudi/HudiClient.java:152-177`). */
-  def earliestCommitToRetain: Option[String] =
-    timeline.allCompletedInstants().filter(_.action == "clean").lastOption
+    * `core/.../hudi/HudiClient.java:152-177`), found among `completed`
+    * ([[HudiTimeline.allCompletedInstants]]). */
+  def earliestCommitToRetain(completed: Seq[HudiInstant]): Option[String] =
+    completed.filter(_.action == "clean").lastOption
       .map(i => HudiMaintenanceCodec.cleanFromJson(timeline.readInstantJson(i)))
       .map(_.earliestCommitToRetain).filter(_.nonEmpty)
 
@@ -1594,17 +1598,25 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
       .map(i => timeline.readCommitMetadata(i).extraMetadata)
       .getOrElse(Map.empty)
 
-  /** Live base files of the current snapshot as (partitionPath, path,
-    * size), plus normalized absolute path → recorded write count from
-    * the commit metadata's own write stats — both from ONE replay, so
-    * each instant file is read once. Shared by [[snapshotDataFiles]]
-    * (the sync layer) and [[planningFacts]] (the planner), so the two
-    * can never count rows differently. */
-  private def liveFilesWithCounts(): (Seq[(String, String, Long)], Map[String, Long]) = {
+  /** Live base files of the current snapshot as (partitionPath,
+    * [[absoluteOf]] path, its `Path`, size, recorded write count or -1)
+    * from ONE replay, so each instant file is read once and each path
+    * parsed once. Shared by [[snapshotDataFiles]] (the sync layer) and
+    * [[planningFacts]] (the planner), so the two can never count rows
+    * differently. */
+  private def liveFilesWithCounts(): Seq[(String, String, Path, Long, Long)] = {
     val acts = localActions(instants)
+    val base = new Path(tablePath)
+    val parsed = scala.collection.mutable.HashMap[String, Path]()
+    def parse(p: String): Path =
+      parsed.getOrElseUpdate(p, if (isAbsolute(p)) new Path(p) else new Path(base, p))
     val counts = acts.iterator.filter(_.isAdd)
-      .map(a => HudiTable.normalize(absoluteOf(a.path)) -> a.numWrites).toMap
-    (liveBases(acts).map(a => (a.partitionPath, a.path, a.size)), counts)
+      .map(a => parse(a.path).toUri.getPath -> a.numWrites).toMap
+    liveBases(acts).map { a =>
+      val p = parse(a.path)
+      (a.partitionPath, if (isAbsolute(a.path)) a.path else p.toString, p, a.size,
+        counts.getOrElse(p.toUri.getPath, -1L))
+    }
   }
 
   /** Planning-time (live rows, live bytes) of the current snapshot —
@@ -1618,15 +1630,13 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * write count — unknown rows mean no planning fact. */
   def planningFacts(): Option[(Double, Double)] = {
     if (isMor && hasLogFiles(None)) return None
-    val (files, counts) = liveFilesWithCounts()
+    val files = liveFilesWithCounts()
     if (files.isEmpty) return None
     var rows = 0.0
     var bytes = 0.0
-    files.foreach { case (_, path, size) =>
-      counts.get(HudiTable.normalize(absoluteOf(path))) match {
-        case Some(n) if n >= 0 => rows += n.toDouble
-        case _ => return None
-      }
+    files.foreach { case (_, _, _, size, n) =>
+      if (n < 0) return None
+      rows += n.toDouble
       bytes += size.toDouble
     }
     Some((rows, bytes))
@@ -1653,7 +1663,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
         "formats cannot express; run compactMor() first, or opt into the " +
         "read-optimized view (hudiSource(t, readOptimized = true)) whose target " +
         "lags the snapshot by the un-compacted log mutations")
-    val (files, counts) = liveFilesWithCounts()
+    val files = liveFilesWithCounts()
     val statsByFile: Map[(String, String), Seq[graft.model.ColumnStatRow]] =
       HudiColStats.read(spark, tablePath, instants) match {
         case None => Map.empty
@@ -1668,14 +1678,13 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
             totalSize = r.getLong(7))).toSeq).toMap
       }
     val partCols = partitionColumns
-    files.map { case (pp, path, size) =>
-      val abs = absoluteOf(path)
+    files.map { case (pp, abs, path, size, count) =>
       graft.model.InternalDataFile(
         physicalPath = abs,
         partitionValues = HudiTable.parsePartitionPath(pp, partCols),
         fileSizeBytes = size,
-        recordCount = counts.getOrElse(HudiTable.normalize(abs), -1L),
-        columnStats = statsByFile.getOrElse((pp, new Path(abs).getName), Seq.empty),
+        recordCount = count,
+        columnStats = statsByFile.getOrElse((pp, path.getName), Seq.empty),
         lastModified = 0L)
     }
   }
@@ -1989,8 +1998,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     instant
   }
 
+  private def isAbsolute(p: String): Boolean = p.startsWith("/") || p.contains(":/")
   private def absoluteOf(p: String): String =
-    if (p.startsWith("/") || p.contains(":/")) p else new Path(tablePath, p).toString
+    if (isAbsolute(p)) p else new Path(tablePath, p).toString
 }
 
 object HudiTable {

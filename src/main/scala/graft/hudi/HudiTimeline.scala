@@ -10,7 +10,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import graft.util.MetaFiles
+
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 /** One completed timeline instant (COW read path: commits and
   * replacecommits are the only actions that move data — ref
@@ -77,47 +80,45 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
 
   def readProperties(): Map[String, String] = {
     require(exists, s"not a hudi table (no .hoodie/hoodie.properties): $tablePath")
-    val in = fs.open(propsFile)
-    try {
-      new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-        .split("\n").toSeq
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .flatMap(_.split("=", 2) match {
-          case Array(k, v) => Some(k -> v)
-          case _ => None
-        }).toMap
-    } finally in.close()
+    MetaFiles.readUtf8(fs, propsFile)
+      .split("\n").toSeq
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+      .flatMap(_.split("=", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }).toMap
   }
 
   // -------------------------------------------------------------- listing
 
-  private def listCompleted(dir: Path, re: scala.util.matching.Regex): Seq[HudiInstant] =
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .flatMap {
-        case re(ts, action) => Some(HudiInstant(ts, action))
-        case _ => None
-      }
+  /** File names in `dir`, from one listing; none when `dir` is absent. */
+  private def namesIn(dir: Path): Seq[String] =
+    try fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    catch { case _: FileNotFoundException => Seq.empty }
+
+  private def completedIn(names: Seq[String], re: Regex): Seq[HudiInstant] =
+    names.collect { case re(ts, action) => HudiInstant(ts, action) }
+
+  /** Completed instants matching `re` among the active names (listed
+    * here unless the caller already has them) and the archived ones,
+    * time-ordered. An instant caught mid-archival (in both directories)
+    * is listed once. */
+  private def completed(re: Regex, active: Seq[String] = namesIn(hoodieDir)): Seq[HudiInstant] =
+    (completedIn(active, re) ++ completedIn(namesIn(archivedDir), re)).distinct.sortBy(_.time)
 
   /** Completed data instants (commit + replacecommit), time-ordered,
     * active AND archived — metadata-backed replay needs the full
     * history, exactly as Delta replay reads checkpointed versions.
-    * Fixed-width instant strings sort chronologically as strings. An
-    * instant caught mid-archival (in both directories) is listed once. */
-  def completedInstants(): Seq[HudiInstant] =
-    (listCompleted(hoodieDir, CompletedRe) ++ listCompleted(archivedDir, CompletedRe))
-      .distinct.sortBy(_.time)
+    * Fixed-width instant strings sort chronologically as strings. */
+  def completedInstants(): Seq[HudiInstant] = completed(CompletedRe)
 
   /** Every completed instant of any action (data + rollback/restore/
     * clean), active + archived, time-ordered. */
-  def allCompletedInstants(): Seq[HudiInstant] =
-    (listCompleted(hoodieDir, AnyCompletedRe) ++ listCompleted(archivedDir, AnyCompletedRe))
-      .distinct.sortBy(_.time)
+  def allCompletedInstants(): Seq[HudiInstant] = completed(AnyCompletedRe)
 
   /** Completed instants still on the ACTIVE timeline (archival bound). */
   def activeCompletedInstants(): Seq[HudiInstant] =
-    listCompleted(hoodieDir, AnyCompletedRe).sortBy(_.time)
+    completedIn(namesIn(hoodieDir), AnyCompletedRe).sortBy(_.time)
 
   def latestInstant(): Option[HudiInstant] = completedInstants().lastOption
 
@@ -127,16 +128,11 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
     * below the watermark, is still replayed (ref
     * `api/.../model/CommitsBacklog.java:28-86`). */
   def pendingInstants(): Seq[String] = {
-    if (!fs.exists(hoodieDir)) return Seq.empty
-    val completed = allCompletedInstants().map(_.time).toSet
+    val active = namesIn(hoodieDir)
+    val done = completed(AnyCompletedRe, active).map(_.time).toSet
     val Marker =
       """(\d{14,17})(?:\.(?:commit|replacecommit|deltacommit|rollback|restore|clean))?\.(?:requested|inflight)""".r
-    fs.listStatus(hoodieDir).toSeq
-      .map(_.getPath.getName)
-      .collect { case Marker(ts) => ts }
-      .distinct
-      .filterNot(completed.contains)
-      .sorted
+    active.collect { case Marker(ts) => ts }.distinct.filterNot(done).sorted
   }
 
   /** Path a newly-committed instant's metadata file goes to. */
@@ -157,11 +153,9 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
     catch { case _: FileNotFoundException => f(new Path(archivedDir, i.fileName)) }
 
   private def readJson(p: Path): String = {
-    val in = fs.open(p)
+    val json = MetaFiles.readUtf8(fs, p)
     instantFilesOpened.incrementAndGet()
-    try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-    finally in.close()
+    json
   }
 
   /** Raw JSON of any completed instant (active or archived). */

@@ -430,24 +430,15 @@ final class IcebergMetadataLog(val tablePath: String, sc: SparkContext) {
     val hinted =
       try {
         if (fs.exists(hintFile)) {
-          val in = fs.open(hintFile)
-          val s = try new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-          finally in.close()
-          val v = s.trim.toLong
+          val v = graft.util.MetaFiles.readUtf8(fs, hintFile).trim.toLong
           if (fs.exists(versionFile(v)) && !fs.exists(versionFile(v + 1))) Some(v) else None
         } else None
       } catch { case _: Exception => None }
     hinted.orElse(listVersions().lastOption)
   }
 
-  def read(v: Long): IcebergTableMetadata = {
-    val in = fs.open(versionFile(v))
-    val s = try new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), StandardCharsets.UTF_8)
-    finally in.close()
-    IcebergMetadataCodec.fromJson(s)
-  }
+  def read(v: Long): IcebergTableMetadata =
+    IcebergMetadataCodec.fromJson(graft.util.MetaFiles.readUtf8(fs, versionFile(v)))
 
   def readLatest(): Option[(Long, IcebergTableMetadata)] =
     latestVersion().map(v => (v, read(v)))

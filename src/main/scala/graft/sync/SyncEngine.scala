@@ -208,11 +208,12 @@ object SyncEngine {
               s"($version -> $after after $spins re-reads) — re-plan and retry")
         else { spins += 1; version = after; files = source.snapshotFiles() }
       }
-      val byPath = files.map(f => norm(f.physicalPath) -> f).toMap
-      val live = target.livePaths()
-      val liveNorm = live.map(norm)
-      val adds = files.filterNot(f => liveNorm.contains(norm(f.physicalPath)))
-      val removes = live.filterNot(p => byPath.contains(norm(p))).toSeq.sorted
+      val srcByNorm = files.map(f => norm(f.physicalPath) -> f)
+      val liveByNorm = target.livePaths().toSeq.map(p => norm(p) -> p)
+      val srcNorms = srcByNorm.map(_._1).toSet
+      val liveNorms = liveByNorm.map(_._1).toSet
+      val adds = srcByNorm.collect { case (n, f) if !liveNorms(n) => f }
+      val removes = liveByNorm.collect { case (n, p) if !srcNorms(n) => p }.sorted
       target.commit(source.schema, source.partitionColumns, source.dataRoot,
         adds, removes,
         keyProps ++ source.statisticsProps(version) ++
@@ -603,8 +604,10 @@ private final class HudiSource(t: HudiTable,
     * or below it (a rolled-back watermark commit still replays
     * incrementally — the rollback instant after it carries the
     * removals) and the cleaner hasn't reclaimed files past it. */
-  def versionExists(v: String): Boolean =
-    t.syncInstants.exists(_ <= v) && t.earliestCommitToRetain.forall(_ <= v)
+  def versionExists(v: String): Boolean = {
+    val completed = t.timeline.allCompletedInstants()
+    t.syncInstants(completed).exists(_ <= v) && t.earliestCommitToRetain(completed).forall(_ <= v)
+  }
   /** Exact membership: a pending/abandoned instant must NOT drain from
     * the inflight backlog until it actually completes. */
   override def isCompleted(v: String): Boolean = t.syncInstants.contains(v)

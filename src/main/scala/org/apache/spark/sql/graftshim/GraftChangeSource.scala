@@ -110,11 +110,8 @@ final class GraftChangeSource(
       val persisted: Option[StructType] =
         if (!fsys.exists(p)) None
         else scala.util.Try {
-          val in = fsys.open(p)
-          try org.apache.spark.sql.types.DataType.fromJson(new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), UTF_8))
+          org.apache.spark.sql.types.DataType.fromJson(graft.util.MetaFiles.readUtf8(fsys, p))
             .asInstanceOf[StructType]
-          finally in.close()
         }.toOption
       val hadRegistryEntry = GraftChangeSource.pinnedRegistry.containsKey((fmt.name, path))
       def persist(s: StructType): StructType = {
@@ -169,12 +166,8 @@ final class GraftChangeSource(
       case Some(p) =>
         val fsys = p.getFileSystem(hadoopConf)
         if (!fsys.exists(p)) (None, false)
-        else (scala.util.Try {
-          val in = fsys.open(p)
-          try GraftStreamOffset.parse(new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), UTF_8))
-          finally in.close()
-        }.toOption, true)
+        else (scala.util.Try(GraftStreamOffset.parse(graft.util.MetaFiles.readUtf8(fsys, p)))
+          .toOption, true)
     }
   @volatile private var lastSeen: Option[GraftStreamOffset] = initialPos
 
