@@ -3,11 +3,19 @@ package graft.delta
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.MessageType
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.util.MetaFiles
+import scala.jdk.CollectionConverters._
 
 /**
  * Native `_delta_log` reader/writer (no Delta runtime — SURVEY.md §7).
@@ -21,9 +29,10 @@ import graft.util.MetaFiles
  *
  * Read side: log replay is the classic "last action per path wins"
  * reconciliation (ref `DeltaDataFileExtractor.java:54-114` delegates to
- * DeltaLog.snapshot; here it's a window over a DataFrame of raw
- * actions, so a 100 TB table with millions of add entries replays as a
- * distributed job, not a driver loop).
+ * DeltaLog.snapshot), one fold on the driver at every log shape: the
+ * checkpoint's parquet parts are read in-process with parquet-hadoop,
+ * then the JSON tail folds on top. No metadata read launches a Spark
+ * job; driver memory grows with the live-file count.
  */
 final class DeltaLog(val tablePath: String, spark: SparkSession) {
 
@@ -97,7 +106,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     * bottleneck), and V2 (`v2Checkpoint` reader feature): a top-level
     * `%020d.checkpoint.<uniq>.{json|parquet}` holding the non-file
     * actions plus `sidecar` pointers into `_delta_log/_sidecars/`, where
-    * the file actions live as parquet read distributed. */
+    * the file actions live as parquet. Every layout is read on the
+    * driver (`parquetRows`), projected to the columns replay
+    * decodes. */
   private def checkpointFile(v: Long): Path =
     new Path(logPath, f"$v%020d.checkpoint.parquet")
   private def multiPartFile(v: Long, part: Int, parts: Int): Path =
@@ -149,84 +160,71 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
   /** Parquet file set of a checkpoint's FILE actions (V2: the sidecars,
     * plus the top-level if it is parquet — a V2 checkpoint without
     * sidecars carries its file actions inline). */
-  private def checkpointDataFiles(ck: DeltaLog.Checkpoint): Seq[String] = ck match {
-    case DeltaLog.ClassicCheckpoint(v) => Seq(checkpointFile(v).toString)
-    case DeltaLog.MultiPartCheckpoint(v, parts) =>
-      (1 to parts).map(p => multiPartFile(v, p, parts).toString)
+  private def checkpointDataFiles(ck: DeltaLog.Checkpoint): Seq[Path] = ck match {
+    case DeltaLog.ClassicCheckpoint(v) => Seq(checkpointFile(v))
+    case DeltaLog.MultiPartCheckpoint(v, parts) => (1 to parts).map(multiPartFile(v, _, parts))
     case DeltaLog.V2Checkpoint(_, top) =>
-      val sidecars = v2SidecarNames(top).map(n => new Path(sidecarDir, n).toString)
-      if (top.getName.endsWith(".parquet")) top.toString +: sidecars else sidecars
+      val sidecars = v2SidecarNames(top).map(new Path(sidecarDir, _))
+      if (top.getName.endsWith(".parquet")) top +: sidecars else sidecars
   }
 
-  /** Sidecar file names referenced by a V2 top-level checkpoint
-    * (driver-side, metadata-sized). */
+  /** Sidecar file names referenced by a V2 top-level checkpoint. */
   private def v2SidecarNames(top: Path): Seq[String] =
     if (top.getName.endsWith(".json"))
       readJsonLines(top).flatMap { line =>
         val n = mapper.readTree(line)
         Option(n.get("sidecar")).filterNot(_.isNull).map(_.get("path").asText())
       }
-    else {
-      val df = spark.read.parquet(top.toString)
-      if (!df.schema.fieldNames.contains("sidecar")) Seq.empty
-      else df.filter(col("sidecar.path").isNotNull)
-        .select(col("sidecar.path")).collect().map(_.getString(0)).toSeq
-    }
+    else parquetRows(Seq(top), DeltaLog.SidecarColumns)(DeltaLog.sidecarPathOf)
 
   private def readJsonLines(p: Path): Seq[String] =
     MetaFiles.readUtf8(fs, p).split("\n").filter(_.nonEmpty).toSeq
 
+  /** Rows of checkpoint parquet `files`, read on the driver, projected
+    * to `columns` (a file lacking all of them is not scanned) and decoded
+    * as they are read. */
+  private def parquetRows[A](files: Seq[Path], columns: Map[String, Set[String]])(
+      decode: Group => IterableOnce[A]): Seq[A] = files.flatMap { file =>
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val kept = schema.getFields.asScala.toSeq.flatMap { f =>
+        columns.get(f.getName).filterNot(_ => f.isPrimitive).flatMap { subs =>
+          val fields = f.asGroupType.getFields.asScala.filter(s => subs(s.getName))
+          if (fields.isEmpty) None else Some(f.asGroupType.withNewFields(fields.asJava))
+        }
+      }
+      val out = Vector.newBuilder[A]
+      if (kept.nonEmpty) {
+        val projection = new MessageType(schema.getName, kept: _*)
+        reader.setRequestedSchema(projection)
+        val io = new ColumnIOFactory().getColumnIO(projection, schema)
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).foreach { pages =>
+          val records = io.getRecordReader(pages, new GroupRecordConverter(projection))
+          var i = 0L
+          while (i < pages.getRowCount) { out ++= decode(records.read()); i += 1 }
+        }
+      }
+      out.result()
+    } finally reader.close()
+  }
+
   /** Non-file actions of a checkpoint (metaData + protocol), layout-
     * aware: V2 keeps them in the top-level file; classic layouts carry
     * them as rows in (any part of) the checkpoint parquet. */
-  private def checkpointHeader(ck: DeltaLog.Checkpoint): (Option[DeltaMetadata], Option[Protocol]) =
-    ck match {
+  private def checkpointHeader(ck: DeltaLog.Checkpoint): (Option[DeltaMetadata], Option[Protocol]) = {
+    val actions: Seq[DeltaAction] = ck match {
       case DeltaLog.V2Checkpoint(_, top) if top.getName.endsWith(".json") =>
         // sidecar/checkpointMetadata lines fall through the codec as None
-        val actions = readJsonLines(top).flatMap(DeltaActionCodec.fromJsonLine)
-        (actions.collectFirst { case m: DeltaMetadata => m },
-          actions.collectFirst { case p: Protocol => p })
-      case DeltaLog.V2Checkpoint(_, top) => parquetHeader(Seq(top.toString))
-      case other => parquetHeader(checkpointDataFiles(other))
+        readJsonLines(top).flatMap(DeltaActionCodec.fromJsonLine)
+      case DeltaLog.V2Checkpoint(_, top) =>
+        parquetRows(Seq(top), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
+      case other =>
+        parquetRows(checkpointDataFiles(other), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
     }
-
-  private def parquetHeader(paths: Seq[String]): (Option[DeltaMetadata], Option[Protocol]) = {
-    val df = spark.read.parquet(paths: _*)
-    val meta =
-      if (!df.schema.fieldNames.contains("metaData")) None
-      else df.filter(col("metaData.id").isNotNull)
-        .select("metaData.id", "metaData.schemaString", "metaData.partitionColumns",
-          "metaData.configuration", "metaData.createdTime")
-        .collect().headOption.map(r => DeltaMetadata(
-          id = r.getString(0),
-          schemaString = r.getString(1),
-          partitionColumns = r.getSeq[String](2),
-          configuration = if (r.isNullAt(3)) Map.empty else r.getMap[String, String](3).toMap,
-          createdTime = if (r.isNullAt(4)) 0L else r.getLong(4)))
-    val proto =
-      if (!df.schema.fieldNames.contains("protocol")) None
-      else {
-        // feature columns are absent in checkpoints written before the
-        // table-features upgrade shipped
-        val hasFeatureCols = df.schema("protocol").dataType match {
-          case s: StructType => s.fieldNames.contains("readerFeatures")
-          case _ => false
-        }
-        val rows =
-          if (hasFeatureCols)
-            df.filter(col("protocol.minReaderVersion").isNotNull).select(
-              col("protocol.minReaderVersion"), col("protocol.minWriterVersion"),
-              col("protocol.readerFeatures"), col("protocol.writerFeatures")).collect()
-          else
-            df.filter(col("protocol.minReaderVersion").isNotNull).select(
-              col("protocol.minReaderVersion"), col("protocol.minWriterVersion"),
-              lit(null).cast(ArrayType(StringType)), lit(null).cast(ArrayType(StringType))).collect()
-        rows.headOption.map(r => Protocol(
-          r.getInt(0), r.getInt(1),
-          if (r.isNullAt(2)) None else Some(r.getSeq[String](2)),
-          if (r.isNullAt(3)) None else Some(r.getSeq[String](3))))
-      }
-    (meta, proto)
+    (actions.collectFirst { case m: DeltaMetadata => m },
+      actions.collectFirst { case p: Protocol => p })
   }
 
   /** Checkpoint interval (Delta's default). */
@@ -404,7 +402,6 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     victims.size
   }
 
-  /** Latest metadata + protocol at or before `asOf`. */
   /** First action matching `pf` in commit `v`, decoding ONLY lines that
     * carry the top-level `marker` key (substring pre-filter): a sync
     * commit holds one metaData line among thousands of addFile lines,
@@ -412,11 +409,12 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     * made the 100-commit LoadTest shape quadratic in adds. A stats
     * string that happens to contain the marker decodes to its REAL
     * action and the partial function skips it — semantics unchanged. */
-  private def readFirstAction[A](v: Long, marker: String)(
+  private[delta] def readFirstAction[A](v: Long, marker: String)(
       pf: PartialFunction[DeltaAction, A]): Option[A] =
     MetaFiles.readUtf8(fs, commitFile(v)).split("\n").iterator.filter(_.contains(marker))
       .flatMap(DeltaActionCodec.fromJsonLine).collectFirst(pf)
 
+  /** Latest metadata at or before `asOf`, and the version it was read at. */
   def metadataAt(asOf: Option[Long]): (DeltaMetadata, Long) = {
     val versions = listVersions()
     val ck = resolveCheckpoint(asOf)
@@ -460,12 +458,12 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
   /** Commit timestamps (from commitInfo, fallback file mtime) per version. */
   def commitTimestamps(): Seq[(Long, Long)] =
     listVersions().map { v =>
-      val ts = readActions(v).collectFirst { case c: CommitInfo => c.timestamp }
+      val ts = readFirstAction(v, "\"commitInfo\"") { case c: CommitInfo => c.timestamp }
         .getOrElse(fs.getFileStatus(commitFile(v)).getModificationTime)
       (v, ts)
     }
 
-  /** Spark schema used to parse raw log lines distributed. */
+  /** File-action structs of the checkpoints this engine writes. */
   private val dvSchema = StructType(Seq(
     StructField("storageType", StringType),
     StructField("pathOrInlineDv", StringType),
@@ -487,69 +485,6 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
       StructField("deletionTimestamp", LongType),
       StructField("dataChange", BooleanType))))))
 
-  /**
-   * Raw add/remove actions of all commits ≤ `asOf` as a DataFrame with a
-   * `version` column — the input to the checkpointed (window) replay.
-   */
-  def actionsDF(asOf: Option[Long]): DataFrame = {
-    val all = listVersions()
-    // replay = checkpoint base (if one applies at/before asOf) + JSON tail
-    val ck = resolveCheckpoint(asOf)
-    val cp = ck.map(_.version)
-    val versions = all
-      .filter(v => asOf.forall(v <= _))
-      .filter(v => cp.forall(v > _))
-    require(versions.nonEmpty || cp.nonEmpty, s"not a Delta table: $tablePath")
-    val jsonTail: Option[DataFrame] =
-      if (versions.isEmpty) None
-      else Some {
-        val paths = versions.map(v => commitFile(v).toString)
-        spark.read.text(paths: _*)
-          .withColumn("version",
-            regexp_extract(input_file_name(), "(\\d{20})\\.json", 1).cast(LongType))
-          .withColumn("action", from_json(col("value"), actionSchema))
-          .select(col("version"), col("action.add").as("add"), col("action.remove").as("remove"))
-          .filter(col("add").isNotNull || col("remove").isNotNull)
-      }
-    val base: Option[DataFrame] = ck.map { c =>
-      val df = spark.read.parquet(checkpointDataFiles(c): _*)
-      // normalize to this engine's add shape: a foreign checkpoint may
-      // lack optional subfields (stats, deletionVector) or carry extras
-      // (tags, baseRowId) the replay doesn't consume
-      val addType = df.schema("add").dataType.asInstanceOf[StructType]
-      def sub(name: String, t: DataType) =
-        if (addType.fieldNames.contains(name)) col(s"add.$name").cast(t)
-        else lit(null).cast(t)
-      // field-wise rebuild (not a struct cast): a foreign descriptor may
-      // carry extras like maxRowIndex, and struct casts demand equal arity
-      val dv =
-        if (!addType.fieldNames.contains("deletionVector")) lit(null).cast(dvSchema)
-        else when(col("add.deletionVector.storageType").isNotNull, struct(
-          col("add.deletionVector.storageType").as("storageType"),
-          col("add.deletionVector.pathOrInlineDv").as("pathOrInlineDv"),
-          col("add.deletionVector.offset").cast(IntegerType).as("offset"),
-          col("add.deletionVector.sizeInBytes").cast(IntegerType).as("sizeInBytes"),
-          col("add.deletionVector.cardinality").cast(LongType).as("cardinality")))
-      df.filter(col("add.path").isNotNull)
-        .select(lit(c.version).as("version"),
-          struct(
-            col("add.path").as("path"),
-            col("add.partitionValues").as("partitionValues"),
-            col("add.size").as("size"),
-            sub("modificationTime", LongType).as("modificationTime"),
-            sub("dataChange", BooleanType).as("dataChange"),
-            sub("stats", StringType).as("stats"),
-            dv.as("deletionVector")).as("add"),
-          lit(null).cast(actionSchema("remove").dataType).as("remove"))
-    }
-    (base, jsonTail) match {
-      case (Some(b), Some(t)) => b.unionByName(t)
-      case (Some(b), None)    => b
-      case (None, Some(t))    => t
-      case _ => throw new IllegalStateException(s"not a Delta table: $tablePath")
-    }
-  }
-
   private def snapshotSchema: StructType = StructType(Seq(
     StructField("path", StringType),
     StructField("version", LongType),
@@ -559,15 +494,25 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     StructField("stats", StringType),
     StructField("deletionVector", dvSchema)))
 
-  /** Driver-side replay of a JSON-only log — same last-action-per-path
-    * rule as the window in the checkpointed replay (within one version
-    * the add outranks the remove of the same path), rows sorted by path
-    * for a deterministic file order. None when a checkpoint applies:
-    * only the window replay reads a parquet checkpoint. */
-  private def localSnapshotRows(asOf: Option[Long]): Option[Seq[org.apache.spark.sql.Row]] = {
-    val commits = listVersions().filter(v => asOf.forall(v <= _))
-    if (commits.isEmpty || resolveCheckpoint(asOf).nonEmpty) return None
+  /**
+   * Live files at `asOf` (default: latest), replayed on the driver and
+   * returned as a LocalRelation (`.collect()` runs no job), rows sorted
+   * by path. The checkpoint's adds (if one applies) seed the state at
+   * its version and the JSON tail folds on top: per path the newest
+   * action wins, and within one version the add outranks the remove of
+   * the same path — a row-level DELETE rewrites a file's entry as
+   * remove(old DV) + add(new DV) in a single commit, and the add is the
+   * live state. Checkpoint tombstones (`remove` rows) are not read.
+   */
+  def snapshotFilesDF(asOf: Option[Long] = None): DataFrame = {
+    val ck = resolveCheckpoint(asOf)
+    val commits = listVersions().filter(v => asOf.forall(v <= _) && ck.forall(v > _.version))
+    require(commits.nonEmpty || ck.nonEmpty, s"not a Delta table: $tablePath")
     val state = scala.collection.mutable.HashMap[String, (Long, Boolean, AddFile)]()
+    ck.foreach { c =>
+      parquetRows(checkpointDataFiles(c), DeltaLog.AddColumns)(DeltaLog.addOf)
+        .foreach(a => state(a.path) = (c.version, true, a))
+    }
     commits.foreach { v =>
       readActions(v).foreach {
         case a: AddFile =>
@@ -579,72 +524,28 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
         case _ => ()
       }
     }
-    Some(state.toSeq.filter(_._2._2).sortBy(_._1).map { case (path, (v, _, a)) =>
-      org.apache.spark.sql.Row(path, v, a.partitionValues, a.size, a.modificationTime,
-        a.stats.orNull,
-        a.deletionVector.map(d => org.apache.spark.sql.Row(d.storageType, d.pathOrInlineDv,
+    val rows = state.toSeq.filter(_._2._2).sortBy(_._1).map { case (path, (v, _, a)) =>
+      Row(path, v, a.partitionValues, a.size, a.modificationTime, a.stats.orNull,
+        a.deletionVector.map(d => Row(d.storageType, d.pathOrInlineDv,
           d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull)
-    })
-  }
-
-  /**
-   * Live files at `asOf` (default: latest): per path, the newest action
-   * wins; the file is live iff that action is an add. A JSON-only log
-   * replays on the driver (a LocalRelation — `.collect()` runs no job);
-   * a checkpointed log replays as a window over checkpoint + JSON tail,
-   * one shuffle on path.
-   */
-  def snapshotFilesDF(asOf: Option[Long] = None): DataFrame = {
-    localSnapshotRows(asOf) match {
-      case Some(rows) =>
-        return spark.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, snapshotSchema)
-      case None => ()
     }
-    import org.apache.spark.sql.expressions.Window
-    val acts = actionsDF(asOf)
-      .select(
-        coalesce(col("add.path"), col("remove.path")).as("path"),
-        col("version"),
-        col("add").isNotNull.as("isAdd"),
-        col("add.partitionValues").as("partitionValues"),
-        col("add.size").as("size"),
-        col("add.modificationTime").as("modificationTime"),
-        col("add.stats").as("stats"),
-        col("add.deletionVector").as("deletionVector"))
-    // within one version, the add outranks the remove of the same path:
-    // a row-level DELETE rewrites a file's entry as remove(old DV) +
-    // add(new DV) in a single commit, and the add is the live state
-    val w = Window.partitionBy(col("path"))
-      .orderBy(col("version").desc, col("isAdd").desc)
-    acts
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("isAdd"))
-      .drop("rn", "isAdd")
+    spark.createDataFrame(rows.asJava, snapshotSchema)
   }
 
-  /**
-   * Per-commit change feed for versions in (from, to] — the incremental
-   * sync source (ref `DeltaSourceClient.getTableChangeForCommit`,
-   * `core/.../delta/DeltaSourceClient.java:106-143`).
-   */
-  def changesDF(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    val versions = listVersions().filter(v => v > fromExclusive && v <= toInclusive)
-    require(versions.nonEmpty, s"no commits in ($fromExclusive, $toInclusive] of $tablePath")
-    val paths = versions.map(v => commitFile(v).toString)
-    spark.read.text(paths: _*)
-      .withColumn("version",
-        regexp_extract(input_file_name(), "(\\d{20})\\.json", 1).cast(LongType))
-      .withColumn("action", from_json(col("value"), actionSchema))
-      .select(
-        col("version"),
-        col("action.add").isNotNull.as("added"),
-        coalesce(col("action.add.path"), col("action.remove.path")).as("path"),
-        col("action.add.partitionValues").as("partitionValues"),
-        col("action.add.size").as("size"),
-        col("action.add.stats").as("stats"),
-        col("action.add.deletionVector").as("deletionVector"))
-      .filter(col("path").isNotNull)
+  /** Versions (from, to], every one of them: a range reaching below the
+    * log's retention or past its head fails naming the first missing
+    * version, instead of reading only the commits that are left. */
+  def versionsBetween(fromExclusive: Long, toInclusive: Long): Seq[Long] = {
+    require(fromExclusive < toInclusive,
+      s"no commits in ($fromExclusive, $toInclusive] of $tablePath")
+    val present = listVersions().filter(v => v > fromExclusive && v <= toInclusive)
+    val have = present.toSet
+    (fromExclusive + 1 to toInclusive).find(v => !have(v)).foreach { v =>
+      throw new IllegalStateException(
+        s"version $v of $tablePath is not in its log (expired by log retention or " +
+          s"not yet committed): the changes in ($fromExclusive, $toInclusive] cannot be read")
+    }
+    present
   }
 }
 
@@ -656,6 +557,87 @@ object DeltaLog {
   private[delta] sealed trait Checkpoint { def version: Long }
   private[delta] final case class ClassicCheckpoint(version: Long) extends Checkpoint
   private[delta] final case class MultiPartCheckpoint(version: Long, parts: Int) extends Checkpoint
-  private[delta] final case class V2Checkpoint(
-      version: Long, topLevel: org.apache.hadoop.fs.Path) extends Checkpoint
+  private[delta] final case class V2Checkpoint(version: Long, topLevel: Path) extends Checkpoint
+
+  /** Projections of the checkpoint reads: top-level action column → the
+    * subfields decoded. Anything else a foreign writer adds (`tags`,
+    * `baseRowId`, `stats_parsed`, ...) is never read off disk. */
+  private val AddColumns = Map("add" -> Set(
+    "path", "partitionValues", "size", "modificationTime", "dataChange", "stats",
+    "deletionVector"))
+  private val HeaderColumns = Map(
+    "metaData" -> Set(
+      "id", "name", "schemaString", "partitionColumns", "configuration", "createdTime"),
+    "protocol" -> Set("minReaderVersion", "minWriterVersion", "readerFeatures", "writerFeatures"))
+  private val SidecarColumns = Map("sidecar" -> Set("path"))
+
+  // Checkpoint row decoders. Field access is by name and tolerant: a
+  // missing optional subfield reads as absent, and an integer field may
+  // be INT32 or INT64 whatever this engine's writer uses.
+  private def has(g: Group, f: String): Boolean =
+    g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
+  private def child(g: Group, f: String): Option[Group] =
+    if (has(g, f)) Some(g.getGroup(f, 0)) else None
+  private def str(g: Group, f: String): Option[String] =
+    if (has(g, f)) Some(g.getString(f, 0)) else None
+  private def num(g: Group, f: String): Option[Long] =
+    if (!has(g, f)) None
+    else if (g.getType.getType(f).asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT32)
+      Some(g.getInteger(f, 0).toLong)
+    else Some(g.getLong(f, 0))
+
+  /** A MAP<string, string>: one repeated key/value group. */
+  private def strMap(g: Group, f: String): Map[String, String] =
+    child(g, f).fold(Map.empty[String, String]) { m =>
+      (0 until m.getFieldRepetitionCount(0)).map { i =>
+        val kv = m.getGroup(0, i)
+        kv.getString(0, 0) -> (if (kv.getFieldRepetitionCount(1) > 0) kv.getString(1, 0) else null)
+      }.toMap
+    }
+
+  /** A LIST<string>, three-level (`list.element`) or legacy two-level. */
+  private def strList(g: Group, f: String): Option[Seq[String]] =
+    child(g, f).map { l =>
+      (0 until l.getFieldRepetitionCount(0)).flatMap { i =>
+        if (l.getType.getType(0).isPrimitive) Some(l.getString(0, i))
+        else str(l.getGroup(0, i), l.getType.getType(0).asGroupType.getFieldName(0))
+      }
+    }
+
+  private def addOf(row: Group): Option[AddFile] =
+    child(row, "add").filter(has(_, "path")).map { a =>
+      AddFile(
+        path = a.getString("path", 0),
+        partitionValues = strMap(a, "partitionValues"),
+        size = num(a, "size").getOrElse(0L),
+        modificationTime = num(a, "modificationTime").getOrElse(0L),
+        dataChange = !has(a, "dataChange") || a.getBoolean("dataChange", 0),
+        stats = str(a, "stats"),
+        deletionVector = child(a, "deletionVector").filter(has(_, "storageType")).map { d =>
+          DeletionVectorDescriptor(
+            storageType = d.getString("storageType", 0),
+            pathOrInlineDv = str(d, "pathOrInlineDv").orNull,
+            offset = num(d, "offset").map(_.toInt),
+            sizeInBytes = num(d, "sizeInBytes").getOrElse(0L).toInt,
+            cardinality = num(d, "cardinality").getOrElse(0L))
+        })
+    }
+
+  private def headerOf(row: Group): Seq[DeltaAction] =
+    child(row, "metaData").filter(has(_, "id")).map { m =>
+      DeltaMetadata(
+        id = m.getString("id", 0),
+        schemaString = str(m, "schemaString").orNull,
+        partitionColumns = strList(m, "partitionColumns").getOrElse(Seq.empty),
+        configuration = strMap(m, "configuration"),
+        createdTime = num(m, "createdTime").getOrElse(0L),
+        name = str(m, "name"))
+    }.toSeq ++ child(row, "protocol").filter(has(_, "minReaderVersion")).map { p =>
+      Protocol(
+        num(p, "minReaderVersion").get.toInt,
+        num(p, "minWriterVersion").fold(Protocol().minWriterVersion)(_.toInt),
+        strList(p, "readerFeatures"), strList(p, "writerFeatures"))
+    }
+
+  private def sidecarPathOf(row: Group): Option[String] = child(row, "sidecar").flatMap(str(_, "path"))
 }

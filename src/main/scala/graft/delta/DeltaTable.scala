@@ -159,7 +159,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
   def history(): DataFrame = {
     import spark.implicits._
     log.listVersions().map { v =>
-      val info = log.readActions(v).collectFirst { case c: CommitInfo => c }
+      val info = log.readFirstAction(v, "\"commitInfo\"") { case c: CommitInfo => c }
       (v,
         info.map(_.timestamp).getOrElse(0L),
         info.map(_.operation).getOrElse(""),
@@ -226,12 +226,11 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    */
   def changesAsDF(fromExclusive: Long, toInclusive: Long): DataFrame = {
     requireReadable(Some(toInclusive))
-    val rows = log.changesDF(fromExclusive, toInclusive)
-      .filter(col("added"))
-      .select(col("path"), col("size"), lit(0L).as("modificationTime"),
-        col("partitionValues"), col("deletionVector"))
-      .collect().toSeq
-    val changed = DeltaTable.manifestFiles(rows).zip(rows.map(DeltaTable.dvAt(_, 4)))
+    // every add in the range, a DV rewrite's re-add included
+    val changed = log.versionsBetween(fromExclusive, toInclusive).flatMap(log.readActions).collect {
+      case a: AddFile =>
+        (graft.sources.ManifestFile(a.path, a.size, 0L, a.partitionValues), a.deletionVector)
+    }
     val asOf = Some(toInclusive)
     val (schema, partCols) = schemaAt(asOf)
     physicalShape(asOf) match {
@@ -266,8 +265,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
   def changeFeed(fromExclusive: Long, toInclusive: Long): DataFrame = {
     import org.apache.spark.sql.Row
     requireReadable(Some(toInclusive))
-    val versions = log.listVersions().filter(v => v > fromExclusive && v <= toInclusive)
-    require(versions.nonEmpty, s"no commits in ($fromExclusive, $toInclusive] of $tablePath")
+    val versions = log.versionsBetween(fromExclusive, toInclusive)
     val asOf = Some(toInclusive)
     val (schema, partCols) = schemaAt(asOf)
     // column-mapped feeds read physical and project back to logical

@@ -16,7 +16,9 @@ import graft.model.{ColumnStatRow, InternalDataFile}
  * size: every format is built twice, identical except for padding that
  * puts one twin's metadata under 1 MB and the other's over 5 MB. Each
  * read call must launch the same number of Spark jobs on both twins and
- * return the file set the filesystem says it should.
+ * return the file set the filesystem says it should. Delta's metadata
+ * reads launch none at any log shape (JSON-only, classic, multi-part
+ * and V2 checkpoints).
  */
 class MetadataReplaySizeSpec extends SparkTestBase {
   import MetadataReplaySizeSpec._
@@ -63,15 +65,17 @@ class MetadataReplaySizeSpec extends SparkTestBase {
   }
 
   /** Runs `calls` on both twins: equal job counts per call, and each
-    * call's result passes its twin's check. */
+    * call's result passes its twin's check. Returns the counts as
+    * (label, small twin, big twin). */
   private def sameJobsAtBothSizes[W](small: W, big: W)(
-      calls: (String, W => Unit)*): Unit = {
+      calls: (String, W => Unit)*): Seq[(String, Int, Int)] = {
     val counts = calls.map { case (label, call) =>
       (label, jobsOf(call(small)), jobsOf(call(big)))
     }
     val diverged = counts.filter { case (_, s, b) => s != b }
     assert(diverged.isEmpty,
       "Spark jobs launched (label, small twin, big twin): " + diverged.mkString(", "))
+    counts
   }
 
   private def base(from: Long, to: Long, v: String) =
@@ -178,26 +182,76 @@ class MetadataReplaySizeSpec extends SparkTestBase {
 
   // ----------------------------------------------------------------- delta
 
-  test("delta: JSON-only log replay launches the same jobs under 1 MB and over 5 MB") {
-    def twin(padChars: Int): (DeltaTable, Set[String]) = {
-      val path = s"${tmpDir("replay_delta")}/t"
-      val t = DeltaTable.create(spark, path, base(0, 400, "v0").repartition(2))
-      val real = dataFileNames(path, "_delta_log", _.endsWith(".parquet"))
-      val adds = synthetic(path, padChars)
-      t.syncCommit(t.schemaAt()._1, Seq.empty, path, adds, Seq.empty, Map.empty)
-      (DeltaTable.forPath(spark, path), real ++ adds.map(f => name(f.physicalPath)))
+  /** A written snapshot (v0), a metadata-only sync commit of synthetic
+    * files whose stats carry the padding, the log shape `layout` makes
+    * (a checkpoint, then expiry of the JSON it covers), and an append
+    * after it. Metadata reads are checked at `base`, the version before
+    * the append: for a checkpointed twin, the checkpoint's. */
+  private def deltaTwin(padChars: Int, layout: DeltaLayout): DeltaTwin = {
+    val path = s"${tmpDir("replay_delta")}/t"
+    val t = DeltaTable.create(spark, path, base(0, 400, "v0").repartition(2))
+    val created = t.latestVersion
+    val adds = synthetic(path, padChars)
+    t.syncCommit(t.schemaAt()._1, Seq.empty, path, adds, Seq.empty, Map.empty)
+    layout.checkpoint(t)
+    t.log.lastCheckpoint().foreach(t.log.expireLogBefore)
+    val baseVersion = t.latestVersion
+    val before = dataFileNames(path, "_delta_log", _.endsWith(".parquet"))
+    t.append(base(400, 450, "v1"), Seq.empty)
+    val real = dataFileNames(path, "_delta_log", _.endsWith(".parquet"))
+    val pads = adds.map(f => name(f.physicalPath)).toSet
+    // the change range: every commit the log still holds after v0
+    val changesFrom = t.log.lastCheckpoint().getOrElse(created)
+    DeltaTwin(DeltaTable.forPath(spark, path), baseVersion, changesFrom, real ++ pads,
+      if (changesFrom == created) pads ++ (real -- before) else real -- before)
+  }
+
+  private def deltaReplayCase(layout: DeltaLayout): Unit = {
+    val small = deltaTwin(SmallPad, layout)
+    val big = deltaTwin(BigPad, layout)
+    Seq(small, big).foreach { w =>
+      assert(w.t.log.lastCheckpoint().isDefined == (layout != JsonOnly),
+        s"${layout.label} twins must ${if (layout == JsonOnly) "stay JSON-only" else "checkpoint"}")
     }
-    val small = twin(SmallPad)
-    val big = twin(BigPad)
-    Seq(small, big).foreach { case (t, _) =>
-      assert(t.log.lastCheckpoint().isEmpty, "the twins must stay JSON-only logs")
-    }
-    assert(bytesUnder(s"${small._1.tablePath}/_delta_log") < (1L << 20))
-    assert(bytesUnder(s"${big._1.tablePath}/_delta_log") > (5L << 20))
-    sameJobsAtBothSizes(small, big)(
-      "snapshotDataFiles" -> { case (t, expected) =>
-        assert(t.snapshotDataFiles().map(f => name(f.physicalPath)).toSet == expected)
+    // the padded metadata lives where replay must read it: the commit
+    // JSON of a JSON-only log, the checkpoint parquet of the others
+    def metaBytes(w: DeltaTwin): Long =
+      filesUnder(s"${w.t.tablePath}/_delta_log").filter { case (p, _) =>
+        (layout == JsonOnly) != (p.getName.contains(".checkpoint.") ||
+          p.getParent.getName == "_sidecars")
+      }.map(_._2).sum
+    assert(metaBytes(small) < (1L << 20))
+    assert(metaBytes(big) > (5L << 20))
+    val counts = sameJobsAtBothSizes(small, big)(
+      "snapshotDataFiles" -> { w =>
+        assert(w.t.snapshotDataFiles().map(f => name(f.physicalPath)).toSet == w.files)
+      },
+      "metadataAt" -> { w =>
+        val (meta, _) = w.t.log.metadataAt(Some(w.base))
+        assert(meta.schemaString.contains("\"k\"") && meta.partitionColumns.isEmpty)
+      },
+      "protocolAt" -> { w =>
+        assert(w.t.log.protocolAt(Some(w.base)).readerFeatures.exists(_.contains("v2Checkpoint")) ==
+          (layout == V2))
+      },
+      "changesAsDF" -> { w =>
+        assert(w.t.changesAsDF(w.changesFrom, w.t.latestVersion).inputFiles.map(name).toSet ==
+          w.changed)
       })
+    val launched = counts.filter { case (_, s, b) => s + b > 0 }
+    assert(launched.isEmpty,
+      s"${layout.label}: Delta metadata reads launched Spark jobs (label, small, big): " +
+        launched.mkString(", "))
+  }
+
+  test("delta: JSON-only log replay launches the same jobs under 1 MB and over 5 MB") {
+    deltaReplayCase(JsonOnly)
+  }
+
+  Seq(Classic, MultiPart, V2).foreach { layout =>
+    test(s"delta: ${layout.label} checkpoint replay launches no Spark job under 1 MB and over 5 MB") {
+      deltaReplayCase(layout)
+    }
   }
 }
 
@@ -208,4 +262,16 @@ object MetadataReplaySizeSpec {
 
   private final case class IcebergTwin(
       t: IcebergTable, created: Long, padded: Long, real: Set[String], pads: Set[String])
+
+  /** `base`: the version metadata reads are checked at; `files`: the live
+    * set; `changed`: the files added in (`changesFrom`, latest]. */
+  private final case class DeltaTwin(
+      t: DeltaTable, base: Long, changesFrom: Long, files: Set[String], changed: Set[String])
+
+  /** A Delta log shape and how to make it. */
+  private sealed abstract class DeltaLayout(val label: String, val checkpoint: DeltaTable => Unit)
+  private case object JsonOnly extends DeltaLayout("JSON-only", _ => ())
+  private case object Classic extends DeltaLayout("classic", _.checkpoint())
+  private case object MultiPart extends DeltaLayout("multi-part", _.checkpoint(parts = 3))
+  private case object V2 extends DeltaLayout("V2", _.checkpointV2(sidecarParts = 2))
 }

@@ -1,15 +1,18 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
 
 /**
  * Multi-part and V2 checkpoint layouts (Delta PROTOCOL.md): naming,
  * `_last_checkpoint` discovery, sidecar resolution, replay after log
- * expiry, protocol gating, and tolerance for foreign checkpoints whose
- * add struct lacks this writer's optional subfields.
+ * expiry, protocol gating, tolerance for foreign checkpoint shapes
+ * (missing or extra add subfields, tombstones, parsed-stats columns, a
+ * parquet V2 top-level), and change reads over an expired range.
  */
 class DeltaCheckpointSpec extends SparkTestBase {
 
@@ -84,30 +87,131 @@ class DeltaCheckpointSpec extends SparkTestBase {
     assert(t2.toDF().filter(col("o_orderkey") % 2 === 0).count() == 0)
   }
 
-  test("foreign checkpoint without stats/deletionVector subfields reads fine") {
-    val dir = tmpDir("delta_foreign")
-    val src = spark.read.parquet(s"$sf0001/region.parquet")
-    val t = DeltaTable.create(spark, s"$dir/t", src)
-    t.append(src.limit(2), Seq.empty)
-    val before = t.toDF().count()
-    t.checkpoint()
-    // strip the optional add subfields a minimal foreign writer omits
-    val cp = s"$dir/t/_delta_log/${f"${1L}%020d"}.checkpoint.parquet"
-    val slim = spark.read.parquet(cp).select(
+  /** Replace a parquet file with `df`'s rows (one part, same name). */
+  private def rewriteParquet(df: DataFrame, target: Path, staging: String): Unit = {
+    df.coalesce(1).write.parquet(staging)
+    val part = fs(staging).listStatus(new Path(staging))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    fs(staging).delete(target, false)
+    assert(fs(staging).rename(part, target))
+  }
+
+  private def livePaths(t: DeltaTable): Set[String] =
+    t.log.snapshotFilesDF().select("path").collect().map(_.getString(0)).toSet
+
+  /** Checkpoint shapes other writers emit, each a rewrite of this
+    * engine's classic checkpoint: (label, table carries a DV, rewrite). */
+  private val foreignShapes: Seq[(String, Boolean, DataFrame => DataFrame)] = Seq(
+    ("without stats/deletionVector subfields", false, cp => cp.select(
       when(col("add.path").isNotNull, struct(
         col("add.path").as("path"),
         col("add.partitionValues").as("partitionValues"),
         col("add.size").as("size"))).as("add"),
-      col("metaData"), col("protocol"))
-    val staging = s"$dir/slim"
-    slim.coalesce(1).write.parquet(staging)
-    val part = fs(dir).listStatus(new Path(staging))
-      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    fs(dir).delete(new Path(cp), false)
-    assert(fs(dir).rename(part, new Path(cp)))
-    t.log.expireLogBefore(1L)
-    val t2 = DeltaTable.forPath(spark, s"$dir/t")
-    assert(t2.toDF().count() == before)
+      col("metaData"), col("protocol"))),
+    ("with extra tags/baseRowId add fields and a maxRowIndex DV", true, cp => cp.withColumn("add",
+      col("add")
+        .withField("tags", typedlit(Map("INSERTION_TIME" -> "1700000000000")))
+        .withField("baseRowId", lit(7L))
+        .withField("deletionVector", col("add.deletionVector").withField("maxRowIndex", lit(4L))))),
+    ("with remove tombstone rows", true, { cp =>
+      // a tombstone per live path (the DV-rewritten entry's old identity)
+      // plus one for a file removed long ago
+      val tombstones = cp.filter(col("add.path").isNotNull).select(col("add.path").as("path"))
+        .union(spark.range(1).select(lit("part-long-gone.parquet").as("path")))
+        .select(struct(col("path"), lit(1L).as("deletionTimestamp"),
+          lit(true).as("dataChange")).as("remove"))
+      cp.unionByName(tombstones, allowMissingColumns = true)
+    }),
+    ("with stats_parsed/partitionValues_parsed columns", true, cp => cp.withColumn("add",
+      col("add")
+        .withField("stats_parsed", struct(lit(3L).as("numRecords"),
+          struct(lit(0L).as("r_regionkey")).as("minValues")))
+        .withField("partitionValues_parsed", struct(lit(null).cast("string").as("p"))))))
+
+  foreignShapes.foreach { case (label, withDv, rewrite) =>
+    test(s"foreign checkpoint $label reads fine") {
+      val dir = tmpDir("delta_foreign")
+      val src = spark.read.parquet(s"$sf0001/region.parquet")
+      val t = DeltaTable.create(spark, s"$dir/t", src)
+      t.append(src.limit(2), Seq.empty)
+      if (withDv) t.delete(col("r_regionkey") === 1)
+      val before = t.toDF().count()
+      val live = livePaths(t)
+      t.checkpoint()
+      val v = t.log.lastCheckpoint().get
+      val cp = new Path(s"$dir/t/_delta_log/${f"$v%020d"}.checkpoint.parquet")
+      rewriteParquet(rewrite(spark.read.parquet(cp.toString)), cp, s"$dir/rewritten")
+      t.log.expireLogBefore(v)
+      val t2 = DeltaTable.forPath(spark, s"$dir/t")
+      assert(livePaths(t2) == live)
+      assert(t2.toDF().count() == before)
+    }
+  }
+
+  /** A V2 checkpoint whose top-level file is parquet: the JSON top this
+    * engine writes, re-encoded row for row, with the file actions either
+    * behind sidecar pointers or inline in the top-level file. */
+  Seq("sidecar pointers" -> false, "inline file actions" -> true).foreach { case (label, inline) =>
+    test(s"v2 checkpoint with a parquet top-level file ($label) replays after expiry") {
+      val dir = tmpDir("delta_v2parquet")
+      val src = spark.read.parquet(s"$sf0001/orders.parquet")
+        .select(col("o_orderkey"), col("o_orderstatus"))
+      val t = DeltaTable.create(spark, s"$dir/t", src.limit(30))
+      (1 to 3).foreach(_ => t.append(src.limit(10), Seq.empty))
+      val before = t.toDF().count()
+      val live = livePaths(t)
+      t.checkpointV2(sidecarParts = 2)
+      val v = t.log.lastCheckpoint().get
+      val log = new Path(s"$dir/t/_delta_log")
+      val jsonTop = fs(dir).listStatus(log).map(_.getPath)
+        .find(_.getName.matches("\\d{20}\\.checkpoint\\.[^.]+\\.json")).get
+      val strings = ArrayType(StringType)
+      val top = spark.read.schema(StructType(Seq(
+        StructField("protocol", StructType(Seq(
+          StructField("minReaderVersion", IntegerType),
+          StructField("minWriterVersion", IntegerType),
+          StructField("readerFeatures", strings), StructField("writerFeatures", strings)))),
+        StructField("metaData", StructType(Seq(
+          StructField("id", StringType), StructField("schemaString", StringType),
+          StructField("partitionColumns", strings),
+          StructField("configuration", MapType(StringType, StringType)),
+          StructField("createdTime", LongType)))),
+        StructField("checkpointMetadata", StructType(Seq(StructField("version", LongType)))),
+        StructField("sidecar", StructType(Seq(
+          StructField("path", StringType), StructField("sizeInBytes", LongType),
+          StructField("modificationTime", LongType))))))).json(jsonTop.toString)
+      val rows =
+        if (!inline) top
+        else top.filter(col("sidecar").isNull).unionByName(
+          spark.read.parquet(s"$log/_sidecars").select("add"), allowMissingColumns = true)
+      rewriteParquet(rows, new Path(log, f"$v%020d.checkpoint.parquet-top.parquet"),
+        s"$dir/top")
+      assert(fs(dir).delete(jsonTop, false))
+      if (inline) assert(fs(dir).delete(new Path(log, "_sidecars"), true))
+      t.log.expireLogBefore(v)
+      val t2 = DeltaTable.forPath(spark, s"$dir/t")
+      assert(livePaths(t2) == live)
+      assert(t2.toDF().count() == before)
+      assert(t2.schemaAt(None)._1.fieldNames.sameElements(Array("o_orderkey", "o_orderstatus")))
+      assert(t2.log.protocolAt(None).readerFeatures.exists(_.contains("v2Checkpoint")))
+    }
+  }
+
+  test("change reads over expired or uncommitted versions fail naming the first missing one") {
+    val dir = tmpDir("delta_expired_changes")
+    val src = spark.read.parquet(s"$sf0001/region.parquet")
+    val t = DeltaTable.create(spark, s"$dir/t", src)
+    (1 to 3).foreach(_ => t.append(src.limit(1), Seq.empty))
+    t.checkpoint() // v3
+    (1 to 2).foreach(_ => t.append(src.limit(1), Seq.empty)) // v4, v5
+    assert(t.log.expireLogBefore(3L) == 3)
+    def missing(read: => Unit): String = intercept[IllegalStateException](read).getMessage
+    assert(missing(t.changesAsDF(0L, 5L)).contains("version 1 "))
+    assert(missing(t.changeFeed(1L, 5L)).contains("version 2 "))
+    assert(missing(t.changesAsDF(4L, 7L)).contains("version 6 "))
+    // a range the log still holds reads as before
+    assert(t.changesAsDF(2L, 5L).count() == 3)
+    assert(t.changeFeed(3L, 5L).count() == 2)
   }
 
   test("_last_checkpoint naming a missing checkpoint fails with the version named") {
