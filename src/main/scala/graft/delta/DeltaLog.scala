@@ -210,22 +210,31 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     } finally reader.close()
   }
 
+  /** The last checkpoint whose header was read, with that header. */
+  @volatile private var lastHeader: Option[(DeltaLog.Checkpoint, (Option[DeltaMetadata], Option[Protocol]))] =
+    None
+
   /** Non-file actions of a checkpoint (metaData + protocol), layout-
     * aware: V2 keeps them in the top-level file; classic layouts carry
-    * them as rows in (any part of) the checkpoint parquet. */
-  private def checkpointHeader(ck: DeltaLog.Checkpoint): (Option[DeltaMetadata], Option[Protocol]) = {
-    val actions: Seq[DeltaAction] = ck match {
-      case DeltaLog.V2Checkpoint(_, top) if top.getName.endsWith(".json") =>
-        // sidecar/checkpointMetadata lines fall through the codec as None
-        readJsonLines(top).flatMap(DeltaActionCodec.fromJsonLine)
-      case DeltaLog.V2Checkpoint(_, top) =>
-        parquetRows(Seq(top), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
-      case other =>
-        parquetRows(checkpointDataFiles(other), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
+    * them as rows in (any part of) the checkpoint parquet. A published
+    * checkpoint never changes, so the last one's header is kept and a
+    * lookup against it reads no parquet. */
+  private def checkpointHeader(ck: DeltaLog.Checkpoint): (Option[DeltaMetadata], Option[Protocol]) =
+    lastHeader.collect { case (`ck`, header) => header }.getOrElse {
+      val actions: Seq[DeltaAction] = ck match {
+        case DeltaLog.V2Checkpoint(_, top) if top.getName.endsWith(".json") =>
+          // sidecar/checkpointMetadata lines fall through the codec as None
+          readJsonLines(top).flatMap(DeltaActionCodec.fromJsonLine)
+        case DeltaLog.V2Checkpoint(_, top) =>
+          parquetRows(Seq(top), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
+        case other =>
+          parquetRows(checkpointDataFiles(other), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
+      }
+      val header = (actions.collectFirst { case m: DeltaMetadata => m },
+        actions.collectFirst { case p: Protocol => p })
+      lastHeader = Some((ck, header))
+      header
     }
-    (actions.collectFirst { case m: DeltaMetadata => m },
-      actions.collectFirst { case p: Protocol => p })
-  }
 
   /** Checkpoint interval (Delta's default). */
   val checkpointInterval = 10

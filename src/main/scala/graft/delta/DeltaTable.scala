@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.model.{ColumnStatRow, InternalDataFile}
 import graft.stats.{FileFooterStats, ParquetFooterStats}
 
 /**
@@ -229,7 +230,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     // every add in the range, a DV rewrite's re-add included
     val changed = log.versionsBetween(fromExclusive, toInclusive).flatMap(log.readActions).collect {
       case a: AddFile =>
-        (graft.sources.ManifestFile(a.path, a.size, 0L, a.partitionValues), a.deletionVector)
+        (InternalDataFile(a.path, partitionValues = a.partitionValues, fileSizeBytes = a.size),
+          a.deletionVector)
     }
     val asOf = Some(toInclusive)
     val (schema, partCols) = schemaAt(asOf)
@@ -284,11 +286,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       df.select(schema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
         .withColumn("_change_type", lit(t))
         .withColumn("_commit_version", lit(v))
-    def mfOf(r: Row) = graft.sources.ManifestFile(
-      path = r.getString(0),
-      size = if (r.isNullAt(1)) 0L else r.getLong(1),
-      modificationTime = if (r.isNullAt(2)) 0L else r.getLong(2),
-      partitionValues = if (r.isNullAt(3)) Map.empty else r.getMap[String, String](3).toMap)
+    def mfOf(r: Row) = DeltaTable.manifestFiles(Seq(r)).head
     val parts: Seq[DataFrame] = versions.flatMap { v =>
       val actions = log.readActions(v)
       // a commit carrying cdc actions is read EXCLUSIVELY from its
@@ -296,8 +294,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       // materialized every change row with its _change_type
       val cdcs = actions.collect { case c: AddCDCFile => c }
       if (cdcs.nonEmpty) {
-        val files = cdcs.map(c => graft.sources.ManifestFile(
-          DeltaTable.metadataFilePath(tablePath, c.path), c.size, 0L, c.partitionValues))
+        val files = cdcs.map(c => InternalDataFile(DeltaTable.metadataFilePath(tablePath, c.path),
+          partitionValues = c.partitionValues, fileSizeBytes = c.size))
         val readSchema = StructType(
           rSchema.fields :+ StructField("_change_type", StringType))
         Seq(toLogical(graft.sources.ManifestFileIndex.read(
@@ -316,8 +314,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           .map(r => r.getString(0) -> r).toMap
 
       val inserts = adds.filterNot(a => removePaths.contains(a.path)).map { a =>
-        (graft.sources.ManifestFile(a.path, a.size, a.modificationTime, a.partitionValues),
-          a.deletionVector)
+        (InternalDataFile(a.path, partitionValues = a.partitionValues, fileSizeBytes = a.size,
+          lastModified = a.modificationTime), a.deletionVector)
       }
       val insertDF =
         if (inserts.isEmpty) None
@@ -339,7 +337,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         if (rewrites.isEmpty) None
         else {
           val files = rewrites.map { a =>
-            mfOf(prevRows(a.path)).copy(path = DeltaTable.metadataFilePath(tablePath, a.path))
+            mfOf(prevRows(a.path)).copy(physicalPath = DeltaTable.metadataFilePath(tablePath, a.path))
           }
           val data = toLogical(graft.sources.ManifestFileIndex.read(
             spark, base, files, rSchema, rParts, withRowPositions = true),
@@ -347,7 +345,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           def posDF(dvs: Seq[(String, Option[DeletionVectorDescriptor])]) =
             DeltaTable.deletedPositionsDF(spark, tablePath,
               dvs.collect { case (p, Some(d)) =>
-                (graft.sources.ManifestFile(p, 0L, 0L, Map.empty), d) })
+                (InternalDataFile(p), d) })
           val newPos = posDF(rewrites.map(a =>
             DeltaTable.metadataFilePath(tablePath, a.path) -> a.deletionVector))
           val oldPos = posDF(rewrites.map(a =>
@@ -452,13 +450,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       snapRows.map(r => DeltaTable.metadataFilePath(tablePath, r.getString(0)) -> r).toMap
     // scan PHYSICAL rows (existing deletes not applied: re-marking an
     // already-deleted position is idempotent under bitmap union)
-    val allMfs = snapRows.map { r =>
-      graft.sources.ManifestFile(
-        path = DeltaTable.metadataFilePath(tablePath, r.getString(0)),
-        size = if (r.isNullAt(1)) 0L else r.getLong(1),
-        modificationTime = if (r.isNullAt(2)) 0L else r.getLong(2),
-        partitionValues = if (r.isNullAt(3)) Map.empty else r.getMap[String, String](3).toMap)
-    }
+    val allMfs = DeltaTable.manifestFiles(snapRows).map(f =>
+      f.copy(physicalPath = DeltaTable.metadataFilePath(tablePath, f.physicalPath)))
     val mfs = pruneByKeys match {
       case None => allMfs
       // exact routing via the key index when it can answer (see
@@ -470,7 +463,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         keyIndexRouteFiles(kc, keys) match {
           case Some(hit) =>
             DeltaTable.indexRoutedScans.incrementAndGet()
-            allMfs.filter(f => hit(f.path))
+            allMfs.filter(f => hit(f.physicalPath))
           case None =>
         import org.apache.spark.sql.functions.{broadcast, from_json}
         def pName(c: String): String = physShape match {
@@ -489,7 +482,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           .toDF("__path", "__stats")
           .withColumn("st", from_json(col("__stats"), statsSchema))
           .persist()
-        var cand = allMfs.map(_.path).toSet
+        var cand = allMfs.map(_.physicalPath).toSet
         kc.foreach { c =>
           val minC = col(s"st.minValues.`${pName(c)}`")
           val maxC = col(s"st.maxValues.`${pName(c)}`")
@@ -512,7 +505,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           cand = cand.filter(p => !knownSet(p) || hit(p))
         }
         filesDF.unpersist()
-        allMfs.filter(f => cand(f.path))
+        allMfs.filter(f => cand(f.physicalPath))
         }
     }
     import spark.implicits._
@@ -606,7 +599,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         val deletesDF: Option[DataFrame] = matched.filter(_ => perFile.nonEmpty).map { m =>
           val oldDvs = perFile.flatMap { case (metaPath, _) =>
             DeltaTable.dvAt(byMetaPath(metaPath), 5).map(d =>
-              (graft.sources.ManifestFile(metaPath, 0L, 0L, Map.empty), d))
+              (InternalDataFile(metaPath), d))
           }
           val live =
             if (oldDvs.isEmpty) m
@@ -1034,11 +1027,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     val v = latestVersion
     val snapRows = log.snapshotFilesDF()
       .select("path", "size", "modificationTime", "partitionValues").collect().toSeq
-    val mfs = snapRows.map(r => graft.sources.ManifestFile(
-      path = DeltaTable.metadataFilePath(tablePath, r.getString(0)),
-      size = if (r.isNullAt(1)) 0L else r.getLong(1),
-      modificationTime = if (r.isNullAt(2)) 0L else r.getLong(2),
-      partitionValues = if (r.isNullAt(3)) Map.empty else r.getMap[String, String](3).toMap))
+    val mfs = DeltaTable.manifestFiles(snapRows).map(f =>
+      f.copy(physicalPath = DeltaTable.metadataFilePath(tablePath, f.physicalPath)))
     DeltaKeyIndex.replaceAll(spark, tablePath,
       DeltaKeyIndex.Config(keyCol, v,
         keyType = Some(schema(keyCol).dataType.catalogString),
@@ -1076,7 +1066,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * key-column scan attributed by `__graft_file` (the same metadata
     * path form the MERGE candidate set keys on). */
   private def keyEntriesFor(
-      mfs: Seq[graft.sources.ManifestFile], keyCol: String): org.apache.spark.sql.DataFrame = {
+      mfs: Seq[InternalDataFile], keyCol: String): org.apache.spark.sql.DataFrame = {
     val (schema, partCols) = schemaAt(None)
     if (mfs.isEmpty)
       return spark.createDataFrame(
@@ -1132,10 +1122,9 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           cfg.timeZone.contains(spark.sessionState.conf.sessionLocalTimeZone))
       if (adds.isEmpty) DeltaKeyIndex.markCovered(conf, tablePath, v)
       else if (schema.fieldNames.contains(cfg.keyCol) && formatStable) {
-        val mfs = adds.map(a => graft.sources.ManifestFile(
-          path = DeltaTable.metadataFilePath(tablePath, a.path),
-          size = a.size, modificationTime = a.modificationTime,
-          partitionValues = a.partitionValues))
+        val mfs = adds.map(a => InternalDataFile(DeltaTable.metadataFilePath(tablePath, a.path),
+          partitionValues = a.partitionValues, fileSizeBytes = a.size,
+          lastModified = a.modificationTime))
         DeltaKeyIndex.writeBatch(tablePath, v, keyEntriesFor(mfs, cfg.keyCol))
       }
       DeltaKeyIndex.invalidate(tablePath)
@@ -1447,7 +1436,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       .collect().toSeq
     val all = DeltaTable.manifestFiles(allRows).zip(allRows.map(DeltaTable.dvAt(_, 4)))
     val smalls = all.groupBy(_._1.partitionValues).values.flatMap { g =>
-      val s = g.filter(_._1.size < smallFileBytes)
+      val s = g.filter(_._1.fileSizeBytes < smallFileBytes)
       if (s.size >= 2) s else Seq.empty
     }.toSeq
     if (smalls.isEmpty) return None
@@ -1455,7 +1444,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     // resurrect its deleted rows
     val df = DeltaTable.readFilesWithDeletes(
       spark, tablePath, readBasePath(None), smalls, schema, partCols)
-    val n = math.max(1, math.ceil(smalls.map(_._1.size).sum.toDouble / targetFileBytes).toInt)
+    val n = math.max(1, math.ceil(smalls.map(_._1.fileSizeBytes).sum.toDouble / targetFileBytes).toInt)
     val arranged =
       if (zorderBy.nonEmpty) graft.util.ZOrder.arrange(df, zorderBy, n)
       else if (sortBy.nonEmpty)
@@ -1463,7 +1452,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       else if (partCols.nonEmpty) df.repartition(n, partCols.map(col): _*)
       else df.repartition(n)
     Some(write(arranged, Seq.empty, overwrite = false,
-      replacing = smalls.map(s => s._1.path -> s._2)))
+      replacing = smalls.map(s => s._1.physicalPath -> s._2)))
   }
 
   /** Write a classic checkpoint of the latest version — multi-part when
@@ -2491,31 +2480,6 @@ object DeltaTable {
     }.toMap
   }
 
-  /** Read a set of snapshot files as a DataFrame through a
-    * [[graft.sources.ManifestFileIndex]]: sizes and partition values
-    * come from the LOG, so Spark plans the scan without listing or
-    * stat-ing a single path — the property that matters at 10^6 files
-    * (SURVEY.md §7 step 5). */
-  private[delta] def readFiles(
-      spark: SparkSession,
-      tablePath: String,
-      basePath: String,
-      files: Seq[graft.sources.ManifestFile],
-      schema: StructType,
-      partitionColumns: Seq[String]): DataFrame = {
-    if (files.isEmpty) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val absolute = files.map { f =>
-      val p = decodeLogPath(f.path)
-      f.copy(path =
-        if (p.startsWith("/") || p.contains(":/")) p else new Path(tablePath, p).toString)
-    }
-    graft.sources.ManifestFileIndex.read(
-      spark, basePath, absolute, schema, partitionColumns)
-  }
-
   /** Physical (column-mapped) name of a field, when present. */
   private[delta] def physicalName(f: StructField): String =
     if (f.metadata.contains("delta.columnMapping.physicalName"))
@@ -2549,15 +2513,30 @@ object DeltaTable {
   }
 
   /** files()-shaped DataFrame rows → manifest descriptors. */
-  private[delta] def manifestFiles(rows: Seq[org.apache.spark.sql.Row]): Seq[graft.sources.ManifestFile] =
+  private[delta] def manifestFiles(rows: Seq[org.apache.spark.sql.Row]): Seq[InternalDataFile] =
     rows.map { r =>
-      graft.sources.ManifestFile(
-        path = r.getString(0),
-        size = if (r.isNullAt(1)) 0L else r.getLong(1),
-        modificationTime = if (r.isNullAt(2)) 0L else r.getLong(2),
+      InternalDataFile(
+        physicalPath = r.getString(0),
+        fileSizeBytes = if (r.isNullAt(1)) 0L else r.getLong(1),
+        lastModified = if (r.isNullAt(2)) 0L else r.getLong(2),
         partitionValues =
           if (r.isNullAt(3)) Map.empty
           else r.getMap[String, String](3).toMap)
+    }
+
+  /** Canonical stats of an `add.stats` JSON (null: none), keyed by the
+    * names `readSchema` gives the files' columns. The JSON carries
+    * timestamps at millisecond precision, so a timestamp maximum is
+    * widened by 999 µs to still cover the file's sub-millisecond rows. */
+  private[delta] def columnStats(json: String, readSchema: StructType): Seq[ColumnStatRow] =
+    if (json == null) Seq.empty
+    else {
+      val timestamps = readSchema.fields
+        .filter(f => f.dataType == TimestampType || f.dataType == TimestampNTZType).map(_.name).toSet
+      DeltaStats.fromJson(json, readSchema)._2.map { c =>
+        if (timestamps(c.column)) c.copy(maxValue = c.maxValue.map(m => (m.toLong + 999L).toString))
+        else c
+      }
     }
 
   /** Parse an optional deletionVector struct at row ordinal `i`. */
@@ -2586,11 +2565,11 @@ object DeltaTable {
   private[delta] def deletedPositionsDF(
       spark: SparkSession,
       tablePath: String,
-      files: Seq[(graft.sources.ManifestFile, DeletionVectorDescriptor)]): DataFrame = {
+      files: Seq[(InternalDataFile, DeletionVectorDescriptor)]): DataFrame = {
     import spark.implicits._
     val conf = new graft.util.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val rows = files.map { case (f, d) =>
-      (new Path(f.path).toUri.toString, d.storageType, d.pathOrInlineDv,
+      (new Path(f.physicalPath).toUri.toString, d.storageType, d.pathOrInlineDv,
         d.offset.getOrElse(-1), d.sizeInBytes, d.cardinality)
     }
     // one decode task per vector, capped by cluster width (not a
@@ -2606,7 +2585,11 @@ object DeltaTable {
       .toDF("__graft_file", "__graft_pos")
   }
 
-  /** [[readFiles]] plus row-level delete application: files without a DV
+  /** Read a set of snapshot files as a DataFrame through a
+    * [[graft.sources.ManifestFileIndex]]: sizes and partition values
+    * come from the LOG, so Spark plans the scan without listing or
+    * stat-ing a single path — the property that matters at 10^6 files
+    * (SURVEY.md §7 step 5). Row-level deletes apply: files without a DV
     * take the plain scan; files with one anti-join their deleted
     * `(file, position)` pairs out (broadcast when the total cardinality
     * is driver-known small; shuffled otherwise — both linear). */
@@ -2614,34 +2597,35 @@ object DeltaTable {
       spark: SparkSession,
       tablePath: String,
       basePath: String,
-      files: Seq[(graft.sources.ManifestFile, Option[DeletionVectorDescriptor])],
+      files: Seq[(InternalDataFile, Option[DeletionVectorDescriptor])],
       schema: StructType,
-      partitionColumns: Seq[String]): DataFrame = {
-    val (withDv, plain) = files.partition(_._2.isDefined)
-    if (withDv.isEmpty)
-      return readFiles(spark, tablePath, basePath, plain.map(_._1), schema, partitionColumns)
-    val resolved = withDv.map { case (f, d) =>
-      (f.copy(path = metadataFilePath(tablePath, f.path)), d.get)
-    }
-    val data = graft.sources.ManifestFileIndex.read(
-      spark, basePath, resolved.map(_._1), schema, partitionColumns,
-      withRowPositions = true)
+      partitionColumns: Seq[String],
+      columnStats: InternalDataFile => Seq[ColumnStatRow] = _.columnStats): DataFrame = {
+    if (files.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val (withDv, plain) = files.map { case (f, d) =>
+      (f.copy(physicalPath = metadataFilePath(tablePath, f.physicalPath)), d)
+    }.partition(_._2.isDefined)
+    def scan(fs: Seq[InternalDataFile], positions: Boolean) = graft.sources.ManifestFileIndex.read(
+      spark, basePath, fs, schema, partitionColumns, withRowPositions = positions, columnStats = columnStats)
+    if (withDv.isEmpty) return scan(plain.map(_._1), positions = false)
+    val resolved = withDv.map { case (f, d) => (f, d.get) }
     val deleted = deletedPositionsDF(spark, tablePath, resolved)
     val small = resolved.map(_._2.cardinality).sum <= 4000000L
-    val applied = data
+    val applied = scan(resolved.map(_._1), positions = true)
       .join(if (small) broadcast(deleted) else deleted,
         Seq("__graft_file", "__graft_pos"), "left_anti")
       .select(schema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
     if (plain.isEmpty) applied
-    else readFiles(spark, tablePath, basePath, plain.map(_._1), schema, partitionColumns)
-      .unionByName(applied)
+    else scan(plain.map(_._1), positions = false).unionByName(applied)
   }
 }
 
 /**
  * Scan builder with log-level pruning: partition predicates evaluated on
- * the manifest's `partitionValues`, and min/max skipping evaluated on the
- * per-file stats JSON — both happen BEFORE any parquet footer is opened,
+ * the manifest's `partitionValues`, and min/max skipping
+ * ([[graft.sources.StatsSkipping]]) on the per-file stats JSON — both
+ * happen BEFORE any parquet footer is opened,
  * which is the property that matters when a snapshot has 10^6 files
  * (SURVEY.md §4 "file skipping / data skipping").
  */
@@ -2669,8 +2653,9 @@ final class DeltaScanBuilder(
     this
   }
 
-  /** Skip files whose [min,max] for `column` can't intersect [lo,hi]
-    * (either bound optional). Values compared in the column's type. */
+  /** Skip files whose stats prove no row has `column >= lo AND column <=
+    * hi` (either bound optional, literals cast to the column's type in
+    * UTC); a range on a time-transform source also prunes partitions. */
   def range(column: String, lo: Option[Any], hi: Option[Any]): DeltaScanBuilder = {
     rangePredicates +:= ((column, lo.map(_.toString), hi.map(_.toString)))
     this
@@ -2709,30 +2694,15 @@ final class DeltaScanBuilder(
         }
       }
     }
-    if (rangePredicates.nonEmpty) {
-      val statCols = StructType(schema.fields
-        .filter(f => rangePredicates.exists(_._1 == f.name))
-        .map(f => StructField(p(f.name), f.dataType, f.nullable)))
-      val statsSchema = StructType(Seq(
-        StructField("numRecords", LongType),
-        StructField("minValues", statCols),
-        StructField("maxValues", statCols)))
-      df = df.withColumn("graft_st", from_json(col("stats"), statsSchema))
-      rangePredicates.foreach { case (c, lo, hi) =>
-        val field = schema(c)
-        val minC = col(s"graft_st.minValues.`${p(c)}`")
-        val maxC = col(s"graft_st.maxValues.`${p(c)}`")
-        // keep when stats are absent (can't prove exclusion)
-        lo.foreach { l =>
-          df = df.filter(maxC.isNull || maxC >= lit(l).cast(field.dataType))
-        }
-        hi.foreach { h =>
-          df = df.filter(minC.isNull || minC <= lit(h).cast(field.dataType))
-        }
-      }
-      df = df.drop("graft_st")
+    if (rangePredicates.isEmpty) return df
+    val filters = rangePredicates.flatMap { case (c, lo, hi) =>
+      graft.sources.StatsSkipping.rangeFilter(p(c), schema(c).dataType, lo, hi)
     }
-    df
+    val readSchema = if (phys.isEmpty) schema else DeltaTable.physicalSchema(schema)
+    val stats = df.schema.fieldIndex("stats")
+    val kept = graft.sources.StatsSkipping.prune(df.collect().toSeq, filters)(r =>
+      DeltaTable.columnStats(r.getString(stats), readSchema))
+    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava, df.schema)
   }
 
   /** Pruned data read. The skipping predicates only drop whole files;
@@ -2740,7 +2710,7 @@ final class DeltaScanBuilder(
   def toDF(): DataFrame = {
     val (schema, partCols) = table.schemaAt(asOfVersion)
     val allRows = files()
-      .select("path", "size", "modificationTime", "partitionValues", "deletionVector")
+      .select("path", "size", "modificationTime", "partitionValues", "deletionVector", "stats")
       .collect().toSeq
     val rows = chunkSpec match {
       case Some((k, n)) => allRows.sortBy(_.getString(0))
@@ -2748,10 +2718,15 @@ final class DeltaScanBuilder(
       case None => allRows
     }
     val pruned = DeltaTable.manifestFiles(rows).zip(rows.map(DeltaTable.dvAt(_, 4)))
+    // stats JSON by the resolved path the index sees, decoded only under a data filter
+    lazy val statsJson = rows.iterator
+      .map(r => DeltaTable.metadataFilePath(table.tablePath, r.getString(0)) -> r.getString(5)).toMap
+    def statsIn(readSchema: StructType)(f: InternalDataFile) =
+      DeltaTable.columnStats(statsJson.getOrElse(f.physicalPath, null), readSchema)
     table.physicalShape(asOfVersion) match {
       case None =>
-        DeltaTable.readFilesWithDeletes(
-          spark, table.tablePath, table.readBasePath(asOfVersion), pruned, schema, partCols)
+        DeltaTable.readFilesWithDeletes(spark, table.tablePath, table.readBasePath(asOfVersion),
+          pruned, schema, partCols, statsIn(schema))
       case Some((physSchema, physPartCols)) =>
         // column-mapped table: the files speak physical names — read
         // physically (deletes applied in physical space), then cast each
@@ -2759,7 +2734,7 @@ final class DeltaScanBuilder(
         // fields positionally)
         val phys = DeltaTable.readFilesWithDeletes(
           spark, table.tablePath, table.readBasePath(asOfVersion), pruned,
-          physSchema, physPartCols)
+          physSchema, physPartCols, statsIn(physSchema))
         val logical = DeltaTable.logicalClean(schema)
         phys.select(physSchema.fields.zip(logical.fields).map { case (pf, lf) =>
           col(s"`${pf.name}`").cast(lf.dataType).as(lf.name)

@@ -134,6 +134,21 @@ object HudiColStats {
     if (joined.isEmpty) None else Some(joined)
   }
 
+  /** The index rows of the given instants per (partitionPath, fileName),
+    * collected to the driver; empty when none are covered. */
+  def byFile(spark: SparkSession, tablePath: String, instants: Seq[String])
+      : Map[(String, String), Seq[ColumnStatRow]] =
+    read(spark, tablePath, instants).fold(Map.empty[(String, String), Seq[ColumnStatRow]]) { df =>
+      df.collect().toSeq.groupBy(r => (r.getString(0), r.getString(1)))
+        .view.mapValues(_.map(r => ColumnStatRow(
+          column = r.getString(2),
+          minValue = Option(r.getString(3)),
+          maxValue = Option(r.getString(4)),
+          numNulls = r.getLong(5),
+          numValues = r.getLong(6),
+          totalSize = r.getLong(7)))).toMap
+    }
+
   /** Drop a rolled-back instant's index file (with [[graft.hudi
     * .HudiTable.rollback]] — its stats must not outlive the instant). */
   def delete(spark: SparkSession, tablePath: String, instant: String): Unit = {
@@ -153,17 +168,4 @@ object HudiColStats {
       case d: DecimalType => c.cast(DecimalType(38, d.scale))
       case _ => c
     }
-
-  /** Human literal → canonical stat string for a range predicate
-    * (mirrors the Iceberg scan's literal preparation). */
-  def canonLiteral(dt: DataType, v: String): String = dt match {
-    case TimestampType | TimestampNTZType if !v.matches("-?\\d+") =>
-      val t = v.trim.replace(' ', 'T')
-      val ldt = if (t.length <= 10) java.time.LocalDate.parse(t).atStartOfDay
-                else java.time.LocalDateTime.parse(t.take(19))
-      (ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L).toString
-    case DateType if !v.matches("-?\\d+") =>
-      java.time.LocalDate.parse(v.trim.take(10)).toEpochDay.toString
-    case _ => v
-  }
 }

@@ -55,6 +55,10 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
   /** Completed data instants, time-ordered. */
   def instants: Seq[String] = timeline.completedInstants().map(_.time)
 
+  /** Completed instants visible to a read as of `asOf` (None: all). */
+  private[hudi] def instantsAt(asOf: Option[String]): Seq[String] =
+    asOf.map(a => instants.filter(_ <= a)).getOrElse(instants)
+
   def latestInstant: String = instants.lastOption.getOrElse(
     throw new IllegalStateException(s"empty hudi table: $tablePath"))
 
@@ -101,10 +105,6 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
         case Some(m) if m.partitionToWriteStats.keys.exists(_.nonEmpty) =>
           m.partitionToWriteStats.keys.filter(_.nonEmpty).min
       }
-
-  /** Partition path → values using THIS table's layout + field list. */
-  private[graft] def parsePartition(pp: String): Map[String, String] =
-    HudiTable.parsePartitionPath(pp, partitionColumns)
 
   /** Table schema at an instant: Avro schema from the latest commit's
     * extraMetadata (Hudi's schema-evolution channel). */
@@ -170,8 +170,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
    * is an EMPTY table: a racing reader sees no live slices.
    */
   def fileSlicesDF(asOf: Option[String] = None): DataFrame = {
-    val upTo = asOf.map(a => instants.filter(_ <= a)).getOrElse(instants)
-    val rows = liveBases(localActions(upTo)).map(a =>
+    val rows = liveBases(localActions(instantsAt(asOf))).map(a =>
       org.apache.spark.sql.Row(a.instant, a.partitionPath, a.fileId, a.path, a.size))
     spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, sliceSchema)
   }
@@ -257,8 +256,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * the slice whose base instant its name carries (Hudi file-slice
     * rule), so logs of a replaced/compacted group never leak forward. */
   def fileSlices(asOf: Option[String] = None): Seq[HudiFileSlice] = {
-    val upTo = asOf.map(a => instants.filter(_ <= a)).getOrElse(instants)
-    val acts = localActions(upTo)
+    val acts = localActions(instantsAt(asOf))
     val logs: Map[(String, String, String), Seq[HudiLogFileRef]] =
       if (!isMor) Map.empty
       else acts
@@ -835,15 +833,22 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     // per file
     val partCols = partitionColumns
     val manifest = files.map { case (f, pp, size) =>
-      graft.sources.ManifestFile(
-        path = if (f.startsWith("/") || f.contains(":/")) f else new Path(tablePath, f).toString,
-        size = size,
-        modificationTime = 0L,
+      graft.model.InternalDataFile(
+        physicalPath = if (f.startsWith("/") || f.contains(":/")) f else new Path(tablePath, f).toString,
+        fileSizeBytes = size,
         partitionValues = HudiTable.parsePartitionPath(pp, partCols))
+    }
+    // col_stats rows of the instants visible at `asOf`, loaded only for a
+    // scan that carries a data filter
+    lazy val stats = {
+      val byFile = HudiColStats.byFile(spark, tablePath, instantsAt(asOf))
+      manifest.iterator.zip(files.iterator).map { case (m, (f, pp, _)) =>
+        m.physicalPath -> byFile.getOrElse((pp, f.substring(f.lastIndexOf('/') + 1)), Seq.empty)
+      }.toMap
     }
     graft.sources.ManifestFileIndex.read(
       spark, readBasePath, manifest, schema, partCols,
-      withRowPositions = withRowPositions)
+      withRowPositions = withRowPositions, columnStats = f => stats.getOrElse(f.physicalPath, Seq.empty))
   }
 
   // ---------------------------------------------------------------- writes
@@ -1664,19 +1669,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
         "read-optimized view (hudiSource(t, readOptimized = true)) whose target " +
         "lags the snapshot by the un-compacted log mutations")
     val files = liveFilesWithCounts()
-    val statsByFile: Map[(String, String), Seq[graft.model.ColumnStatRow]] =
-      HudiColStats.read(spark, tablePath, instants) match {
-        case None => Map.empty
-        case Some(df) => df.collect().toSeq
-          .groupBy(r => (r.getString(0), r.getString(1)))
-          .view.mapValues(_.map(r => graft.model.ColumnStatRow(
-            column = r.getString(2),
-            minValue = Option(r.getString(3)),
-            maxValue = Option(r.getString(4)),
-            numNulls = r.getLong(5),
-            numValues = r.getLong(6),
-            totalSize = r.getLong(7))).toSeq).toMap
-      }
+    val statsByFile = HudiColStats.byFile(spark, tablePath, instants)
     val partCols = partitionColumns
     files.map { case (pp, abs, path, size, count) =>
       graft.model.InternalDataFile(
@@ -2291,10 +2284,11 @@ object HudiTable {
 }
 
 /**
- * Scan with partition pruning evaluated distributed on the replayed
- * file-slice manifest (partitionPath parsed as hive `k=v` inside the
- * plan — no per-file driver work), mirroring the Delta/Iceberg scan
- * builders so all three formats prune at the same layer.
+ * Scan with partition pruning on the replayed file-slice manifest (each
+ * partition path parsed on the driver) and min/max skipping
+ * ([[graft.sources.StatsSkipping]]) over the col_stats index, mirroring
+ * the Delta/Iceberg scan builders so all three formats prune at the same
+ * layer.
  */
 final class HudiScanBuilder(
     spark: SparkSession,
@@ -2310,8 +2304,9 @@ final class HudiScanBuilder(
   }
 
   /** Min/max file skipping through the col_stats index (ref read
-    * preference `HudiFileStatsExtractor.java:96-103`). Files without
-    * index coverage are kept — absence of stats never excludes. */
+    * preference `HudiFileStatsExtractor.java:96-103`) on `column >= lo AND
+    * column <= hi`, literals cast to the column's type in UTC. Files
+    * without index coverage are kept — absence of stats never excludes. */
   def range(column: String, lo: Option[Any], hi: Option[Any]): HudiScanBuilder = {
     rangePredicates +:= ((column, lo.map(_.toString), hi.map(_.toString)))
     this
@@ -2319,65 +2314,21 @@ final class HudiScanBuilder(
 
   /** Pruned file manifest (instant, partitionPath, fileId, path, size). */
   def files(): DataFrame = {
-    var df = table.fileSlicesDF(asOfInstant)
-    partitionPredicates.foreach { case (c, vs) =>
-      val esc = vs.toSeq.map(v => graft.util.PathCodec.escapePathName(
-        if (v == null) HudiTable.HiveDefaultPartition else v))
-      if (table.hiveStyleLayout) {
-        // compare whole `k=v` path segments with the wanted values
-        // path-ESCAPED (str_to_map splitting broke on values containing
-        // ',' or hive %XX escapes — silent row loss)
-        val tokens = esc.map(ev => s"$c=$ev")
-        df = df.filter(arrays_overlap(
-          split(col("partitionPath"), "/"), array(tokens.map(lit): _*)))
-      } else {
-        // value-only layout: the field's value is its POSITIONAL path
-        // segment (the last field keeps any trailing slashes — custom
-        // single-field partition values may contain them). Compare
-        // DECODED segments with the RAW wanted values — foreign tables
-        // write segments unescaped, so matching on the escaped spelling
-        // silently dropped their files; decoding matches the driver
-        // twin [[partitionOk]] exactly.
-        val idx = table.partitionColumns.indexOf(c)
-        require(idx >= 0, s"$c is not a partition field of ${table.tablePath}")
-        val valueExpr =
-          if (idx == table.partitionColumns.size - 1)
-            array_join(slice(split(col("partitionPath"), "/"), idx + 1, Int.MaxValue), "/")
-          else element_at(split(col("partitionPath"), "/"), idx + 1)
-        val decoded = org.apache.spark.sql.graftshim.GraftExpr.column(
-          graft.functions.UnescapePath(
-            org.apache.spark.sql.graftshim.GraftExpr.expression(valueExpr)))
-        val raws = vs.toSeq.map(v => if (v == null) HudiTable.HiveDefaultPartition else v)
-        df = df.filter(decoded.isInCollection(raws))
+    val all = table.fileSlicesDF(asOfInstant)
+    if (partitionPredicates.isEmpty && rangePredicates.isEmpty) return all
+    val inPartitions = all.collect().toSeq.filter(r => partitionOk(r.getString(1)))
+    val kept = if (rangePredicates.isEmpty) inPartitions else {
+      val schema = table.schemaAt(asOfInstant)
+      val filters = rangePredicates.flatMap { case (c, lo, hi) =>
+        graft.sources.StatsSkipping.rangeFilter(c, schema(c).dataType, lo, hi)
+      }
+      val stats = HudiColStats.byFile(spark, table.tablePath, table.instantsAt(asOfInstant))
+      graft.sources.StatsSkipping.prune(inPartitions, filters) { r =>
+        val path = r.getString(3)
+        stats.getOrElse((r.getString(1), path.substring(path.lastIndexOf('/') + 1)), Seq.empty)
       }
     }
-    if (rangePredicates.nonEmpty) {
-      val visible = asOfInstant match {
-        case Some(asOf) => table.instants.filter(_ <= asOf)
-        case None => table.instants
-      }
-      HudiColStats.read(spark, table.tablePath, visible).foreach { idx =>
-        val schemaByName = table.schemaAt(asOfInstant).fields.map(f => f.name -> f).toMap
-        val withName = df.withColumn("fileName", element_at(split(col("path"), "/"), -1))
-        val pruned = rangePredicates.foldLeft(withName) { case (acc, (c, lo0, hi0)) =>
-          val dt = schemaByName(c).dataType
-          val lo = lo0.map(HudiColStats.canonLiteral(dt, _))
-          val hi = hi0.map(HudiColStats.canonLiteral(dt, _))
-          val minC = HudiColStats.typedCanon(col("minValue"), dt)
-          val maxC = HudiColStats.typedCanon(col("maxValue"), dt)
-          // provably-outside files only: null bounds keep the file
-          val outside = (hi.map(h => minC > HudiColStats.typedCanon(lit(h), dt)) ++
-            lo.map(l => maxC < HudiColStats.typedCanon(lit(l), dt)))
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val excluded = idx.filter(col("column") === c && outside)
-            .select(col("partitionPath"), col("fileName"))
-          // the index is metadata-sized: broadcast the anti join
-          acc.join(broadcast(excluded), Seq("partitionPath", "fileName"), "left_anti")
-        }
-        df = pruned.drop("fileName")
-      }
-    }
-    df
+    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava, all.schema)
   }
 
   def toDF(): DataFrame = {
@@ -2398,9 +2349,14 @@ final class HudiScanBuilder(
     table.readFiles(pruned, asOfInstant)
   }
 
-  /** Driver-side twin of the partition-token filter in [[files]]. */
-  private def partitionOk(pp: String): Boolean = {
-    val vals = table.parsePartition(pp)
-    partitionPredicates.forall { case (c, vs) => vs.contains(vals.get(c).orNull) }
+  /** True when a partition path's decoded values (hive-style or
+    * value-only layout) are wanted by every partition predicate. The
+    * field list is read once per scan, not per file. */
+  private lazy val partitionOk: String => Boolean = {
+    val partCols = table.partitionColumns
+    pp => {
+      val vals = HudiTable.parsePartitionPath(pp, partCols)
+      partitionPredicates.forall { case (c, vs) => vs.contains(vals.get(c).orNull) }
+    }
   }
 }

@@ -499,7 +499,7 @@ object IcebergSchemas {
     case FloatType => ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getFloat.toString
     case DoubleType =>
       // a pre-widen 4-byte bound must decode to the float's EXACT double
-      // value: consumers compare via toDouble (EntryPredicate.cmp), and a
+      // value: consumers parse the string with toDouble, and a
       // float's shortest-decimal string parsed as a double can differ from
       // the float by ~half a float-ulp — enough to wrongly prune a file
       // whose rows fall in that gap

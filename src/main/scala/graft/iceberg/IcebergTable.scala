@@ -753,7 +753,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   /** Live manifest entries of a snapshot, reconciled on the driver: per
     * path the [[ManifestEntry.supersedes]] winner — a carried add
     * manifest plus a later delete manifest for the same file resolves
-    * to deleted. `pred` (partition/range pruning from the scan builder)
+    * to deleted. `pred` (partition pruning from the scan builder)
     * runs after reconciliation: a delete entry must cancel its add even
     * when neither matches the predicate. Sorted by path. */
   private[iceberg] def liveEntries(
@@ -855,12 +855,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
 
     val pos = dels.filter(_.content == ManifestEntry.ContentPositionDeletes)
     if (pos.nonEmpty) {
-      val posSchema = StructType(Seq(
-        StructField("file_path", StringType), StructField("pos", LongType)))
-      val posFiles = pos.map(e => graft.sources.ManifestFile(
-        e.filePath, e.fileSizeBytes, 0L, Map.empty))
-      val raw = graft.sources.ManifestFileIndex.read(
-        spark, tablePath, posFiles, posSchema, Seq.empty, "parquet", withRowPositions = true)
+      val raw = readDeleteFiles(pos, IcebergTable.PositionDeleteSchema, positions = true)
       val delSeqDF = spark.createDataFrame(
         pos.map(e => (new Path(e.filePath).toString, e.sequenceNumber))).toDF("__graft_file", "__del_seq")
       val applicable = raw
@@ -887,10 +882,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         throw new IllegalStateException(s"equality id $id not in schema of $tablePath")).name)
       val delSchema = StructType(cols.map(c =>
         StructField(c, logical(c).dataType, nullable = true)))
-      val keyFiles = files.map(e => graft.sources.ManifestFile(
-        e.filePath, e.fileSizeBytes, 0L, Map.empty))
-      val keys = graft.sources.ManifestFileIndex.read(
-          spark, tablePath, keyFiles, delSchema, Seq.empty)
+      val keys = readDeleteFiles(files, delSchema)
         .distinct()
         .select(cols.map(c => col(s"`$c`").as(s"__eq_$c")).toSeq: _*)
         .withColumn("__eq_hit", lit(1))
@@ -954,12 +946,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
           val posHits =
             if (pos.isEmpty) None
             else {
-              val posSchema = StructType(Seq(
-                StructField("file_path", StringType), StructField("pos", LongType)))
-              val tomb = graft.sources.ManifestFileIndex.read(
-                  spark, tablePath,
-                  pos.map(e => graft.sources.ManifestFile(e.filePath, e.fileSizeBytes, 0L, Map.empty)),
-                  posSchema, Seq.empty)
+              val tomb = readDeleteFiles(pos, IcebergTable.PositionDeleteSchema)
                 .select(col("file_path").as("__graft_file"), col("pos").as("__graft_pos"))
               Some(parent.join(broadcast(tomb), Seq("__graft_file", "__graft_pos")))
             }
@@ -970,10 +957,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
               val cols = eqIds.map(id => byId(id).name)
               val delSchema = StructType(cols.map(c =>
                 StructField(c, logical(c).dataType, nullable = true)))
-              val keys = graft.sources.ManifestFileIndex.read(
-                  spark, tablePath,
-                  files.map(e => graft.sources.ManifestFile(e.filePath, e.fileSizeBytes, 0L, Map.empty)),
-                  delSchema, Seq.empty)
+              val keys = readDeleteFiles(files, delSchema)
                 .distinct()
                 .select(cols.map(c => col(s"`$c`").as(s"__eq_$c")).toSeq: _*)
               val cond = cols.map(c => col(s"`$c`") <=> col(s"__eq_$c")).reduce(_ && _)
@@ -991,6 +975,14 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
     }
   }
+
+  /** The rows of delete files in `schema`, plus `__graft_file`/`__graft_pos`
+    * when `positions`. */
+  private def readDeleteFiles(
+      dels: Seq[ManifestEntry], schema: StructType, positions: Boolean = false): DataFrame =
+    graft.sources.ManifestFileIndex.read(spark, tablePath,
+      dels.map(e => graft.model.InternalDataFile(e.filePath, fileSizeBytes = e.fileSizeBytes)),
+      schema, Seq.empty, withRowPositions = positions)
 
   private[iceberg] def readFiles(
       entries: Seq[ManifestEntry],
@@ -1018,6 +1010,12 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val out =
       if (physByPath.isEmpty) logical
       else IcebergTable.renameByPath(logical, physByPath, "")
+    // decoded bounds by path, named as the relation reads the columns;
+    // built only for a scan that carries a data filter
+    lazy val stats = {
+      val idSchema = IcebergTable.renameByPath(meta.schema, physByPath, "")
+      entries.iterator.map(e => e.filePath -> IcebergTable.internalFile(e, idSchema, Nil).columnStats).toMap
+    }
     if (entries.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
     val basePath = meta.properties.getOrElse("graft.converted.from", tablePath)
@@ -1027,13 +1025,11 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val phys = entries.groupBy(e =>
         (Option(e.fileFormat).getOrElse("parquet").toLowerCase, identityColsOf(e)))
       .map { case ((fmt, identityCols), group) =>
-        val files = group.map(e => graft.sources.ManifestFile(
-          path = e.filePath,
-          size = e.fileSizeBytes,
-          modificationTime = 0L,
+        val files = group.map(e => graft.model.InternalDataFile(e.filePath,
+          fileSizeBytes = e.fileSizeBytes,
           partitionValues = e.partitionValues.filter { case (k, _) => identityCols.contains(k) }))
-        graft.sources.ManifestFileIndex.read(
-          spark, basePath, files, out, identityCols, fmt, withRowPositions)
+        graft.sources.ManifestFileIndex.read(spark, basePath, files, out, identityCols, fmt,
+          withRowPositions, f => stats.getOrElse(f.physicalPath, Seq.empty))
       }
       .reduce(_ unionByName _)
     if (physByPath.isEmpty) phys
@@ -1456,11 +1452,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val posTargets: Set[String] =
       if (pos.isEmpty) Set.empty
       else {
-        val posSchema = StructType(Seq(StructField("file_path", StringType)))
-        graft.sources.ManifestFileIndex.read(
-            spark, tablePath,
-            pos.map(e => graft.sources.ManifestFile(e.filePath, e.fileSizeBytes, 0L, Map.empty)),
-            posSchema, Seq.empty)
+        readDeleteFiles(pos, StructType(Seq(StructField("file_path", StringType))))
           .distinct().collect().map(_.getString(0)).toSet
       }
     val maxEqSeq = dels.filter(_.content == ManifestEntry.ContentEqualityDeletes)
@@ -2515,6 +2507,10 @@ object IcebergTable {
   }
 
   /** Rename (nested) struct fields to their mapped physical names. */
+  /** Columns of a position-delete file. */
+  private val PositionDeleteSchema = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
+
   private[iceberg] def renameByPath(
       s: StructType, phys: Map[String, String], prefix: String): StructType =
     StructType(s.fields.map { f =>
@@ -2695,6 +2691,9 @@ final class IcebergScanBuilder(
     this
   }
 
+  /** Skip files whose bounds prove no row has `column >= lo AND column
+    * <= hi` (either bound optional, literals cast to the column's type in
+    * UTC); a range on a transform source also prunes partitions. */
   def range(column: String, lo: Option[Any], hi: Option[Any]): IcebergScanBuilder = {
     rangePredicates +:= ((column, lo.map(_.toString), hi.map(_.toString)))
     this
@@ -2751,11 +2750,10 @@ final class IcebergScanBuilder(
     table.estimatedRowsForPartition(pred)
   }
 
-  /** Pruned entry list. All predicate data is prepared driver-side
-    * (human strings → ordinals, time literals → canonical stat forms),
-    * but evaluation happens on the EXECUTORS inside the manifest-read
-    * job — the driver only ever collects survivors, never every live
-    * entry's bounds maps. */
+  /** Pruned entry list: partition predicates (human strings → ordinals)
+    * run inside the driver fold of [[IcebergTable.liveEntries]], then
+    * min/max skipping ([[graft.sources.StatsSkipping]]) on each survivor's
+    * decoded bounds. */
   def files(): Seq[ManifestEntry] = {
     val meta = table.currentMetadata
     val schemaByName = meta.schema.fields.map(f => f.name -> f).toMap
@@ -2796,25 +2794,33 @@ final class IcebergScanBuilder(
               d.granularity, graft.model.PartitionTransform.truncate(d.granularity, h))))
         }
       }
-    // human timestamp/date literals → canonical stat forms so the
-    // bound compare is numeric
-    val boundsRanges: Seq[(Int, DataType, Option[String], Option[String])] =
-      rangePredicates.map { case (c, lo0, hi0) =>
-        val f = schemaByName(c)
-        def canon(v: String): String = f.dataType match {
-          case TimestampType | TimestampNTZType if !v.matches("-?\\d+") =>
-            val t = v.trim.replace(' ', 'T')
-            val dt = if (t.length <= 10) java.time.LocalDate.parse(t).atStartOfDay
-                     else java.time.LocalDateTime.parse(t.take(19))
-            (dt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L).toString
-          case DateType if !v.matches("-?\\d+") =>
-            java.time.LocalDate.parse(v.trim.take(10)).toEpochDay.toString
-          case _ => v
+    val wanted = partIn ++ derivedPartIn
+    val entries = table.liveEntries(asOfSnapshot, e =>
+      wanted.forall { case (c, values) =>
+        e.partitionValues.get(c) match {
+          // an entry whose partition struct LACKS the field entirely
+          // cannot be pruned on it: a data file written under an older
+          // partition spec (spec evolution) may hold matching rows, and
+          // a GLOBAL delete file applies to every partition
+          case None => true
+          // a NULL value means the field exists and the file holds only
+          // the null partition: data entries prune strictly, delete
+          // files (table-wide equality deletes) survive
+          case Some(null) => e.content > 0
+          case Some(v) => values.contains(v)
         }
-        (IcebergSchemas.fieldId(f).get, f.dataType, lo0.map(canon), hi0.map(canon))
-      }
-    table.liveEntries(asOfSnapshot,
-      IcebergScanBuilder.EntryPredicate(partIn ++ derivedPartIn, ordinalRanges, boundsRanges))
+      } &&
+      ordinalRanges.forall { case (field, loOrd, hiOrd) =>
+        e.partitionValues.get(field).forall(v => v == null || {
+          val ord = v.toInt
+          loOrd.forall(ord >= _) && hiOrd.forall(ord <= _)
+        })
+      })
+    val filters = rangePredicates.flatMap { case (c, lo, hi) =>
+      graft.sources.StatsSkipping.rangeFilter(c, schemaByName(c).dataType, lo, hi)
+    }
+    graft.sources.StatsSkipping.prune(entries, filters)(
+      IcebergTable.internalFile(_, meta.schema, Nil).columnStats)
   }
 
   def toDF(): DataFrame = {
@@ -2837,57 +2843,6 @@ final class IcebergScanBuilder(
             else lit(null).cast(f.dataType).as(f.name)
           }.toSeq: _*)
         }
-    }
-  }
-}
-
-object IcebergScanBuilder {
-
-  /** Executor-shippable pruning predicate: only primitives, DataTypes
-    * and prepared literal strings cross the closure boundary. */
-  final case class EntryPredicate(
-      partIn: Seq[(String, Set[String])],
-      ordinalRanges: Seq[(String, Option[Int], Option[Int])],
-      boundsRanges: Seq[(Int, DataType, Option[String], Option[String])])
-      extends (ManifestEntry => Boolean) with Serializable {
-
-    private def cmp(dt: DataType, a: String, b: String): Int = dt match {
-      case ByteType | ShortType | IntegerType | LongType |
-           DateType | TimestampType | TimestampNTZType => a.toLong.compareTo(b.toLong)
-      case FloatType | DoubleType => a.toDouble.compareTo(b.toDouble)
-      case _: DecimalType => new java.math.BigDecimal(a).compareTo(new java.math.BigDecimal(b))
-      case _ => a.compareTo(b)
-    }
-
-    def apply(e: ManifestEntry): Boolean = {
-      partIn.forall { case (c, wanted) =>
-        e.partitionValues.get(c) match {
-          // an entry whose partition struct LACKS the field entirely
-          // cannot be pruned on it: a data file written under an older
-          // partition spec (spec evolution) may hold matching rows, and
-          // a GLOBAL delete file applies to every partition
-          case None => true
-          // a NULL value means the field exists and the file holds only
-          // the null partition: data entries prune strictly, delete
-          // files (table-wide equality deletes) survive
-          case Some(null) => e.content > 0
-          case Some(v) => wanted.contains(v)
-        }
-      } &&
-      ordinalRanges.forall { case (field, loOrd, hiOrd) =>
-        e.partitionValues.get(field).forall(v => v == null || {
-          val ord = v.toInt
-          loOrd.forall(ord >= _) && hiOrd.forall(ord <= _)
-        })
-      } &&
-      boundsRanges.forall { case (id, dt, lo, hi) =>
-        // keep when bounds are absent (can't prove exclusion)
-        val minOk = hi.forall(h => e.lowerBounds.get(id).forall(b =>
-          cmp(dt, IcebergSchemas.decodeBound(dt, b), h) <= 0))
-        val maxOk = lo.forall(l => e.upperBounds.get(id).forall(b =>
-          cmp(dt, IcebergSchemas.decodeBound(dt, b), l) >= 0))
-        minOk && maxOk
-      }
     }
   }
 }

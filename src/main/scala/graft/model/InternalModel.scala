@@ -15,10 +15,11 @@ import org.apache.spark.sql.types._
  *  - file:     reference `api/.../model/storage/OneDataFile.java:39-55`
  *  - stats:    reference `api/.../model/stat/ColumnStat.java:33-40`
  *
- * Design departure from the reference: data-file manifests are not Java
- * collections on the driver but `Dataset[InternalDataFile]`, so file-set
- * algebra (diffs, grouping, stats rollup) runs distributed and survives
- * 100 TB-scale tables with millions of files.
+ * As in the reference, a data-file manifest is a collection on the
+ * driver: each format folds its metadata log into a
+ * `Seq[InternalDataFile]` in one in-process replay, and a scan plans
+ * over those files through [[graft.sources.ManifestFileIndex]] without
+ * listing the filesystem.
  */
 
 /** Layout of data files on storage (ref `DataLayoutStrategy.java:29-33`). */
@@ -63,8 +64,9 @@ final case class ColumnStatRow(
     totalSize: Long)
 
 /**
- * A single data file in a snapshot (ref `OneDataFile.java:39-55`). Rows of
- * the distributed manifest `Dataset[InternalDataFile]`.
+ * A single data file in a snapshot (ref `OneDataFile.java:39-55`): an
+ * element of a driver-folded manifest, and the unit a scan's
+ * [[graft.sources.ManifestFileIndex]] lists and skips by `columnStats`.
  */
 final case class InternalDataFile(
     physicalPath: String,

@@ -664,7 +664,7 @@ object IcebergQueries {
 
     // Z-order rewrite through the NATIVE iceberg writer: a 2-d box
     // predicate prunes on the rewritten manifests' per-file bounds
-    // (EntryPredicate over lower/upper bounds — the pruning fractions
+    // (StatsSkipping over the decoded bounds — the pruning fractions
     // are pinned by CompactionSpec's iceberg mirror); the declared
     // sort order rides metadata.json (sort-orders / default-sort-order-id).
     QueryDef.sql(

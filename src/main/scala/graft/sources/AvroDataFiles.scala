@@ -52,16 +52,6 @@ object AvroDataFiles {
       .fileSchema(spark.sparkContext.hadoopConfiguration, new Path(first)))
   }
 
-  /** Read avro files through the metadata-backed FileIndex (same
-    * planning as parquet — partition pruning and column pruning apply). */
-  def read(
-      spark: SparkSession,
-      tableRoot: String,
-      files: Seq[ManifestFile],
-      schema: StructType,
-      partitionColumns: Seq[String]): DataFrame =
-    ManifestFileIndex.read(spark, tableRoot, files, schema, partitionColumns, format = "avro")
-
   /**
    * Distributed avro write: one container file per partition, encoded
    * from Catalyst rows on the executors (micros/epoch-day/unscaled
@@ -173,9 +163,10 @@ object AvroDataFiles {
     if (paths.isEmpty) return Seq.empty
     val fs = new Path(paths.head).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sizes = paths.map(p => p -> fs.getFileStatus(new Path(p)).getLen).toMap
-    val files = paths.map(p => ManifestFile(p, sizes(p), 0L, Map.empty))
+    val files = paths.map(p => graft.model.InternalDataFile(p, fileSizeBytes = sizes(p)))
     val scalars = schema.fields.filter(f => isScalar(f.dataType))
-    val df = read(spark, new Path(paths.head).getParent.toString, files, schema, Seq.empty)
+    val df = ManifestFileIndex.read(
+      spark, new Path(paths.head).getParent.toString, files, schema, Seq.empty, format = "avro")
     val aggs = count(lit(1)).as("_rows") +:
       scalars.flatMap(f => Seq(
         min(col(f.name)).as(s"${f.name}__min"),

@@ -9,13 +9,7 @@ import org.apache.spark.sql.graftshim.GraftRelations
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One data file as the table format's metadata describes it. */
-final case class ManifestFile(
-    path: String,
-    size: Long,
-    modificationTime: Long,
-    /** partition column -> hive-serialized value (null for default). */
-    partitionValues: Map[String, String])
+import graft.model.{ColumnStatRow, InternalDataFile}
 
 /**
  * A [[FileIndex]] backed by table-format metadata (Delta log replay /
@@ -29,18 +23,21 @@ final case class ManifestFile(
  * single filesystem call, and Catalyst's partition filters are
  * evaluated against the index's typed partition rows (so a filter on a
  * partition column prunes at PLAN time even when the caller didn't use
- * the scan builder).
+ * the scan builder). Catalyst's data filters skip files by their column
+ * stats through [[StatsSkipping]]; `columnStats` is called only for a
+ * scan that carries a data filter.
  */
 final class ManifestFileIndex(
     spark: SparkSession,
     root: Path,
-    files: Seq[ManifestFile],
-    override val partitionSchema: StructType) extends FileIndex {
+    files: Seq[InternalDataFile],
+    override val partitionSchema: StructType,
+    columnStats: InternalDataFile => Seq[ColumnStatRow]) extends FileIndex {
 
   override def rootPaths: Seq[Path] = Seq(root)
 
   /** Typed partition row per file (hive string -> column type, UTC). */
-  private lazy val typedFiles: Seq[(InternalRow, ManifestFile)] = files.map { f =>
+  private lazy val typedFiles: Seq[(InternalRow, InternalDataFile)] = files.map { f =>
     val values = partitionSchema.fields.map { sf =>
       val raw = f.partitionValues.get(sf.name).orNull
       if (raw == null || raw == "__HIVE_DEFAULT_PARTITION__") null
@@ -53,7 +50,7 @@ final class ManifestFileIndex(
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val selected =
+    val partitions =
       if (partitionFilters.isEmpty || partitionSchema.isEmpty) typedFiles
       else {
         // the standard PartitioningAwareFileIndex binding: rewrite
@@ -67,25 +64,23 @@ final class ManifestFileIndex(
         val predicate = Predicate.createInterpreted(bound)
         typedFiles.filter { case (row, _) => predicate.eval(row) }
       }
-    selected
+    StatsSkipping.prune(partitions, dataFilters) { case (_, f) => columnStats(f) }
       .groupBy(_._1)
       .map { case (row, group) =>
         PartitionDirectory(row, group.map { case (_, f) =>
-          new FileStatus(f.size, false, 0, 0, f.modificationTime, new Path(f.path))
+          new FileStatus(f.fileSizeBytes, false, 0, 0, f.lastModified, new Path(f.physicalPath))
         }.toArray)
       }
       .toSeq
   }
 
-  override def inputFiles: Array[String] = files.map(_.path).toArray
+  override def inputFiles: Array[String] = files.map(_.physicalPath).toArray
   override def refresh(): Unit = ()
-  override def sizeInBytes: Long = files.map(_.size).sum
+  override def sizeInBytes: Long = files.map(_.fileSizeBytes).sum
 }
 
 object ManifestFileIndex {
 
-  /** Plan a parquet scan over metadata-described files: the partition
-    * columns' values come from the index, the rest from the files. */
   /** Reader schemas must be nullable: a required column missing from an
     * older data file (schema evolution) null-fills only when the read
     * schema allows null — `spark.read.schema()` forced this silently,
@@ -99,21 +94,26 @@ object ManifestFileIndex {
       case other => other
     }
 
+  /** Plan a parquet scan over metadata-described files: the partition
+    * columns' values come from the index, the rest from the files. */
   def read(
       spark: SparkSession,
       tableRoot: String,
-      files: Seq[ManifestFile],
+      files: Seq[InternalDataFile],
       schemaIn: StructType,
       partitionColumns: Seq[String],
       format: String = "parquet",
       /** append `__graft_file`/`__graft_pos` (the scan's _metadata
         * file path + row index) — what row-level deletes key on. */
-      withRowPositions: Boolean = false): DataFrame = {
+      withRowPositions: Boolean = false,
+      /** canonical min/max of a file's columns, keyed by the names the
+        * relation reads; consulted only under a data filter */
+      columnStats: InternalDataFile => Seq[ColumnStatRow] = _.columnStats): DataFrame = {
     import org.apache.spark.sql.functions.col
     val schema = nullable(schemaIn).asInstanceOf[StructType]
     val partitionSchema = StructType(schema.filter(f => partitionColumns.contains(f.name)))
     val dataSchema = StructType(schema.filterNot(f => partitionColumns.contains(f.name)))
-    val index = new ManifestFileIndex(spark, new Path(tableRoot), files, partitionSchema)
+    val index = new ManifestFileIndex(spark, new Path(tableRoot), files, partitionSchema, columnStats)
     val rel = GraftRelations.relation(spark, index, partitionSchema, dataSchema, format)
     // present columns in table-schema order (partition cols are
     // appended after data cols by the relation)

@@ -51,16 +51,6 @@ object OrcDataFiles {
     listOrcFiles(df.sparkSession, destDir).sorted
   }
 
-  /** Read ORC files through the metadata-backed FileIndex (same
-    * planning as parquet — partition pruning and column pruning apply). */
-  def read(
-      spark: SparkSession,
-      tableRoot: String,
-      files: Seq[ManifestFile],
-      schema: StructType,
-      partitionColumns: Seq[String]): DataFrame =
-    ManifestFileIndex.read(spark, tableRoot, files, schema, partitionColumns, format = "orc")
-
   /** Distributed footer-stats collection: one small Spark job over the
     * file list, footers decoded on executors. */
   def collectStats(

@@ -166,7 +166,7 @@ class CompactionSpec extends SparkTestBase {
     assert(t2.defaultSortOrder() == ((Seq("x", "y"), true)))
     assert(t2.currentMetadata.defaultSortOrderId == meta.defaultSortOrderId)
     // bounds-based 2-d pruning on the rewritten manifests (the
-    // EntryPredicate path over per-file lower/upper bounds)
+    // StatsSkipping rule over per-file lower/upper bounds)
     val total = t2.scan.files().size
     assert(total >= 4, s"need several output files to prove pruning, got $total")
     val boxX = t2.scan.range("x", Some(0L), Some(1023L)).files().size

@@ -227,4 +227,43 @@ class DeltaCheckpointSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("v0"))
   }
+
+  test("repeated metadata and protocol lookups read a checkpoint's parquet once") {
+    val dir = tmpDir("delta_cp_header")
+    val src = spark.read.parquet(s"$sf0001/region.parquet")
+    val t = DeltaTable.create(spark, s"$dir/t", src)
+    (1 to 2).foreach(_ => t.append(src.limit(1), Seq.empty))
+    t.checkpoint() // v2, with an empty JSON tail after it
+    val log = DeltaTable.forPath(spark, s"$dir/t").log
+    // local-file bytes read by this thread (Hadoop FS statistics)
+    def bytesRead(): Long = {
+      import scala.jdk.CollectionConverters._
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getThreadStatistics.getBytesRead).sum
+    }
+    def lookup(): Unit = {
+      assert(log.metadataAt(None)._2 == 2L)
+      assert(log.protocolAt(None).minReaderVersion == 1)
+    }
+    val first = bytesRead()
+    lookup()
+    val firstBytes = bytesRead() - first
+    val pointer = Seq("_last_checkpoint", "._last_checkpoint.crc")
+      .map(n => new Path(s"$dir/t/_delta_log/$n")).filter(fs(dir).exists(_))
+      .map(fs(dir).getFileStatus(_).getLen).sum
+    val before = bytesRead()
+    (1 to 5).foreach(_ => lookup())
+    val later = bytesRead() - before
+    // each later lookup re-resolves the checkpoint (the `_last_checkpoint`
+    // pointer and its checksum: under twice their bytes per call) but
+    // reads none of its parquet (kilobytes per call)
+    assert(firstBytes > 20 * pointer, s"first lookup read $firstBytes bytes")
+    assert(later <= 10 * 2 * pointer,
+      s"5 later lookups read $later bytes; pointer and checksum are $pointer")
+    // a newer checkpoint is still resolved and read
+    t.enableColumnMapping() // v3: protocol 2/5
+    t.checkpoint()
+    assert(log.protocolAt(None).minReaderVersion == 2)
+    assert(log.metadataAt(None)._1.configuration.get("delta.columnMapping.mode").contains("name"))
+  }
 }

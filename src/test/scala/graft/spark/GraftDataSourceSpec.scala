@@ -96,4 +96,73 @@ class GraftDataSourceSpec extends SparkTestBase {
       s"expected l_returnflag in PartitionFilters:\n$plan")
     assert(scan.count() == li.filter(col("l_returnflag") === "A").count())
   }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Files the executed scans of `df` read (the scan's `numFiles`). */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    Plans.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
+  }
+
+  test("data filters skip files by min/max stats through the relation") {
+    val dir = tmpDir("ds_skip")
+    val o = spark.read.parquet(s"$sf0001/orders.parquet")
+      .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
+    // range-clustered on o_orderkey: each file holds a narrow key range
+    def clustered(df: org.apache.spark.sql.DataFrame) =
+      df.repartitionByRange(6, col("o_orderkey")).sortWithinPartitions("o_orderkey")
+    val even = o.filter(col("o_orderkey") % 2 === 0)
+    val keys = o.agg(min("o_orderkey"), max("o_orderkey")).head
+    val (lo, hi) = (keys.getLong(0), keys.getLong(0) + (keys.getLong(1) - keys.getLong(0)) / 5)
+    val inRange = col("o_orderkey").between(lo, hi)
+    for (fmt <- Seq("delta", "iceberg", "hudi")) {
+      val path = s"$dir/$fmt"
+      clustered(even).write.format("graft").option("format", fmt).save(path)
+      clustered(o.filter(col("o_orderkey") % 2 === 1)).write.format("graft")
+        .option("format", fmt).mode("append").save(path)
+      val (first, files, firstFiles) = fmt match {
+        case "delta" =>
+          val t = graft.delta.DeltaTable.forPath(spark, path)
+          ("0", t.snapshotFileCount(None), t.snapshotFileCount(Some(0L)))
+        case "iceberg" =>
+          val t = IcebergTable.forPath(spark, path)
+          (t.snapshotIds.head.toString, t.snapshotFileCount(None),
+            t.snapshotFileCount(Some(t.snapshotIds.head)))
+        case "hudi" =>
+          val t = HudiTable.forPath(spark, path)
+          (t.instants.head, t.snapshotFileCount(None), t.snapshotFileCount(Some(t.instants.head)))
+      }
+      val latest = spark.read.format("graft").load(path).filter(inRange)
+      val n = scannedFiles(latest)
+      assert(n > 0 && n < files, s"$fmt scanned $n of $files files")
+      assert(latest.count() == o.filter(inRange).count(), fmt)
+      assert(checksum(latest.select(o.columns.map(col).toSeq: _*)) ==
+        checksum(o.filter(inRange)), fmt)
+      // time travel skips on the stats of what was visible at the version
+      // (for Hudi: the col_stats of the instants up to it)
+      val past = spark.read.format("graft").option("versionAsOf", first).load(path).filter(inRange)
+      val m = scannedFiles(past)
+      assert(m > 0 && m < firstFiles, s"$fmt versionAsOf scanned $m of $firstFiles files")
+      assert(checksum(past.select(o.columns.map(col).toSeq: _*)) ==
+        checksum(even.filter(inRange)), s"$fmt versionAsOf")
+    }
+    // a column-mapped Delta table: its stats carry the physical names
+    // the relation reads, whatever the logical names are
+    val mapped = graft.delta.DeltaTable.forPath(spark, s"$dir/delta")
+    mapped.enableColumnMapping()
+    mapped.renameColumn("o_totalprice", "price")
+    val viaSource = spark.read.format("graft").load(s"$dir/delta").filter(inRange)
+    val n = scannedFiles(viaSource)
+    assert(n > 0 && n < mapped.snapshotFileCount(None), s"column-mapped delta scanned $n files")
+    assert(checksum(viaSource) == checksum(o.filter(inRange)))
+    // the key's logical name now differs from the physical name of its stats
+    mapped.renameColumn("o_orderkey", "key")
+    val viaTable = mapped.toDF().filter(col("key").between(lo, hi))
+    val m = scannedFiles(viaTable)
+    assert(m > 0 && m < mapped.snapshotFileCount(None), s"renamed key scanned $m files")
+    assert(checksum(viaTable) == checksum(o.filter(inRange)))
+  }
 }
