@@ -4,11 +4,6 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.MessageType
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -37,8 +32,8 @@ import scala.jdk.CollectionConverters._
 final class DeltaLog(val tablePath: String, spark: SparkSession) {
 
   private val logPath = new Path(tablePath, "_delta_log")
-  private def fs: FileSystem =
-    logPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def hconf = spark.sparkContext.hadoopConfiguration
+  private def fs: FileSystem = logPath.getFileSystem(hconf)
 
   def version(fileName: String): Long = fileName.stripSuffix(".json").toLong
   private def commitFile(v: Long): Path = new Path(logPath, f"$v%020d.json")
@@ -107,7 +102,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     * `%020d.checkpoint.<uniq>.{json|parquet}` holding the non-file
     * actions plus `sidecar` pointers into `_delta_log/_sidecars/`, where
     * the file actions live as parquet. Every layout is read on the
-    * driver (`parquetRows`), projected to the columns replay
+    * driver (`MetaFiles.parquetRows`), projected to the columns replay
     * decodes. */
   private def checkpointFile(v: Long): Path =
     new Path(logPath, f"$v%020d.checkpoint.parquet")
@@ -175,40 +170,10 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
         val n = mapper.readTree(line)
         Option(n.get("sidecar")).filterNot(_.isNull).map(_.get("path").asText())
       }
-    else parquetRows(Seq(top), DeltaLog.SidecarColumns)(DeltaLog.sidecarPathOf)
+    else MetaFiles.parquetRows(hconf, Seq(top), DeltaLog.SidecarColumns)(DeltaLog.sidecarPathOf)
 
   private def readJsonLines(p: Path): Seq[String] =
     MetaFiles.readUtf8(fs, p).split("\n").filter(_.nonEmpty).toSeq
-
-  /** Rows of checkpoint parquet `files`, read on the driver, projected
-    * to `columns` (a file lacking all of them is not scanned) and decoded
-    * as they are read. */
-  private def parquetRows[A](files: Seq[Path], columns: Map[String, Set[String]])(
-      decode: Group => IterableOnce[A]): Seq[A] = files.flatMap { file =>
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-    try {
-      val schema = reader.getFooter.getFileMetaData.getSchema
-      val kept = schema.getFields.asScala.toSeq.flatMap { f =>
-        columns.get(f.getName).filterNot(_ => f.isPrimitive).flatMap { subs =>
-          val fields = f.asGroupType.getFields.asScala.filter(s => subs(s.getName))
-          if (fields.isEmpty) None else Some(f.asGroupType.withNewFields(fields.asJava))
-        }
-      }
-      val out = Vector.newBuilder[A]
-      if (kept.nonEmpty) {
-        val projection = new MessageType(schema.getName, kept: _*)
-        reader.setRequestedSchema(projection)
-        val io = new ColumnIOFactory().getColumnIO(projection, schema)
-        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).foreach { pages =>
-          val records = io.getRecordReader(pages, new GroupRecordConverter(projection))
-          var i = 0L
-          while (i < pages.getRowCount) { out ++= decode(records.read()); i += 1 }
-        }
-      }
-      out.result()
-    } finally reader.close()
-  }
 
   /** The last checkpoint whose header was read, with that header. */
   @volatile private var lastHeader: Option[(DeltaLog.Checkpoint, (Option[DeltaMetadata], Option[Protocol]))] =
@@ -226,9 +191,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
           // sidecar/checkpointMetadata lines fall through the codec as None
           readJsonLines(top).flatMap(DeltaActionCodec.fromJsonLine)
         case DeltaLog.V2Checkpoint(_, top) =>
-          parquetRows(Seq(top), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
+          MetaFiles.parquetRows(hconf, Seq(top), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
         case other =>
-          parquetRows(checkpointDataFiles(other), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
+          MetaFiles.parquetRows(hconf, checkpointDataFiles(other), DeltaLog.HeaderColumns)(DeltaLog.headerOf)
       }
       val header = (actions.collectFirst { case m: DeltaMetadata => m },
         actions.collectFirst { case p: Protocol => p })
@@ -519,7 +484,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     require(commits.nonEmpty || ck.nonEmpty, s"not a Delta table: $tablePath")
     val state = scala.collection.mutable.HashMap[String, (Long, Boolean, AddFile)]()
     ck.foreach { c =>
-      parquetRows(checkpointDataFiles(c), DeltaLog.AddColumns)(DeltaLog.addOf)
+      MetaFiles.parquetRows(hconf, checkpointDataFiles(c), DeltaLog.AddColumns)(DeltaLog.addOf)
         .foreach(a => state(a.path) = (c.version, true, a))
     }
     commits.foreach { v =>

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.model.{ColumnStatRow, InternalDataFile}
 import graft.stats.{FileFooterStats, ParquetFooterStats}
+import graft.util.PhaseTimer
 
 /**
  * User-facing Delta table API over the native log codec: create/append/
@@ -1938,7 +1939,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           graft.model.PartitionTransform.deltaGenerationExpr(t)).build())))
     val fieldNames = defs.map(_.fieldName)
     val dataSchema = StructType(cleanSchema.filterNot(f => fieldNames.contains(f.name)))
-    val addActions = DeltaTable.timePhase("stats-json") { adds.map { f =>
+    val addActions = PhaseTimer.time("delta:stats-json") { adds.map { f =>
       val footerish = graft.stats.FileFooterStats(
         path = f.physicalPath, fileSizeBytes = f.fileSizeBytes,
         recordCount = f.recordCount, modificationTime = f.lastModified,
@@ -1953,13 +1954,13 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     } }
     val removeActions = removePaths.map(p =>
       RemoveFile(new Path(p).toUri.toString, now, dataChange = true))
-    val v = DeltaTable.timePhase("version-list")(log.latestVersion()).map(_ + 1).getOrElse(0L)
+    val v = PhaseTimer.time("delta:version-list")(log.latestVersion()).map(_ + 1).getOrElse(0L)
     // ONE metadata replay serves both the CAS read and the table id —
     // each replay walks the log tail, so doubling it doubled the
     // per-commit cost of a 100-commit incremental batch
     val baseMeta =
       if (v == 0L) None
-      else Some(DeltaTable.timePhase("metadata-replay")(log.metadataAt(None))._1)
+      else Some(PhaseTimer.time("delta:metadata-replay")(log.metadataAt(None))._1)
     val baseConfig = baseMeta.map(_.configuration).getOrElse(Map.empty[String, String])
     // the config read above is at-or-after version v-1; a commit landing
     // after it takes slot v, so our log.commit(v, …) below fails the
@@ -2012,7 +2013,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     val metaActions: Seq[DeltaAction] =
       if (v == 0L) Seq(Protocol(), meta) else upgrade ++ Seq(meta)
     val info = CommitInfo(now, "SYNC", Map("mode" -> "Sync"))
-    if (!DeltaTable.timePhase("log-commit")(
+    if (!PhaseTimer.time("delta:log-commit")(
         log.commit(v, metaActions ++ removeActions ++ addActions :+ info))) {
       // a lost race must not orphan the copies THIS call placed (a
       // pre-existing copy may be a live registered file — never touch
@@ -2062,22 +2063,6 @@ object DeltaTable {
     * MERGE/delete really routed through the index, not around it. */
   private[graft] val indexRoutedScans = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Per-phase wall-clock accumulators for the sync-commit path — the
-    * Delta twin of IcebergTable's commit-phase timers, printed by
-    * SyncLoadSpec so a load regression names the phase that moved. */
-  private[graft] val commitPhaseNanos =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private[graft] def timePhase[A](phase: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    try f finally commitPhaseNanos
-      .computeIfAbsent(phase, _ => new java.util.concurrent.atomic.AtomicLong())
-      .addAndGet(System.nanoTime() - t0)
-  }
-  private[graft] def resetCommitPhases(): Unit = commitPhaseNanos.clear()
-  private[graft] def commitPhaseMillis: Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    commitPhaseNanos.asScala.map { case (k, v) => k -> v.get / 1000000 }.toMap
-  }
 
   def forPath(spark: SparkSession, tablePath: String): DeltaTable =
     new DeltaTable(spark, DeltaLog.forTable(spark, tablePath))

@@ -1,11 +1,16 @@
 package graft.hudi
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.types._
 
 import graft.model.ColumnStatRow
+import graft.util.MetaFiles
 
 /**
  * Column-statistics index for Hudi tables — the engine's analog of the
@@ -39,122 +44,101 @@ object HudiColStats {
     StructField("numValues", LongType, nullable = false),
     StructField("totalSize", LongType, nullable = false)))
 
+  private val IndexColumns: Map[String, Set[String]] =
+    IndexSchema.fieldNames.map(_ -> Set.empty[String]).toMap
+
   def dir(tablePath: String): Path =
     new Path(tablePath, ".hoodie/metadata/col_stats")
 
   def indexFile(tablePath: String, instant: String): Path =
     new Path(dir(tablePath), s"$instant.parquet")
 
-  /** Write one commit's stats rows as a single parquet file. Written
-    * BEFORE the timeline commit: an orphan from a failed commit is
-    * unreachable because readers resolve index files through the
-    * completed timeline, never by listing. */
+  /** [[IndexSchema]] in Spark's own parquet layout, so a sidecar from
+    * Spark's parquet writer and one from [[write]] read back alike. */
+  private lazy val ParquetSchema: MessageType =
+    new SparkToParquetSchemaConverter().convert(IndexSchema)
+
+  /** Write one commit's stats rows as a single parquet file, on the
+    * driver. Two rules make it safe on either side of the timeline
+    * commit (data writes place it after, a sync commit before): absence
+    * of an index file never excludes a file, and readers resolve index
+    * files through the completed timeline, so an orphan of a failed
+    * commit is never read. Racers on one instant write their own
+    * uuid-named temporary file; the rename replaces such an orphan. */
   def write(
       spark: SparkSession,
       tablePath: String,
       instant: String,
       files: Seq[(String, String, Seq[ColumnStatRow])]): Unit = {
     if (files.isEmpty) return
-    val rows = files.flatMap { case (partitionPath, fileName, cols) =>
-      cols.map(c => org.apache.spark.sql.Row(
-        partitionPath, fileName, c.column,
-        c.minValue.orNull, c.maxValue.orNull, c.numNulls, c.numValues, c.totalSize))
+    val groups = new SimpleGroupFactory(ParquetSchema)
+    val rows = for ((partitionPath, fileName, cols) <- files; c <- cols) yield {
+      val g = groups.newGroup().append("partitionPath", partitionPath)
+        .append("fileName", fileName).append("column", c.column)
+      c.minValue.foreach(g.append("minValue", _))
+      c.maxValue.foreach(g.append("maxValue", _))
+      g.append("numNulls", c.numNulls).append("numValues", c.numValues)
+        .append("totalSize", c.totalSize)
     }
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = dir(tablePath).getFileSystem(hconf)
-    fs.mkdirs(dir(tablePath))
-    // uuid-suffixed staging: two optimistic writers racing the same
-    // instant time must not clobber each other's staging dir
-    val staging = new Path(dir(tablePath),
-      s".staging-$instant-${java.util.UUID.randomUUID().toString.take(8)}")
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), IndexSchema)
-      .write.mode("overwrite").parquet(staging.toString)
-    val part = fs.listStatus(staging).map(_.getPath)
-      .find(p => p.getName.endsWith(".parquet")).get
-    // an existing target can only be an orphan of a FAILED commit of
-    // this same instant time (readers resolve through the completed
-    // timeline) — replace it
-    fs.delete(indexFile(tablePath, instant), false)
-    require(fs.rename(part, indexFile(tablePath, instant)),
-      s"failed to place col_stats index for $instant")
-    fs.delete(staging, true)
+    MetaFiles.writeParquet(spark.sparkContext.hadoopConfiguration,
+      indexFile(tablePath, instant), ParquetSchema, rows)
   }
 
   /** Instants of `wanted` that have an index file. One listing of the
-    * index dir, not one existence probe per instant. */
+    * index dir; a table without the dir has no index. */
   def coveredInstants(spark: SparkSession, tablePath: String, wanted: Seq[String]): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val d = dir(tablePath)
-    val fs = d.getFileSystem(hconf)
-    if (!fs.exists(d)) return Seq.empty
-    val present = fs.listStatus(d).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).toSet
+    val present =
+      try d.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(d)
+        .map(_.getPath.getName).filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).toSet
+      catch { case _: FileNotFoundException => return Seq.empty }
     wanted.filter(present)
   }
 
-  /** The index rows of the given instants as a DataFrame (columns of
-    * [[IndexSchema]]); None when none are covered. The per-instant
+  /** The index rows of the given instants per (partitionPath, fileName),
+    * read on the driver; empty when none are covered. The per-instant
     * parquet sidecar is the fast path; absent it (a table whose index
     * was maintained only in the real metadata-table layout), rows come
-    * from the metadata table's `column_stats` partition, joined to the
-    * `files` listing for partition paths — either index answers
-    * identically (ref read preference `HudiFileStatsExtractor.java:96-103`). */
-  def read(spark: SparkSession, tablePath: String, instants: Seq[String]): Option[DataFrame] = {
+    * from the metadata table's `column_stats` partition, restricted to
+    * the requested instants so a time-travel read gets the as-of index,
+    * and joined to the `files` listing for partition paths. Either
+    * index answers identically (ref read preference
+    * `HudiFileStatsExtractor.java:96-103`). */
+  def read(spark: SparkSession, tablePath: String, instants: Seq[String])
+      : Map[(String, String), Seq[ColumnStatRow]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val covered = coveredInstants(spark, tablePath, instants)
-    if (covered.nonEmpty)
-      return Some(spark.read.schema(IndexSchema).parquet(
-        covered.map(i => indexFile(tablePath, i).toString): _*))
-    // metadata-table fallback: DISTRIBUTED log replay (blocks decode on
-    // executors — a 100k-file table never builds stat rows driver-side),
-    // restricted to the requested instants so time-travel callers get
-    // exactly the as-of index state, not the current one
-    val statsDf = HudiMetadataTable.readColumnStatsDF(
-      spark, tablePath, Some(instants.toSet)).getOrElse(return None)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = dir(tablePath).getFileSystem(hconf)
-    // file → partition path from the files listing (one row per FILE —
-    // bounded — vs. stats at files × columns); broadcast to the join
-    val partitionOfFile = HudiMetadataTable.readFiles(fs, hconf, tablePath)
-      .toSeq.flatMap { case (pp, files) =>
-        files.keysIterator.map(_ -> (if (pp == ".") "" else pp))
+    val keyed: Seq[((String, String), ColumnStatRow)] =
+      if (covered.nonEmpty)
+        MetaFiles.parquetRows(conf, covered.map(indexFile(tablePath, _)), IndexColumns) { g =>
+          def str(f: String) = if (g.getFieldRepetitionCount(f) > 0) Some(g.getString(f, 0)) else None
+          Some((g.getString("partitionPath", 0), g.getString("fileName", 0)) -> ColumnStatRow(
+            column = g.getString("column", 0),
+            minValue = str("minValue"),
+            maxValue = str("maxValue"),
+            numNulls = g.getLong("numNulls", 0),
+            numValues = g.getLong("numValues", 0),
+            totalSize = g.getLong("totalSize", 0)))
+        }
+      else {
+        val fs = dir(tablePath).getFileSystem(conf)
+        val stats = HudiMetadataTable.readColumnStats(fs, conf, tablePath, Some(instants.toSet))
+        if (stats.isEmpty) return Map.empty
+        val partitionsOf = HudiMetadataTable.readFiles(fs, conf, tablePath).toSeq
+          .flatMap { case (pp, files) => files.keysIterator.map(_ -> (if (pp == ".") "" else pp)) }
+          .groupMap(_._1)(_._2)
+        stats.flatMap { case (fileName, row) =>
+          partitionsOf.getOrElse(fileName, Nil).map(pp => (pp, fileName) -> row)
+        }
       }
-    if (partitionOfFile.isEmpty) return None
-    import spark.implicits._
-    val ppDf = partitionOfFile.toDF("fileName", "partitionPath")
-    val joined = statsDf.join(org.apache.spark.sql.functions.broadcast(ppDf), "fileName")
-      .select(org.apache.spark.sql.functions.col("partitionPath"),
-        org.apache.spark.sql.functions.col("fileName"),
-        org.apache.spark.sql.functions.col("column"),
-        org.apache.spark.sql.functions.col("minValue"),
-        org.apache.spark.sql.functions.col("maxValue"),
-        org.apache.spark.sql.functions.col("numNulls"),
-        org.apache.spark.sql.functions.col("numValues"),
-        org.apache.spark.sql.functions.col("totalSize"))
-    if (joined.isEmpty) None else Some(joined)
+    keyed.groupMap(_._1)(_._2)
   }
-
-  /** The index rows of the given instants per (partitionPath, fileName),
-    * collected to the driver; empty when none are covered. */
-  def byFile(spark: SparkSession, tablePath: String, instants: Seq[String])
-      : Map[(String, String), Seq[ColumnStatRow]] =
-    read(spark, tablePath, instants).fold(Map.empty[(String, String), Seq[ColumnStatRow]]) { df =>
-      df.collect().toSeq.groupBy(r => (r.getString(0), r.getString(1)))
-        .view.mapValues(_.map(r => ColumnStatRow(
-          column = r.getString(2),
-          minValue = Option(r.getString(3)),
-          maxValue = Option(r.getString(4)),
-          numNulls = r.getLong(5),
-          numValues = r.getLong(6),
-          totalSize = r.getLong(7)))).toMap
-    }
 
   /** Drop a rolled-back instant's index file (with [[graft.hudi
     * .HudiTable.rollback]] — its stats must not outlive the instant). */
   def delete(spark: SparkSession, tablePath: String, instant: String): Unit = {
     val f = indexFile(tablePath, instant)
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(f)) fs.delete(f, false)
+    f.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(f, false)
   }
 
   /** Canonical-string range filter for a stats DataFrame column, typed

@@ -9,6 +9,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 
 import scala.jdk.CollectionConverters._
 
+/** One replayed record_index record in the distributed merge —
+  * `seq` orders records globally (log-file index << 32 | record index)
+  * so "later block wins" resolves on executors. */
+final case class RecordIndexReplayRow(
+    key: String, seq: Long, deleted: Boolean,
+    partitionPath: String, fileId: String)
+
+/** One record-index entry to write: record key → (partition, file group),
+  * or a tombstone. */
+final case class RecordIndexEntry(
+    key: String, partitionPath: String, fileId: String, deleted: Boolean = false)
+
 /**
  * The Hudi metadata table's `files` partition, in Hudi's documented
  * layout: a merge-on-read table rooted at `<table>/.hoodie/metadata`
@@ -46,25 +58,6 @@ import scala.jdk.CollectionConverters._
  * versions of this engine (plain-string min/max) still decode via
  * their embedded block schema.
  */
-/** One replayed column_stats record in the distributed merge —
-  * `seq` orders records globally (log-file index << 32 | record index)
-  * so "later block wins" resolves on executors. */
-final case class ColStatsReplayRow(
-    fileName: String, column: String, seq: Long, deleted: Boolean,
-    minValue: String, maxValue: String,
-    numNulls: Long, numValues: Long, totalSize: Long)
-
-/** One replayed record_index record in the distributed merge (same
-  * ordering discipline as [[ColStatsReplayRow]]). */
-final case class RecordIndexReplayRow(
-    key: String, seq: Long, deleted: Boolean,
-    partitionPath: String, fileId: String)
-
-/** One record-index entry to write: record key → (partition, file group),
-  * or a tombstone. */
-final case class RecordIndexEntry(
-    key: String, partitionPath: String, fileId: String, deleted: Boolean = false)
-
 object HudiMetadataTable {
 
   val MetadataDir = ".hoodie/metadata"
@@ -473,10 +466,11 @@ object HudiMetadataTable {
   /**
    * Distributed record_index replay: one task per index log decodes its
    * blocks on the executors, "last record wins per key, tombstones
-   * drop" resolves with one metadata-scale shuffle (same discipline as
-   * [[readColumnStatsDF]] — the index is row-scale, so entries never
-   * materialize on the driver). Returns (key, partitionPath, fileId)
-   * for every live key, or None when the partition is absent/empty.
+   * drop" resolves with one metadata-scale shuffle. It stays a Spark
+   * job while every other metadata replay folds on the driver: the
+   * index is row-scale, and callers join it, never collect it. Returns
+   * (key, partitionPath, fileId) for every live key, or None when the
+   * partition is absent/empty.
    */
   def readRecordIndexDF(
       spark: org.apache.spark.sql.SparkSession,
@@ -595,63 +589,9 @@ object HudiMetadataTable {
     state.toSeq.collect { case ((fileName, _), Some(row)) => fileName -> row }
   }
 
-  /**
-   * Distributed column_stats replay: one task per log file decodes its
-   * blocks on the EXECUTORS; "last record wins per (fileName, column),
-   * tombstones drop" resolves with one metadata-scale shuffle. The
-   * scale path for a 100k-file × wide-schema table with no parquet
-   * sidecar — millions of stat rows never materialize on the driver
-   * (the driver holds only the log-file list). Returns columns
-   * (fileName, column, minValue, maxValue, numNulls, numValues,
-   * totalSize), or None when the partition is absent/empty.
-   */
-  def readColumnStatsDF(
-      spark: org.apache.spark.sql.SparkSession, tablePath: String,
-      wantedInstants: Option[Set[String]] = None): Option[org.apache.spark.sql.DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root(tablePath).getFileSystem(conf)
-    if (!hasColumnStats(fs, tablePath)) return None
-    val timeline = new HudiTimeline(root(tablePath).toString, conf)
-    val completed = timeline.completedInstants().map(_.time).toSet
-    val visible = wantedInstants.map(_.intersect(completed)).getOrElse(completed)
-    val logs = fs.listStatus(colStatsDir(tablePath)).toSeq
-      .map(_.getPath)
-      .filter(p => HudiLogFormat.isLogPath(p.getName))
-      .sortBy(_.getName)
-    if (logs.isEmpty || visible.isEmpty) return None
-    val sconf = new graft.util.SerializableHadoopConf(conf)
-    val visibleB = spark.sparkContext.broadcast(visible)
-    import spark.implicits._
-    val rows = spark.createDataset(logs.map(_.toString).zipWithIndex)
-      .repartition(math.min(logs.size, spark.sparkContext.defaultParallelism))
-      .flatMap { case (pathStr, fileSeq) =>
-        val p = new Path(pathStr)
-        val lfs = p.getFileSystem(sconf.value)
-        decodeColStatsLog(lfs, p, visibleB.value).zipWithIndex.map {
-          case (((fileName, column), row), recSeq) =>
-            ColStatsReplayRow(
-              fileName, column,
-              seq = fileSeq.toLong << 32 | recSeq.toLong,
-              deleted = row.isEmpty,
-              minValue = row.flatMap(_.minValue).orNull,
-              maxValue = row.flatMap(_.maxValue).orNull,
-              numNulls = row.map(_.numNulls).getOrElse(0L),
-              numValues = row.map(_.numValues).getOrElse(0L),
-              totalSize = row.map(_.totalSize).getOrElse(0L))
-        }
-      }
-    val merged = rows.groupByKey(r => (r.fileName, r.column))
-      .reduceGroups((a, b) => if (a.seq >= b.seq) a else b)
-      .map(_._2).filter(r => !r.deleted)
-    Some(merged.toDF().drop("seq", "deleted")
-      .select("fileName", "column", "minValue", "maxValue",
-        "numNulls", "numValues", "totalSize"))
-  }
-
   /** Decode one column_stats log file: ((fileName, column), row-or-
-    * tombstone) in block order, restricted to `visible` instants.
-    * Pure per-file work — runs on executors in the distributed replay
-    * ([[readColumnStatsDF]]) and on the driver above. */
+    * tombstone) in block order, restricted to `visible` instants — the
+    * per-file step of [[readColumnStats]]. */
   private[hudi] def decodeColStatsLog(
       fs: FileSystem, p: Path, visible: Set[String]):
       Seq[((String, String), Option[graft.model.ColumnStatRow])] =

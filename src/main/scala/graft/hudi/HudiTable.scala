@@ -564,31 +564,26 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     }
     if (!comparable) return fileSlices(None)
     val slices = fileSlices(None)
-    HudiColStats.read(spark, tablePath, instants) match {
-      case None => slices
-      case Some(idx) =>
-        val ranges = idx
-          .filter(col("column") === key &&
-            col("minValue").isNotNull && col("maxValue").isNotNull)
-          .select(col("partitionPath"), col("fileName"), col("minValue"), col("maxValue"))
-          .collect().map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-        if (ranges.isEmpty) return slices
-        // distributed per-file hit test: EXISTS an incoming key within
-        // the file's [kmin, kmax] — incoming keys stay distributed, the
-        // metadata-sized range table broadcasts
-        val rdf = spark.createDataFrame(ranges.toSeq)
-          .toDF("__pp", "__fn", "__kmin", "__kmax")
-        val kmin = HudiColStats.typedCanon(col("__kmin"), keyDt)
-        val kmax = HudiColStats.typedCanon(col("__kmax"), keyDt)
-        val hits = df.select(col(s"`$key`").as("__k")).distinct()
-          .join(broadcast(rdf), col("__k") >= kmin && col("__k") <= kmax)
-          .select(col("__pp"), col("__fn")).distinct()
-          .collect().map(r => (r.getString(0), r.getString(1))).toSet
-        val covered = ranges.map(t => (t._1, t._2)).toSet
-        slices.filter { s =>
-          val id = (s.partitionPath, new Path(s.basePath).getName)
-          !covered(id) || hits(id)
-        }
+    val ranges = HudiColStats.read(spark, tablePath, instants).toSeq.flatMap { case ((pp, fn), cols) =>
+      cols.filter(_.column == key).flatMap(c =>
+        for (lo <- c.minValue; hi <- c.maxValue) yield (pp, fn, lo, hi))
+    }
+    if (ranges.isEmpty) return slices
+    // distributed per-file hit test: EXISTS an incoming key within
+    // the file's [kmin, kmax] — incoming keys stay distributed, the
+    // metadata-sized range table broadcasts
+    val rdf = spark.createDataFrame(ranges)
+      .toDF("__pp", "__fn", "__kmin", "__kmax")
+    val kmin = HudiColStats.typedCanon(col("__kmin"), keyDt)
+    val kmax = HudiColStats.typedCanon(col("__kmax"), keyDt)
+    val hits = df.select(col(s"`$key`").as("__k")).distinct()
+      .join(broadcast(rdf), col("__k") >= kmin && col("__k") <= kmax)
+      .select(col("__pp"), col("__fn")).distinct()
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val covered = ranges.map(t => (t._1, t._2)).toSet
+    slices.filter { s =>
+      val id = (s.partitionPath, new Path(s.basePath).getName)
+      !covered(id) || hits(id)
     }
   }
 
@@ -841,7 +836,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     // col_stats rows of the instants visible at `asOf`, loaded only for a
     // scan that carries a data filter
     lazy val stats = {
-      val byFile = HudiColStats.byFile(spark, tablePath, instantsAt(asOf))
+      val byFile = HudiColStats.read(spark, tablePath, instantsAt(asOf))
       manifest.iterator.zip(files.iterator).map { case (m, (f, pp, _)) =>
         m.physicalPath -> byFile.getOrElse((pp, f.substring(f.lastIndexOf('/') + 1)), Seq.empty)
       }.toMap
@@ -1669,7 +1664,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
         "read-optimized view (hudiSource(t, readOptimized = true)) whose target " +
         "lags the snapshot by the un-compacted log mutations")
     val files = liveFilesWithCounts()
-    val statsByFile = HudiColStats.byFile(spark, tablePath, instants)
+    val statsByFile = HudiColStats.read(spark, tablePath, instants)
     val partCols = partitionColumns
     files.map { case (pp, abs, path, size, count) =>
       graft.model.InternalDataFile(
@@ -2322,7 +2317,7 @@ final class HudiScanBuilder(
       val filters = rangePredicates.flatMap { case (c, lo, hi) =>
         graft.sources.StatsSkipping.rangeFilter(c, schema(c).dataType, lo, hi)
       }
-      val stats = HudiColStats.byFile(spark, table.tablePath, table.instantsAt(asOfInstant))
+      val stats = HudiColStats.read(spark, table.tablePath, table.instantsAt(asOfInstant))
       graft.sources.StatsSkipping.prune(inPartitions, filters) { r =>
         val path = r.getString(3)
         stats.getOrElse((r.getString(1), path.substring(path.lastIndexOf('/') + 1)), Seq.empty)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.stats.{FileFooterStats, ParquetFooterStats}
-import graft.util.StagedWrites
+import graft.util.{PhaseTimer, StagedWrites}
 
 /**
  * Native Iceberg (format v2) table: create/append/overwrite with real
@@ -1705,7 +1705,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // a manifest holds either data files or delete files, never both
     // (spec: manifest-list `content`); a mixed commit (upsert = equality
     // deletes + new data in ONE snapshot) writes one manifest per kind
-    val addManifests: Seq[ManifestFileInfo] = IcebergTable.timePhase("manifest-write") {
+    val addManifests: Seq[ManifestFileInfo] = PhaseTimer.time("iceberg:manifest-write") {
       val groups =
         if (stamped.isEmpty) Seq(0 -> Seq.empty[ManifestEntry]) // removes-only commit
         else stamped.groupBy(e => if (e.content > 0) 1 else 0).toSeq.sortBy(_._1)
@@ -1734,7 +1734,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // delete manifest: the removed files stamped deleted at this commit's
     // sequence number — liveEntries' latest-sequence-wins replay resolves
     // them dead even when their add manifests are still carried
-    val deleteManifests: Seq[ManifestFileInfo] = IcebergTable.timePhase("manifest-write") {
+    val deleteManifests: Seq[ManifestFileInfo] = PhaseTimer.time("iceberg:manifest-write") {
       val dead = removes.map(_.copy(
         status = ManifestEntry.StatusDeleted, snapshotId = snapshotId, sequenceNumber = seq))
       // tombstoned data files and tombstoned delete files go into
@@ -1767,7 +1767,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       toBranch.flatMap(b => m.refs.get(b).map(_.snapshotId))
         .orElse(m.currentSnapshotId)
     }
-    val carried: Seq[ManifestFileInfo] = IcebergTable.timePhase("manifest-list-carry") {
+    val carried: Seq[ManifestFileInfo] = PhaseTimer.time("iceberg:manifest-list-carry") {
       prev match {
         case Some((_, m)) if carryPrevious && parentSnapshotId.nonEmpty =>
           IcebergManifests.readManifestList(
@@ -1777,7 +1777,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     }
 
     val listPath = new Path(metaDir, s"snap-$snapshotId-1-${UUID.randomUUID()}.avro")
-    IcebergTable.timePhase("manifest-list-write") {
+    PhaseTimer.time("iceberg:manifest-list-write") {
       IcebergManifests.writeManifestList(hconf, listPath, (addManifests ++ deleteManifests) ++ carried)
     }
 
@@ -1860,7 +1860,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         case _ => base.partitionStatistics
       })
     val v = prev.map(_._1 + 1).getOrElse(1L)
-    IcebergTable.timePhase("metadata-cas") {
+    PhaseTimer.time("iceberg:metadata-cas") {
       if (log.commit(v, next)) Some(snapshotId) else None
     }
   }
@@ -2205,7 +2205,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       cas: Option[graft.model.SyncCas] = None,
       /** extra snapshot-summary entries (cherry-pick provenance). */
       extraSummary: Map[String, String] = Map.empty): Long = {
-    val prev = IcebergTable.timePhase("plan-read")(log.readLatest())
+    val prev = PhaseTimer.time("iceberg:plan-read")(log.readLatest())
     cas.foreach(_.validate(
       prev.map(_._2.properties).getOrElse(Map.empty), s"iceberg target $tablePath"))
     val defs = graft.model.PartitionTransform.parseAll(partitionColumns)
@@ -2215,7 +2215,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       case Some((_, m)) => IcebergSchemas.evolveSchema(m.schema, schema, m.lastColumnId)
       case None => IcebergSchemas.assignFieldIds(schema)
     }
-    val entries = IcebergTable.timePhase("entry-build") { adds.map { f =>
+    val entries = PhaseTimer.time("iceberg:entry-build") { adds.map { f =>
       val byName = f.columnStats.map(c => c.column -> c).toMap
       val fields = idSchema.fields.filterNot(x => identityCols.contains(x.name))
       var valueCounts = Map.empty[Int, Long]
@@ -2379,24 +2379,6 @@ object IcebergTable {
     tpe(staged, fresh)
   }
 
-  /** Per-phase wall-clock accumulators for the commit path (manifest
-    * write, manifest-list carry/write, metadata CAS) — nanoTime pairs,
-    * always on (a few ns per commit), so a load harness can attribute a
-    * regression to the phase that moved instead of re-measuring blind
-    * (SyncLoadSpec prints the breakdown). */
-  private[graft] val commitPhaseNanos =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private[graft] def timePhase[A](phase: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    try f finally commitPhaseNanos
-      .computeIfAbsent(phase, _ => new java.util.concurrent.atomic.AtomicLong())
-      .addAndGet(System.nanoTime() - t0)
-  }
-  private[graft] def resetCommitPhases(): Unit = commitPhaseNanos.clear()
-  private[graft] def commitPhaseMillis: Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    commitPhaseNanos.asScala.map { case (k, v) => k -> v.get / 1000000 }.toMap
-  }
 
   /** Snapshot-summary key recording which branch snapshot a cherry-pick
     * replays — publishBranch's positive progress marker. */

@@ -8,6 +8,7 @@ import graft.delta.DeltaTable
 import graft.hudi.HudiTable
 import graft.iceberg.IcebergTable
 import graft.model.InternalDataFile
+import graft.util.PhaseTimer
 
 /**
  * Format-to-format metadata sync — the reference's core product loop
@@ -37,23 +38,6 @@ import graft.model.InternalDataFile
 object SyncEngine {
 
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Per-phase wall-clock accumulators for the incremental replay loop
-    * (source change read, schema-at-version, target commit) — the
-    * engine-side third of the SyncLoadSpec attribution triplet. */
-  private[graft] val phaseNanos =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private[graft] def timePhase[A](phase: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    try f finally phaseNanos
-      .computeIfAbsent(phase, _ => new java.util.concurrent.atomic.AtomicLong())
-      .addAndGet(System.nanoTime() - t0)
-  }
-  private[graft] def resetPhases(): Unit = phaseNanos.clear()
-  private[graft] def phaseMillis: Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    phaseNanos.asScala.map { case (k, v) => k -> v.get / 1000000 }.toMap
-  }
 
   /** Watermark property keys persisted in target metadata (canonical
     * definitions live with the CAS that validates them). */
@@ -167,13 +151,13 @@ object SyncEngine {
       var expectedWm = wm
       target.beginBatch()
       try pending.foreach { v =>
-        val (adds, removes) = timePhase("source-changes")(source.changes(v))
+        val (adds, removes) = PhaseTimer.time("engine:source-changes")(source.changes(v))
         // a late replay never regresses the watermark
         highWater = source.laterOf(highWater, v)
-        val schemaV = timePhase("source-schema-at")(source.schemaAtVersion(v))
+        val schemaV = PhaseTimer.time("engine:source-schema-at")(source.schemaAtVersion(v))
         // the schema AT v, not the current one: drops replay before
         // re-adds, so retired field ids stay retired on the target
-        timePhase("target-commit")(
+        PhaseTimer.time("engine:target-commit")(
         target.commit(schemaV, source.partitionColumns, source.dataRoot,
           adds, removes,
           keyProps ++ source.statisticsProps(v) ++

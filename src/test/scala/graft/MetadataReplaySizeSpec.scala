@@ -4,10 +4,11 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.delta.DeltaTable
-import graft.hudi.HudiTable
+import graft.hudi.{HudiColStats, HudiTable}
 import graft.iceberg.IcebergTable
 import graft.model.{ColumnStatRow, InternalDataFile}
 
@@ -18,7 +19,7 @@ import graft.model.{ColumnStatRow, InternalDataFile}
  * read call must launch the same number of Spark jobs on both twins and
  * return the file set the filesystem says it should. Delta's metadata
  * reads launch none at any log shape (JSON-only, classic, multi-part
- * and V2 checkpoints).
+ * and V2 checkpoints), nor do Hudi's col_stats reads and writes.
  */
 class MetadataReplaySizeSpec extends SparkTestBase {
   import MetadataReplaySizeSpec._
@@ -116,7 +117,7 @@ class MetadataReplaySizeSpec extends SparkTestBase {
     val big = hudiTwin(BigPad)
     assert(bytesUnder(s"${small.t.tablePath}/.hoodie") < (1L << 20))
     assert(bytesUnder(s"${big.t.tablePath}/.hoodie") > (5L << 20))
-    sameJobsAtBothSizes(small, big)(
+    val counts = sameJobsAtBothSizes(small, big)(
       "fileSlicesDF" -> { w =>
         val got = w.t.fileSlicesDF(None).select("path").collect().map(r => name(r.getString(0)))
         assert(got.toSet == w.bases && got.length == w.bases.size)
@@ -140,11 +141,50 @@ class MetadataReplaySizeSpec extends SparkTestBase {
         assert(files.map(f => name(f.physicalPath)).toSet == w.bases)
         assert(files.map(_.recordCount).sum == 600L)
       })
+    // the col_stats index is read on the driver, like the timeline
+    assert(counts.filter(_._1 == "snapshotDataFiles") == Seq(("snapshotDataFiles", 0, 0)))
     Seq(small, big).foreach { w =>
       val feed = w.t.changeFeed(w.created, w.t.latestInstant)
         .groupBy("_change_type").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(feed == Map("insert" -> 200L, "upsert" -> 50L))
     }
+  }
+
+  test("hudi: col_stats reads and writes launch no Spark job, from sidecars or the metadata table") {
+    val path = s"${tmpDir("replay_hudi_stats")}/t"
+    val t = HudiTable.create(spark, path, base(0, 400, "v0").repartitionByRange(4, col("k")))
+    t.append(base(400, 600, "v0").repartitionByRange(2, col("k")))
+    def statsByName = t.snapshotDataFiles().map(f => name(f.physicalPath) -> f.columnStats.toSet).toMap
+    def index = HudiColStats.read(spark, path, t.instants).view.mapValues(_.toSet).toMap
+    val (sidecarStats, sidecarIndex) = (statsByName, index)
+    assert(sidecarStats.size >= 4 && sidecarStats.values.forall(_.exists(_.column == "k")))
+    val sidecars = fs.listStatus(HudiColStats.dir(path)).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    assert(sidecars.length == 2)
+    sidecars.foreach(fs.delete(_, false))
+    // the metadata table's column_stats partition answers alike, on the driver
+    var fallbackStats = Map.empty[String, Set[ColumnStatRow]]
+    var fallbackIndex = Map.empty[(String, String), Set[ColumnStatRow]]
+    assert(jobsOf { fallbackStats = statsByName; fallbackIndex = index } == 0)
+    assert(fallbackStats == sidecarStats)
+    assert(fallbackIndex == sidecarIndex)
+    // a filtered read's planned scan lists its files, skipping by the
+    // fallback's stats, without a job
+    val filtered = spark.read.format("graft").load(path).filter(col("k") < 50)
+    var scans = Seq.empty[FileSourceScanExec]
+    assert(jobsOf {
+      scans = filtered.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+      scans.foreach(_.inputRDDs())
+    } == 0)
+    assert(scans.map(_.metrics("numFiles").value) == Seq(1L))
+    assert(filtered.count() == 50L)
+    // a stats-bearing sync commit writes its index file on the driver
+    val target = HudiTable.forPath(spark, s"${tmpDir("replay_hudi_sync")}/t")
+    val adds = synthetic(target.tablePath, SmallPad)
+    val syncJobs = jobsOf(target.syncCommit(t.schemaAt(None), Seq.empty, target.tablePath,
+      adds, Seq.empty, Map.empty))
+    assert(syncJobs == 0, s"a Hudi sync commit launched $syncJobs Spark jobs")
+    assert(HudiColStats.read(spark, target.tablePath, target.instants).size == adds.size)
   }
 
   // --------------------------------------------------------------- iceberg

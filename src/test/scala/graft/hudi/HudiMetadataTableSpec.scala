@@ -89,9 +89,9 @@ class HudiMetadataTableSpec extends SparkTestBase {
     val hconf = spark.sparkContext.hadoopConfiguration
     val replayed = HudiMetadataTable.readColumnStats(f, hconf, s"$dir/t")
     assert(replayed.nonEmpty)
-    val sidecar = HudiColStats.read(spark, s"$dir/t", t.instants).get
-      .collect().map(r => (r.getString(1), r.getString(2)) ->
-        (Option(r.getString(3)), Option(r.getString(4)), r.getLong(5), r.getLong(6))).toMap
+    val sidecar = HudiColStats.read(spark, s"$dir/t", t.instants).toSeq
+      .flatMap { case ((_, fileName), cols) => cols.map(c => (fileName, c.column) ->
+        (c.minValue, c.maxValue, c.numNulls, c.numValues)) }.toMap
     replayed.foreach { case (fileName, c) =>
       val s = sidecar((fileName, c.column))
       assert((c.minValue, c.maxValue, c.numNulls, c.numValues) == s,
@@ -208,6 +208,36 @@ class HudiMetadataTableSpec extends SparkTestBase {
     assert(rowsSidecar == expected && rowsMeta == expected)
     // and the fallback path genuinely engages
     assert(HudiColStats.read(spark, s"$dir/t", t.instants).nonEmpty)
+  }
+
+  test("col_stats sidecars from Spark's parquet writer and the driver writer read back alike") {
+    import graft.model.ColumnStatRow
+    val dir = tmpDir("hmt_sidecar_compat")
+    val table = s"$dir/t"
+    val files = Seq(
+      ("", "a.parquet", Seq(
+        ColumnStatRow("k", Some("1"), Some("9"), 0L, 10L, 80L),
+        ColumnStatRow("s", None, None, 10L, 10L, 40L))),
+      ("p=1", "b.parquet", Seq(ColumnStatRow("k", Some("-5"), Some("20"), 1L, 5L, 60L))))
+    val expected = files.map { case (pp, fn, cols) => (pp, fn) -> cols }.toMap
+    val rows = for ((pp, fn, cols) <- files; c <- cols) yield org.apache.spark.sql.Row(
+      pp, fn, c.column, c.minValue.orNull, c.maxValue.orNull, c.numNulls, c.numValues, c.totalSize)
+    // a sidecar as Spark's writer leaves it: one part file, renamed into place
+    val staging = s"$dir/staging"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), HudiColStats.IndexSchema)
+      .coalesce(1).write.parquet(staging)
+    val f = fs(dir)
+    val part = f.listStatus(new Path(staging)).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+    assert(part.length == 1)
+    f.mkdirs(HudiColStats.dir(table))
+    assert(f.rename(part.head, HudiColStats.indexFile(table, "001")))
+    assert(HudiColStats.read(spark, table, Seq("001")) == expected)
+    // the driver writer's sidecar reads back through Spark's parquet reader
+    HudiColStats.write(spark, table, "002", files)
+    val back = spark.read.schema(HudiColStats.IndexSchema)
+      .parquet(HudiColStats.indexFile(table, "002").toString).collect().toSeq
+    assert(back == rows)
+    assert(HudiColStats.read(spark, table, Seq("002")) == expected)
   }
 
   test("rollback tombstones the revoked files; MOR upsert lists its log files") {

@@ -207,6 +207,38 @@ class HudiTableSpec extends SparkTestBase {
     assert(HudiColStats.coveredInstants(spark, s"$dir/t", Seq(before)) == Seq(before))
   }
 
+  test("an index-less table's stats read makes two metadata calls, no probe before a listing") {
+    val dir = tmpDir("hudi_colstats_calls")
+    // a metadata-only source, as a sync reads it: synthetic commits with
+    // neither a col_stats index nor a metadata table
+    val local = HudiTable.forPath(spark, s"$dir/t")
+    local.timeline.writeProperties(HudiTable.tableProperties(s"$dir/t", Seq("level"), Map.empty))
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, level STRING")
+    (0 until 3).foreach { c =>
+      val instant = local.timeline.nextInstantTime()
+      val meta = HudiCommitMetadata(
+        Map("level=a" -> Seq(HudiWriteStat(fileId = s"f$c", path = s"level=a/f${c}_0-0-0_$instant.parquet",
+          prevCommit = "null", numWrites = 10L, fileSizeInBytes = 1024L))),
+        Map.empty, Map("schema" -> graft.schema.AvroSchemaConverters.toAvro(schema).toString),
+        "BULK_INSERT")
+      assert(local.timeline.commit(HudiInstant(instant, "commit"), meta))
+    }
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val t = HudiTable.forPath(spark, graft.util.CountedLocalFileSystem.path(hconf, s"$dir/t"))
+    val instants = t.instants
+    val (index, readCalls) =
+      graft.util.CountedLocalFileSystem.readOps(HudiColStats.read(spark, t.tablePath, instants))
+    assert(index.isEmpty)
+    // one listing of the absent col_stats dir, one probe for the
+    // metadata table's column_stats partition
+    assert(readCalls == 2, s"stats read made $readCalls metadata calls")
+    val (files, snapshotCalls) =
+      graft.util.CountedLocalFileSystem.readOps(t.snapshotDataFiles())
+    assert(files.size == 3 && files.forall(_.columnStats.isEmpty))
+    // the timeline replay plus the two calls above: 18 on this source
+    assert(snapshotCalls <= 18, s"snapshotDataFiles made $snapshotCalls metadata calls")
+  }
+
   test("sync target inherits column stats through the col_stats index") {
     val dir = tmpDir("hudi_colstats_sync")
     val src = spark.read.parquet(s"$sf0001/orders.parquet")

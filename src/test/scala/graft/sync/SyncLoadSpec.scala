@@ -4,6 +4,7 @@ import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
 import graft.hudi._
+import graft.util.PhaseTimer
 
 /**
  * The reference's only performance harness, reproduced shape-for-shape
@@ -97,18 +98,15 @@ class SyncLoadSpec extends SparkTestBase {
       (0 until 100).foreach(i => commitFiles(t, 0 until 1000, 1, s"i$i"))
     }
     val src = HudiTable.forPath(spark, tp)
-    graft.delta.DeltaTable.resetCommitPhases()
-    SyncEngine.resetPhases()
+    PhaseTimer.reset()
     val r1 = timed("incremental sync -> delta (100 commits, 100k adds)") {
       SyncEngine.sync(SyncEngine.hudiSource(src),
         SyncEngine.deltaTarget(spark, s"$dir/delta"))
     }
-    val dPhases = graft.delta.DeltaTable.commitPhaseMillis ++
-      SyncEngine.phaseMillis.map { case (k, v) => s"engine:$k" -> v }
+    val dPhases = PhaseTimer.millis
     info(dPhases.toSeq.sortBy(-_._2)
       .map { case (k, ms) => s"$k=${ms}ms" }.mkString("delta phases: ", " ", ""))
-    SyncEngine.resetPhases()
-    graft.iceberg.IcebergTable.resetCommitPhases()
+    PhaseTimer.reset()
     val r2 = timed("incremental sync -> iceberg (100 commits, 100k adds)") {
       SyncEngine.sync(SyncEngine.hudiSource(src),
         SyncEngine.icebergTarget(spark, s"$dir/iceberg"))
@@ -116,7 +114,7 @@ class SyncLoadSpec extends SparkTestBase {
     // per-phase attribution of the iceberg commit path (100 commits):
     // a future regression names the phase that moved instead of
     // re-measuring blind
-    val phases = graft.iceberg.IcebergTable.commitPhaseMillis
+    val phases = PhaseTimer.millis.filter(_._1.startsWith("iceberg:"))
     info(phases.toSeq.sortBy(-_._2)
       .map { case (k, ms) => s"$k=${ms}ms" }.mkString("iceberg phases: ", " ", ""))
     assert(r1.mode == "incremental" && r2.mode == "incremental")

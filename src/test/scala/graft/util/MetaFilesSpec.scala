@@ -61,16 +61,36 @@ class MetaFilesSpec extends AnyFunSuite {
     intercept[FileNotFoundException](MetaFiles.readUtf8(fs, new Path(dir.resolve("absent").toUri)))
   }
 
-  test("no byte-at-a-time whole-file read in src/main") {
+  private def srcMain = {
     val root = Paths.get("src/main")
     assert(Files.isDirectory(root),
       s"run from the repository root (cwd ${Paths.get("").toAbsolutePath})")
-    val hits = for {
-      p <- Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+    root
+  }
+
+  /** Lines of `files` containing any of `tokens`, as `path:line: text`. */
+  private def sourceHits(files: Seq[java.nio.file.Path], tokens: String*): Seq[String] =
+    for {
+      p <- files
       (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
-      if line.contains("readFullyToByteArray")
+      if tokens.exists(line.contains)
     } yield s"$p:${i + 1}: ${line.trim}"
+
+  test("no byte-at-a-time whole-file read in src/main") {
+    val sources = Files.walk(srcMain).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = sourceHits(sources, "readFullyToByteArray")
     assert(hits.isEmpty, "read whole metadata files through MetaFiles.readUtf8:\n" +
+      hits.mkString("\n"))
+  }
+
+  test("Hudi col_stats and Delta checkpoint reads run no Spark job in src/main") {
+    def src(f: String) = srcMain.resolve(s"scala/graft/$f")
+    val hits =
+      sourceHits(Seq(src("hudi/HudiColStats.scala"), src("hudi/HudiMetadataTable.scala")),
+        "spark.read", "createDataFrame", "readColumnStatsDF") ++
+        sourceHits(Seq(src("delta/DeltaLog.scala")), "spark.read")
+    assert(hits.isEmpty, "read and write these metadata files through MetaFiles:\n" +
       hits.mkString("\n"))
   }
 }
