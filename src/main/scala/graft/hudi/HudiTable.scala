@@ -50,6 +50,11 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
 
   def tablePath: String = timeline.tablePath
 
+  /** This table over a [[HudiTimeline.pinned]] view: every read sees the
+    * timeline as the view first listed it, and every timeline write
+    * throws `IllegalStateException`. */
+  def pinned: HudiTable = new HudiTable(spark, timeline.pinned)
+
   // ---------------------------------------------------------------- reads
 
   /** Completed data instants, time-ordered. */
@@ -1744,10 +1749,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
           val replaced = meta.partitionToReplaceFileIds.toSeq.flatMap {
             case (pp, ids) => ids.map(id => (pp, id))
           }.toSet
-          fileSlicesDF(Some(prior.last))
-            .select("partitionPath", "fileId", "path").collect().toSeq
-            .filter(r => replaced.contains((r.getString(0), r.getString(1))))
-            .map(r => absoluteOf(r.getString(2)))
+          fileSlices(Some(prior.last))
+            .filter(s => replaced.contains((s.partitionPath, s.fileId)))
+            .map(s => absoluteOf(s.basePath))
         }
       }
     (adds, removed)

@@ -8,8 +8,9 @@ import java.time.temporal.ChronoField
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
+import graft.model.ConcurrentSyncException
 import graft.util.MetaFiles
 
 import scala.jdk.CollectionConverters._
@@ -52,10 +53,25 @@ final case class HudiCommitMetadata(
  * parsing also accepts the legacy 14-char second granularity, mapped to
  * the last millisecond of that second — the same normalization the
  * reference applies (ref `core/.../hudi/HudiInstantUtils.java:41-80`).
+ *
+ * A [[pinned]] timeline is a read-only view: it lists the active and
+ * archived dirs once, reads `hoodie.properties` once, and parses each
+ * instant once for its whole life, so every read through it sees one
+ * state of the table.
  */
-final class HudiTimeline(val tablePath: String, conf: Configuration) {
+final class HudiTimeline private (
+    val tablePath: String, conf: Configuration, isPinned: Boolean) {
 
   import HudiTimeline._
+
+  def this(tablePath: String, conf: Configuration) = this(tablePath, conf, false)
+
+  /** A read-only view of this timeline as it stands at the view's first
+    * read. Its writes throw `IllegalStateException`; an instant it
+    * listed but finds gone from both dirs when read raises
+    * [[graft.model.ConcurrentSyncException]], so a sync re-plans over a
+    * fresh view. */
+  def pinned: HudiTimeline = if (isPinned) this else new HudiTimeline(tablePath, conf, true)
 
   val hoodieDir = new Path(tablePath, ".hoodie")
   /** Archived instants stay readable here after [[archiveIfNeeded]] —
@@ -65,11 +81,48 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
   private val propsFile = new Path(hoodieDir, "hoodie.properties")
   private def fs: FileSystem = hoodieDir.getFileSystem(conf)
 
-  def exists: Boolean = fs.exists(propsFile)
+  def exists: Boolean =
+    if (isPinned) listing.active.contains(propsFile.getName) else fs.exists(propsFile)
+
+  private def writable(op: String): Unit =
+    if (isPinned) throw new IllegalStateException(s"$op on a pinned read-only view of $tablePath")
+
+  // ---------------------------------------------------------- pinned view
+
+  /** The view's one listing of the active dir, then the archived one. */
+  private lazy val listing: Listing = Listing(statusesIn(hoodieDir), statusesIn(archivedDir))
+  private lazy val pinnedProperties: Map[String, String] = parseProperties()
+  /** The view's parses, kept for its whole life: it sees one listing. */
+  private val pinnedMeta =
+    new java.util.concurrent.ConcurrentHashMap[String, HudiCommitMetadata]()
+
+  /** Statuses in `dir` by file name, from one listing; none when `dir`
+    * is absent. */
+  private def statusesIn(dir: Path): Map[String, FileStatus] =
+    try fs.listStatus(dir).iterator.map(st => st.getPath.getName -> st).toMap
+    catch { case _: FileNotFoundException => Map.empty }
+
+  /** The view's read of an instant, from the path its listing holds. */
+  private def readListed(i: HudiInstant): String = {
+    val listed = listing.active.get(i.fileName).orElse(listing.archived.get(i.fileName))
+    try readJson(listed.fold(new Path(hoodieDir, i.fileName))(_.getPath))
+    catch {
+      case _: FileNotFoundException =>
+        // archival moves an active instant into the archived dir
+        try readJson(new Path(archivedDir, i.fileName))
+        catch {
+          case _: FileNotFoundException if listed.nonEmpty =>
+            throw new ConcurrentSyncException(
+              s"instant ${i.fileName} of $tablePath was listed but is gone from the " +
+                "timeline (rolled back or removed meanwhile) — re-plan over a fresh listing")
+        }
+    }
+  }
 
   // ------------------------------------------------------------ properties
 
   def writeProperties(props: Map[String, String]): Unit = {
+    writable("writeProperties")
     fs.mkdirs(hoodieDir)
     val out = fs.create(propsFile, true)
     try {
@@ -78,7 +131,10 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
     } finally out.close()
   }
 
-  def readProperties(): Map[String, String] = {
+  def readProperties(): Map[String, String] =
+    if (isPinned) pinnedProperties else parseProperties()
+
+  private def parseProperties(): Map[String, String] = {
     require(exists, s"not a hudi table (no .hoodie/hoodie.properties): $tablePath")
     MetaFiles.readUtf8(fs, propsFile)
       .split("\n").toSeq
@@ -91,10 +147,10 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
 
   // -------------------------------------------------------------- listing
 
-  /** File names in `dir`, from one listing; none when `dir` is absent. */
+  /** File names in `dir`: the view's listing, else a fresh one. */
   private def namesIn(dir: Path): Seq[String] =
-    try fs.listStatus(dir).toSeq.map(_.getPath.getName)
-    catch { case _: FileNotFoundException => Seq.empty }
+    (if (!isPinned) statusesIn(dir) else if (dir == hoodieDir) listing.active else listing.archived)
+      .keys.toSeq
 
   private def completedIn(names: Seq[String], re: Regex): Seq[HudiInstant] =
     names.collect { case re(ts, action) => HudiInstant(ts, action) }
@@ -130,20 +186,11 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
   def pendingInstants(): Seq[String] = {
     val active = namesIn(hoodieDir)
     val done = completed(AnyCompletedRe, active).map(_.time).toSet
-    val Marker =
-      """(\d{14,17})(?:\.(?:commit|replacecommit|deltacommit|rollback|restore|clean))?\.(?:requested|inflight)""".r
-    active.collect { case Marker(ts) => ts }.distinct.filterNot(done).sorted
+    active.collect { case MarkerRe(ts) => ts }.distinct.filterNot(done).sorted
   }
 
   /** Path a newly-committed instant's metadata file goes to. */
   def instantFile(i: HudiInstant): Path = new Path(hoodieDir, i.fileName)
-
-  /** Where the instant's metadata file actually lives now (an archived
-    * instant remains readable from `.hoodie/archived/`). */
-  def existingInstantFile(i: HudiInstant): Path = {
-    val active = new Path(hoodieDir, i.fileName)
-    if (fs.exists(active)) active else new Path(archivedDir, i.fileName)
-  }
 
   // ------------------------------------------------------------- metadata
 
@@ -159,7 +206,8 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
   }
 
   /** Raw JSON of any completed instant (active or archived). */
-  def readInstantJson(i: HudiInstant): String = activeThenArchived(i)(readJson)
+  def readInstantJson(i: HudiInstant): String =
+    if (isPinned) readListed(i) else activeThenArchived(i)(readJson)
 
   /** Parsed-commit memo: completed instant files publish put-if-absent
     * and are never rewritten, so one parse serves every reader — the
@@ -168,13 +216,16 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
     * schema-at-version). Keyed by (name, length, mtime) from ONE
     * getFileStatus, so even the pathological rollback-then-reallocate
     * case (same instant name, different content) can't serve stale
-    * metadata. Bounded; cleared wholesale when full. */
+    * metadata. Bounded; cleared wholesale when full. A pinned view
+    * keeps its own unbounded memo instead, keyed by name. */
   private val commitMetaCache =
     new java.util.concurrent.ConcurrentHashMap[String, HudiCommitMetadata]()
 
   /** One status call resolves the file (active dir first) and keys the
     * memo; a cold read then opens that same path. */
   def readCommitMetadata(i: HudiInstant): HudiCommitMetadata = {
+    if (isPinned)
+      return pinnedMeta.computeIfAbsent(i.fileName, _ => HudiCommitCodec.fromJson(readListed(i)))
     val st = activeThenArchived(i)(fs.getFileStatus)
     if (commitMetaCache.size > 256) commitMetaCache.clear()
     commitMetaCache.computeIfAbsent(
@@ -199,6 +250,7 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
   /** Same put-if-absent protocol for non-data instants (rollback/
     * restore/clean), whose metadata has its own JSON shape. */
   def commitJson(i: HudiInstant, json: String): Boolean = {
+    writable("commitJson")
     fs.mkdirs(hoodieDir)
     val target = instantFile(i)
     if (fs.exists(target)) return false
@@ -233,6 +285,7 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
     * `core/.../hudi/HudiDataFileExtractor.java:207-223` observes the
     * instant gone plus a `.rollback` record of the deleted files). */
   def deleteInstant(i: HudiInstant): Unit = {
+    writable("deleteInstant")
     val inflightName =
       if (i.action == "commit") s"${i.time}.inflight" else s"${i.time}.${i.action}.inflight"
     // the instant may have been archived since completing — revoke it
@@ -256,6 +309,7 @@ final class HudiTimeline(val tablePath: String, conf: Configuration) {
    * number archived.
    */
   def archiveIfNeeded(maxActive: Int, minActive: Int): Int = {
+    writable("archiveIfNeeded")
     require(minActive <= maxActive, s"minActive $minActive > maxActive $maxActive")
     val active = activeCompletedInstants()
     if (active.size <= maxActive) return 0
@@ -313,9 +367,15 @@ object HudiTimeline {
     * witness of the sync source's one-read-per-pass contract. */
   private[graft] val instantFilesOpened = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** A pinned view's one listing of each dir, statuses by file name. */
+  private final case class Listing(active: Map[String, FileStatus], archived: Map[String, FileStatus])
+
   private val CompletedRe = "^(\\d{14}|\\d{17})\\.(commit|replacecommit|deltacommit)$".r
   private val AnyCompletedRe =
     "^(\\d{14}|\\d{17})\\.(commit|replacecommit|deltacommit|rollback|restore|clean|savepoint)$".r
+  /** A requested or inflight state-transition marker. */
+  private val MarkerRe =
+    """(\d{14,17})(?:\.(?:commit|replacecommit|deltacommit|rollback|restore|clean))?\.(?:requested|inflight)""".r
 
   private val Utc = ZoneId.of("UTC")
   private val MillisFormatter: DateTimeFormatter =

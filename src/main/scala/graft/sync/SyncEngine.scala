@@ -94,7 +94,7 @@ object SyncEngine {
     // state. Bounded: persistent contention past 5 attempts surfaces.
     var attempt = 0
     while (true) {
-      try return syncOnce(source, target, mode, targetProps)
+      try return SyncAttempt.run(syncOnce(source, target, mode, targetProps))
       catch {
         // the ONLY race classifier: every lost watermark CAS and lost
         // version/instant slot throws this type (message text is for
@@ -275,6 +275,27 @@ object SyncEngine {
 
   def targetFor(spark: SparkSession, format: String, path: String): SyncTarget =
     FormatTable(format).open(spark, path).target
+}
+
+/** One sync attempt on this thread: the source views it opened, keyed
+  * by source-object identity, so each member call of the attempt reads
+  * the same state of the source (OneTable reads its source once per
+  * sync run). Each attempt starts empty, so a re-plan reads afresh, and
+  * its views are dropped when it ends. Not inherited by child threads. */
+private[sync] object SyncAttempt {
+  private val views = new ThreadLocal[java.util.IdentityHashMap[AnyRef, AnyRef]]
+
+  def run[A](body: => A): A = {
+    val outer = views.get
+    views.set(new java.util.IdentityHashMap[AnyRef, AnyRef]())
+    try body
+    finally if (outer == null) views.remove() else views.set(outer)
+  }
+
+  /** `owner`'s view in the running attempt, opened on first use; None
+    * outside an attempt. */
+  def view[V <: AnyRef](owner: AnyRef)(open: => V): Option[V] =
+    Option(views.get).map(_.computeIfAbsent(owner, _ => open).asInstanceOf[V])
 }
 
 /** A table format viewed as a sync source: versioned history + canonical
@@ -570,16 +591,18 @@ private final class HudiSource(t: HudiTable,
       * replacecommit replays through the SAME incremental feed and the
       * views re-converge — no watermark reset needed. */
     readOptimized: Boolean = false) extends SyncSource {
+  /** The running attempt's pinned view of `t`; `t` itself outside one. */
+  private def table: HudiTable = SyncAttempt.view(this)(t.pinned).getOrElse(t)
   def format = FormatTable.Hudi.name
   def sourceId = s"hudi:${t.tablePath}"
-  def dataRoot: String = t.dataRoot
-  def schema: StructType = t.schemaAt(None)
-  override def schemaAtVersion(v: String): StructType = t.schemaAt(Some(v))
-  def partitionColumns: Seq[String] = t.partitionColumns
+  def dataRoot: String = table.dataRoot
+  def schema: StructType = table.schemaAt(None)
+  override def schemaAtVersion(v: String): StructType = table.schemaAt(Some(v))
+  def partitionColumns: Seq[String] = table.partitionColumns
   /** Newest feed instant — maintenance instants advance the watermark
     * too, so a rollback is never replayed twice. */
   def currentVersion: String = {
-    val is = t.syncInstants
+    val is = table.syncInstants
     require(is.nonEmpty, s"empty hudi table: ${t.tablePath}")
     is.last
   }
@@ -589,19 +612,20 @@ private final class HudiSource(t: HudiTable,
     * incrementally — the rollback instant after it carries the
     * removals) and the cleaner hasn't reclaimed files past it. */
   def versionExists(v: String): Boolean = {
-    val completed = t.timeline.allCompletedInstants()
-    t.syncInstants(completed).exists(_ <= v) && t.earliestCommitToRetain(completed).forall(_ <= v)
+    val tv = table
+    val completed = tv.timeline.allCompletedInstants()
+    tv.syncInstants(completed).exists(_ <= v) && tv.earliestCommitToRetain(completed).forall(_ <= v)
   }
   /** Exact membership: a pending/abandoned instant must NOT drain from
     * the inflight backlog until it actually completes. */
-  override def isCompleted(v: String): Boolean = t.syncInstants.contains(v)
-  def versionsAfter(v: String): Seq[String] = t.syncInstants.filter(_ > v)
-  def snapshotFiles(): Seq[InternalDataFile] = t.snapshotDataFiles(readOptimized)
-  def changes(v: String): (Seq[InternalDataFile], Seq[String]) = t.changeSet(v, readOptimized)
-  override def inflightVersions: Seq[String] = t.timeline.pendingInstants()
+  override def isCompleted(v: String): Boolean = table.syncInstants.contains(v)
+  def versionsAfter(v: String): Seq[String] = table.syncInstants.filter(_ > v)
+  def snapshotFiles(): Seq[InternalDataFile] = table.snapshotDataFiles(readOptimized)
+  def changes(v: String): (Seq[InternalDataFile], Seq[String]) = table.changeSet(v, readOptimized)
+  override def inflightVersions: Seq[String] = table.timeline.pendingInstants()
   override def recordKeyFields: Seq[String] =
-    t.properties.get("hoodie.table.recordkey.fields")
-      .orElse(t.latestCommitExtraMetadata.get(SyncEngine.RecordKeyProp))
+    table.properties.get("hoodie.table.recordkey.fields")
+      .orElse(table.latestCommitExtraMetadata.get(SyncEngine.RecordKeyProp))
       .toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
   @volatile private var lastWalk: Option[HudiSource.StatsWalk] = None
 
@@ -619,13 +643,13 @@ private final class HudiSource(t: HudiTable,
     * kept hit whose instant is gone (rolled back), walks the whole
     * timeline again. */
   override def statisticsProps(version: String): Map[String, String] = {
-    val upTo = t.timeline.completedInstants().filter(_.time <= version)
+    val upTo = table.timeline.completedInstants().filter(_.time <= version)
     val times = upTo.iterator.map(_.time).toSet
     val prior = lastWalk.filter(w =>
       w.version <= version && w.hits.valuesIterator.forall(h => times(h._1)))
     val fresh = upTo.filterNot(i => prior.exists(_.covered(i.time)))
     val found = scala.collection.mutable.Map[String, (String, String)]()
-    val walk = t.extraMetadataNewestFirst(fresh)
+    val walk = table.extraMetadataNewestFirst(fresh)
     while (!(found.contains(HudiTable.StatsPathKey) &&
         found.contains(SyncEngine.PartitionStatsPathProp)) && walk.hasNext) {
       val (i, em) = walk.next()

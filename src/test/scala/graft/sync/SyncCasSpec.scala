@@ -244,6 +244,125 @@ class SyncCasSpec extends SparkTestBase {
     }
   }
 
+  /** A Hudi source whose `inflightVersions` (the first member an attempt
+    * reads) and `snapshotFiles` run a hook after the real call, counting
+    * both calls. */
+  private final class HookedSource(inner: SyncSource,
+      afterInflight: () => Unit = () => (), afterSnapshot: () => Unit = () => ())
+      extends SyncSource {
+    var inflightCalls, snapshotCalls = 0
+    def format = inner.format
+    def sourceId = inner.sourceId
+    def dataRoot = inner.dataRoot
+    def schema = inner.schema
+    def partitionColumns = inner.partitionColumns
+    def currentVersion = inner.currentVersion
+    def versionExists(v: String) = inner.versionExists(v)
+    override def isCompleted(v: String) = inner.isCompleted(v)
+    def versionsAfter(v: String) = inner.versionsAfter(v)
+    override def schemaAtVersion(v: String) = inner.schemaAtVersion(v)
+    def snapshotFiles() = {
+      val files = inner.snapshotFiles()
+      snapshotCalls += 1
+      afterSnapshot()
+      files
+    }
+    def changes(v: String) = inner.changes(v)
+    override def inflightVersions = {
+      val vs = inner.inflightVersions
+      inflightCalls += 1
+      afterInflight()
+      vs
+    }
+    override def recordKeyFields = inner.recordKeyFields
+    override def physicalNames = inner.physicalNames
+    override def laterOf(a: String, b: String) = inner.laterOf(a, b)
+    override def statisticsProps(v: String) = inner.statisticsProps(v)
+  }
+
+  private def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  test("hudi source: a commit landing mid-attempt is left to the next sync, which replays exactly it") {
+    // the Hudi twin of the case above: the attempt reads one pinned view
+    // of the source, so the append is invisible to it — the full sync
+    // settles at once on the version it listed, and the append stays
+    // ahead of the watermark for the next incremental sync
+    val dir = tmpDir("cas_moving_hudi_src")
+    import spark.implicits._
+    HudiTable.create(spark, s"$dir/src", Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    val inner = SyncEngine.hudiSource(HudiTable.forPath(spark, s"$dir/src"))
+    var nextLate = 3L
+    for (fmt <- Seq("delta", "iceberg", "hudi")) {
+      var late: Option[String] = None
+      val moving = new HookedSource(inner, afterSnapshot = () => if (late.isEmpty) {
+        late = Some(HudiTable.forPath(spark, s"$dir/src")
+          .append(Seq((nextLate, "late")).toDF("id", "tag")))
+        nextLate += 1
+      })
+      val listed = inner.currentVersion
+      val listedFiles = inner.snapshotFiles().map(f => norm(f.physicalPath)).toSet
+      val tgt = s"$dir/tgt_$fmt"
+      val full = SyncEngine.sync(moving, targetFor(fmt, tgt), mode = SyncEngine.Full)
+      assert(late.nonEmpty, s"$fmt sync never listed the source")
+      assert(moving.inflightCalls == 1 && moving.snapshotCalls == 1,
+        s"$fmt full sync took ${moving.inflightCalls} attempts and " +
+          s"${moving.snapshotCalls} snapshot listings, expected one of each")
+      assert(full.versionsSynced == Seq(listed))
+      assert(targetFor(fmt, tgt).watermarkFor(inner.sourceId).contains(listed))
+      assert(targetFor(fmt, tgt).livePaths().map(norm) == listedFiles,
+        s"$fmt target files are not those of the listed version $listed")
+      val incr = SyncEngine.sync(inner, targetFor(fmt, tgt), mode = SyncEngine.Incremental)
+      assert(incr.versionsSynced == late.toSeq, s"$fmt incremental sync replayed " +
+        s"${incr.versionsSynced}, expected exactly the mid-attempt commit $late")
+      assert(checksum(readTarget(fmt, tgt)) == checksum(HudiTable.forPath(spark, s"$dir/src").toDF()),
+        s"$fmt target differs from the source after the catch-up")
+    }
+  }
+
+  test("hudi source: an instant listed by the attempt but gone when read re-plans once") {
+    val dir = tmpDir("cas_vanishing_hudi_instant")
+    import spark.implicits._
+    HudiTable.create(spark, s"$dir/src", Seq((1L, "a")).toDF("id", "tag"))
+    (2L to 4L).foreach(i =>
+      HudiTable.forPath(spark, s"$dir/src").append(Seq((i, s"t$i")).toDF("id", "tag")))
+    val timeline = HudiTable.forPath(spark, s"$dir/src").timeline
+    val victim = timeline.completedInstants()(1)
+    val vanishing = new HookedSource(SyncEngine.hudiSource(HudiTable.forPath(spark, s"$dir/src")),
+      afterInflight = () => if (timeline.completedInstants().contains(victim))
+        timeline.deleteInstant(victim))
+    val r = SyncEngine.sync(vanishing, targetFor("delta", s"$dir/tgt"), mode = SyncEngine.Full)
+    assert(vanishing.inflightCalls == 2, s"expected one re-plan, got ${vanishing.inflightCalls} attempts")
+    assert(r.versionsSynced == Seq(timeline.completedInstants().last.time))
+    assert(checksum(readTarget("delta", s"$dir/tgt")) ==
+      checksum(HudiTable.forPath(spark, s"$dir/src").toDF()))
+    assert(readTarget("delta", s"$dir/tgt").count() == 3)
+  }
+
+  test("a pinned hudi view reads one state of the table and refuses every write") {
+    val dir = tmpDir("hudi_pinned_view")
+    import spark.implicits._
+    val t = HudiTable.create(spark, s"$dir/t", Seq((1L, "a")).toDF("id", "tag"))
+    val view = t.pinned
+    val seen = view.instants
+    t.append(Seq((2L, "b")).toDF("id", "tag"))
+    assert(view.instants == seen && t.instants.size == seen.size + 1)
+    assert(view.toDF().count() == 1)
+    val tl = view.timeline
+    val i = tl.completedInstants().head
+    val refused = Seq[(String, () => Any)](
+      "writeProperties" -> (() => tl.writeProperties(view.properties)),
+      "commitJson" -> (() => tl.commitJson(graft.hudi.HudiInstant(tl.nextInstantTime(), "clean"), "{}")),
+      "deleteInstant" -> (() => tl.deleteInstant(i)),
+      "archiveIfNeeded" -> (() => tl.archiveIfNeeded(1, 1)))
+    refused.foreach { case (op, write) =>
+      val e = intercept[IllegalStateException](write())
+      // a refused write is a misuse, not a race the engine would retry
+      assert(!e.isInstanceOf[ConcurrentSyncException], op)
+      assert(e.getMessage.contains(op), e.getMessage)
+    }
+    assert(t.instants.size == seen.size + 1 && t.timeline.pendingInstants().isEmpty)
+  }
+
   test("stochastic: 4 threads append+sync one source into shared tri-format targets — convergence, exactly-once files") {
     val dir = tmpDir("cas_threads")
     import spark.implicits._
