@@ -230,13 +230,17 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     StructField("readerFeatures", ArrayType(StringType)),
     StructField("writerFeatures", ArrayType(StringType))))
 
-  /** The reconciled add rows at `v` as checkpoint-shaped structs. */
-  private def checkpointAddsDF(v: Long): DataFrame =
-    snapshotFilesDF(Some(v)).select(
-      struct(
-        col("path"), col("partitionValues"), col("size"),
-        col("modificationTime"), lit(true).as("dataChange"), col("stats"),
-        col("deletionVector")).as("add"))
+  /** The reconciled adds at `v` as checkpoint-shaped `add` structs, and
+    * how many there are: the one frame built from the live-file list,
+    * so the checkpoint stays a Spark parquet write. */
+  private def checkpointAddsDF(v: Long): (DataFrame, Long) = {
+    val rows = snapshotFiles(Some(v)).map { a =>
+      Row(Row(a.path, a.partitionValues, a.size, a.modificationTime, true, a.stats.orNull,
+        a.deletionVector.map(d => Row(d.storageType, d.pathOrInlineDv,
+          d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull))
+    }
+    (spark.createDataFrame(rows.asJava, StructType(Seq(actionSchema("add")))), rows.size.toLong)
+  }
 
   /** One row carrying the metaData + protocol of the snapshot at `v`. */
   private def headerRowDF(v: Long): DataFrame = {
@@ -266,14 +270,14 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     * from under readers here); replay ordering stays correct because
     * post-checkpoint removes outrank checkpoint adds by version. */
   def writeCheckpoint(v: Long, parts: Int = 1): Unit = {
-    val adds = checkpointAddsDF(v).select(
+    val (addsDF, addCount) = checkpointAddsDF(v)
+    val adds = addsDF.select(
       col("add"),
       lit(null).cast(metaSchema).as("metaData"),
       lit(null).cast(protoSchema).as("protocol"))
     val staging = new Path(logPath, s".cp-staging-${java.util.UUID.randomUUID()}")
     // the spec's `size` is the number of ACTIONS in the checkpoint, not
     // the part-file count — foreign readers use it for sanity checks
-    val addCount = adds.count()
     adds.unionByName(headerRowDF(v)).repartition(math.max(1, parts))
       .write.parquet(staging.toString)
     val written = fs.listStatus(staging).map(_.getPath)
@@ -308,8 +312,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
    */
   def writeCheckpointV2(v: Long, sidecarParts: Int = 1): Unit = {
     val staging = new Path(logPath, s".cp-staging-${java.util.UUID.randomUUID()}")
-    val addsDF = checkpointAddsDF(v)
-    val addCount = addsDF.count()
+    val (addsDF, addCount) = checkpointAddsDF(v)
     addsDF
       .select(col("add"), lit(null).cast(actionSchema("remove").dataType).as("remove"))
       .repartition(math.max(1, sidecarParts))
@@ -459,26 +462,16 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
       StructField("deletionTimestamp", LongType),
       StructField("dataChange", BooleanType))))))
 
-  private def snapshotSchema: StructType = StructType(Seq(
-    StructField("path", StringType),
-    StructField("version", LongType),
-    StructField("partitionValues", MapType(StringType, StringType)),
-    StructField("size", LongType),
-    StructField("modificationTime", LongType),
-    StructField("stats", StringType),
-    StructField("deletionVector", dvSchema)))
-
   /**
    * Live files at `asOf` (default: latest), replayed on the driver and
-   * returned as a LocalRelation (`.collect()` runs no job), rows sorted
-   * by path. The checkpoint's adds (if one applies) seed the state at
-   * its version and the JSON tail folds on top: per path the newest
-   * action wins, and within one version the add outranks the remove of
-   * the same path — a row-level DELETE rewrites a file's entry as
-   * remove(old DV) + add(new DV) in a single commit, and the add is the
-   * live state. Checkpoint tombstones (`remove` rows) are not read.
+   * sorted by path. The checkpoint's adds (if one applies) seed the
+   * state at its version and the JSON tail folds on top: per path the
+   * newest action wins, and within one version the add outranks the
+   * remove of the same path — a row-level DELETE rewrites a file's entry
+   * as remove(old DV) + add(new DV) in a single commit, and the add is
+   * the live state. Checkpoint tombstones (`remove` rows) are not read.
    */
-  def snapshotFilesDF(asOf: Option[Long] = None): DataFrame = {
+  def snapshotFiles(asOf: Option[Long] = None): Seq[AddFile] = {
     val ck = resolveCheckpoint(asOf)
     val commits = listVersions().filter(v => asOf.forall(v <= _) && ck.forall(v > _.version))
     require(commits.nonEmpty || ck.nonEmpty, s"not a Delta table: $tablePath")
@@ -498,12 +491,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
         case _ => ()
       }
     }
-    val rows = state.toSeq.filter(_._2._2).sortBy(_._1).map { case (path, (v, _, a)) =>
-      Row(path, v, a.partitionValues, a.size, a.modificationTime, a.stats.orNull,
-        a.deletionVector.map(d => Row(d.storageType, d.pathOrInlineDv,
-          d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull)
-    }
-    spark.createDataFrame(rows.asJava, snapshotSchema)
+    state.valuesIterator.collect { case (_, true, a) => a }.toSeq.sortBy(_.path)
   }
 
   /** Versions (from, to], every one of them: a range reaching below the

@@ -177,12 +177,10 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     import spark.implicits._
     val (meta, _) = log.metadataAt(None)
     val p = log.protocolAt(None)
-    val files = log.snapshotFilesDF().agg(
-      count(lit(1)), sum(coalesce(col("size"), lit(0L)))).head
+    val files = log.snapshotFiles()
     Seq((
       "delta", meta.id, tablePath, meta.createdTime,
-      meta.partitionColumns, files.getLong(0),
-      if (files.isNullAt(1)) 0L else files.getLong(1),
+      meta.partitionColumns, files.size.toLong, files.map(_.size).sum,
       meta.configuration, p.minReaderVersion, p.minWriterVersion
     )).toDF("format", "id", "location", "createdAt", "partitionColumns",
       "numFiles", "sizeInBytes", "properties", "minReaderVersion", "minWriterVersion")
@@ -190,16 +188,17 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
 
   /** Live files of the current snapshot as a DataFrame (path, partition
     * values, size, stats JSON, deletion-vector cardinality). */
-  def filesDF(): DataFrame =
-    log.snapshotFilesDF()
-      .select(
-        col("path"), col("partitionValues"), col("size"), col("stats"),
-        coalesce(col("deletionVector.cardinality"), lit(0L)).as("deleted_rows"))
+  def filesDF(): DataFrame = {
+    import spark.implicits._
+    log.snapshotFiles().map(a =>
+      (a.path, a.partitionValues, a.size, a.stats.orNull, a.deletionVector.fold(0L)(_.cardinality)))
+      .toDF("path", "partitionValues", "size", "stats", "deleted_rows")
+  }
 
   /** Number of live files — sizes the streaming source's
     * initial-snapshot chunking. */
   def snapshotFileCount(asOf: Option[Long] = None): Int =
-    log.snapshotFilesDF(asOf).count().toInt
+    log.snapshotFiles(asOf).size
 
   /** Deterministic slice `chunk` of `totalChunks` over the snapshot's
     * live files (modulo over the path-sorted manifest): the streaming
@@ -266,7 +265,6 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * per-commit).
    */
   def changeFeed(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    import org.apache.spark.sql.Row
     requireReadable(Some(toInclusive))
     val versions = log.versionsBetween(fromExclusive, toInclusive)
     val asOf = Some(toInclusive)
@@ -287,7 +285,6 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       df.select(schema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
         .withColumn("_change_type", lit(t))
         .withColumn("_commit_version", lit(v))
-    def mfOf(r: Row) = DeltaTable.manifestFiles(Seq(r)).head
     val parts: Seq[DataFrame] = versions.flatMap { v =>
       val actions = log.readActions(v)
       // a commit carrying cdc actions is read EXCLUSIVELY from its
@@ -307,12 +304,10 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       val removePaths = actions.collect { case r: RemoveFile => r.path }.toSet
       val addPaths = adds.map(_.path).toSet
       // the pre-commit state of every touched-but-preexisting file
-      val prevRows: Map[String, Row] =
+      val prev: Map[String, AddFile] =
         if (removePaths.isEmpty) Map.empty
-        else log.snapshotFilesDF(Some(v - 1))
-          .select("path", "size", "modificationTime", "partitionValues", "stats", "deletionVector")
-          .collect().filter(r => removePaths.contains(r.getString(0)))
-          .map(r => r.getString(0) -> r).toMap
+        else log.snapshotFiles(Some(v - 1)).filter(a => removePaths.contains(a.path))
+          .map(a => a.path -> a).toMap
 
       val inserts = adds.filterNot(a => removePaths.contains(a.path)).map { a =>
         (InternalDataFile(a.path, partitionValues = a.partitionValues, fileSizeBytes = a.size,
@@ -323,22 +318,23 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         else Some(finish(toLogical(DeltaTable.readFilesWithDeletes(
           spark, tablePath, base, inserts, rSchema, rParts), Seq.empty), "insert", v))
 
-      val fullRemoves = prevRows.view.filterKeys(p => !addPaths.contains(p)).values.toSeq
+      val fullRemoves = prev.view.filterKeys(p => !addPaths.contains(p)).values.toSeq
       val removeDF =
         if (fullRemoves.isEmpty) None
         else Some(finish(toLogical(DeltaTable.readFilesWithDeletes(
           spark, tablePath, base,
-          fullRemoves.map(r => (mfOf(r), DeltaTable.dvAt(r, 5))), rSchema, rParts),
+          fullRemoves.map(a => (DeltaTable.dataFileOf(a), a.deletionVector)), rSchema, rParts),
           Seq.empty), "delete", v))
 
       // DV rewrites: remove+add of the same path — the delete set is the
       // new vector minus the old one
-      val rewrites = adds.filter(a => removePaths.contains(a.path) && prevRows.contains(a.path))
+      val rewrites = adds.filter(a => removePaths.contains(a.path) && prev.contains(a.path))
       val rewriteDF =
         if (rewrites.isEmpty) None
         else {
           val files = rewrites.map { a =>
-            mfOf(prevRows(a.path)).copy(physicalPath = DeltaTable.metadataFilePath(tablePath, a.path))
+            DeltaTable.dataFileOf(prev(a.path))
+              .copy(physicalPath = DeltaTable.metadataFilePath(tablePath, a.path))
           }
           val data = toLogical(graft.sources.ManifestFileIndex.read(
             spark, base, files, rSchema, rParts, withRowPositions = true),
@@ -350,8 +346,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           val newPos = posDF(rewrites.map(a =>
             DeltaTable.metadataFilePath(tablePath, a.path) -> a.deletionVector))
           val oldPos = posDF(rewrites.map(a =>
-            DeltaTable.metadataFilePath(tablePath, a.path) ->
-              DeltaTable.dvAt(prevRows(a.path), 5)))
+            DeltaTable.metadataFilePath(tablePath, a.path) -> prev(a.path).deletionVector))
           val fresh = newPos.join(oldPos, Seq("__graft_file", "__graft_pos"), "left_anti")
           Some(finish(
             data.join(broadcast(fresh), Seq("__graft_file", "__graft_pos")),
@@ -442,17 +437,15 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     // column-mapped tables scan physical, match logical: the predicate /
     // key join sees logical names, the position bitmaps key on file+pos
     val physShape = physicalShape(None)
-    val snapRows = log.snapshotFilesDF()
-      .select("path", "size", "modificationTime", "partitionValues", "stats", "deletionVector")
-      .collect().toSeq
+    val snap = log.snapshotFiles()
     val latest = latestVersion
-    if (snapRows.isEmpty && extraActions.isEmpty) return latest
-    val byMetaPath: Map[String, org.apache.spark.sql.Row] =
-      snapRows.map(r => DeltaTable.metadataFilePath(tablePath, r.getString(0)) -> r).toMap
+    if (snap.isEmpty && extraActions.isEmpty) return latest
+    val byMetaPath: Map[String, AddFile] =
+      snap.map(a => DeltaTable.metadataFilePath(tablePath, a.path) -> a).toMap
     // scan PHYSICAL rows (existing deletes not applied: re-marking an
     // already-deleted position is idempotent under bitmap union)
-    val allMfs = DeltaTable.manifestFiles(snapRows).map(f =>
-      f.copy(physicalPath = DeltaTable.metadataFilePath(tablePath, f.physicalPath)))
+    val allMfs = snap.map(a => DeltaTable.dataFileOf(a)
+      .copy(physicalPath = DeltaTable.metadataFilePath(tablePath, a.path)))
     val mfs = pruneByKeys match {
       case None => allMfs
       // exact routing via the key index when it can answer (see
@@ -477,9 +470,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           StructField("minValues", statCols), StructField("maxValues", statCols),
           StructField("nullCount", StructType(
             kc.map(c => StructField(pName(c), LongType))))))
-        val filesDF = spark.createDataFrame(snapRows.map(r =>
-            (DeltaTable.metadataFilePath(tablePath, r.getString(0)),
-              if (r.isNullAt(4)) null else r.getString(4))))
+        val filesDF = spark.createDataFrame(snap.map(a =>
+            (DeltaTable.metadataFilePath(tablePath, a.path), a.stats.orNull)))
           .toDF("__path", "__stats")
           .withColumn("st", from_json(col("__stats"), statsSchema))
           .persist()
@@ -550,17 +542,16 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     }
     // merge with each file's existing DV; split fully-deleted files out
     val planned = perFile.map { case (metaPath, newBits) =>
-      val row = byMetaPath(metaPath)
-      val oldDv = DeltaTable.dvAt(row, 5)
+      val file = byMetaPath(metaPath)
+      val oldDv = file.deletionVector
       val merged = oldDv match {
         case Some(d) => RoaringBitmapArray.serialize(
           d.positions(tablePath, conf) ++ RoaringBitmapArray.deserialize(newBits))
         case None => newBits
       }
       val cardinality = RoaringBitmapArray.deserialize(merged).length.toLong
-      val numRecords = Option(row.getString(4))
-        .map(DeltaStats.fromJson(_, dataSchema)._1).getOrElse(-1L)
-      (row, merged, cardinality, oldDv, numRecords >= 0 && cardinality >= numRecords)
+      val numRecords = file.stats.map(DeltaStats.fromJson(_, dataSchema)._1).getOrElse(-1L)
+      (file, merged, cardinality, oldDv, numRecords >= 0 && cardinality >= numRecords)
     }
     val keep = planned.filterNot(_._5)
     val uuid = UUID.randomUUID()
@@ -571,18 +562,13 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         DeletionVectorStore.writeFile(
           dvPath.getFileSystem(conf), dvPath, keep.map(_._2))
       }
-    val removes: Seq[DeltaAction] = planned.map { case (row, _, _, oldDv, _) =>
-      RemoveFile(row.getString(0), now, dataChange = true, deletionVector = oldDv)
+    val removes: Seq[DeltaAction] = planned.map { case (file, _, _, oldDv, _) =>
+      RemoveFile(file.path, now, dataChange = true, deletionVector = oldDv)
     }
     val adds: Seq[DeltaAction] = keep.zip(offsets).map {
-      case ((row, _, cardinality, _, _), (off, size)) =>
-        AddFile(
-          path = row.getString(0),
-          partitionValues = if (row.isNullAt(3)) Map.empty else row.getMap[String, String](3).toMap,
-          size = if (row.isNullAt(1)) 0L else row.getLong(1),
-          modificationTime = if (row.isNullAt(2)) 0L else r2l(row, 2),
+      case ((file, _, cardinality, _, _), (off, size)) =>
+        file.copy(
           dataChange = true,
-          stats = Option(row.getString(4)),
           deletionVector = Some(DeletionVectorDescriptor(
             "u", Z85.encodeUuid(uuid), Some(off), size, cardinality)))
     }
@@ -599,7 +585,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         val tableCols = schema.fieldNames.map(n => col(s"`$n`")).toSeq
         val deletesDF: Option[DataFrame] = matched.filter(_ => perFile.nonEmpty).map { m =>
           val oldDvs = perFile.flatMap { case (metaPath, _) =>
-            DeltaTable.dvAt(byMetaPath(metaPath), 5).map(d =>
+            byMetaPath(metaPath).deletionVector.map(d =>
               (InternalDataFile(metaPath), d))
           }
           val live =
@@ -652,9 +638,6 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     v
     } finally matched.foreach(m => if (cdfEnabled) m.unpersist())
   }
-
-  private def r2l(row: org.apache.spark.sql.Row, i: Int): Long =
-    if (row.isNullAt(i)) 0L else row.getLong(i)
 
   /**
    * MERGE-by-key in ONE commit: rows of the table whose key matches a
@@ -917,28 +900,17 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     require(log.listVersions().contains(version),
       s"version $version does not exist on $tablePath")
     if (version == latest) return latest
-    val cols = Seq("path", "size", "modificationTime", "partitionValues", "stats", "deletionVector")
-    val nowRows = log.snapshotFilesDF().select(cols.head, cols.tail: _*).collect().toSeq
-    val thenRows = log.snapshotFilesDF(Some(version)).select(cols.head, cols.tail: _*).collect().toSeq
-    val nowBy = nowRows.map(r => r.getString(0) -> r).toMap
-    val thenBy = thenRows.map(r => r.getString(0) -> r).toMap
+    val nowFiles = log.snapshotFiles()
+    val thenFiles = log.snapshotFiles(Some(version))
+    val nowBy = nowFiles.map(a => a.path -> a).toMap
+    val thenBy = thenFiles.map(a => a.path -> a).toMap
     val now = System.currentTimeMillis()
-    val removes: Seq[DeltaAction] = nowRows.filterNot(r => thenBy.contains(r.getString(0)))
-      .map(r => RemoveFile(r.getString(0), now, dataChange = true,
-        deletionVector = DeltaTable.dvAt(r, 5)))
+    val removes: Seq[DeltaAction] = nowFiles.filterNot(a => thenBy.contains(a.path))
+      .map(a => RemoveFile(a.path, now, dataChange = true, deletionVector = a.deletionVector))
     // re-add files missing now, plus files whose DV state changed since
-    val adds: Seq[DeltaAction] = thenRows.filter { r =>
-      nowBy.get(r.getString(0)).forall(n => DeltaTable.dvAt(n, 5) != DeltaTable.dvAt(r, 5))
-    }.map { r =>
-      AddFile(
-        path = r.getString(0),
-        partitionValues = if (r.isNullAt(3)) Map.empty else r.getMap[String, String](3).toMap,
-        size = if (r.isNullAt(1)) 0L else r.getLong(1),
-        modificationTime = r2l(r, 2),
-        dataChange = true,
-        stats = Option(r.getString(4)),
-        deletionVector = DeltaTable.dvAt(r, 5))
-    }
+    val adds: Seq[DeltaAction] = thenFiles.filter { a =>
+      nowBy.get(a.path).forall(_.deletionVector != a.deletionVector)
+    }.map(_.copy(dataChange = true))
     // metadata rollback is part of RESTORE even when NO file moved: a
     // RENAME COLUMN / type change / config change is metadata-only, and
     // the file-set-only early return used to keep the newer schema
@@ -1026,10 +998,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       s"key column $keyCol is a partition column of $tablePath; the index reads " +
         "keys back from data files, so the key must be a data column")
     val v = latestVersion
-    val snapRows = log.snapshotFilesDF()
-      .select("path", "size", "modificationTime", "partitionValues").collect().toSeq
-    val mfs = DeltaTable.manifestFiles(snapRows).map(f =>
-      f.copy(physicalPath = DeltaTable.metadataFilePath(tablePath, f.physicalPath)))
+    val mfs = log.snapshotFiles().map(a => DeltaTable.dataFileOf(a)
+      .copy(physicalPath = DeltaTable.metadataFilePath(tablePath, a.path)))
     DeltaKeyIndex.replaceAll(spark, tablePath,
       DeltaKeyIndex.Config(keyCol, v,
         keyType = Some(schema(keyCol).dataType.catalogString),
@@ -1057,8 +1027,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     require(DeltaKeyIndex.usable(log, conf, tablePath, v),
       s"cannot compact an unusable key index on $tablePath; rebuild with buildKeyIndex")
     import spark.implicits._
-    val live = log.snapshotFilesDF().select("path").as[String].collect()
-      .map(p => DeltaTable.metadataFilePath(tablePath, p)).toSeq.toDF("file")
+    val live = log.snapshotFiles().map(a => DeltaTable.metadataFilePath(tablePath, a.path))
+      .toDF("file")
     DeltaKeyIndex.compactInto(spark, tablePath, cfg, v, live)
     DeltaKeyIndex.invalidate(tablePath)
   }
@@ -1382,17 +1352,13 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * snapshot is DV-free and metadata-only sync is possible again. */
   def purgeDeletes(): Option[Long] = {
     requireWritable(mutation = true)
-    val rows = log.snapshotFilesDF()
-      .select("path", "size", "modificationTime", "partitionValues", "deletionVector")
-      .collect().toSeq
-      .filter(!_.isNullAt(4))
-    if (rows.isEmpty) return None
+    val withDv = log.snapshotFiles().filter(_.deletionVector.isDefined)
+    if (withDv.isEmpty) return None
     val (schema, partCols) = schemaAt(None)
-    val files = DeltaTable.manifestFiles(rows).zip(rows.map(DeltaTable.dvAt(_, 4)))
-    val df = DeltaTable.readFilesWithDeletes(
-      spark, tablePath, readBasePath(None), files, schema, partCols)
+    val df = DeltaTable.readFilesWithDeletes(spark, tablePath, readBasePath(None),
+      withDv.map(a => (DeltaTable.dataFileOf(a), a.deletionVector)), schema, partCols)
     Some(write(df, Seq.empty, overwrite = false,
-      replacing = rows.map(r => r.getString(0) -> DeltaTable.dvAt(r, 4))))
+      replacing = withDv.map(a => a.path -> a.deletionVector)))
   }
 
   /** Latest value of a CommitInfo operation parameter, scanning commits
@@ -1432,10 +1398,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       zorderBy: Seq[String] = Seq.empty): Option[Long] = {
     requireWritable(mutation = true)
     val (schema, partCols) = schemaAt(None)
-    val allRows = log.snapshotFilesDF()
-      .select("path", "size", "modificationTime", "partitionValues", "deletionVector")
-      .collect().toSeq
-    val all = DeltaTable.manifestFiles(allRows).zip(allRows.map(DeltaTable.dvAt(_, 4)))
+    val all = log.snapshotFiles().map(a => (DeltaTable.dataFileOf(a), a.deletionVector))
     val smalls = all.groupBy(_._1.partitionValues).values.flatMap { g =>
       val s = g.filter(_._1.fileSizeBytes < smallFileBytes)
       if (s.size >= 2) s else Seq.empty
@@ -1500,14 +1463,14 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     requireReadable(None)
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveRows = log.snapshotFilesDF().select("path", "deletionVector").collect().toSeq
-    val live = liveRows.map { r =>
-      val p = DeltaTable.decodeLogPath(r.getString(0))
+    val liveFiles = log.snapshotFiles()
+    val live = liveFiles.map { a =>
+      val p = DeltaTable.decodeLogPath(a.path)
       val abs = if (p.startsWith("/") || p.contains(":/")) p else new Path(tablePath, p).toString
       new Path(abs).toUri.getPath
     }.toSet ++
       // DV sidecars the current snapshot references stay; orphaned ones age out
-      liveRows.flatMap(r => DeltaTable.dvAt(r, 1))
+      liveFiles.flatMap(_.deletionVector)
         .flatMap(_.absolutePath(tablePath))
         .map(new Path(_).toUri.getPath)
     val cutoff = System.currentTimeMillis() - retentionMs
@@ -1668,16 +1631,15 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       val v = log.latestVersion().map(_ + 1).getOrElse(0L)
       val removes: Seq[DeltaAction] =
         if (overwrite && v > 0)
-          log.snapshotFilesDF().select("path").collect().toSeq
-            .map(r => RemoveFile(r.getString(0), System.currentTimeMillis(), dataChange = true))
+          log.snapshotFiles()
+            .map(a => RemoveFile(a.path, System.currentTimeMillis(), dataChange = true))
         else if (replacing.nonEmpty) {
           // conflict check per attempt: every replaced file must still be
           // live AND carry exactly the deletion vector the rewrite read.
           // A concurrent row-level DELETE keeps the path live but swaps
           // its DV — committing the rewrite then would resurrect the
           // racer's deleted rows (Delta's RewriteFiles-style validation).
-          val live = log.snapshotFilesDF().select("path", "deletionVector").collect()
-            .map(r => r.getString(0) -> DeltaTable.dvAt(r, 1)).toMap
+          val live = log.snapshotFiles().map(a => a.path -> a.deletionVector).toMap
           replacing.foreach { case (p, readDv) =>
             require(live.contains(p),
               s"compaction conflict at $tablePath: a concurrent commit removed " +
@@ -1827,45 +1789,37 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       pv => pv.map { case (k, v) => m.getOrElse(k, k) -> v }
     }
 
-  /** Planning-time (live rows, live bytes) of the current snapshot as
-    * ONE aggregate over the log replay — the stats-join planning path
-    * (StatsJoin.plannedSize) must stay KB-sized: it never materializes
-    * the file list or parses per-file column stats on the driver, it
-    * collects exactly one row (the `detail()` idiom). Deletion-vector'd
-    * rows are netted out. None when the table is empty or any live file
-    * lacks a `numRecords` stat — unknown rows mean no planning fact. */
+  /** Planning-time (live rows, live bytes) of the current snapshot,
+    * summed on the driver over the replayed live files: the stats-join
+    * planning path (StatsJoin.plannedSize) reads each file's
+    * `numRecords`, never its per-column stats, and launches no Spark
+    * job. Deletion-vector'd rows are netted out. None when the table is
+    * empty or any live file lacks a `numRecords` stat — unknown rows
+    * mean no planning fact. */
   def planningFacts(): Option[(Double, Double)] = {
-    val r = log.snapshotFilesDF().agg(
-      count(lit(1)),
-      count(get_json_object(col("stats"), "$.numRecords")),
-      sum(get_json_object(col("stats"), "$.numRecords").cast("long") -
-        coalesce(col("deletionVector.cardinality"), lit(0L))),
-      sum(coalesce(col("size"), lit(0L)))).head
-    if (r.getLong(0) == 0L || r.getLong(1) != r.getLong(0)) None
-    else Some((r.getLong(2).toDouble, r.getLong(3).toDouble))
+    val files = log.snapshotFiles()
+    val records = files.map(_.stats.fold(-1L)(DeltaStats.fromJson(_, StructType(Nil))._1))
+    if (files.isEmpty || records.exists(_ < 0)) None
+    else Some(((records.sum - files.flatMap(_.deletionVector).map(_.cardinality).sum).toDouble,
+      files.map(_.size).sum.toDouble))
   }
 
   def snapshotDataFiles(): Seq[graft.model.InternalDataFile] = {
     requireReadable(None)
     val (dataSchema, names) = syncShape(None)
     val logicalPart = logicalPartValuesFn(None)
-    log.snapshotFilesDF()
-      .select("path", "partitionValues", "size", "modificationTime", "stats", "deletionVector")
-      .collect().toSeq.map { r =>
-      require(r.isNullAt(5),
-        s"cannot metadata-sync $tablePath: file ${r.getString(0)} carries a deletion " +
+    log.snapshotFiles().map { a =>
+      require(a.deletionVector.isEmpty,
+        s"cannot metadata-sync $tablePath: file ${a.path} carries a deletion " +
           "vector other formats cannot express; run purgeDeletes() first")
-      val (n, cols) = Option(r.getString(4))
-        .map(DeltaStats.fromJson(_, dataSchema)).getOrElse((-1L, Seq.empty))
+      val (n, cols) = a.stats.map(DeltaStats.fromJson(_, dataSchema)).getOrElse((-1L, Seq.empty))
       graft.model.InternalDataFile(
-        physicalPath = absolutePath(r.getString(0)),
-        partitionValues = logicalPart(
-          if (r.isNullAt(1)) Map.empty
-          else r.getMap[String, String](1).toMap),
-        fileSizeBytes = if (r.isNullAt(2)) 0L else r.getLong(2),
+        physicalPath = absolutePath(a.path),
+        partitionValues = logicalPart(a.partitionValues),
+        fileSizeBytes = a.size,
         recordCount = n,
         columnStats = logicalStats(cols, names),
-        lastModified = if (r.isNullAt(3)) 0L else r.getLong(3))
+        lastModified = a.modificationTime)
     }
   }
 
@@ -2497,17 +2451,10 @@ object DeltaTable {
     case other => other
   }
 
-  /** files()-shaped DataFrame rows → manifest descriptors. */
-  private[delta] def manifestFiles(rows: Seq[org.apache.spark.sql.Row]): Seq[InternalDataFile] =
-    rows.map { r =>
-      InternalDataFile(
-        physicalPath = r.getString(0),
-        fileSizeBytes = if (r.isNullAt(1)) 0L else r.getLong(1),
-        lastModified = if (r.isNullAt(2)) 0L else r.getLong(2),
-        partitionValues =
-          if (r.isNullAt(3)) Map.empty
-          else r.getMap[String, String](3).toMap)
-    }
+  /** A live file's manifest descriptor, its path as the log spells it. */
+  private[delta] def dataFileOf(a: AddFile): InternalDataFile =
+    InternalDataFile(a.path, partitionValues = a.partitionValues, fileSizeBytes = a.size,
+      lastModified = a.modificationTime)
 
   /** Canonical stats of an `add.stats` JSON (null: none), keyed by the
     * names `readSchema` gives the files' columns. The JSON carries
@@ -2522,19 +2469,6 @@ object DeltaTable {
         if (timestamps(c.column)) c.copy(maxValue = c.maxValue.map(m => (m.toLong + 999L).toString))
         else c
       }
-    }
-
-  /** Parse an optional deletionVector struct at row ordinal `i`. */
-  private[delta] def dvAt(r: org.apache.spark.sql.Row, i: Int): Option[DeletionVectorDescriptor] =
-    if (r.isNullAt(i)) None
-    else {
-      val d = r.getStruct(i)
-      Some(DeletionVectorDescriptor(
-        storageType = d.getString(0),
-        pathOrInlineDv = d.getString(1),
-        offset = if (d.isNullAt(2)) None else Some(d.getInt(2)),
-        sizeInBytes = d.getInt(3),
-        cardinality = d.getLong(4)))
     }
 
   /** Resolve a log path against the table root, in the exact string form
@@ -2646,8 +2580,8 @@ final class DeltaScanBuilder(
     this
   }
 
-  /** The pruned file manifest (path, partitionValues, size, stats). */
-  def files(): DataFrame = {
+  /** The pruned live files, sorted by path. */
+  def files(): Seq[AddFile] = {
     table.requireReadable(asOfVersion)
     val (schema, partCols) = table.schemaAt(asOfVersion)
     // column-mapped tables key partitionValues and stats by PHYSICAL
@@ -2656,56 +2590,47 @@ final class DeltaScanBuilder(
       if (table.columnMappingMode(asOfVersion) == "none") Map.empty
       else schema.fields.map(f => f.name -> DeltaTable.physicalName(f)).toMap
     def p(c: String): String = phys.getOrElse(c, c)
-    var df = table.log.snapshotFilesDF(asOfVersion)
-    partitionPredicates.foreach { case (c, vs) =>
-      df = df.filter(element_at(col("partitionValues"), p(c)).isin(vs.toSeq: _*))
-    }
     // a range predicate on the SOURCE column of a time-transform
     // partition also prunes partitions: canonical value strings order
     // lexicographically within a granularity, so truncate-and-compare
     // is exact (hidden-partitioning semantics, ref
     // `DeltaPartitionExtractor.java:104-224`)
     val timeDefs = DeltaTable.partitionDefsOf(schema, partCols).filterNot(_.isIdentity)
-    rangePredicates.foreach { case (c, lo, hi) =>
-      timeDefs.filter(_.sourceColumn == c).foreach { t =>
-        val pv = element_at(col("partitionValues"), p(t.fieldName))
-        lo.foreach { l =>
-          df = df.filter(pv.isNull ||
-            pv >= lit(graft.model.PartitionTransform.truncate(t.granularity, l)))
-        }
-        hi.foreach { h =>
-          df = df.filter(pv.isNull ||
-            pv <= lit(graft.model.PartitionTransform.truncate(t.granularity, h)))
-        }
+    val timeBounds = rangePredicates.flatMap { case (c, lo, hi) =>
+      timeDefs.filter(_.sourceColumn == c).map { t =>
+        def cut(v: String) = graft.model.PartitionTransform.truncate(t.granularity, v)
+        (p(t.fieldName), lo.map(cut), hi.map(cut))
       }
     }
-    if (rangePredicates.isEmpty) return df
+    val inPartitions = table.log.snapshotFiles(asOfVersion).filter { a =>
+      // a null or missing value is in no set, but within every time bound
+      partitionPredicates.forall { case (c, vs) =>
+        a.partitionValues.get(p(c)).exists(v => v != null && vs(v))
+      } && timeBounds.forall { case (f, lo, hi) =>
+        a.partitionValues.get(f).forall(v => v == null || lo.forall(v >= _) && hi.forall(v <= _))
+      }
+    }
+    if (rangePredicates.isEmpty) return inPartitions
     val filters = rangePredicates.flatMap { case (c, lo, hi) =>
       graft.sources.StatsSkipping.rangeFilter(p(c), schema(c).dataType, lo, hi)
     }
     val readSchema = if (phys.isEmpty) schema else DeltaTable.physicalSchema(schema)
-    val stats = df.schema.fieldIndex("stats")
-    val kept = graft.sources.StatsSkipping.prune(df.collect().toSeq, filters)(r =>
-      DeltaTable.columnStats(r.getString(stats), readSchema))
-    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava, df.schema)
+    graft.sources.StatsSkipping.prune(inPartitions, filters)(a =>
+      DeltaTable.columnStats(a.stats.orNull, readSchema))
   }
 
   /** Pruned data read. The skipping predicates only drop whole files;
     * callers still apply the row-level filter on the result. */
   def toDF(): DataFrame = {
     val (schema, partCols) = table.schemaAt(asOfVersion)
-    val allRows = files()
-      .select("path", "size", "modificationTime", "partitionValues", "deletionVector", "stats")
-      .collect().toSeq
-    val rows = chunkSpec match {
-      case Some((k, n)) => allRows.sortBy(_.getString(0))
-        .zipWithIndex.collect { case (r, i) if i % n == k => r }
-      case None => allRows
+    val picked = chunkSpec match {
+      case Some((k, n)) => files().zipWithIndex.collect { case (a, i) if i % n == k => a }
+      case None => files()
     }
-    val pruned = DeltaTable.manifestFiles(rows).zip(rows.map(DeltaTable.dvAt(_, 4)))
+    val pruned = picked.map(a => (DeltaTable.dataFileOf(a), a.deletionVector))
     // stats JSON by the resolved path the index sees, decoded only under a data filter
-    lazy val statsJson = rows.iterator
-      .map(r => DeltaTable.metadataFilePath(table.tablePath, r.getString(0)) -> r.getString(5)).toMap
+    lazy val statsJson = picked.iterator
+      .map(a => DeltaTable.metadataFilePath(table.tablePath, a.path) -> a.stats.orNull).toMap
     def statsIn(readSchema: StructType)(f: InternalDataFile) =
       DeltaTable.columnStats(statsJson.getOrElse(f.physicalPath, null), readSchema)
     table.physicalShape(asOfVersion) match {

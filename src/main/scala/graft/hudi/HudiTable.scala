@@ -163,23 +163,6 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     state.valuesIterator.filter(_.isAdd).toSeq.sortBy(a => (a.partitionPath, a.fileId))
   }
 
-  private def sliceSchema: StructType = StructType(Seq(
-    StructField("instant", StringType), StructField("partitionPath", StringType),
-    StructField("fileId", StringType), StructField("path", StringType),
-    StructField("size", LongType)))
-
-  /**
-   * Live base files at `asOf` as a local relation (collecting it runs
-   * no job). A created-but-never-committed table (hoodie.properties
-   * present, zero completed instants — the concurrent-bootstrap window)
-   * is an EMPTY table: a racing reader sees no live slices.
-   */
-  def fileSlicesDF(asOf: Option[String] = None): DataFrame = {
-    val rows = liveBases(localActions(instantsAt(asOf))).map(a =>
-      org.apache.spark.sql.Row(a.instant, a.partitionPath, a.fileId, a.path, a.size))
-    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, sliceSchema)
-  }
-
   // ------------------------------------------------------- merge-on-read
 
   def tableType: String =
@@ -244,22 +227,23 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * latest file slices — no raw filesystem listing. */
   def detail(): DataFrame = {
     import spark.implicits._
-    val slices = fileSlicesDF(None).agg(
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.coalesce(
-        col("size"), org.apache.spark.sql.functions.lit(0L)))).head
+    val slices = fileSlices(None)
     Seq((
       "hudi", properties.getOrElse("hoodie.table.name", ""), tablePath, tableType,
       properties.getOrElse("hoodie.table.partition.fields", ""),
-      slices.getLong(0), if (slices.isNullAt(1)) 0L else slices.getLong(1),
+      slices.size.toLong, slices.map(_.baseSize).sum,
       properties, instants.lastOption.getOrElse("")
     )).toDF("format", "name", "location", "tableType", "partitionFields",
       "numFiles", "sizeInBytes", "properties", "latestInstant")
   }
 
-  /** Live file slices with their attached log files: a log belongs to
-    * the slice whose base instant its name carries (Hudi file-slice
-    * rule), so logs of a replaced/compacted group never leak forward. */
+  /** Live file slices at `asOf` with their attached log files, sorted
+    * by (partitionPath, fileId): a log belongs to the slice whose base
+    * instant its name carries (Hudi file-slice rule), so logs of a
+    * replaced/compacted group never leak forward. A created-but-never-
+    * committed table (hoodie.properties present, zero completed
+    * instants — the concurrent-bootstrap window) is an EMPTY table: a
+    * racing reader sees no live slices. */
   def fileSlices(asOf: Option[String] = None): Seq[HudiFileSlice] = {
     val acts = localActions(instantsAt(asOf))
     val logs: Map[(String, String, String), Seq[HudiLogFileRef]] =
@@ -306,9 +290,7 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     * what the reference syncs for MOR sources (ref
     * `HudiDataFileExtractor.java` getLatestBaseFiles). */
   def readOptimizedDF(asOf: Option[String] = None): DataFrame = {
-    val files = fileSlicesDF(asOf).select("path", "partitionPath", "size").collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
-    readFiles(files, asOf)
+    readFiles(fileSlices(asOf).map(s => (s.basePath, s.partitionPath, s.baseSize)), asOf)
   }
 
   /**
@@ -1040,12 +1022,8 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
       zorderBy: Seq[String] = Seq.empty): Option[String] = {
     // MOR: only LOG-FREE groups bin-pack here — a group with logs must
     // go through compactMor (merge), never a base-only rewrite
-    val withLogGroups: Set[(String, String)] =
-      if (isMor) fileSlices(None).filter(_.logs.nonEmpty).map(s => (s.partitionPath, s.fileId)).toSet
-      else Set.empty
-    val rows = fileSlicesDF(None).select("path", "partitionPath", "size", "fileId").collect().toSeq
-      .filter(r => !withLogGroups((r.getString(1), r.getString(3))))
-      .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
+    val rows = fileSlices(None).filter(_.logs.isEmpty)
+      .map(s => (s.basePath, s.partitionPath, s.baseSize))
     val smalls = rows.groupBy(_._2).values.flatMap { g =>
       val s = g.filter(_._3 < smallFileBytes)
       if (s.size >= 2) s else Seq.empty
@@ -1162,24 +1140,22 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
     var committed = false
     while (!committed) {
       attempt += 1
-      val replacedRows: Seq[org.apache.spark.sql.Row] =
-        if (overwrite && instants.nonEmpty)
-          fileSlicesDF(None).select("partitionPath", "fileId", "path").collect().toSeq
+      val replaced: Seq[HudiFileSlice] =
+        if (overwrite && instants.nonEmpty) fileSlices(None)
         else if (replacing.nonEmpty && instants.nonEmpty) {
           val rs = replacing.map(HudiTable.normalize).toSet
-          val live = fileSlicesDF(None).select("partitionPath", "fileId", "path").collect().toSeq
-            .filter(r => rs.contains(HudiTable.normalize(absoluteOf(r.getString(2)))))
+          val live = fileSlices(None)
+            .filter(s => rs.contains(HudiTable.normalize(absoluteOf(s.basePath))))
           require(live.size == replacing.size,
             s"compaction conflict at $tablePath: a concurrent commit replaced " +
               "file groups this clustering rewrote")
           live
         } else Seq.empty
-      val replaceIds: Map[String, Seq[String]] = replacedRows
-        .groupBy(_.getString(0)).view.mapValues(_.map(_.getString(1)).toSeq).toMap
+      val replaceIds: Map[String, Seq[String]] = replaced
+        .groupBy(_.partitionPath).view.mapValues(_.map(_.fileId)).toMap
       // replaced file names, tombstoned in the metadata table's listing
-      val replacedFiles: Map[String, Seq[String]] = replacedRows
-        .groupBy(_.getString(0)).view
-        .mapValues(_.map(r => new Path(r.getString(2)).getName).toSeq).toMap
+      val replacedFiles: Map[String, Seq[String]] = replaced
+        .groupBy(_.partitionPath).view.mapValues(_.map(s => new Path(s.basePath).getName)).toMap
       // createMor pre-writes MOR properties before the first commit —
       // never clobber an existing hoodie.properties
       if (instants.isEmpty && !timeline.exists)
@@ -1626,10 +1602,10 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
 
   /** Planning-time (live rows, live bytes) of the current snapshot —
     * the stats-join planning path (StatsJoin.plannedSize) stays
-    * metadata-sized: sizes ride the slice frame, record counts come
-    * from the commit metadata's own write stats, and the per-file
-    * column-stats index is never consulted (nor any InternalDataFile
-    * materialized). None when the table is empty, a MOR table carries
+    * metadata-sized: sizes come from the replayed live base files,
+    * record counts from the commit metadata's own write stats, and the
+    * per-file column-stats index is never consulted (nor any
+    * InternalDataFile materialized). None when the table is empty, a MOR table carries
     * un-compacted log mutations (the base-file counts would
     * under-state the snapshot), or any live file has no recorded
     * write count — unknown rows mean no planning fact. */
@@ -1850,9 +1826,9 @@ final class HudiTable private (spark: SparkSession, val timeline: HudiTimeline) 
       if (removePaths.isEmpty || !timeline.exists || instants.isEmpty) Map.empty
       else {
         val removeSet = removePaths.map(HudiTable.normalize).toSet
-        fileSlicesDF(None).select("partitionPath", "fileId", "path").collect().toSeq
-          .filter(r => removeSet.contains(HudiTable.normalize(absoluteOf(r.getString(2)))))
-          .groupBy(_.getString(0)).view.mapValues(_.map(_.getString(1)).toSeq).toMap
+        fileSlices(None)
+          .filter(s => removeSet.contains(HudiTable.normalize(absoluteOf(s.basePath))))
+          .groupBy(_.partitionPath).view.mapValues(_.map(_.fileId)).toMap
       }
     // the stored schema must DECLARE every partition field the
     // properties reference — materialized transform fields from the
@@ -2311,41 +2287,37 @@ final class HudiScanBuilder(
     this
   }
 
-  /** Pruned file manifest (instant, partitionPath, fileId, path, size). */
-  def files(): DataFrame = {
-    val all = table.fileSlicesDF(asOfInstant)
-    if (partitionPredicates.isEmpty && rangePredicates.isEmpty) return all
-    val inPartitions = all.collect().toSeq.filter(r => partitionOk(r.getString(1)))
-    val kept = if (rangePredicates.isEmpty) inPartitions else {
-      val schema = table.schemaAt(asOfInstant)
-      val filters = rangePredicates.flatMap { case (c, lo, hi) =>
-        graft.sources.StatsSkipping.rangeFilter(c, schema(c).dataType, lo, hi)
-      }
-      val stats = HudiColStats.read(spark, table.tablePath, table.instantsAt(asOfInstant))
-      graft.sources.StatsSkipping.prune(inPartitions, filters) { r =>
-        val path = r.getString(3)
-        stats.getOrElse((r.getString(1), path.substring(path.lastIndexOf('/') + 1)), Seq.empty)
-      }
+  /** The pruned live file slices, sorted by (partitionPath, fileId). */
+  def files(): Seq[HudiFileSlice] = pruned(table.fileSlices(asOfInstant))
+
+  private def pruned(slices: Seq[HudiFileSlice]): Seq[HudiFileSlice] = {
+    if (partitionPredicates.isEmpty && rangePredicates.isEmpty) return slices
+    val inPartitions = slices.filter(s => partitionOk(s.partitionPath))
+    if (rangePredicates.isEmpty) return inPartitions
+    val schema = table.schemaAt(asOfInstant)
+    val filters = rangePredicates.flatMap { case (c, lo, hi) =>
+      graft.sources.StatsSkipping.rangeFilter(c, schema(c).dataType, lo, hi)
     }
-    spark.createDataFrame(scala.jdk.CollectionConverters.SeqHasAsJava(kept).asJava, all.schema)
+    val stats = HudiColStats.read(spark, table.tablePath, table.instantsAt(asOfInstant))
+    graft.sources.StatsSkipping.prune(inPartitions, filters) { s =>
+      stats.getOrElse((s.partitionPath, s.basePath.substring(s.basePath.lastIndexOf('/') + 1)),
+        Seq.empty)
+    }
   }
 
   def toDF(): DataFrame = {
-    if (table.isMor && table.hasLogFiles(asOfInstant)) {
+    val slices = table.fileSlices(asOfInstant)
+    if (slices.exists(_.logs.nonEmpty)) {
       // MOR with live logs: partition predicates prune whole slices;
       // range predicates prune only LOG-FREE slices — a group's base
       // stats say nothing about the rows its log blocks carry
-      val keep = files().select("partitionPath", "fileId").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      val slices = table.fileSlices(asOfInstant).filter { s =>
+      val keep = pruned(slices).map(s => (s.partitionPath, s.fileId)).toSet
+      return table.mergedRead(slices.filter { s =>
         if (s.logs.nonEmpty) partitionOk(s.partitionPath)
         else keep((s.partitionPath, s.fileId))
-      }
-      return table.mergedRead(slices, asOfInstant)
+      }, asOfInstant)
     }
-    val pruned = files().select("path", "partitionPath", "size").collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
-    table.readFiles(pruned, asOfInstant)
+    table.readFiles(pruned(slices).map(s => (s.basePath, s.partitionPath, s.baseSize)), asOfInstant)
   }
 
   /** True when a partition path's decoded values (hive-style or

@@ -1,7 +1,5 @@
 package graft.model
 
-import org.apache.spark.sql.types._
-
 /**
  * Canonical (format-agnostic) table model — the "OneTable model" of the
  * reference, re-expressed as Scala case classes that are bijective with
@@ -9,9 +7,8 @@ import org.apache.spark.sql.types._
  * land.
  *
  * Reference shapes (see SURVEY.md §1.1):
- *  - table:    reference `api/.../model/OneTable.java:38-53`
- *  - snapshot: reference `api/.../model/OneSnapshot.java:42-53`
- *  - schema:   reference `api/.../model/schema/OneSchema.java:43-85`
+ *  - schema:   reference `api/.../model/schema/OneSchema.java:43-85`,
+ *              here a Spark `StructType`
  *  - file:     reference `api/.../model/storage/OneDataFile.java:39-55`
  *  - stats:    reference `api/.../model/stat/ColumnStat.java:33-40`
  *
@@ -21,14 +18,6 @@ import org.apache.spark.sql.types._
  * over those files through [[graft.sources.ManifestFileIndex]] without
  * listing the filesystem.
  */
-
-/** Layout of data files on storage (ref `DataLayoutStrategy.java:29-33`). */
-sealed trait LayoutStrategy
-object LayoutStrategy {
-  case object HiveStylePartition extends LayoutStrategy
-  case object DirHierarchyPartitionValues extends LayoutStrategy
-  case object Flat extends LayoutStrategy
-}
 
 /** Data file format (ref `FileFormat.java:26-30`). */
 sealed abstract class DataFileFormat(val name: String)
@@ -77,75 +66,6 @@ final case class InternalDataFile(
     recordCount: Long = 0L,
     columnStats: Seq[ColumnStatRow] = Seq.empty,
     lastModified: Long = 0L)
-
-/** Point-in-time table definition (ref `OneTable.java:38-53`). */
-final case class InternalTable(
-    name: String,
-    basePath: String,
-    schema: StructType,
-    partitionFields: Seq[PartitionFieldDef] = Seq.empty,
-    layout: LayoutStrategy = LayoutStrategy.HiveStylePartition,
-    recordKeyFields: Seq[String] = Seq.empty,
-    latestCommitTimeMillis: Long = 0L)
-
-/**
- * A committed, queryable snapshot: version + table def + file manifest
- * (ref `OneSnapshot.java:42-53`). The manifest is left as a DataFrame-able
- * Seq here only at metadata scale; readers hand out Datasets.
- */
-final case class SnapshotInfo(
-    version: Long,
-    timestampMillis: Long,
-    table: InternalTable)
-
-/**
- * One commit's worth of change: files added and removed (ref
- * `TableChange.java:31-39` / `OneDataFilesDiff.java:36-70`). The natural
- * unit of incremental sync — a CDF-style micro-batch.
- */
-final case class TableChange(
-    version: Long,
-    timestampMillis: Long,
-    filesAdded: Seq[InternalDataFile],
-    filesRemoved: Seq[InternalDataFile],
-    schemaChanged: Boolean = false)
-
-/** Result of one sync to one target (ref `SyncResult.java:33-67`). */
-sealed trait SyncStatus
-object SyncStatus {
-  case object Success extends SyncStatus
-  case object Aborted extends SyncStatus
-  final case class Error(message: String, canRetry: Boolean) extends SyncStatus
-}
-final case class SyncResult(
-    target: String,
-    mode: String, // "FULL" | "INCREMENTAL"
-    status: SyncStatus,
-    syncedVersion: Long,
-    durationMillis: Long)
-
-/**
- * Sync watermark persisted in the *target* table's commit metadata, so a
- * crash can never desynchronize state from data (ref
- * `OneTableMetadata.java:36-63`).
- */
-final case class SyncMetadata(
-    lastInstantSynced: Long,
-    instantsToConsiderForNextSync: Seq[Long] = Seq.empty) {
-  def serialize: String =
-    s"$lastInstantSynced;${instantsToConsiderForNextSync.sorted.mkString(",")}"
-}
-object SyncMetadata {
-  val LastSyncedKey = "graft.lastInstantSynced"
-  val PendingKey = "graft.instantsToConsiderForNextSync"
-  def deserialize(s: String): SyncMetadata = {
-    val parts = s.split(";", -1)
-    val pending =
-      if (parts.length < 2 || parts(1).isEmpty) Seq.empty[Long]
-      else parts(1).split(",").map(_.toLong).toSeq
-    SyncMetadata(parts(0).toLong, pending)
-  }
-}
 
 /**
  * A single commit's change set cannot be expressed in other formats

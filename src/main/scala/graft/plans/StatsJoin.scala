@@ -153,9 +153,9 @@ object StatsJoin {
     // no registered stats ⇒ no estimate — and no point replaying the
     // log for facts the decision will never consult
     if (ndv.isEmpty) return None
-    // planningFacts is ONE aggregate over the log replay (the detail()
-    // idiom): the planning path never materializes the file list — or
-    // parses per-file column stats — on the driver
+    // planningFacts sums the driver-replayed live files: each file's
+    // `numRecords` is read, its per-column stats are not, and no Spark
+    // job runs
     val logFacts: Option[(Double, Double, Boolean)] =
       safe(table.planningFacts()).flatten.map { case (r, b) => (r, b, true) }
     sizeOf(Facts(ndv, logFacts, () => logFacts.map(_._1)))
@@ -170,9 +170,9 @@ object StatsJoin {
       (table.statisticsRegisters(keyColumn)._2, table.statisticsFresh)
     }
     if (ndv.isEmpty) return None
-    // same one-aggregate shape as the Delta path: sizes ride the slice
-    // frame, counts come from commit metadata — never the file list
-    // with its per-file column-stats index
+    // as on the Delta path, a driver sum over the replayed live files:
+    // sizes and counts come from commit metadata, never the per-file
+    // column-stats index
     val sliceFacts: Option[(Double, Double, Boolean)] =
       safe(table.planningFacts()).flatten.map { case (r, b) => (r, b, true) }
     sizeOf(Facts(ndv, sliceFacts, () => sliceFacts.map(_._1)))

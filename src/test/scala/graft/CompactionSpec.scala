@@ -20,10 +20,10 @@ class CompactionSpec extends SparkTestBase {
     val dir = tmpDir("compact_delta")
     val t = DeltaTable.create(spark, s"$dir/t", orders.repartition(8))
     val before = checksum(t.toDF())
-    val filesBefore = t.scan.files().count()
+    val filesBefore = t.scan.files().size
     val v = t.compact(targetFileBytes = 1L << 30, smallFileBytes = 1L << 30)
     assert(v.nonEmpty)
-    assert(t.scan.files().count() < filesBefore)
+    assert(t.scan.files().size < filesBefore)
     assert(checksum(t.toDF()) == before)
     // pre-compaction version still reads all rows (old files retained)
     assert(checksum(t.toDF(versionAsOf = Some(v.get - 1))) == before)
@@ -35,12 +35,11 @@ class CompactionSpec extends SparkTestBase {
     val dir = tmpDir("compact_delta_part")
     val t = DeltaTable.create(spark, s"$dir/t", orders.repartition(4), Seq("o_orderstatus"))
     val before = checksum(t.toDF())
-    val perPartBefore = t.scan.files().select("partitionValues").collect().length
+    val perPartBefore = t.scan.files().length
     assert(t.compact(targetFileBytes = 1L << 30, smallFileBytes = 1L << 30).nonEmpty)
     assert(checksum(t.toDF()) == before)
     // each partition collapses to one file
-    val byPart = t.scan.files().select("partitionValues").collect()
-      .groupBy(_.toString).view.mapValues(_.length)
+    val byPart = t.scan.files().groupBy(_.partitionValues).view.mapValues(_.length)
     assert(byPart.values.forall(_ == 1), s"expected 1 file/partition, got $byPart")
     assert(byPart.size < perPartBefore)
   }
@@ -72,10 +71,10 @@ class CompactionSpec extends SparkTestBase {
     val t = HudiTable.create(spark, s"$dir/t", orders.repartition(8))
     val before = checksum(t.toDF())
     val instBefore = t.instants.last
-    val filesBefore = t.scan.files().count()
+    val filesBefore = t.scan.files().size
     val inst = t.compact(targetFileBytes = 1L << 30, smallFileBytes = 1L << 30)
     assert(inst.nonEmpty)
-    assert(t.scan.files().count() < filesBefore)
+    assert(t.scan.files().size < filesBefore)
     assert(checksum(t.toDF()) == before)
     // pre-compaction instant still reads everything (COW time travel)
     assert(checksum(t.toDF(asOf = Some(instBefore))) == before)
@@ -94,14 +93,14 @@ class CompactionSpec extends SparkTestBase {
     assert(t.compact(targetFileBytes = 8L << 10, smallFileBytes = 1L << 30,
       zorderBy = Seq("x", "y")).nonEmpty)
     assert(checksum(t.toDF()) == before)
-    val total = t.scan.files().count()
+    val total = t.scan.files().size
     assert(total >= 4, s"need several output files to prove pruning, got $total")
     // a box covering ~1/16 of each dimension: z-order keeps it in a
     // small fraction of files; a single-dim sort could not prune on y
-    val boxX = t.scan.range("x", Some(0L), Some(1023L)).files().count()
+    val boxX = t.scan.range("x", Some(0L), Some(1023L)).files().size
     val boxXY = t.scan
       .range("x", Some(0L), Some(1023L))
-      .range("y", Some(0L), Some(1023L)).files().count()
+      .range("y", Some(0L), Some(1023L)).files().size
     assert(boxXY < total, s"2-d box did not prune: $boxXY/$total")
     assert(boxXY <= boxX, s"adding the y bound must not widen the scan")
     // correctness of the pruned read
@@ -125,15 +124,15 @@ class CompactionSpec extends SparkTestBase {
     // the rewrite is a replacecommit (Hudi's clustering shape) and the
     // pre-clustering instant still reads everything (COW time travel)
     assert(t.instants.size == 2)
-    val total = t.scan.files().count()
+    val total = t.scan.files().size
     assert(total >= 4, s"need several output files to prove pruning, got $total")
     // a box covering ~1/16 of each dimension: the col_stats index's
     // per-file min/max prunes it to a small fraction; a single-dim
     // sort could not prune on y
-    val boxX = t.scan.range("x", Some(0L), Some(1023L)).files().count()
+    val boxX = t.scan.range("x", Some(0L), Some(1023L)).files().size
     val boxXY = t.scan
       .range("x", Some(0L), Some(1023L))
-      .range("y", Some(0L), Some(1023L)).files().count()
+      .range("y", Some(0L), Some(1023L)).files().size
     assert(boxXY < total, s"2-d box did not prune: $boxXY/$total")
     assert(boxXY <= boxX, s"adding the y bound must not widen the scan")
     val got = t.scan

@@ -19,7 +19,9 @@ import graft.model.{ColumnStatRow, InternalDataFile}
  * read call must launch the same number of Spark jobs on both twins and
  * return the file set the filesystem says it should. Delta's metadata
  * reads launch none at any log shape (JSON-only, classic, multi-part
- * and V2 checkpoints), nor do Hudi's col_stats reads and writes.
+ * and V2 checkpoints), nor do the live-file summaries built on them
+ * (`snapshotFileCount`, `detail`, `planningFacts`), Hudi's `detail`, or
+ * Hudi's col_stats reads and writes.
  */
 class MetadataReplaySizeSpec extends SparkTestBase {
   import MetadataReplaySizeSpec._
@@ -118,8 +120,8 @@ class MetadataReplaySizeSpec extends SparkTestBase {
     assert(bytesUnder(s"${small.t.tablePath}/.hoodie") < (1L << 20))
     assert(bytesUnder(s"${big.t.tablePath}/.hoodie") > (5L << 20))
     val counts = sameJobsAtBothSizes(small, big)(
-      "fileSlicesDF" -> { w =>
-        val got = w.t.fileSlicesDF(None).select("path").collect().map(r => name(r.getString(0)))
+      "fileSlices base paths" -> { w =>
+        val got = w.t.fileSlices(None).map(s => name(s.basePath))
         assert(got.toSet == w.bases && got.length == w.bases.size)
       },
       "fileSlices" -> { w =>
@@ -140,9 +142,16 @@ class MetadataReplaySizeSpec extends SparkTestBase {
         val files = w.t.snapshotDataFiles(readOptimized = true)
         assert(files.map(f => name(f.physicalPath)).toSet == w.bases)
         assert(files.map(_.recordCount).sum == 600L)
+      },
+      "detail" -> { w =>
+        val d = w.t.detail().head
+        assert(d.getLong(5) == w.bases.size && d.getLong(6) > 0L)
       })
-    // the col_stats index is read on the driver, like the timeline
-    assert(counts.filter(_._1 == "snapshotDataFiles") == Seq(("snapshotDataFiles", 0, 0)))
+    // the col_stats index is read on the driver, like the timeline, and
+    // detail() sums the replayed slices there too
+    Seq("snapshotDataFiles", "detail").foreach { label =>
+      assert(counts.filter(_._1 == label) == Seq((label, 0, 0)))
+    }
     Seq(small, big).foreach { w =>
       val feed = w.t.changeFeed(w.created, w.t.latestInstant)
         .groupBy("_change_type").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -277,6 +286,17 @@ class MetadataReplaySizeSpec extends SparkTestBase {
       "changesAsDF" -> { w =>
         assert(w.t.changesAsDF(w.changesFrom, w.t.latestVersion).inputFiles.map(name).toSet ==
           w.changed)
+      },
+      "snapshotFileCount" -> { w =>
+        assert(w.t.snapshotFileCount() == w.files.size)
+      },
+      "detail" -> { w =>
+        val d = w.t.detail().head
+        assert(d.getLong(5) == w.files.size && d.getLong(6) > 0L)
+      },
+      "planningFacts" -> { w =>
+        // 400 written rows, 40 synthetic files of 10, 50 appended
+        assert(w.t.planningFacts().map(_._1).contains(850.0))
       })
     val launched = counts.filter { case (_, s, b) => s + b > 0 }
     assert(launched.isEmpty,

@@ -60,7 +60,7 @@ class MetadataTablesSpec extends SparkTestBase {
     val dd = td.detail().head
     assert(dd.getString(0) == "delta")
     assert(dd.getSeq[String](4) == Seq("o_orderstatus"))
-    assert(dd.getLong(5) == td.scan.files().count())
+    assert(dd.getLong(5) == td.scan.files().size)
     assert(dd.getLong(6) > 0L)
 
     val ti = IcebergTable.create(spark, s"$dir/i", orders, Seq("o_orderstatus"))

@@ -97,7 +97,7 @@ class DeltaCheckpointSpec extends SparkTestBase {
   }
 
   private def livePaths(t: DeltaTable): Set[String] =
-    t.log.snapshotFilesDF().select("path").collect().map(_.getString(0)).toSet
+    t.log.snapshotFiles().map(_.path).toSet
 
   /** Checkpoint shapes other writers emit, each a rewrite of this
     * engine's classic checkpoint: (label, table carries a DV, rewrite). */

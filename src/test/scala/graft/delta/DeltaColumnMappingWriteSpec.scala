@@ -52,8 +52,7 @@ class DeltaColumnMappingWriteSpec extends SparkTestBase {
       .withColumnRenamed("o_totalprice", "price")
     t.append(extra, Seq.empty)
     assert(t.toDF().count() == orders.count() + 10)
-    val newest = t.scan.files().orderBy(col("modificationTime").desc)
-      .select("path").head.getString(0)
+    val newest = t.scan.files().maxBy(_.modificationTime).path
     val filePath = if (newest.startsWith("/")) newest else s"$dir/t/$newest"
     assert(spark.read.parquet(filePath).schema.fieldNames.contains("o_totalprice"),
       "staged file must carry the physical name")
@@ -108,7 +107,7 @@ class DeltaColumnMappingWriteSpec extends SparkTestBase {
     t.append(extra, Seq.empty)
     assert(t.toDF().count() == orders.count() + 20)
     // partitionValues keyed by the physical name
-    val pv = t.scan.files().select("partitionValues").head.getMap[String, String](0)
+    val pv = t.scan.files().head.partitionValues
     assert(pv.keySet == Set("o_orderstatus"))
     // pruning through the scan builder still speaks the LOGICAL name
     val f = t.scan.partitionIn("status", Set("F")).toDF()

@@ -22,7 +22,7 @@ class DeltaDeleteSpec extends SparkTestBase {
     val v = t.delete(col("o_orderkey") % 10 === 0)
     assert(keys(t) == all.filterNot(_ % 10 == 0))
     // physical files unchanged (no rewrite), deletes live in the log
-    assert(t.scan.files().filter(col("deletionVector").isNotNull).count() > 0)
+    assert(t.scan.files().count(_.deletionVector.isDefined) > 0)
     // pre-delete version unaffected
     assert(t.toDF(versionAsOf = Some(v - 1)).count() == all.size)
   }
@@ -35,19 +35,19 @@ class DeltaDeleteSpec extends SparkTestBase {
     t.delete(col("o_orderkey") % 15 === 0) // overlaps at multiples of 30
     assert(keys(t) == all.filterNot(k => k % 10 == 0 || k % 15 == 0))
     // exactly one DV per live file (merged, not chained)
-    val dvs = t.scan.files().filter(col("deletionVector").isNotNull).count()
-    assert(dvs > 0 && dvs <= t.scan.files().count())
+    val dvs = t.scan.files().count(_.deletionVector.isDefined)
+    assert(dvs > 0 && dvs <= t.scan.files().size)
   }
 
   test("deleting every row of a file drops the file from the snapshot") {
     val dir = tmpDir("dv_gone")
     // partition by status so one partition = one file group we can empty
     val t = DeltaTable.create(spark, s"$dir/t", orders, Seq("o_orderstatus"))
-    val before = t.scan.files().count()
+    val before = t.scan.files().size
     t.delete(col("o_orderstatus") === "F")
-    assert(t.scan.files().count() < before)
+    assert(t.scan.files().size < before)
     assert(t.toDF().filter(col("o_orderstatus") === "F").count() == 0)
-    assert(t.scan.files().filter(col("deletionVector").isNotNull).count() == 0)
+    assert(t.scan.files().count(_.deletionVector.isDefined) == 0)
   }
 
   test("deleteMatching tombstones by key set; absent keys are no-ops") {
@@ -76,7 +76,7 @@ class DeltaDeleteSpec extends SparkTestBase {
     val v = t.purgeDeletes()
     assert(v.nonEmpty)
     assert(keys(t) == expect)
-    assert(t.scan.files().filter(col("deletionVector").isNotNull).count() == 0)
+    assert(t.scan.files().count(_.deletionVector.isDefined) == 0)
     assert(t.snapshotDataFiles().nonEmpty) // sync plane accepts again
     assert(t.purgeDeletes().isEmpty) // nothing left to purge
   }
@@ -90,7 +90,7 @@ class DeltaDeleteSpec extends SparkTestBase {
     t.log.expireLogBefore(v) // force replay through the checkpoint
     val reread = DeltaTable.forPath(spark, s"$dir/t")
     assert(keys(reread) == expect)
-    assert(reread.scan.files().filter(col("deletionVector").isNotNull).count() > 0)
+    assert(reread.scan.files().count(_.deletionVector.isDefined) > 0)
   }
 
   test("compaction of DV files does not resurrect deleted rows") {
@@ -100,7 +100,7 @@ class DeltaDeleteSpec extends SparkTestBase {
     val expect = keys(t)
     assert(t.compact(targetFileBytes = 1L << 30, smallFileBytes = 1L << 30).nonEmpty)
     assert(keys(t) == expect)
-    assert(t.scan.files().filter(col("deletionVector").isNotNull).count() == 0)
+    assert(t.scan.files().count(_.deletionVector.isDefined) == 0)
   }
 
   test("vacuum keeps referenced DV sidecars") {
@@ -229,11 +229,11 @@ class DeltaDeleteSpec extends SparkTestBase {
     // 8 range-clustered files → disjoint o_orderkey stats ranges
     val t = DeltaTable.create(spark, s"$dir/t",
       orders.repartitionByRange(8, col("o_orderkey")))
-    val files = t.scan.files().select("path").collect().map(_.getString(0))
+    val files = t.scan.files().map(_.path)
     assert(files.length >= 8)
     // physically delete the file holding the HIGHEST keys; its log entry
     // (and stats) stay — any scan touching it would fail loudly
-    val withMax = t.scan.files()
+    val withMax = t.filesDF()
       .select(col("path"), get_json_object(col("stats"), "$.maxValues.o_orderkey").cast("long").as("mx"))
       .orderBy(col("mx").desc).limit(1).collect()(0)
     val victim = new org.apache.hadoop.fs.Path(s"$dir/t", withMax.getString(0))
@@ -266,7 +266,7 @@ class DeltaDeleteSpec extends SparkTestBase {
       (1L to 100L).map(k => (Option(k), s"a$k")).toDF("k", "v").coalesce(1))
     t.append(((1000L to 1100L).map(k => (Option(k), s"b$k")) :+
       ((Option.empty[Long], "stale"))).toDF("k", "v").coalesce(1), Seq.empty)
-    assert(t.scan.files().count() == 2)
+    assert(t.scan.files().size == 2)
     t.upsert(Seq((Option(1L), "A1"), (Option.empty[Long], "fresh")).toDF("k", "v"), Seq("k"))
     val nullRows = t.toDF().filter(col("k").isNull).select("v")
       .collect().map(_.getString(0)).toSeq

@@ -39,7 +39,7 @@ class DeltaEscapedPartitionMutationSpec extends SparkTestBase {
     t.purgeDeletes()
     val purged = t.toDF().collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(purged == back, s"purge changed results: $purged")
-    assert(t.scan.files().filter(col("deletionVector").isNotNull).count() == 0)
+    assert(t.scan.files().count(_.deletionVector.isDefined) == 0)
   }
 
   test("CDF on escapable partitions records change rows readably") {

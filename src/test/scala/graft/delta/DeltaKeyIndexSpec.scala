@@ -22,8 +22,7 @@ class DeltaKeyIndexSpec extends SparkTestBase {
 
   /** Live data-file paths of the table (absolute). */
   private def liveFiles(t: DeltaTable, dir: String): Seq[String] =
-    t.log.snapshotFilesDF().select("path").collect()
-      .map(r => new Path(s"$dir/${r.getString(0)}").toString).toSeq
+    t.log.snapshotFiles().map(a => new Path(s"$dir/${a.path}").toString)
 
   /** Interleave keys across files: residue class by key so every file's
     * [min,max] spans the whole domain — range pruning keeps ALL files

@@ -157,8 +157,7 @@ class DeltaProtocolSpec extends SparkTestBase {
     val dir = tmpDir("proto_conflict")
     val t = DeltaTable.create(spark, s"$dir/t", orders.repartition(4))
     // the rewrite's stale view: all four files, no deletion vectors
-    val stale = t.log.snapshotFilesDF().select("path").collect()
-      .map(_.getString(0) -> (None: Option[DeletionVectorDescriptor])).toSeq
+    val stale = t.log.snapshotFiles().map(_.path -> (None: Option[DeletionVectorDescriptor]))
     val df = t.toDF()
     t.delete(col("o_orderkey") % 2 === 0) // racer lands: files now carry DVs
     val e = intercept[IllegalArgumentException](

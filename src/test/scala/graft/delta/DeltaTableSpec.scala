@@ -48,8 +48,8 @@ class DeltaTableSpec extends SparkTestBase {
     val dir = tmpDir("delta_prune")
     val src = spark.read.parquet(s"$sf0001/lineitem.parquet")
     val t = DeltaTable.create(spark, s"$dir/t", src, Seq("l_returnflag"))
-    val all = t.scan.files().count()
-    val pruned = t.scan.partitionIn("l_returnflag", Set("A")).files().count()
+    val all = t.scan.files().size
+    val pruned = t.scan.partitionIn("l_returnflag", Set("A")).files().size
     assert(pruned < all, s"expected pruning: $pruned < $all")
     val rows = t.scan.partitionIn("l_returnflag", Set("A")).toDF()
     assert(rows.count() == src.filter(col("l_returnflag") === "A").count())
@@ -60,8 +60,8 @@ class DeltaTableSpec extends SparkTestBase {
     val src = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .repartitionByRange(8, col("l_orderkey"))
     val t = DeltaTable.create(spark, s"$dir/t", src)
-    val all = t.scan.files().count()
-    val skipped = t.scan.range("l_orderkey", Some(1L), Some(100L)).files().count()
+    val all = t.scan.files().size
+    val skipped = t.scan.range("l_orderkey", Some(1L), Some(100L)).files().size
     assert(all == 8L, s"expected 8 range files, got $all")
     assert(skipped < all, s"expected skipping: $skipped < $all")
     val rows = t.scan.range("l_orderkey", Some(1L), Some(100L)).toDF()
@@ -134,7 +134,7 @@ class DeltaTableSpec extends SparkTestBase {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles")
     }
     withPartFilter.count()
-    assert(filesRead.exists(_.value < t.scan.files().count()),
+    assert(filesRead.exists(_.value < t.scan.files().size),
       s"partition filter did not prune files: ${filesRead.map(_.value)}")
   }
 
@@ -250,7 +250,7 @@ class DeltaTableSpec extends SparkTestBase {
     assert(back.select(sum(col("id"))).head.getLong(0) == (0L until 100L).sum)
     assert(back.select(sum(col("payload.inner"))).head.getLong(0) == 2L * (0L until 100L).sum)
     // stats skipping translates the logical predicate to physical keys
-    val pruned = t.scan.range("id", Some(75L), Some(80L)).files().count()
+    val pruned = t.scan.range("id", Some(75L), Some(80L)).files().size
     assert(pruned == 1, s"expected 1 surviving file, got $pruned")
     assert(t.scan.range("id", Some(75L), Some(80L)).toDF()
       .filter(col("id").between(75, 80)).count() == 6)

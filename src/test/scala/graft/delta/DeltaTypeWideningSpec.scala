@@ -20,11 +20,11 @@ class DeltaTypeWideningSpec extends SparkTestBase {
     val dir = tmpDir("widen_basic")
     val t = DeltaTable.create(spark, s"$dir/t", items.repartition(2))
     val before = t.toDF().count()
-    val filesBefore = t.log.snapshotFilesDF().select("path").collect().map(_.getString(0)).sorted
+    val filesBefore = t.log.snapshotFiles().map(_.path).sorted
     val v = t.widenColumn("l_linenumber", LongType)
     assert(v == 1L)
     // no data moved
-    val filesAfter = t.log.snapshotFilesDF().select("path").collect().map(_.getString(0)).sorted
+    val filesAfter = t.log.snapshotFiles().map(_.path).sorted
     assert(filesAfter.sameElements(filesBefore))
     val (schema, _) = t.schemaAt(None)
     assert(schema("l_linenumber").dataType == LongType)

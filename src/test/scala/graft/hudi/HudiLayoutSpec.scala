@@ -30,11 +30,33 @@ class HudiLayoutSpec extends SparkTestBase {
     val back = t.toDF()
     assert(back.except(src).isEmpty && src.except(back).isEmpty)
     // partition pruning prunes the manifest and keeps rows exact
-    val all = t.scan.files().count()
-    val pruned = t.scan.partitionIn("l_returnflag", Set("A")).files().count()
+    val all = t.scan.files().size
+    val pruned = t.scan.partitionIn("l_returnflag", Set("A")).files().size
     assert(pruned < all, s"expected pruning: $pruned < $all")
     val rows = t.scan.partitionIn("l_returnflag", Set("A")).toDF()
     assert(rows.count() == src.filter(col("l_returnflag") === "A").count())
+  }
+
+  test("partitionIn on a null or missing partition value selects it only when null is wanted") {
+    val dir = tmpDir("hudi_null_part")
+    val src = spark.range(0, 9).select(col("id"),
+      when(col("id") % 3 === 0, lit(null).cast("string"))
+        .otherwise(when(col("id") % 3 === 1, lit("a")).otherwise(lit("b"))).as("k"))
+    val t = HudiTable.create(spark, s"$dir/t", src.repartition(1), Seq("k"))
+    // a write stat outside every partition dir: its `k` is missing
+    assert(t.timeline.commit(HudiInstant(t.timeline.nextInstantTime(), "commit"),
+      HudiCommitMetadata(Map("" -> Seq(HudiWriteStat("loose", "loose.parquet", "null", 1L, 10L))),
+        Map.empty, Map.empty, "INSERT")))
+    val all = t.fileSlices()
+    val byValue = all.groupBy(s =>
+      HudiTable.parsePartitionPath(s.partitionPath, Seq("k")).get("k").map(Option(_)))
+    // one slice per value: a, b, null, and the loose one with no value
+    assert(byValue.keySet == Set(Some(Some("a")), Some(Some("b")), Some(None), None))
+    def picked(vs: Set[String]) = t.scan.partitionIn("k", vs).files().map(_.basePath).toSet
+    def pathsOf(keys: Option[Option[String]]*) = keys.flatMap(byValue(_)).map(_.basePath).toSet
+    assert(picked(Set("a")) == pathsOf(Some(Some("a"))))
+    assert(picked(Set("a", null)) == pathsOf(Some(Some("a")), Some(None), None))
+    assert(picked(Set(null)) == pathsOf(Some(None), None))
   }
 
   test("non-hive layout: appends inherit the layout; multi-field paths parse positionally") {
@@ -152,7 +174,7 @@ class HudiLayoutSpec extends SparkTestBase {
       Set("2023/10/05", "2023/11/07"))
     // pruning on the RAW wanted value: the plan-side filter decodes the
     // positional segments, so unescaped foreign paths match exactly
-    assert(ft.scan.partitionIn("dt", Set("2023/10/05")).files().count() == 1)
+    assert(ft.scan.partitionIn("dt", Set("2023/10/05")).files().size == 1)
     assert(ft.scan.partitionIn("dt", Set("2023/10/05")).toDF().count() == 2)
     assert(ft.scan.partitionIn("dt", Set("2023/11/07")).toDF().count() == 1)
 

@@ -192,9 +192,9 @@ class HudiMetadataTableSpec extends SparkTestBase {
     val t = HudiTable.create(spark, s"$dir/t",
       src.repartitionByRange(4, col("o_orderkey")).sortWithinPartitions("o_orderkey"))
     val expected = src.filter(col("o_orderkey") <= lit(100)).count()
-    val allFiles = t.scan.files().count()
+    val allFiles = t.scan.files().size
     def prunedScan() = t.scan.range("o_orderkey", None, Some(100L))
-    val filesSidecar = prunedScan().files().count()
+    val filesSidecar = prunedScan().files().size
     val rowsSidecar = prunedScan().toDF().filter(col("o_orderkey") <= 100).count()
     assert(filesSidecar < allFiles, s"expected file skipping: $filesSidecar < $allFiles")
     // remove the parquet sidecar: the scan must fall back to the
@@ -202,7 +202,7 @@ class HudiMetadataTableSpec extends SparkTestBase {
     val f = fs(s"$dir/t")
     f.listStatus(HudiColStats.dir(s"$dir/t")).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).foreach(p => f.delete(p, false))
-    val filesMeta = prunedScan().files().count()
+    val filesMeta = prunedScan().files().size
     val rowsMeta = prunedScan().toDF().filter(col("o_orderkey") <= 100).count()
     assert(filesMeta == filesSidecar, "either index must prune the same files")
     assert(rowsSidecar == expected && rowsMeta == expected)

@@ -51,8 +51,8 @@ class HudiTableSpec extends SparkTestBase {
     val dir = tmpDir("hudi_prune")
     val src = spark.read.parquet(s"$sf0001/lineitem.parquet")
     val t = HudiTable.create(spark, s"$dir/t", src, Seq("l_returnflag"))
-    val all = t.scan.files().count()
-    val pruned = t.scan.partitionIn("l_returnflag", Set("A")).files().count()
+    val all = t.scan.files().size
+    val pruned = t.scan.partitionIn("l_returnflag", Set("A")).files().size
     assert(pruned < all, s"expected pruning: $pruned < $all")
     val rows = t.scan.partitionIn("l_returnflag", Set("A")).toDF()
     assert(rows.count() == src.filter(col("l_returnflag") === "A").count())
@@ -76,11 +76,11 @@ class HudiTableSpec extends SparkTestBase {
     val dir = tmpDir("hudi_naming")
     val src = spark.read.parquet(s"$sf0001/region.parquet")
     val t = HudiTable.create(spark, s"$dir/t", src)
-    val files = t.fileSlicesDF().select("path", "fileId", "instant").collect()
+    val files = t.fileSlices()
     assert(files.nonEmpty)
-    files.foreach { r =>
-      val name = r.getString(0).split("/").last
-      assert(name == s"${r.getString(1)}_0-0-0_${r.getString(2)}.parquet", name)
+    files.foreach { s =>
+      val name = s.basePath.split("/").last
+      assert(name == s"${s.fileId}_0-0-0_${s.baseInstant}.parquet", name)
     }
   }
 
@@ -186,8 +186,8 @@ class HudiTableSpec extends SparkTestBase {
     // every commit instant has an index file
     assert(HudiColStats.coveredInstants(spark, s"$dir/t", t.instants) == t.instants)
     // range scan drops files the index proves out of range
-    val all = t.scan.files().count()
-    val pruned = t.scan.range("l_orderkey", Some(1L), Some(100L)).files().count()
+    val all = t.scan.files().size
+    val pruned = t.scan.range("l_orderkey", Some(1L), Some(100L)).files().size
     assert(pruned < all, s"expected skipping: $pruned < $all")
     val rows = t.scan.range("l_orderkey", Some(1L), Some(100L)).toDF()
       .filter(col("l_orderkey").between(1, 100))
@@ -248,8 +248,8 @@ class HudiTableSpec extends SparkTestBase {
     SyncEngine.sync(SyncEngine.deltaSource(d), SyncEngine.hudiTarget(spark, s"$dir/tgt_hudi"))
     val t = HudiTable.forPath(spark, s"$dir/tgt_hudi")
     // the delta source's stats landed in the target's index and prune scans
-    val all = t.scan.files().count()
-    val pruned = t.scan.range("o_orderkey", Some(1L), Some(50L)).files().count()
+    val all = t.scan.files().size
+    val pruned = t.scan.range("o_orderkey", Some(1L), Some(50L)).files().size
     assert(pruned < all, s"expected skipping on the sync target: $pruned < $all")
     val rows = t.scan.range("o_orderkey", Some(1L), Some(50L)).toDF()
       .filter(col("o_orderkey").between(1, 50))

@@ -69,12 +69,12 @@ class NestedWidenSpec extends SparkTestBase {
   test("delta: nested widens are metadata-only, stamp the right anchor, and read exactly") {
     val dir = tmpDir("nested_widen_delta")
     val t = DeltaTable.create(spark, s"$dir/t", nestedDf(0))
-    val filesBefore = t.log.snapshotFilesDF().select("path").collect().map(_.getString(0)).sorted
+    val filesBefore = t.log.snapshotFiles().map(_.path).sorted
     t.widenColumn("s.x", LongType)
     t.widenColumn("arr.element", LongType)
     t.widenColumn("m.value", DoubleType)
     t.widenColumn("aos.element.q", LongType)
-    assert(t.log.snapshotFilesDF().select("path").collect().map(_.getString(0)).sorted
+    assert(t.log.snapshotFiles().map(_.path).sorted
       .sameElements(filesBefore)) // zero data rewrite
     val schema = t.schemaAt(None)._1
     // nested struct field: history on the field ITSELF, no fieldPath

@@ -3,7 +3,7 @@ package graft.model
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.delta.DeltaTable
+import graft.delta.{AddFile, DeltaTable}
 import graft.iceberg.IcebergTable
 import graft.sync.SyncEngine
 
@@ -61,10 +61,10 @@ class PartitionTransformSpec extends SparkTestBase {
     // full read round-trips
     assert(t.toDF().count() == o.count())
     // range on the SOURCE column prunes partitions
-    val all = t.scan.files().count()
+    val all = t.scan.files().size
     val pruned = t.scan
       .range("o_orderdate", Some("1995-06-01 00:00:00"), Some("1995-08-31 23:59:59"))
-      .files().count()
+      .files().size
     assert(pruned < all)
     val expected = o.filter(col("o_orderdate").between("1995-06-01", "1995-08-31 23:59:59"))
     val got = t.scan
@@ -74,6 +74,41 @@ class PartitionTransformSpec extends SparkTestBase {
     // append without repeating the spec inherits it
     t.append(o.limit(10), Seq.empty)
     assert(t.schemaAt(None)._2 == Seq("o_orderdate_month"))
+  }
+
+  test("Delta scan: null or missing partition values under partitionIn and time ranges; chunks") {
+    val dir = tmpDir("delta_null_part")
+    val o = spark.read.parquet(s"$sf0001/orders.parquet")
+      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderstatus"))
+    val t = DeltaTable.create(spark, s"$dir/t", o.repartition(2),
+      Seq("month(o_orderdate)", "o_orderstatus"))
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    // chunk k of n holds the files at positions k, k + n, ... of the
+    // path-sorted manifest, so the chunks partition it
+    val sorted = t.log.snapshotFiles().map(_.path).sorted.map(name)
+    assert(sorted.size > 3)
+    (0 until 3).foreach { k =>
+      assert(t.scan.chunk(k, 3).toDF().inputFiles.map(name).toSet ==
+        sorted.zipWithIndex.collect { case (n, i) if i % 3 == k => n }.toSet)
+    }
+    // files whose partition values are null, or missing from the map
+    val real = t.log.snapshotFiles()
+    val nulls = AddFile("nulls.parquet",
+      Map("o_orderdate_month" -> null, "o_orderstatus" -> null), 10L, 0L, dataChange = true)
+    val missing = AddFile("missing.parquet", Map.empty, 10L, 0L, dataChange = true)
+    assert(t.log.commit(t.latestVersion + 1, Seq(nulls, missing)))
+    def paths(b: graft.delta.DeltaScanBuilder) = b.files().map(_.path).toSet
+    val statusF = real.filter(_.partitionValues("o_orderstatus") == "F").map(_.path).toSet
+    assert(statusF.nonEmpty)
+    // partitionIn never selects a null or missing value, even when asked for null
+    assert(paths(t.scan.partitionIn("o_orderstatus", Set("F"))) == statusF)
+    assert(paths(t.scan.partitionIn("o_orderstatus", Set("F", null))) == statusF)
+    // a time-transform bound keeps them: nothing proves they fall outside
+    val summer = real.filter(a => Set("1995-06", "1995-07", "1995-08")(
+      a.partitionValues("o_orderdate_month"))).map(_.path).toSet
+    assert(summer.nonEmpty && summer.size < real.size)
+    assert(paths(t.scan.range("o_orderdate", Some("1995-06-01"), Some("1995-08-31"))) ==
+      summer ++ Set(nulls.path, missing.path))
   }
 
   test("Iceberg hidden month partitioning: source column intact, ordinal prune") {

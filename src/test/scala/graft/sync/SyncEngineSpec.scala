@@ -114,8 +114,8 @@ class SyncEngineSpec extends SparkTestBase {
     val tgt = DeltaTable.forPath(spark, s"$dir/tgt")
     assert(checksum(tgt.toDF()) == checksum(src.toDF()))
     // translated stats (not recomputed) must still prune files
-    val all = tgt.scan.files().count()
-    val pruned = tgt.scan.range("o_orderkey", Some(1L), Some(8L)).files().count()
+    val all = tgt.scan.files().size
+    val pruned = tgt.scan.range("o_orderkey", Some(1L), Some(8L)).files().size
     assert(pruned < all)
   }
 
@@ -226,8 +226,8 @@ class SyncEngineSpec extends SparkTestBase {
     val month = o.filter(date_format(col("o_orderdate"), "yyyy-MM") === "1996-03")
     val pruned = tgt.scan.partitionIn("o_orderdate_month", Set("1996-03")).toDF()
     assert(pruned.count() == month.count())
-    assert(tgt.scan.partitionIn("o_orderdate_month", Set("1996-03")).files().count() <
-      tgt.scan.files().count())
+    assert(tgt.scan.partitionIn("o_orderdate_month", Set("1996-03")).files().size <
+      tgt.scan.files().size)
   }
 
   test("snapshot expiry trips the retention fence: next sync is full, not a broken replay") {

@@ -93,4 +93,25 @@ class MetaFilesSpec extends AnyFunSuite {
     assert(hits.isEmpty, "read and write these metadata files through MetaFiles:\n" +
       hits.mkString("\n"))
   }
+
+  test("live-file lists stay Seqs: no DataFrame twin, and DeltaLog frames only its checkpoint") {
+    val sources = Files.walk(srcMain).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    // the deleted names, assembled so a grep of the tree finds no use of them
+    val twins = sourceHits(sources, Seq("snapshotFiles", "fileSlices").map(_ + "DF"): _*)
+    assert(twins.isEmpty, "read live files through DeltaLog.snapshotFiles or " +
+      "HudiTable.fileSlices:\n" + twins.mkString("\n"))
+    // the checkpoint writer's one frame is built in checkpointAddsDF
+    val deltaLog = srcMain.resolve("scala/graft/delta/DeltaLog.scala")
+    val lines = Files.readAllLines(deltaLog).asScala.toSeq
+    val start = lines.indexWhere(_.contains("def checkpointAddsDF"))
+    val end = lines.indexWhere(_.contains(" def "), start + 1)
+    assert(start >= 0 && end > start, s"no checkpointAddsDF in $deltaLog")
+    val frames = lines.zipWithIndex.collect {
+      case (l, i) if l.contains("createDataFrame") && (i < start || i >= end) =>
+        s"$deltaLog:${i + 1}: ${l.trim}"
+    }
+    assert(frames.isEmpty, "DeltaLog builds a DataFrame only for the checkpoint write:\n" +
+      frames.mkString("\n"))
+  }
 }
