@@ -90,13 +90,11 @@ object DeltaKeyIndex {
   }
 
   private def writeConfig(fs: FileSystem, tablePath: String, cfg: Config): Unit = {
-    val out = fs.create(configPath(tablePath), true)
     val extras = cfg.keyType.map(t => s""","keyType":"$t"""").getOrElse("") +
       cfg.timeZone.map(z => s""","timeZone":"$z"""").getOrElse("")
-    try out.write(
+    graft.util.MetaFiles.replace(fs, configPath(tablePath),
       s"""{"keyCol":"${cfg.keyCol}","buildVersion":${cfg.buildVersion}$extras}"""
         .getBytes(StandardCharsets.UTF_8))
-    finally out.close()
   }
 
   /** (version, batch dir) for every committed batch, version-sorted. */

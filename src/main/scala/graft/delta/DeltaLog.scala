@@ -22,12 +22,15 @@ import scala.jdk.CollectionConverters._
  * (ref `core/.../delta/DeltaClient.java:248-264`); we speak the log
  * format directly.
  *
- * Read side: log replay is the classic "last action per path wins"
- * reconciliation (ref `DeltaDataFileExtractor.java:54-114` delegates to
- * DeltaLog.snapshot), one fold on the driver at every log shape: the
- * checkpoint's parquet parts are read in-process with parquet-hadoop,
- * then the JSON tail folds on top. No metadata read launches a Spark
- * job; driver memory grows with the live-file count.
+ * Read side: [[snapshot]] resolves one version into a [[DeltaSnapshot]]
+ * (version, metadata, protocol, live files) from one listing of the log,
+ * reading each JSON commit after the checkpoint at most once. Log replay
+ * is the classic "last action per path wins" reconciliation (ref
+ * `DeltaDataFileExtractor.java:54-114` delegates to DeltaLog.snapshot),
+ * one fold on the driver at every log shape: the checkpoint's parquet
+ * parts are read in-process with parquet-hadoop, then the JSON tail
+ * folds on top. No metadata read launches a Spark job; driver memory
+ * grows with the live-file count.
  */
 final class DeltaLog(val tablePath: String, spark: SparkSession) {
 
@@ -35,18 +38,18 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
   private def hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = logPath.getFileSystem(hconf)
 
-  def version(fileName: String): Long = fileName.stripSuffix(".json").toLong
   private def commitFile(v: Long): Path = new Path(logPath, f"$v%020d.json")
 
+  /** File names in `_delta_log`, from one listing (none when absent). */
+  private def listNames(): Seq[String] =
+    try fs.listStatus(logPath).toSeq.map(_.getPath.getName)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  private def versionsIn(names: Seq[String]): Seq[Long] =
+    names.collect { case DeltaLog.CommitName(v) => v.toLong }.sorted
+
   /** Sorted list of committed versions. */
-  def listVersions(): Seq[Long] = {
-    if (!fs.exists(logPath)) return Seq.empty
-    fs.listStatus(logPath).toSeq
-      .map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.json"))
-      .map(version)
-      .sorted
-  }
+  def listVersions(): Seq[Long] = versionsIn(listNames())
 
   def latestVersion(): Option[Long] = listVersions().lastOption
 
@@ -57,9 +60,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     Iterator.iterate(v + 1)(_ + 1).takeWhile(x => fs.exists(commitFile(x))).toSeq
 
   /** Driver-side read of a single commit's actions (metadata-sized). */
-  def readActions(v: Long): Seq[DeltaAction] =
-    MetaFiles.readUtf8(fs, commitFile(v)).split("\n").filter(_.nonEmpty).toSeq
-      .flatMap(DeltaActionCodec.fromJsonLine)
+  def readActions(v: Long): Seq[DeltaAction] = DeltaLog.actionsOf(commitText(v))
+
+  private[delta] def commitText(v: Long): String = MetaFiles.readUtf8(fs, commitFile(v))
 
   /**
    * Atomically commit actions as the given version. Returns false only
@@ -116,11 +119,10 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
   def lastCheckpoint(): Option[Long] = lastCheckpointNode().map(_._1)
 
   private def lastCheckpointNode(): Option[(Long, Option[Int])] = {
-    // torn-read safe: the writer publishes via tmp + rename, so the
-    // file is either absent or complete. Absence (including the
-    // delete→rename gap of a concurrent publish) and any residual tear
-    // on filesystems without atomic rename degrade to None — full JSON
-    // replay, slower but never wrong.
+    // torn-read safe: the writer replaces the file whole
+    // (MetaFiles.replace), so it is either absent or complete. Absence
+    // and any residual tear on filesystems without atomic rename
+    // degrade to None — full JSON replay, slower but never wrong.
     try {
       val node = mapper.readTree(MetaFiles.readUtf8(fs, lastCheckpointPath))
       Option(node.get("version")).map(v =>
@@ -131,25 +133,24 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     }
   }
 
-  /** Discover the newest checkpoint at or before `asOf` and its layout.
-    * `parts` in `_last_checkpoint` names a multi-part checkpoint; else a
-    * classic single file; else a V2 top-level file found by pattern
-    * (smallest unique-suffix name wins, deterministically). */
-  private[delta] def resolveCheckpoint(asOf: Option[Long]): Option[DeltaLog.Checkpoint] =
-    lastCheckpointNode().filter { case (v, _) => asOf.forall(v <= _) }.map {
+  /** The newest checkpoint at or before `asOf` and its layout, found in
+    * the log's `names`. `parts` in `_last_checkpoint` (`node`) names a
+    * multi-part checkpoint; else a classic single file; else a V2
+    * top-level file (smallest unique-suffix name wins, deterministically). */
+  private def resolveCheckpoint(node: Option[(Long, Option[Int])], asOf: Option[Long],
+      names: Set[String]): Option[DeltaLog.Checkpoint] =
+    node.filter { case (v, _) => asOf.forall(v <= _) }.map {
       case (v, Some(parts)) if parts > 1 => DeltaLog.MultiPartCheckpoint(v, parts)
-      case (v, _) if fs.exists(checkpointFile(v)) => DeltaLog.ClassicCheckpoint(v)
+      case (v, _) if names(checkpointFile(v).getName) => DeltaLog.ClassicCheckpoint(v)
       // a multi-part write can land as a single part on a small table
-      case (v, Some(1)) if fs.exists(multiPartFile(v, 1, 1)) =>
+      case (v, Some(1)) if names(multiPartFile(v, 1, 1).getName) =>
         DeltaLog.MultiPartCheckpoint(v, 1)
       case (v, _) =>
         val pattern = (f"$v%020d" + "\\.checkpoint\\.[^.]+\\.(json|parquet)").r
-        val tops = fs.listStatus(logPath).toSeq.map(_.getPath)
-          .filter(p => pattern.pattern.matcher(p.getName).matches())
-          .sortBy(_.getName)
+        val tops = names.toSeq.filter(n => pattern.pattern.matcher(n).matches()).sorted
         require(tops.nonEmpty,
           s"_last_checkpoint names v$v but no checkpoint file for it exists in $logPath")
-        DeltaLog.V2Checkpoint(v, tops.head)
+        DeltaLog.V2Checkpoint(v, new Path(logPath, tops.head))
     }
 
   /** Parquet file set of a checkpoint's FILE actions (V2: the sidecars,
@@ -184,7 +185,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     * them as rows in (any part of) the checkpoint parquet. A published
     * checkpoint never changes, so the last one's header is kept and a
     * lookup against it reads no parquet. */
-  private def checkpointHeader(ck: DeltaLog.Checkpoint): (Option[DeltaMetadata], Option[Protocol]) =
+  private[delta] def checkpointHeader(ck: DeltaLog.Checkpoint): (Option[DeltaMetadata], Option[Protocol]) =
     lastHeader.collect { case (`ck`, header) => header }.getOrElse {
       val actions: Seq[DeltaAction] = ck match {
         case DeltaLog.V2Checkpoint(_, top) if top.getName.endsWith(".json") =>
@@ -233,8 +234,8 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
   /** The reconciled adds at `v` as checkpoint-shaped `add` structs, and
     * how many there are: the one frame built from the live-file list,
     * so the checkpoint stays a Spark parquet write. */
-  private def checkpointAddsDF(v: Long): (DataFrame, Long) = {
-    val rows = snapshotFiles(Some(v)).map { a =>
+  private def checkpointAddsDF(s: DeltaSnapshot): (DataFrame, Long) = {
+    val rows = s.files.map { a =>
       Row(Row(a.path, a.partitionValues, a.size, a.modificationTime, true, a.stats.orNull,
         a.deletionVector.map(d => Row(d.storageType, d.pathOrInlineDv,
           d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull))
@@ -242,10 +243,10 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     (spark.createDataFrame(rows.asJava, StructType(Seq(actionSchema("add")))), rows.size.toLong)
   }
 
-  /** One row carrying the metaData + protocol of the snapshot at `v`. */
-  private def headerRowDF(v: Long): DataFrame = {
-    val (meta, _) = metadataAt(Some(v))
-    val protoRow = protocolAt(Some(v))
+  /** One row carrying the metaData + protocol of `s`. */
+  private def headerRowDF(s: DeltaSnapshot): DataFrame = {
+    val meta = s.metadata
+    val protoRow = s.protocol
     spark.range(1).select(
       lit(null).cast(actionSchema("add").dataType).as("add"),
       struct(
@@ -270,7 +271,8 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     * from under readers here); replay ordering stays correct because
     * post-checkpoint removes outrank checkpoint adds by version. */
   def writeCheckpoint(v: Long, parts: Int = 1): Unit = {
-    val (addsDF, addCount) = checkpointAddsDF(v)
+    val snap = snapshot(Some(v))
+    val (addsDF, addCount) = checkpointAddsDF(snap)
     val adds = addsDF.select(
       col("add"),
       lit(null).cast(metaSchema).as("metaData"),
@@ -278,7 +280,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     val staging = new Path(logPath, s".cp-staging-${java.util.UUID.randomUUID()}")
     // the spec's `size` is the number of ACTIONS in the checkpoint, not
     // the part-file count — foreign readers use it for sanity checks
-    adds.unionByName(headerRowDF(v)).repartition(math.max(1, parts))
+    adds.unionByName(headerRowDF(snap)).repartition(math.max(1, parts))
       .write.parquet(staging.toString)
     val written = fs.listStatus(staging).map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -312,7 +314,8 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
    */
   def writeCheckpointV2(v: Long, sidecarParts: Int = 1): Unit = {
     val staging = new Path(logPath, s".cp-staging-${java.util.UUID.randomUUID()}")
-    val (addsDF, addCount) = checkpointAddsDF(v)
+    val snap = snapshot(Some(v))
+    val (addsDF, addCount) = checkpointAddsDF(snap)
     addsDF
       .select(col("add"), lit(null).cast(actionSchema("remove").dataType).as("remove"))
       .repartition(math.max(1, sidecarParts))
@@ -326,11 +329,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
         dest
       }.toSeq
     fs.delete(staging, true)
-    val (meta, _) = metadataAt(Some(v))
-    val protoRow = protocolAt(Some(v))
     val lines = Seq(
-      DeltaActionCodec.toJsonLine(protoRow),
-      DeltaActionCodec.toJsonLine(meta),
+      DeltaActionCodec.toJsonLine(snap.protocol),
+      DeltaActionCodec.toJsonLine(snap.metadata),
       s"""{"checkpointMetadata":{"version":$v,"tags":{}}}""") ++
       sidecars.map { p =>
         val st = fs.getFileStatus(p)
@@ -352,19 +353,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     writeLastCheckpoint(s"""{"version":$v,"size":${addCount + 3 + sidecars.size}}""")
   }
 
-  private def writeLastCheckpoint(json: String): Unit = {
-    // never create() in place: a concurrent reader would see a torn or
-    // empty file. Stage fully, then delete+rename — readers observe
-    // either the old pointer, a brief absence (→ JSON replay), or the
-    // new pointer, all of which replay correctly.
-    val tmp = new Path(logPath, s".last_checkpoint-${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, /*overwrite=*/ true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(lastCheckpointPath, false)
-    require(fs.rename(tmp, lastCheckpointPath),
-      s"failed to publish _last_checkpoint in $logPath")
-  }
+  /** Readers see the old pointer or the new one, never a torn file. */
+  private def writeLastCheckpoint(json: String): Unit =
+    MetaFiles.replace(fs, lastCheckpointPath, json.getBytes(StandardCharsets.UTF_8))
 
   /** Delete JSON commits strictly before `version` — log retention
     * cleanup (ref `core/.../delta/DeltaClient.java:265-275`). Refuses to
@@ -379,58 +370,47 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     victims.size
   }
 
-  /** First action matching `pf` in commit `v`, decoding ONLY lines that
-    * carry the top-level `marker` key (substring pre-filter): a sync
-    * commit holds one metaData line among thousands of addFile lines,
-    * and replaying the whole file through Jackson per metadata lookup
-    * made the 100-commit LoadTest shape quadratic in adds. A stats
-    * string that happens to contain the marker decodes to its REAL
-    * action and the partial function skips it — semantics unchanged. */
+  /** First action matching `pf` in commit `v` (see [[DeltaLog.firstAction]]). */
   private[delta] def readFirstAction[A](v: Long, marker: String)(
       pf: PartialFunction[DeltaAction, A]): Option[A] =
-    MetaFiles.readUtf8(fs, commitFile(v)).split("\n").iterator.filter(_.contains(marker))
-      .flatMap(DeltaActionCodec.fromJsonLine).collectFirst(pf)
-
-  /** Latest metadata at or before `asOf`, and the version it was read at. */
-  def metadataAt(asOf: Option[Long]): (DeltaMetadata, Long) = {
-    val versions = listVersions()
-    val ck = resolveCheckpoint(asOf)
-    val cp = ck.map(_.version)
-    require(versions.nonEmpty || cp.nonEmpty,
-      s"not a Delta table (no _delta_log): $tablePath")
-    val upTo = asOf.map(a => versions.filter(_ <= a)).getOrElse(versions)
-    require(upTo.nonEmpty || cp.nonEmpty,
-      s"no commit at or before version ${asOf.get} in $tablePath")
-    // scan post-checkpoint JSON newest-to-oldest; fall back to the
-    // checkpoint's metaData row (pre-checkpoint JSON may be cleaned up)
-    val tail = upTo.filter(v => cp.forall(v > _))
-    val fromJson = tail.reverse.iterator
-      .map(v => readFirstAction(v, "\"metaData\"") { case m: DeltaMetadata => m })
-      .collectFirst { case Some(m) => m }
-    val meta = fromJson.orElse(ck.flatMap(c => checkpointHeader(c)._1))
-    (meta.getOrElse(throw new IllegalStateException(s"no metaData action in $tablePath")),
-      (upTo ++ cp).max)
-  }
+    DeltaLog.firstAction(commitText(v), marker)(pf)
 
   /**
-   * Protocol in effect at or before `asOf`, replayed like `metadataAt`:
-   * newest Protocol action in the post-checkpoint JSON tail, else the
-   * checkpoint's protocol row, else the spec default (1, 2). Reading
-   * version 0 alone is wrong twice over — v0 always carries the default
-   * protocol even after a table-features upgrade, and log expiry can
-   * delete the v0 JSON entirely.
+   * The table at `asOf` (default: latest) as one value. `_last_checkpoint`
+   * is read first, then `_delta_log` is listed once; the checkpoint's
+   * layout is found in that listing. The snapshot reads each JSON commit
+   * after the checkpoint at most once, when its metadata, protocol, files
+   * or a commit's actions first need it, so one operation sees one
+   * version. Nothing is kept across calls: the next call sees newer
+   * commits.
    */
-  def protocolAt(asOf: Option[Long]): Protocol = {
-    val versions = listVersions()
-    val ck = resolveCheckpoint(asOf)
-    val cp = ck.map(_.version)
-    val upTo = asOf.map(a => versions.filter(_ <= a)).getOrElse(versions)
-    val tail = upTo.filter(v => cp.forall(v > _))
-    val fromJson = tail.reverse.iterator
-      .map(v => readFirstAction(v, "\"protocol\"") { case p: Protocol => p })
-      .collectFirst { case Some(p) => p }
-    fromJson.orElse(ck.flatMap(c => checkpointHeader(c)._2)).getOrElse(Protocol())
+  def snapshot(asOf: Option[Long] = None): DeltaSnapshot = {
+    val s = resolve(asOf)
+    require(s.nonEmpty, s"not a Delta table (no _delta_log): $tablePath")
+    s.get
   }
+
+  /** The latest snapshot, or None while the log holds no commit. */
+  def latestSnapshot(): Option[DeltaSnapshot] = resolve(None)
+
+  private def resolve(asOf: Option[Long]): Option[DeltaSnapshot] = {
+    val node = lastCheckpointNode()
+    val names = listNames()
+    val versions = versionsIn(names)
+    val ck = resolveCheckpoint(node, asOf, names.toSet)
+    val cp = ck.map(_.version)
+    if (versions.isEmpty && cp.isEmpty) None
+    else {
+      val upTo = asOf.map(a => versions.filter(_ <= a)).getOrElse(versions)
+      require(upTo.nonEmpty || cp.nonEmpty,
+        s"no commit at or before version ${asOf.get} in $tablePath")
+      Some(new DeltaSnapshot(this, (upTo ++ cp).max, upTo, ck))
+    }
+  }
+
+  /** Adds of a checkpoint's file parts, read on the driver. */
+  private[delta] def checkpointAdds(ck: DeltaLog.Checkpoint): Seq[AddFile] =
+    MetaFiles.parquetRows(hconf, checkpointDataFiles(ck), DeltaLog.AddColumns)(DeltaLog.addOf)
 
   /** Commit timestamps (from commitInfo, fallback file mtime) per version. */
   def commitTimestamps(): Seq[(Long, Long)] =
@@ -461,59 +441,29 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
       StructField("path", StringType),
       StructField("deletionTimestamp", LongType),
       StructField("dataChange", BooleanType))))))
-
-  /**
-   * Live files at `asOf` (default: latest), replayed on the driver and
-   * sorted by path. The checkpoint's adds (if one applies) seed the
-   * state at its version and the JSON tail folds on top: per path the
-   * newest action wins, and within one version the add outranks the
-   * remove of the same path — a row-level DELETE rewrites a file's entry
-   * as remove(old DV) + add(new DV) in a single commit, and the add is
-   * the live state. Checkpoint tombstones (`remove` rows) are not read.
-   */
-  def snapshotFiles(asOf: Option[Long] = None): Seq[AddFile] = {
-    val ck = resolveCheckpoint(asOf)
-    val commits = listVersions().filter(v => asOf.forall(v <= _) && ck.forall(v > _.version))
-    require(commits.nonEmpty || ck.nonEmpty, s"not a Delta table: $tablePath")
-    val state = scala.collection.mutable.HashMap[String, (Long, Boolean, AddFile)]()
-    ck.foreach { c =>
-      MetaFiles.parquetRows(hconf, checkpointDataFiles(c), DeltaLog.AddColumns)(DeltaLog.addOf)
-        .foreach(a => state(a.path) = (c.version, true, a))
-    }
-    commits.foreach { v =>
-      readActions(v).foreach {
-        case a: AddFile =>
-          val cur = state.get(a.path)
-          if (cur.forall(c => v > c._1 || (v == c._1 && !c._2)))
-            state(a.path) = (v, true, a)
-        case r: RemoveFile =>
-          if (state.get(r.path).forall(_._1 < v)) state(r.path) = (v, false, null)
-        case _ => ()
-      }
-    }
-    state.valuesIterator.collect { case (_, true, a) => a }.toSeq.sortBy(_.path)
-  }
-
-  /** Versions (from, to], every one of them: a range reaching below the
-    * log's retention or past its head fails naming the first missing
-    * version, instead of reading only the commits that are left. */
-  def versionsBetween(fromExclusive: Long, toInclusive: Long): Seq[Long] = {
-    require(fromExclusive < toInclusive,
-      s"no commits in ($fromExclusive, $toInclusive] of $tablePath")
-    val present = listVersions().filter(v => v > fromExclusive && v <= toInclusive)
-    val have = present.toSet
-    (fromExclusive + 1 to toInclusive).find(v => !have(v)).foreach { v =>
-      throw new IllegalStateException(
-        s"version $v of $tablePath is not in its log (expired by log retention or " +
-          s"not yet committed): the changes in ($fromExclusive, $toInclusive] cannot be read")
-    }
-    present
-  }
 }
 
 object DeltaLog {
   def forTable(spark: SparkSession, tablePath: String): DeltaLog =
     new DeltaLog(tablePath, spark)
+
+  private val CommitName = "(\\d{20})\\.json".r
+
+  /** The actions of one commit's JSON text. */
+  private[delta] def actionsOf(text: String): Seq[DeltaAction] =
+    text.split("\n").filter(_.nonEmpty).toSeq.flatMap(DeltaActionCodec.fromJsonLine)
+
+  /** First action matching `pf` in a commit's JSON text, decoding ONLY
+    * lines that carry the top-level `marker` key (substring pre-filter):
+    * a sync commit holds one metaData line among thousands of addFile
+    * lines, and decoding them all per metadata lookup made the
+    * 100-commit LoadTest shape quadratic in adds. A stats string that
+    * happens to contain the marker decodes to its REAL action and the
+    * partial function skips it. */
+  private[delta] def firstAction[A](text: String, marker: String)(
+      pf: PartialFunction[DeltaAction, A]): Option[A] =
+    text.split("\n").iterator.filter(_.contains(marker))
+      .flatMap(DeltaActionCodec.fromJsonLine).collectFirst(pf)
 
   /** A discovered checkpoint and its on-disk layout. */
   private[delta] sealed trait Checkpoint { def version: Long }

@@ -31,8 +31,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     throw new IllegalStateException(s"empty delta table: $tablePath"))
 
   def schemaAt(asOf: Option[Long] = None): (StructType, Seq[String]) = {
-    val (meta, _) = log.metadataAt(asOf)
-    (DataType.fromJson(meta.schemaString).asInstanceOf[StructType], meta.partitionColumns)
+    val s = log.snapshot(asOf)
+    (s.schema, s.partitionColumns)
   }
 
   /** Resolve timestampAsOf → version: latest commit with ts <= given.
@@ -44,63 +44,15 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     candidates.maxBy(c => (c._2, c._1))._1
   }
 
-  /** Base path partition columns resolve against: the original source
-    * dir for metadata-only converted tables, else the table root. */
-  private[delta] def readBasePath(asOf: Option[Long]): String =
-    log.metadataAt(asOf)._1.configuration.getOrElse("graft.converted.from", tablePath)
-
-  /** `delta.columnMapping.mode` of the table (read interop: tables
-    * written by Delta Lake in `name`/`id` mode store PHYSICAL column
-    * names — `col-<uuid>` — in the parquet files, partitionValues keys,
-    * and stats JSON; the logical names live only in schemaString field
-    * metadata). */
-  private[delta] def columnMappingMode(asOf: Option[Long]): String =
-    log.metadataAt(asOf)._1.configuration.getOrElse("delta.columnMapping.mode", "none")
-
-  /** (physical schema, physical partition columns) when column mapping
-    * is active — what the data files and the log's file entries
-    * actually speak. */
-  private[delta] def physicalShape(asOf: Option[Long]): Option[(StructType, Seq[String])] =
-    if (columnMappingMode(asOf) == "none") None
-    else {
-      val (schema, partCols) = schemaAt(asOf)
-      val topPhys = schema.fields.map(f => f.name -> DeltaTable.physicalName(f)).toMap
-      Some((DeltaTable.physicalSchema(schema), partCols.map(c => topPhys.getOrElse(c, c))))
-    }
-
-  /**
-   * Protocol gate for every read path: fail FAST, with the offending
-   * feature named, on tables whose protocol demands reader behavior this
-   * engine does not implement — the alternative is silently wrong rows
-   * (e.g. a v2Checkpoint table whose sidecar adds we'd never see). The
-   * reference delegates this to the linked Delta runtime (ref
-   * `core/.../delta/DeltaClient.java:215-296`); we enforce it natively.
-   */
-  private[delta] def requireReadable(asOf: Option[Long]): Unit = {
-    val p = log.protocolAt(asOf)
-    p.minReaderVersion match {
-      case 1 | 2 => // base protocol; 2 adds column mapping (implemented)
-      case 3 =>
-        val unsupported =
-          p.readerFeatures.getOrElse(Seq.empty).toSet -- DeltaTable.SupportedReaderFeatures
-        require(unsupported.isEmpty,
-          s"cannot read $tablePath: unsupported Delta reader feature(s) " +
-            s"${unsupported.toSeq.sorted.mkString(", ")}; this engine supports " +
-            DeltaTable.SupportedReaderFeatures.toSeq.sorted.mkString(", "))
-      case v => throw new IllegalArgumentException(
-        s"cannot read $tablePath: unsupported Delta minReaderVersion $v (max 3)")
-    }
-  }
-
   /**
    * Protocol + metadata gate for write paths. Table features distinguish
    * "supported" (listed in the protocol) from "enabled" (activated by
    * table metadata); a feature we can ignore while disabled only blocks
    * the write once its metadata switch is on.
    */
-  private[delta] def requireWritable(mutation: Boolean): Unit = {
-    requireReadable(None) // writers replay the snapshot first
-    val p = log.protocolAt(None)
+  private[delta] def requireWritable(s: DeltaSnapshot, mutation: Boolean): Unit = {
+    s.requireReadable() // writers replay the snapshot first
+    val p = s.protocol
     require(p.minWriterVersion <= 7,
       s"cannot write $tablePath: unsupported Delta minWriterVersion ${p.minWriterVersion} (max 7)")
     val declared =
@@ -111,9 +63,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       s"cannot write $tablePath: unsupported Delta writer feature(s) " +
         s"${unsupported.toSeq.sorted.mkString(", ")}; this engine supports " +
         DeltaTable.SupportedWriterFeatures.toSeq.sorted.mkString(", "))
-    val meta = log.metadataAt(None)._1
-    val conf = meta.configuration
-    require(!(mutation && conf.get("delta.appendOnly").contains("true")),
+    require(!(mutation && s.configuration.get("delta.appendOnly").contains("true")),
       s"cannot delete from $tablePath: delta.appendOnly is enabled")
     // delta.enableChangeDataFeed: row-level writes produce _change_data
     // files + cdc actions (deleteWhere), so CDF tables are writable
@@ -129,15 +79,13 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * pass over the incoming frame (the violations of every rule count in
    * a single job); per-rule attribution runs only on the failure path.
    */
-  private def validateIncoming(df: DataFrame): Unit = {
-    val meta = log.metadataAt(None)._1
+  private def validateIncoming(s: DeltaSnapshot, df: DataFrame): Unit = {
     val checks: Seq[(String, String)] =
-      meta.configuration.collect {
+      s.configuration.collect {
         case (k, v) if k.startsWith("delta.constraints.") =>
           k.stripPrefix("delta.constraints.") -> v
       }.toSeq ++ {
-        val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
-        schema.fields.filter(_.metadata.contains("delta.invariants")).map { f =>
+        s.schema.fields.filter(_.metadata.contains("delta.invariants")).map { f =>
           val node = new com.fasterxml.jackson.databind.ObjectMapper()
             .readTree(f.metadata.getString("delta.invariants"))
           s"invariant(${f.name})" -> node.path("expression").path("expression").asText()
@@ -175,9 +123,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * protocol versions) — all from log replay, no filesystem listing. */
   def detail(): DataFrame = {
     import spark.implicits._
-    val (meta, _) = log.metadataAt(None)
-    val p = log.protocolAt(None)
-    val files = log.snapshotFiles()
+    val s = log.snapshot()
+    val (meta, p, files) = (s.metadata, s.protocol, s.files)
     Seq((
       "delta", meta.id, tablePath, meta.createdTime,
       meta.partitionColumns, files.size.toLong, files.map(_.size).sum,
@@ -190,7 +137,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * values, size, stats JSON, deletion-vector cardinality). */
   def filesDF(): DataFrame = {
     import spark.implicits._
-    log.snapshotFiles().map(a =>
+    log.snapshot().files.map(a =>
       (a.path, a.partitionValues, a.size, a.stats.orNull, a.deletionVector.fold(0L)(_.cardinality)))
       .toDF("path", "partitionValues", "size", "stats", "deleted_rows")
   }
@@ -198,7 +145,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
   /** Number of live files — sizes the streaming source's
     * initial-snapshot chunking. */
   def snapshotFileCount(asOf: Option[Long] = None): Int =
-    log.snapshotFiles(asOf).size
+    log.snapshot(asOf).files.size
 
   /** Deterministic slice `chunk` of `totalChunks` over the snapshot's
     * live files (modulo over the path-sorted manifest): the streaming
@@ -226,27 +173,15 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * incremental sync §2.9). Returns the data of newly added files.
    */
   def changesAsDF(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    requireReadable(Some(toInclusive))
+    val s = log.snapshot(Some(toInclusive))
+    s.requireReadable()
     // every add in the range, a DV rewrite's re-add included
-    val changed = log.versionsBetween(fromExclusive, toInclusive).flatMap(log.readActions).collect {
+    val changed = s.versionsBetween(fromExclusive, toInclusive).flatMap(s.actions).collect {
       case a: AddFile =>
         (InternalDataFile(a.path, partitionValues = a.partitionValues, fileSizeBytes = a.size),
           a.deletionVector)
     }
-    val asOf = Some(toInclusive)
-    val (schema, partCols) = schemaAt(asOf)
-    physicalShape(asOf) match {
-      case None =>
-        DeltaTable.readFilesWithDeletes(
-          spark, tablePath, readBasePath(asOf), changed, schema, partCols)
-      case Some((physSchema, physPartCols)) =>
-        val phys = DeltaTable.readFilesWithDeletes(
-          spark, tablePath, readBasePath(asOf), changed, physSchema, physPartCols)
-        val logical = DeltaTable.logicalClean(schema)
-        phys.select(physSchema.fields.zip(logical.fields).map { case (pf, lf) =>
-          col(s"`${pf.name}`").cast(lf.dataType).as(lf.name)
-        }.toSeq: _*)
-    }
+    s.read(spark, changed)
   }
 
   /**
@@ -265,28 +200,19 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * per-commit).
    */
   def changeFeed(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    requireReadable(Some(toInclusive))
-    val versions = log.versionsBetween(fromExclusive, toInclusive)
-    val asOf = Some(toInclusive)
-    val (schema, partCols) = schemaAt(asOf)
+    val s = log.snapshot(Some(toInclusive))
+    s.requireReadable()
+    val versions = s.versionsBetween(fromExclusive, toInclusive)
+    val schema = s.schema
     // column-mapped feeds read physical and project back to logical
-    val physOpt = physicalShape(asOf)
-    val (rSchema, rParts) = physOpt.getOrElse((schema, partCols))
-    val base = readBasePath(asOf)
-    def toLogical(df: DataFrame, extra: Seq[String]): DataFrame = physOpt match {
-      case None => df
-      case Some((ps, _)) =>
-        val logical = DeltaTable.logicalClean(schema)
-        df.select(ps.fields.zip(logical.fields).map { case (pf, lf) =>
-          col(s"`${pf.name}`").cast(lf.dataType).as(lf.name)
-        }.toSeq ++ extra.map(n => col(n)): _*)
-    }
+    val (rSchema, rParts) = s.readShape
+    val base = s.readBasePath
     def finish(df: DataFrame, t: String, v: Long): DataFrame =
       df.select(schema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
         .withColumn("_change_type", lit(t))
         .withColumn("_commit_version", lit(v))
     val parts: Seq[DataFrame] = versions.flatMap { v =>
-      val actions = log.readActions(v)
+      val actions = s.actions(v)
       // a commit carrying cdc actions is read EXCLUSIVELY from its
       // _change_data files (Delta protocol): the writer already
       // materialized every change row with its _change_type
@@ -296,7 +222,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           partitionValues = c.partitionValues, fileSizeBytes = c.size))
         val readSchema = StructType(
           rSchema.fields :+ StructField("_change_type", StringType))
-        Seq(toLogical(graft.sources.ManifestFileIndex.read(
+        Seq(s.toLogical(graft.sources.ManifestFileIndex.read(
             spark, tablePath, files, readSchema, rParts), Seq("_change_type"))
           .withColumn("_commit_version", lit(v)))
       } else {
@@ -306,7 +232,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       // the pre-commit state of every touched-but-preexisting file
       val prev: Map[String, AddFile] =
         if (removePaths.isEmpty) Map.empty
-        else log.snapshotFiles(Some(v - 1)).filter(a => removePaths.contains(a.path))
+        else log.snapshot(Some(v - 1)).files.filter(a => removePaths.contains(a.path))
           .map(a => a.path -> a).toMap
 
       val inserts = adds.filterNot(a => removePaths.contains(a.path)).map { a =>
@@ -315,16 +241,13 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       }
       val insertDF =
         if (inserts.isEmpty) None
-        else Some(finish(toLogical(DeltaTable.readFilesWithDeletes(
-          spark, tablePath, base, inserts, rSchema, rParts), Seq.empty), "insert", v))
+        else Some(finish(s.read(spark, inserts), "insert", v))
 
       val fullRemoves = prev.view.filterKeys(p => !addPaths.contains(p)).values.toSeq
       val removeDF =
         if (fullRemoves.isEmpty) None
-        else Some(finish(toLogical(DeltaTable.readFilesWithDeletes(
-          spark, tablePath, base,
-          fullRemoves.map(a => (DeltaTable.dataFileOf(a), a.deletionVector)), rSchema, rParts),
-          Seq.empty), "delete", v))
+        else Some(finish(s.read(spark,
+          fullRemoves.map(a => (DeltaTable.dataFileOf(a), a.deletionVector))), "delete", v))
 
       // DV rewrites: remove+add of the same path — the delete set is the
       // new vector minus the old one
@@ -336,7 +259,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
             DeltaTable.dataFileOf(prev(a.path))
               .copy(physicalPath = DeltaTable.metadataFilePath(tablePath, a.path))
           }
-          val data = toLogical(graft.sources.ManifestFileIndex.read(
+          val data = s.toLogical(graft.sources.ManifestFileIndex.read(
             spark, base, files, rSchema, rParts, withRowPositions = true),
             Seq("__graft_file", "__graft_pos"))
           def posDF(dvs: Seq[(String, Option[DeletionVectorDescriptor])]) =
@@ -431,14 +354,18 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         * scale, a keyed MERGE reads the touched files, not the table).
         * Per-column interval tests are a sound over-approximation for
         * composite keys; files without stats stay candidates. */
-      pruneByKeys: Option[(Seq[String], DataFrame)] = None): Long = {
-    requireWritable(mutation = true)
-    val (schema, partCols) = schemaAt(None)
+      pruneByKeys: Option[(Seq[String], DataFrame)] = None,
+      /** the snapshot the caller planned against (MERGE's staged files);
+        * the commit takes the slot after it */
+      planned: Option[DeltaSnapshot] = None): Long = {
+    val s = planned.getOrElse(log.snapshot())
+    requireWritable(s, mutation = true)
+    val (schema, partCols) = (s.schema, s.partitionColumns)
     // column-mapped tables scan physical, match logical: the predicate /
     // key join sees logical names, the position bitmaps key on file+pos
-    val physShape = physicalShape(None)
-    val snap = log.snapshotFiles()
-    val latest = latestVersion
+    val physShape = s.physicalShape
+    val snap = s.files
+    val latest = s.version
     if (snap.isEmpty && extraActions.isEmpty) return latest
     val byMetaPath: Map[String, AddFile] =
       snap.map(a => DeltaTable.metadataFilePath(tablePath, a.path) -> a).toMap
@@ -454,7 +381,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       // ranges interleave, the index does not. None (absent index,
       // failed fence, composite/null keys) falls through to ranges.
       case Some((kc, keys)) =>
-        keyIndexRouteFiles(kc, keys) match {
+        keyIndexRouteFiles(s, kc, keys) match {
           case Some(hit) =>
             DeltaTable.indexRoutedScans.incrementAndGet()
             allMfs.filter(f => hit(f.physicalPath))
@@ -502,26 +429,17 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         }
     }
     import spark.implicits._
-    val cdfEnabled = log.metadataAt(None)._1.configuration
-      .get("delta.enableChangeDataFeed").contains("true")
+    val cdfEnabled = s.configuration.get("delta.enableChangeDataFeed").contains("true")
     // physical matches (existing deletes not applied); the CDF path
     // reads this twice (position bitmaps + change rows), so persist the
     // matched SUBSET — never the table — for that case only
     val matched: Option[DataFrame] =
       if (mfs.isEmpty) None // nothing to tombstone in an empty snapshot
       else Some {
-        val (rSchema, rParts) = physShape.getOrElse((schema, partCols))
+        val (rSchema, rParts) = s.readShape
         val raw = graft.sources.ManifestFileIndex.read(
-          spark, readBasePath(None), mfs, rSchema, rParts, withRowPositions = true)
-        val logicalView = physShape match {
-          case None => raw
-          case Some((ps, _)) =>
-            val logical = DeltaTable.logicalClean(schema)
-            raw.select(ps.fields.zip(logical.fields).map { case (pf, lf) =>
-              col(s"`${pf.name}`").cast(lf.dataType).as(lf.name)
-            }.toSeq ++ Seq(col("__graft_file"), col("__graft_pos")): _*)
-        }
-        val m = selectMatching(logicalView)
+          spark, s.readBasePath, mfs, rSchema, rParts, withRowPositions = true)
+        val m = selectMatching(s.toLogical(raw, Seq("__graft_file", "__graft_pos")))
         if (cdfEnabled) m.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         else m
       }
@@ -624,7 +542,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     // form the spec requires for deletionVectors; the CURRENT protocol
     // comes from snapshot replay (v0 always carries the default and may
     // be expired), and the upgrade preserves features it already had
-    val currentProtocol = log.protocolAt(None)
+    val currentProtocol = s.protocol
     val hasDvFeature =
       currentProtocol.readerFeatures.exists(_.contains("deletionVectors"))
     val protocolUpgrade: Seq[DeltaAction] =
@@ -649,7 +567,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * would all land as new rows.
    */
   def upsert(source: DataFrame, keyCols: Seq[String]): Long = {
-    val (schema, partCols) = schemaAt(None)
+    val s = log.snapshot()
+    val (schema, partCols) = (s.schema, s.partitionColumns)
     require(keyCols.forall(schema.fieldNames.contains),
       s"key columns $keyCols missing from the schema of $tablePath")
     require(schema.fieldNames.forall(source.schema.fieldNames.contains),
@@ -660,7 +579,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     val genDefs = defs.filterNot(_.isIdentity)
     val withGen = genDefs.foldLeft(ordered)((d, t) =>
       d.withColumn(t.fieldName, graft.model.PartitionTransform.valueExpr(t)))
-    validateIncoming(withGen)
+    validateIncoming(s, withGen)
     // identity columns: a MERGE source necessarily carries the column
     // explicitly (it joins on keys), so it needs allowExplicitInsert,
     // and the watermark ratchets past the source's maxima in the same
@@ -687,17 +606,16 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       }.toMap
       if (updates.isEmpty) Seq.empty
       else {
-        val meta = log.metadataAt(None)._1
         val bumped = StructType(schema.fields.map { f =>
           updates.get(f.name).map(w =>
             f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
               .putLong("delta.identity.highWaterMark", w).build())).getOrElse(f)
         })
-        Seq(meta.copy(schemaString = bumped.json))
+        Seq(s.metadata.copy(schemaString = bumped.json))
       }
     }
     // mapped tables stage physical names (same translation as write())
-    val (stageFrame, stageParts) = physicalShape(None) match {
+    val (stageFrame, stageParts) = s.physicalShape match {
       case None => (withGen, partCols)
       case Some((ps, pp)) =>
         (withGen.select(withGen.schema.fieldNames.zip(ps.fields).map { case (ln, pf) =>
@@ -726,7 +644,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       CommitInfo(System.currentTimeMillis(), "MERGE", Map("matchedAction" -> "delete")),
       extraActions = identityMeta ++ newAdds,
       cdcInserts = Some(withGen),
-      pruneByKeys = Some((keyCols, keys)))
+      pruneByKeys = Some((keyCols, keys)),
+      planned = Some(s))
   }
 
   /**
@@ -740,11 +659,12 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * re-add and retire field ids correctly.
    */
   def replaceSchema(newSchema: StructType): Long = {
-    requireWritable(mutation = false)
-    val (meta, _) = log.metadataAt(None)
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    val meta = s.metadata
     meta.partitionColumns.foreach(c => require(newSchema.fieldNames.contains(c),
       s"cannot drop partition column $c of $tablePath"))
-    val v = latestVersion + 1
+    val v = s.version + 1
     graft.model.ConcurrentSyncException.check(log.commit(v, Seq(
       meta.copy(schemaString = newSchema.json),
       CommitInfo(System.currentTimeMillis(), "REPLACE COLUMNS",
@@ -763,9 +683,9 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * precondition for commits that carry cdc actions.
    */
   def setProperties(props: Map[String, String]): Long = {
-    requireWritable(mutation = false)
-    val (meta, _) = log.metadataAt(None)
-    val p = log.protocolAt(None)
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    val (meta, p) = (s.metadata, s.protocol)
     val declared = p.writerFeatures.map(_.toSet)
       .getOrElse(DeltaTable.legacyWriterFeatures(p.minWriterVersion).toSet)
     val upgrade: Seq[DeltaAction] =
@@ -774,7 +694,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       else if (p.writerFeatures.isDefined)
         Seq(p.copy(writerFeatures = Some((p.writerFeatures.get :+ "changeDataFeed").distinct)))
       else Seq(Protocol(p.minReaderVersion, 4)) // legacy v4 implies changeDataFeed
-    val v = latestVersion + 1
+    val v = s.version + 1
     graft.model.ConcurrentSyncException.check(log.commit(v, upgrade ++ Seq(
       meta.copy(configuration = meta.configuration ++ props),
       CommitInfo(System.currentTimeMillis(), "SET TBLPROPERTIES", props))),
@@ -802,10 +722,11 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    */
   def writeStatistics(cols: Seq[String]): String = {
     require(cols.nonEmpty, s"writeStatistics on $tablePath needs at least one column")
-    val (schema, _) = schemaAt(None)
+    val snap = log.snapshot()
+    val schema = snap.schema
     cols.foreach(c => require(schema.fieldNames.contains(c),
       s"no column $c in $tablePath"))
-    val analyzedVersion = latestVersion
+    val analyzedVersion = snap.version
     val regsByCol = graft.functions.PortableHll.stackedRegisters(
       toDF(Some(analyzedVersion)), cols)
     // a stable iceberg-style field id when the schema carries one; the
@@ -849,7 +770,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     // sidecar is unreachable from the live configuration now (time
     // travel reads metadata, not sidecars) — delete it or it is
     // orphaned permanently
-    log.metadataAt(Some(registeredAt - 1))._1.configuration
+    log.snapshot(Some(registeredAt - 1)).configuration
       .get(DeltaTable.StatsPathKey)
       .filter(_ != statsPath.toString).foreach(p =>
         graft.util.StatsFiles.deleteIfOwned(conf, tablePath, p, Set(statsPath.toString)))
@@ -861,7 +782,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * the carried one (adopted at sync time, so no source operation can
     * dangle it). Resolution is by the blob's `graft.column` name. */
   def statisticsRegisters(column: String): (Seq[(Int, Int)], Double) = {
-    val conf = log.metadataAt(None)._1.configuration
+    val conf = log.snapshot().configuration
     val path = conf.get(DeltaTable.StatsPathKey)
       .orElse(conf.get(graft.model.SyncCas.StatsPathProp))
       .getOrElse(throw new IllegalStateException(
@@ -874,15 +795,19 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * read — None for sync-carried statistics). Planners derive
     * freshness from it via [[statisticsFresh]] and treat anything else
     * as stale, floored with the log's exact current counts. */
-  def statisticsVersion: Option[Long] =
-    log.metadataAt(None)._1.configuration.get(DeltaTable.StatsVersionKey).map(_.toLong)
+  def statisticsVersion: Option[Long] = analyzedAt(log.snapshot())
+
+  private def analyzedAt(s: DeltaSnapshot): Option[Long] =
+    s.configuration.get(DeltaTable.StatsVersionKey).map(_.toLong)
 
   /** The native ANALYZE is fresh iff the registration commit (which
     * changes no rows) is the ONLY commit after the analyzed version —
     * latest == analyzed + 1. Any commit in the scan/registration window
     * or after it makes this false. */
-  def statisticsFresh: Boolean =
-    statisticsVersion.exists(v => log.latestVersion().contains(v + 1))
+  def statisticsFresh: Boolean = {
+    val s = log.snapshot()
+    analyzedAt(s).contains(s.version - 1)
+  }
 
   /**
    * RESTORE TABLE ... TO VERSION AS OF `version`: one commit that flips
@@ -895,13 +820,15 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * the existence check is a distributed job, not a driver loop.
    */
   def restoreTo(version: Long): Long = {
-    requireWritable(mutation = true)
-    val latest = latestVersion
-    require(log.listVersions().contains(version),
+    val snapNow = log.snapshot()
+    requireWritable(snapNow, mutation = true)
+    val latest = snapNow.version
+    require(snapNow.commits.contains(version),
       s"version $version does not exist on $tablePath")
     if (version == latest) return latest
-    val nowFiles = log.snapshotFiles()
-    val thenFiles = log.snapshotFiles(Some(version))
+    val snapThen = log.snapshot(Some(version))
+    val nowFiles = snapNow.files
+    val thenFiles = snapThen.files
     val nowBy = nowFiles.map(a => a.path -> a).toMap
     val thenBy = thenFiles.map(a => a.path -> a).toMap
     val now = System.currentTimeMillis()
@@ -916,8 +843,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     // the file-set-only early return used to keep the newer schema
     // silently (found by fuzz seed 127: rename → restore-across-it →
     // upsert refuses because table and writer disagree on column names)
-    val metaNow = log.metadataAt(None)._1
-    val metaThen0 = log.metadataAt(Some(version))._1
+    val metaNow = snapNow.metadata
+    val metaThen0 = snapThen.metadata
     // restored statistics pointers must RESOLVE: a re-analyze AFTER
     // `version` deleted the superseded sidecar, so restoring that
     // config verbatim would point the live table at a missing file.
@@ -990,21 +917,21 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * of each commit's NEW files.
    */
   def buildKeyIndex(keyCol: String): Unit = {
-    requireWritable(mutation = false)
-    val (schema, partCols) = schemaAt(None)
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    val (schema, partCols) = (s.schema, s.partitionColumns)
     require(schema.fieldNames.contains(keyCol),
       s"key column $keyCol missing from the schema of $tablePath")
     require(!partCols.contains(keyCol),
       s"key column $keyCol is a partition column of $tablePath; the index reads " +
         "keys back from data files, so the key must be a data column")
-    val v = latestVersion
-    val mfs = log.snapshotFiles().map(a => DeltaTable.dataFileOf(a)
+    val mfs = s.files.map(a => DeltaTable.dataFileOf(a)
       .copy(physicalPath = DeltaTable.metadataFilePath(tablePath, a.path)))
     DeltaKeyIndex.replaceAll(spark, tablePath,
-      DeltaKeyIndex.Config(keyCol, v,
+      DeltaKeyIndex.Config(keyCol, s.version,
         keyType = Some(schema(keyCol).dataType.catalogString),
         timeZone = Some(spark.sessionState.conf.sessionLocalTimeZone)),
-      keyEntriesFor(mfs, keyCol))
+      keyEntriesFor(s, mfs, keyCol))
     DeltaKeyIndex.invalidate(tablePath)
   }
 
@@ -1023,34 +950,28 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     val conf = spark.sparkContext.hadoopConfiguration
     val cfg = DeltaKeyIndex.readConfig(conf, tablePath).getOrElse(
       throw new IllegalStateException(s"no key index on $tablePath"))
-    val v = latestVersion
-    require(DeltaKeyIndex.usable(log, conf, tablePath, v),
+    val s = log.snapshot()
+    require(DeltaKeyIndex.usable(log, conf, tablePath, s.version),
       s"cannot compact an unusable key index on $tablePath; rebuild with buildKeyIndex")
     import spark.implicits._
-    val live = log.snapshotFiles().map(a => DeltaTable.metadataFilePath(tablePath, a.path))
-      .toDF("file")
-    DeltaKeyIndex.compactInto(spark, tablePath, cfg, v, live)
+    val live = s.files.map(a => DeltaTable.metadataFilePath(tablePath, a.path)).toDF("file")
+    DeltaKeyIndex.compactInto(spark, tablePath, cfg, s.version, live)
     DeltaKeyIndex.invalidate(tablePath)
   }
 
   /** Distinct `(key, file)` pairs of the given files — a distributed
     * key-column scan attributed by `__graft_file` (the same metadata
     * path form the MERGE candidate set keys on). */
-  private def keyEntriesFor(
+  private def keyEntriesFor(s: DeltaSnapshot,
       mfs: Seq[InternalDataFile], keyCol: String): org.apache.spark.sql.DataFrame = {
-    val (schema, partCols) = schemaAt(None)
     if (mfs.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("key", StringType), StructField("file", StringType))))
-    val physShape = physicalShape(None)
-    val (rSchema, rParts) = physShape.getOrElse((schema, partCols))
-    val physKey = physShape match {
-      case None => keyCol
-      case Some(_) => DeltaTable.physicalName(schema(keyCol))
-    }
+    val (rSchema, rParts) = s.readShape
+    val physKey = if (s.columnMapped) DeltaTable.physicalName(s.schema(keyCol)) else keyCol
     graft.sources.ManifestFileIndex.read(
-        spark, readBasePath(None), mfs, rSchema, rParts, withRowPositions = true)
+        spark, s.readBasePath, mfs, rSchema, rParts, withRowPositions = true)
       .select(col(s"`$physKey`").cast(StringType).as("key"), col("__graft_file").as("file"))
       .distinct()
   }
@@ -1069,7 +990,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     val conf = spark.sparkContext.hadoopConfiguration
     DeltaKeyIndex.readConfig(conf, tablePath).foreach { cfg0 =>
       val adds = actions.collect { case a: AddFile => a }
-      val (schema, _) = schemaAt(None)
+      val s = log.snapshot(Some(v))
+      val schema = s.schema
       // pre-fence config (keyType=None): backfill the build format from
       // the CURRENT table state on this first maintenance pass — see
       // DeltaKeyIndex.backfillFormat's contract — instead of failing
@@ -1096,7 +1018,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         val mfs = adds.map(a => InternalDataFile(DeltaTable.metadataFilePath(tablePath, a.path),
           partitionValues = a.partitionValues, fileSizeBytes = a.size,
           lastModified = a.modificationTime))
-        DeltaKeyIndex.writeBatch(tablePath, v, keyEntriesFor(mfs, cfg.keyCol))
+        DeltaKeyIndex.writeBatch(tablePath, v, keyEntriesFor(s, mfs, cfg.keyCol))
       }
       DeltaKeyIndex.invalidate(tablePath)
     }
@@ -1112,15 +1034,16 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * incoming keys, or None when the index cannot answer (absent,
     * fence-failed, composite key, different key column, or null keys —
     * null-safe matching is the range path's job). */
-  private[delta] def keyIndexRouteFiles(kc: Seq[String], keys: DataFrame): Option[Set[String]] = {
+  private[delta] def keyIndexRouteFiles(
+      s: DeltaSnapshot, kc: Seq[String], keys: DataFrame): Option[Set[String]] = {
     if (kc.size != 1) return None
     val conf = spark.sparkContext.hadoopConfiguration
     val cfg = DeltaKeyIndex.readConfig(conf, tablePath) match {
       case Some(c) if c.keyCol == kc.head => c
       case _ => return None
     }
-    if (!DeltaKeyIndex.usable(log, conf, tablePath, latestVersion)) return None
-    val (schema, _) = schemaAt(None)
+    if (!DeltaKeyIndex.usable(log, conf, tablePath, s.version)) return None
+    val schema = s.schema
     // the stored strings are only probe-able when the key column's
     // TYPE still matches the build-time type (a metadata-only
     // replaceSchema changes formatting with no AddFile for the fence
@@ -1175,13 +1098,11 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * already in table-features form.
    */
   def enableColumnMapping(): Long = {
-    requireWritable(mutation = false)
-    require(columnMappingMode(None) == "none",
-      s"column mapping already enabled on $tablePath")
-    val (meta, _) = log.metadataAt(None)
-    val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
-    val (mapped, maxId) = DeltaTable.assignColumnMapping(schema, 0L, _.name)
-    val p = log.protocolAt(None)
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    require(!s.columnMapped, s"column mapping already enabled on $tablePath")
+    val (meta, p) = (s.metadata, s.protocol)
+    val (mapped, maxId) = DeltaTable.assignColumnMapping(s.schema, 0L, _.name)
     val upgrade: Seq[DeltaAction] =
       if (p.minReaderVersion >= 3 || p.writerFeatures.isDefined)
         Seq(Protocol(3, 7,
@@ -1191,7 +1112,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
             DeltaTable.legacyWriterFeatures(p.minWriterVersion)) :+ "columnMapping").distinct)))
       else if (p.minReaderVersion >= 2 && p.minWriterVersion >= 5) Seq.empty
       else Seq(Protocol(math.max(2, p.minReaderVersion), math.max(5, p.minWriterVersion)))
-    val v = latestVersion + 1
+    val v = s.version + 1
     graft.model.ConcurrentSyncException.check(log.commit(v, upgrade ++ Seq(
       meta.copy(
         schemaString = mapped.json,
@@ -1209,18 +1130,18 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * name changes; the physical name — what the files carry — doesn't,
     * so no data moves and history keeps reading. */
   def renameColumn(oldName: String, newName: String): Long = {
-    requireWritable(mutation = false)
-    require(columnMappingMode(None) != "none",
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    require(s.columnMapped,
       s"renameColumn requires column mapping on $tablePath (run enableColumnMapping())")
-    val (meta, _) = log.metadataAt(None)
-    val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
+    val (meta, schema) = (s.metadata, s.schema)
     require(schema.fieldNames.contains(oldName), s"no column $oldName in $tablePath")
     require(!schema.fieldNames.contains(newName),
       s"column $newName already exists in $tablePath")
     requireNotGenerated(schema, oldName, "rename")
     val renamed = StructType(
       schema.fields.map(f => if (f.name == oldName) f.copy(name = newName) else f))
-    val v = latestVersion + 1
+    val v = s.version + 1
     graft.model.ConcurrentSyncException.check(log.commit(v, Seq(
       meta.copy(
         schemaString = renamed.json,
@@ -1238,18 +1159,18 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * Delta's true drop semantics (what [[replaceSchema]] on an unmapped
     * table cannot promise). */
   def dropColumn(name: String): Long = {
-    requireWritable(mutation = false)
-    require(columnMappingMode(None) != "none",
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    require(s.columnMapped,
       s"dropColumn requires column mapping on $tablePath (run enableColumnMapping())")
-    val (meta, _) = log.metadataAt(None)
-    val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
+    val (meta, schema) = (s.metadata, s.schema)
     require(schema.fieldNames.contains(name), s"no column $name in $tablePath")
     require(!meta.partitionColumns.contains(name),
       s"cannot drop partition column $name of $tablePath")
     requireNotGenerated(schema, name, "drop")
     val remaining = StructType(schema.fields.filterNot(_.name == name))
     require(remaining.nonEmpty, s"cannot drop the last column of $tablePath")
-    val v = latestVersion + 1
+    val v = s.version + 1
     graft.model.ConcurrentSyncException.check(log.commit(v, Seq(
       meta.copy(schemaString = remaining.json),
       CommitInfo(System.currentTimeMillis(), "DROP COLUMNS", Map("column" -> name)))),
@@ -1263,22 +1184,21 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * so old files read NULL even when the logical name was used (and
     * dropped) before. */
   def addColumn(field: StructField): Long = {
-    requireWritable(mutation = false)
-    val (meta, _) = log.metadataAt(None)
-    val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    val (meta, schema) = (s.metadata, s.schema)
     require(!schema.fieldNames.contains(field.name),
       s"column ${field.name} already exists in $tablePath")
     val nullable = field.copy(nullable = true)
     val (newSchema, newConf) =
-      if (columnMappingMode(None) == "none")
-        (StructType(schema.fields :+ nullable), meta.configuration)
+      if (!s.columnMapped) (StructType(schema.fields :+ nullable), meta.configuration)
       else {
         val (mappedOne, maxId) = DeltaTable.assignColumnMapping(
           StructType(Seq(nullable)), maxColumnId(meta), _ => s"col-${UUID.randomUUID()}")
         (StructType(schema.fields ++ mappedOne.fields),
           meta.configuration + ("delta.columnMapping.maxColumnId" -> maxId.toString))
       }
-    val v = latestVersion + 1
+    val v = s.version + 1
     graft.model.ConcurrentSyncException.check(log.commit(v, Seq(
       meta.copy(schemaString = newSchema.json, configuration = newConf),
       CommitInfo(System.currentTimeMillis(), "ADD COLUMNS", Map("column" -> field.name)))),
@@ -1307,9 +1227,9 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * type; rebuild the index after widening).
    */
   def widenColumn(name: String, to: DataType): Long = {
-    requireWritable(mutation = false)
-    val (meta, _) = log.metadataAt(None)
-    val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    val (meta, schema) = (s.metadata, s.schema)
     val root = name.takeWhile(_ != '.')
     require(!meta.partitionColumns.contains(name),
       s"cannot widen partition column $name of $tablePath")
@@ -1321,7 +1241,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
             "build-config fence pins the build type — drop/rebuild the index " +
             "(buildKeyIndex) after the widen")
       }
-    val v = latestVersion + 1
+    val v = s.version + 1
     var fromSimple = ""
     // dot-path walk: nested struct fields / array elements / map values
     // widen too; the typeChanges entry hangs on the DEEPEST struct-field
@@ -1333,7 +1253,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         f.copy(metadata = DeltaTable.appendTypeChanges(
           f.metadata, Seq(DeltaTable.typeChangeEntry(from, to, fieldPath))))
     }
-    val p = log.protocolAt(None)
+    val p = s.protocol
     val upgrade: Seq[DeltaAction] =
       if (p.readerFeatures.exists(_.contains("typeWidening"))) Seq.empty
       else Seq(DeltaTable.upgradeWithFeature(p, "typeWidening"))
@@ -1351,12 +1271,11 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * deletion vector (deletes applied), in one commit — after which the
     * snapshot is DV-free and metadata-only sync is possible again. */
   def purgeDeletes(): Option[Long] = {
-    requireWritable(mutation = true)
-    val withDv = log.snapshotFiles().filter(_.deletionVector.isDefined)
+    val s = log.snapshot()
+    requireWritable(s, mutation = true)
+    val withDv = s.files.filter(_.deletionVector.isDefined)
     if (withDv.isEmpty) return None
-    val (schema, partCols) = schemaAt(None)
-    val df = DeltaTable.readFilesWithDeletes(spark, tablePath, readBasePath(None),
-      withDv.map(a => (DeltaTable.dataFileOf(a), a.deletionVector)), schema, partCols)
+    val df = s.read(spark, withDv.map(a => (DeltaTable.dataFileOf(a), a.deletionVector)))
     Some(write(df, Seq.empty, overwrite = false,
       replacing = withDv.map(a => a.path -> a.deletionVector)))
   }
@@ -1396,18 +1315,18 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       /** Morton-interleave these columns for multi-dim skipping
         * (graft.util.ZOrder); takes precedence over sortBy. */
       zorderBy: Seq[String] = Seq.empty): Option[Long] = {
-    requireWritable(mutation = true)
-    val (schema, partCols) = schemaAt(None)
-    val all = log.snapshotFiles().map(a => (DeltaTable.dataFileOf(a), a.deletionVector))
+    val s = log.snapshot()
+    requireWritable(s, mutation = true)
+    val (schema, partCols) = (s.schema, s.partitionColumns)
+    val all = s.files.map(a => (DeltaTable.dataFileOf(a), a.deletionVector))
     val smalls = all.groupBy(_._1.partitionValues).values.flatMap { g =>
-      val s = g.filter(_._1.fileSizeBytes < smallFileBytes)
-      if (s.size >= 2) s else Seq.empty
+      val small = g.filter(_._1.fileSizeBytes < smallFileBytes)
+      if (small.size >= 2) small else Seq.empty
     }.toSeq
     if (smalls.isEmpty) return None
     // DV-aware read: compacting a deletion-vectored file must not
     // resurrect its deleted rows
-    val df = DeltaTable.readFilesWithDeletes(
-      spark, tablePath, readBasePath(None), smalls, schema, partCols)
+    val df = s.read(spark, smalls)
     val n = math.max(1, math.ceil(smalls.map(_._1.fileSizeBytes).sum.toDouble / targetFileBytes).toInt)
     val arranged =
       if (zorderBy.nonEmpty) graft.util.ZOrder.arrange(df, zorderBy, n)
@@ -1423,8 +1342,9 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * `parts > 1` (the fan-out layout for tables whose reconciled state
     * is too big for one file). */
   def checkpoint(parts: Int = 1): Unit = {
-    requireReadable(None)
-    log.writeCheckpoint(latestVersion, parts)
+    val s = log.snapshot()
+    s.requireReadable()
+    log.writeCheckpoint(s.version, parts)
   }
 
   /**
@@ -1437,17 +1357,21 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * missing file set.
    */
   def checkpointV2(sidecarParts: Int = 1): Unit = {
-    requireWritable(mutation = false)
-    val p = log.protocolAt(None)
-    if (!p.readerFeatures.exists(_.contains("v2Checkpoint"))) {
-      val v = latestVersion + 1
-      graft.model.ConcurrentSyncException.check(log.commit(v, Seq(
-        DeltaTable.upgradeWithFeature(p, "v2Checkpoint"),
-        CommitInfo(System.currentTimeMillis(), "UPGRADE PROTOCOL",
-          Map("feature" -> "v2Checkpoint")))),
-        s"concurrent commit detected at version $v of $tablePath; re-run the operation")
-    }
-    log.writeCheckpointV2(latestVersion, sidecarParts)
+    val s = log.snapshot()
+    requireWritable(s, mutation = false)
+    val p = s.protocol
+    val at =
+      if (p.readerFeatures.exists(_.contains("v2Checkpoint"))) s.version
+      else {
+        val v = s.version + 1
+        graft.model.ConcurrentSyncException.check(log.commit(v, Seq(
+          DeltaTable.upgradeWithFeature(p, "v2Checkpoint"),
+          CommitInfo(System.currentTimeMillis(), "UPGRADE PROTOCOL",
+            Map("feature" -> "v2Checkpoint")))),
+          s"concurrent commit detected at version $v of $tablePath; re-run the operation")
+        v
+      }
+    log.writeCheckpointV2(at, sidecarParts)
   }
 
   /**
@@ -1460,10 +1384,11 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
    * the root and are never touched. Returns the deleted paths.
    */
   def vacuum(retentionMs: Long = 7L * 24 * 3600 * 1000, dryRun: Boolean = false): Seq[String] = {
-    requireReadable(None)
+    val s = log.snapshot()
+    s.requireReadable()
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveFiles = log.snapshotFiles()
+    val liveFiles = s.files
     val live = liveFiles.map { a =>
       val p = DeltaTable.decodeLogPath(a.path)
       val abs = if (p.startsWith("/") || p.contains(":/")) p else new Path(tablePath, p).toString
@@ -1500,16 +1425,17 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         * conflict check re-validates that state per commit attempt. */
       replacing: Seq[(String, Option[DeletionVectorDescriptor])] = Seq.empty,
       commitProps: Map[String, String] = Map.empty): Long = {
-    if (log.latestVersion().nonEmpty)
-      requireWritable(mutation = overwrite || replacing.nonEmpty)
+    // the table the rows are staged against (None: creating it)
+    val staged = log.latestSnapshot()
+    staged.foreach(requireWritable(_, mutation = overwrite || replacing.nonEmpty))
     // partition specs: identity columns or time transforms
     // (`month(o_orderdate)`), the latter materialized as Delta generated
     // columns (ref `DeltaPartitionExtractor.java:227-323`); an append
     // without specs inherits the table's existing spec
     val defs = {
       val parsed = graft.model.PartitionTransform.parseAll(partitionSpecs)
-      if (parsed.nonEmpty || log.latestVersion().isEmpty) parsed
-      else DeltaTable.partitionDefsOf(schemaAt(None)._1, schemaAt(None)._2)
+      staged.filter(_ => parsed.isEmpty)
+        .fold(parsed)(s => DeltaTable.partitionDefsOf(s.schema, s.partitionColumns))
     }
     defs.foreach(d => require(d.isIdentity || d.isTime,
       s"partition transform '${d.transform}' is Iceberg-only; Delta generated " +
@@ -1525,8 +1451,8 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     // (GENERATED ALWAYS semantics) and only ratchet the watermark. The
     // watermark advances in this same commit's metadata below.
     val identityFields: Seq[StructField] =
-      if (log.latestVersion().isEmpty || replacing.nonEmpty) Seq.empty
-      else schemaAt(None)._1.fields.filter(_.metadata.contains("delta.identity.start")).toSeq
+      if (replacing.nonEmpty) Seq.empty
+      else staged.toSeq.flatMap(_.schema.fields.filter(_.metadata.contains("delta.identity.start")))
     val explicitIdMax = scala.collection.mutable.Map[String, Long]()
     val assignedFrom = scala.collection.mutable.Map[String, Long]()
     val dfWithGen = identityFields.foldLeft(dfWithGen0) { (frame, f) =>
@@ -1558,23 +1484,22 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     }
     // compaction rewrites rows already in the table — only NEW rows
     // (append/overwrite) go through constraint validation
-    if (log.latestVersion().nonEmpty && replacing.isEmpty) validateIncoming(dfWithGen)
+    if (replacing.isEmpty) staged.foreach(validateIncoming(_, dfWithGen))
     // column-mapped tables stage PHYSICAL names: existing columns map
     // through the schema metadata; brand-new columns (append evolution)
     // get their col-<uuid> physical names up front, so the staged files
     // and the commit's schema assignment below agree
-    val mappingOn = log.latestVersion().nonEmpty && columnMappingMode(None) != "none"
-    val newPhysNames: Map[String, String] =
-      if (!mappingOn) Map.empty
-      else {
-        val existing = schemaAt(None)._1.fieldNames.toSet
-        dfWithGen.schema.fieldNames.filterNot(existing.contains)
-          .map(n => n -> s"col-${UUID.randomUUID()}").toMap
-      }
-    val (stageFrame, stagePartCols) =
-      if (!mappingOn) (dfWithGen, partitionColumns)
-      else {
-        val byName = schemaAt(None)._1.fieldNames.zip(physicalShape(None).get._1.fields).toMap
+    val mapped = staged.filter(_.columnMapped)
+    val mappingOn = mapped.nonEmpty
+    val newPhysNames: Map[String, String] = mapped.fold(Map.empty[String, String]) { s =>
+      val existing = s.schema.fieldNames.toSet
+      dfWithGen.schema.fieldNames.filterNot(existing.contains)
+        .map(n => n -> s"col-${UUID.randomUUID()}").toMap
+    }
+    val (stageFrame, stagePartCols) = mapped match {
+      case None => (dfWithGen, partitionColumns)
+      case Some(s) =>
+        val byName = s.schema.fieldNames.zip(s.physicalShape.get._1.fields).toMap
         (dfWithGen.select(dfWithGen.schema.fieldNames.map { n =>
           byName.get(n) match {
             case Some(pf) => col(s"`$n`").cast(pf.dataType).as(pf.name)
@@ -1582,7 +1507,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           }
         }.toSeq: _*),
           partitionColumns.map(c => byName.get(c).map(_.name).getOrElse(newPhysNames(c))))
-      }
+    }
     val newFiles = graft.util.StagedWrites.writeAndPlace(stageFrame, tablePath, stagePartCols)
     val stats = ParquetFooterStats.collect(spark, newFiles)
     // watermark each identity column must record after this commit
@@ -1628,10 +1553,11 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     var committed = -1L
     while (committed < 0) {
       attempt += 1
-      val v = log.latestVersion().map(_ + 1).getOrElse(0L)
+      val base = log.latestSnapshot()
+      val v = base.fold(0L)(_.version + 1)
       val removes: Seq[DeltaAction] =
         if (overwrite && v > 0)
-          log.snapshotFiles()
+          base.get.files
             .map(a => RemoveFile(a.path, System.currentTimeMillis(), dataChange = true))
         else if (replacing.nonEmpty) {
           // conflict check per attempt: every replaced file must still be
@@ -1639,7 +1565,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           // A concurrent row-level DELETE keeps the path live but swaps
           // its DV — committing the rewrite then would resurrect the
           // racer's deleted rows (Delta's RewriteFiles-style validation).
-          val live = log.snapshotFiles().map(a => a.path -> a.deletionVector).toMap
+          val live = base.toSeq.flatMap(_.files).map(a => a.path -> a.deletionVector).toMap
           replacing.foreach { case (p, readDv) =>
             require(live.contains(p),
               s"compaction conflict at $tablePath: a concurrent commit removed " +
@@ -1665,7 +1591,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
         else {
           // additive evolution (graft.model.SchemaMerge): a narrower
           // append used to silently replace the whole schema
-          val (existing, existingPartCols) = schemaAt(None)
+          val (existing, existingPartCols) = (base.get.schema, base.get.partitionColumns)
           require(existingPartCols == partitionColumns,
             s"partition spec changed concurrently at $tablePath: " +
               s"$existingPartCols != $partitionColumns")
@@ -1685,7 +1611,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           val merged0 = graft.model.SchemaMerge.additive(existing, schemaForMeta, tablePath)
           // mapped tables: columns the merge just added need their field
           // id + the physical name the staged files were written under
-          val metaNow = log.metadataAt(None)._1
+          val metaNow = base.get.metadata
           val (merged1, confChange) =
             if (!mappingOn) (merged0, None)
             else {
@@ -1713,7 +1639,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
           val upgrade: Seq[DeltaAction] =
             if (!widenedNow) Seq.empty
             else {
-              val p = log.protocolAt(None)
+              val p = base.get.protocol
               if (p.readerFeatures.exists(_.contains("typeWidening"))) Seq.empty
               else Seq(DeltaTable.upgradeWithFeature(p, "typeWidening"))
             }
@@ -1744,50 +1670,13 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
   // ----------------------------------------------------------------- sync
 
   /** Root the data files live under (for cross-format sync targets). */
-  def dataRoot: String = readBasePath(None)
-
-  /** Current snapshot as canonical data-file descriptors: absolute
-    * paths, hive partition values, footer-equivalent stats parsed out
-    * of the log's stats JSON — no parquet is touched (ref "sync without
-    * rewriting data", `README.md:1-16`). */
-  /** Sync-plane column-mapping translation: physical data schema for
-    * stats parsing plus physical→logical dot-path renames, identity
-    * when mapping is off. */
-  private def syncShape(asOf: Option[Long]): (StructType, Map[String, String]) = {
-    val (schema, partCols) = schemaAt(asOf)
-    val dataSchema = StructType(schema.filterNot(f => partCols.contains(f.name)))
-    if (columnMappingMode(asOf) == "none") (dataSchema, Map.empty)
-    else {
-      def paths(st: StructType, lp: String, pp: String): Seq[(String, String)] =
-        st.fields.flatMap { f =>
-          val l = if (lp.isEmpty) f.name else s"$lp.${f.name}"
-          val ph = if (pp.isEmpty) DeltaTable.physicalName(f)
-                   else s"$pp.${DeltaTable.physicalName(f)}"
-          (ph -> l) +: (f.dataType match {
-            case nested: StructType => paths(nested, l, ph)
-            case _ => Seq.empty
-          })
-        }
-      (DeltaTable.physicalSchema(dataSchema), paths(dataSchema, "", "").toMap)
-    }
-  }
+  def dataRoot: String = log.snapshot().readBasePath
 
   private def logicalStats(
       cols: Seq[graft.model.ColumnStatRow],
       names: Map[String, String]): Seq[graft.model.ColumnStatRow] =
     if (names.isEmpty) cols
     else cols.map(c => c.copy(column = names.getOrElse(c.column, c.column)))
-
-  /** Physical→logical partition-name remap at `asOf`, resolved ONCE per
-    * call site — resolving inside a per-file loop replays the log for
-    * every file (quadratic on a 100k-file snapshot). */
-  private def logicalPartValuesFn(
-      asOf: Option[Long]): Map[String, String] => Map[String, String] =
-    if (columnMappingMode(asOf) == "none") identity
-    else {
-      val m = schemaAt(asOf)._1.fields.map(f => DeltaTable.physicalName(f) -> f.name).toMap
-      pv => pv.map { case (k, v) => m.getOrElse(k, k) -> v }
-    }
 
   /** Planning-time (live rows, live bytes) of the current snapshot,
     * summed on the driver over the replayed live files: the stats-join
@@ -1797,25 +1686,29 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     * empty or any live file lacks a `numRecords` stat — unknown rows
     * mean no planning fact. */
   def planningFacts(): Option[(Double, Double)] = {
-    val files = log.snapshotFiles()
+    val files = log.snapshot().files
     val records = files.map(_.stats.fold(-1L)(DeltaStats.fromJson(_, StructType(Nil))._1))
     if (files.isEmpty || records.exists(_ < 0)) None
     else Some(((records.sum - files.flatMap(_.deletionVector).map(_.cardinality).sum).toDouble,
       files.map(_.size).sum.toDouble))
   }
 
+  /** Current snapshot as canonical data-file descriptors: absolute
+    * paths, hive partition values, footer-equivalent stats parsed out
+    * of the log's stats JSON — no parquet is touched (ref "sync without
+    * rewriting data", `README.md:1-16`). */
   def snapshotDataFiles(): Seq[graft.model.InternalDataFile] = {
-    requireReadable(None)
-    val (dataSchema, names) = syncShape(None)
-    val logicalPart = logicalPartValuesFn(None)
-    log.snapshotFiles().map { a =>
+    val s = log.snapshot()
+    s.requireReadable()
+    val (dataSchema, names) = s.syncShape
+    s.files.map { a =>
       require(a.deletionVector.isEmpty,
         s"cannot metadata-sync $tablePath: file ${a.path} carries a deletion " +
           "vector other formats cannot express; run purgeDeletes() first")
       val (n, cols) = a.stats.map(DeltaStats.fromJson(_, dataSchema)).getOrElse((-1L, Seq.empty))
       graft.model.InternalDataFile(
         physicalPath = absolutePath(a.path),
-        partitionValues = logicalPart(a.partitionValues),
+        partitionValues = s.logicalPartValues(a.partitionValues),
         fileSizeBytes = a.size,
         recordCount = n,
         columnStats = logicalStats(cols, names),
@@ -1826,10 +1719,9 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
   /** One commit's adds + removed paths in canonical form — the unit of
     * incremental sync replay (ref `DeltaSourceClient.java:106-143`). */
   def changeSet(version: Long): (Seq[graft.model.InternalDataFile], Seq[String]) = {
-    val asOf = Some(version)
-    val (dataSchema, names) = syncShape(asOf)
-    val logicalPart = logicalPartValuesFn(asOf)
-    val actions = log.readActions(version)
+    val s = log.snapshot(Some(version))
+    val (dataSchema, names) = s.syncShape
+    val actions = s.actions(version)
     val adds = actions.collect { case a: AddFile =>
       if (a.deletionVector.nonEmpty) throw new graft.model.UnsyncableChangeException(
         s"cannot metadata-sync version $version of $tablePath: ${a.path} carries a " +
@@ -1838,7 +1730,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       val cols = logicalStats(cols0, names)
       graft.model.InternalDataFile(
         physicalPath = absolutePath(a.path),
-        partitionValues = logicalPart(a.partitionValues),
+        partitionValues = s.logicalPartValues(a.partitionValues),
         fileSizeBytes = a.size,
         recordCount = n,
         columnStats = cols,
@@ -1908,17 +1800,13 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     } }
     val removeActions = removePaths.map(p =>
       RemoveFile(new Path(p).toUri.toString, now, dataChange = true))
-    val v = PhaseTimer.time("delta:version-list")(log.latestVersion()).map(_ + 1).getOrElse(0L)
-    // ONE metadata replay serves both the CAS read and the table id —
-    // each replay walks the log tail, so doubling it doubled the
-    // per-commit cost of a 100-commit incremental batch
-    val baseMeta =
-      if (v == 0L) None
-      else Some(PhaseTimer.time("delta:metadata-replay")(log.metadataAt(None))._1)
+    // ONE snapshot serves the version slot, the CAS read and the table
+    // id: a commit landing after it takes slot v, so our log.commit(v, …)
+    // below fails the put-if-absent rather than stacking a stale diff
+    val base = PhaseTimer.time("delta:snapshot")(log.latestSnapshot())
+    val v = base.fold(0L)(_.version + 1)
+    val baseMeta = base.map(_.metadata)
     val baseConfig = baseMeta.map(_.configuration).getOrElse(Map.empty[String, String])
-    // the config read above is at-or-after version v-1; a commit landing
-    // after it takes slot v, so our log.commit(v, …) below fails the
-    // put-if-absent rather than stacking a stale diff
     cas.foreach(_.validate(baseConfig, s"delta target $tablePath"))
     // a widened source schema widens the mirrored target schema — stamp
     // the typeChanges history (cleanSchema stripped any carried one) and
@@ -1960,7 +1848,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
     val upgrade: Seq[DeltaAction] =
       if (!widenedNow) Seq.empty
       else {
-        val p = log.protocolAt(None)
+        val p = base.get.protocol
         if (p.readerFeatures.exists(_.contains("typeWidening"))) Seq.empty
         else Seq(DeltaTable.upgradeWithFeature(p, "typeWidening"))
       }
@@ -1974,8 +1862,7 @@ final class DeltaTable private (spark: SparkSession, val log: DeltaLog) {
       // those) — UNLESS the race winner registered the same
       // deterministic copy (a competitor syncing the same source), in
       // which case the copy is now live and stays
-      val liveNow = statsKeys.flatMap(
-        log.metadataAt(None)._1.configuration.get).toSet
+      val liveNow = statsKeys.flatMap(log.snapshot().configuration.get).toSet
       adoptedTracked.collect { case (_, p, true) if !liveNow(p) => new Path(p) }
         .foreach(p =>
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false))
@@ -2581,13 +2468,15 @@ final class DeltaScanBuilder(
   }
 
   /** The pruned live files, sorted by path. */
-  def files(): Seq[AddFile] = {
-    table.requireReadable(asOfVersion)
-    val (schema, partCols) = table.schemaAt(asOfVersion)
+  def files(): Seq[AddFile] = files(table.log.snapshot(asOfVersion))
+
+  private def files(s: DeltaSnapshot): Seq[AddFile] = {
+    s.requireReadable()
+    val schema = s.schema
     // column-mapped tables key partitionValues and stats by PHYSICAL
     // name; callers always speak logical names
     val phys: Map[String, String] =
-      if (table.columnMappingMode(asOfVersion) == "none") Map.empty
+      if (!s.columnMapped) Map.empty
       else schema.fields.map(f => f.name -> DeltaTable.physicalName(f)).toMap
     def p(c: String): String = phys.getOrElse(c, c)
     // a range predicate on the SOURCE column of a time-transform
@@ -2595,14 +2484,14 @@ final class DeltaScanBuilder(
     // lexicographically within a granularity, so truncate-and-compare
     // is exact (hidden-partitioning semantics, ref
     // `DeltaPartitionExtractor.java:104-224`)
-    val timeDefs = DeltaTable.partitionDefsOf(schema, partCols).filterNot(_.isIdentity)
+    val timeDefs = DeltaTable.partitionDefsOf(schema, s.partitionColumns).filterNot(_.isIdentity)
     val timeBounds = rangePredicates.flatMap { case (c, lo, hi) =>
       timeDefs.filter(_.sourceColumn == c).map { t =>
         def cut(v: String) = graft.model.PartitionTransform.truncate(t.granularity, v)
         (p(t.fieldName), lo.map(cut), hi.map(cut))
       }
     }
-    val inPartitions = table.log.snapshotFiles(asOfVersion).filter { a =>
+    val inPartitions = s.files.filter { a =>
       // a null or missing value is in no set, but within every time bound
       partitionPredicates.forall { case (c, vs) =>
         a.partitionValues.get(p(c)).exists(v => v != null && vs(v))
@@ -2614,7 +2503,7 @@ final class DeltaScanBuilder(
     val filters = rangePredicates.flatMap { case (c, lo, hi) =>
       graft.sources.StatsSkipping.rangeFilter(p(c), schema(c).dataType, lo, hi)
     }
-    val readSchema = if (phys.isEmpty) schema else DeltaTable.physicalSchema(schema)
+    val readSchema = s.readShape._1
     graft.sources.StatsSkipping.prune(inPartitions, filters)(a =>
       DeltaTable.columnStats(a.stats.orNull, readSchema))
   }
@@ -2622,33 +2511,16 @@ final class DeltaScanBuilder(
   /** Pruned data read. The skipping predicates only drop whole files;
     * callers still apply the row-level filter on the result. */
   def toDF(): DataFrame = {
-    val (schema, partCols) = table.schemaAt(asOfVersion)
+    val s = table.log.snapshot(asOfVersion)
     val picked = chunkSpec match {
-      case Some((k, n)) => files().zipWithIndex.collect { case (a, i) if i % n == k => a }
-      case None => files()
+      case Some((k, n)) => files(s).zipWithIndex.collect { case (a, i) if i % n == k => a }
+      case None => files(s)
     }
-    val pruned = picked.map(a => (DeltaTable.dataFileOf(a), a.deletionVector))
     // stats JSON by the resolved path the index sees, decoded only under a data filter
     lazy val statsJson = picked.iterator
       .map(a => DeltaTable.metadataFilePath(table.tablePath, a.path) -> a.stats.orNull).toMap
-    def statsIn(readSchema: StructType)(f: InternalDataFile) =
-      DeltaTable.columnStats(statsJson.getOrElse(f.physicalPath, null), readSchema)
-    table.physicalShape(asOfVersion) match {
-      case None =>
-        DeltaTable.readFilesWithDeletes(spark, table.tablePath, table.readBasePath(asOfVersion),
-          pruned, schema, partCols, statsIn(schema))
-      case Some((physSchema, physPartCols)) =>
-        // column-mapped table: the files speak physical names — read
-        // physically (deletes applied in physical space), then cast each
-        // column back to its logical shape (struct casts rename nested
-        // fields positionally)
-        val phys = DeltaTable.readFilesWithDeletes(
-          spark, table.tablePath, table.readBasePath(asOfVersion), pruned,
-          physSchema, physPartCols, statsIn(physSchema))
-        val logical = DeltaTable.logicalClean(schema)
-        phys.select(physSchema.fields.zip(logical.fields).map { case (pf, lf) =>
-          col(s"`${pf.name}`").cast(lf.dataType).as(lf.name)
-        }.toSeq: _*)
-    }
+    val readSchema = s.readShape._1
+    s.read(spark, picked.map(a => (DeltaTable.dataFileOf(a), a.deletionVector)),
+      f => DeltaTable.columnStats(statsJson.getOrElse(f.physicalPath, null), readSchema))
   }
 }

@@ -124,11 +124,8 @@ final class HudiTimeline private (
   def writeProperties(props: Map[String, String]): Unit = {
     writable("writeProperties")
     fs.mkdirs(hoodieDir)
-    val out = fs.create(propsFile, true)
-    try {
-      val body = props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
-      out.write(body.getBytes(StandardCharsets.UTF_8))
-    } finally out.close()
+    val body = props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
+    MetaFiles.replace(fs, propsFile, body.getBytes(StandardCharsets.UTF_8))
   }
 
   def readProperties(): Map[String, String] =

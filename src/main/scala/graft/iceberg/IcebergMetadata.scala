@@ -453,8 +453,7 @@ final class IcebergMetadataLog(val tablePath: String, sc: SparkContext) {
     try out.write(IcebergMetadataCodec.toJson(metadata).getBytes(StandardCharsets.UTF_8))
     finally out.close()
     if (graft.util.AtomicPublish.putIfAbsent(fs, sc.hadoopConfiguration, tmp, target)) {
-      val hint = fs.create(hintFile, true)
-      try hint.write(v.toString.getBytes(StandardCharsets.UTF_8)) finally hint.close()
+      graft.util.MetaFiles.replace(fs, hintFile, v.toString.getBytes(StandardCharsets.UTF_8))
       true
     } else false
   }

@@ -193,7 +193,7 @@ object FormatQueries {
         val kMax = incoming16.agg(max("o_orderkey")).head.getLong(0)
         val fs16 = new org.apache.hadoop.fs.Path(root)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val files16 = t16.log.snapshotFiles().map(a => s"$root/orders_keyindex/${a.path}")
+        val files16 = t16.log.snapshot().files.map(a => s"$root/orders_keyindex/${a.path}")
         val victims16 = files16.filter { f =>
           val mm = spark.read.parquet(f)
             .agg(min("o_orderkey"), max("o_orderkey"),

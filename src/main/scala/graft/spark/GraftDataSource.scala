@@ -1,6 +1,8 @@
 package graft.spark
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
@@ -30,6 +32,9 @@ import graft.sync.FormatTable
  * Column order note: like Delta's own relation, partition columns
  * surface after data columns (HadoopFsRelation contract), which may
  * differ from the table-schema order `GraftTable.toDF` presents.
+ *
+ * A read the relation cannot carry — row-level deletes, column mapping,
+ * merged log files — is refused, naming the table API that reads it.
  */
 final class GraftDataSource
     extends RelationProvider with CreatableRelationProvider with StreamSourceProvider
@@ -106,8 +111,9 @@ final class GraftDataSource
       "versionAsOf and timestampAsOf are mutually exclusive")
     val df = fmt.open(spark, path).read(asOf, tsOf)
     GraftDataSource.fsRelationOf(df).getOrElse(throw new UnsupportedOperationException(
-      s"table at $path plans as multiple relations (mixed data-file formats); " +
-        "read it through the library API (e.g. IcebergTable.forPath(...).toDF())"))
+      s"the $fmt table at $path reads through more than a file scan (row-level deletes, " +
+        "column mapping or merged logs), which this relation would drop; read it with " +
+        s"${fmt.name.capitalize}Table.forPath(spark, \"$path\").toDF()"))
   }
 
   override def createRelation(
@@ -133,7 +139,13 @@ final class GraftDataSource
       case (m, true) => table.write(df, partCols, overwrite = m == SaveMode.Overwrite)
       case (_, false) => table.create(df, partCols)
     }
-    createRelation(sqlContext, parameters + ("format" -> fmt.name))
+    // Spark only re-caches through the returned relation and never reads
+    // it, so it need not plan the table (which a read may refuse)
+    val ctx = sqlContext
+    new BaseRelation {
+      override def sqlContext: SQLContext = ctx
+      override def schema: StructType = df.schema
+    }
   }
 
   /** The `path` option, and the explicit `format` option or else the
@@ -164,14 +176,17 @@ object GraftDataSource {
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
   }
 
-  /** The single file-scan relation of a planned table read, if the plan
-    * is shaped as (projections over) one HadoopFsRelation. */
-  private[graft] def fsRelationOf(df: DataFrame): Option[HadoopFsRelation] =
-    df.queryExecution.analyzed.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation]
-    } match {
-      case Seq(rel) => Some(rel)
+  /** The file-scan relation of a planned table read, if the plan is
+    * that relation under column selections only (bare-attribute
+    * `Project`s). Any other operator — a deletion anti-join, a renaming
+    * cast, a union — changes the rows or names the relation alone would
+    * give, so such plans yield None. */
+  private[graft] def fsRelationOf(df: DataFrame): Option[HadoopFsRelation] = {
+    def scanOf(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
+      case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) => scanOf(child)
+      case l: LogicalRelation => Some(l.relation).collect { case r: HadoopFsRelation => r }
       case _ => None
     }
+    scanOf(df.queryExecution.analyzed)
+  }
 }

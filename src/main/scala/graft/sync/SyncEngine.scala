@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{Metadata, StructType}
 
-import graft.delta.DeltaTable
+import graft.delta.{DeltaSnapshot, DeltaTable}
 import graft.hudi.HudiTable
 import graft.iceberg.IcebergTable
 import graft.model.InternalDataFile
@@ -395,23 +395,19 @@ private final class DeltaSource(t: DeltaTable) extends SyncSource {
   def format = FormatTable.Delta.name
   def sourceId = s"delta:${t.tablePath}"
   def dataRoot: String = t.dataRoot
-  private def defs = {
-    val (schema, partCols) = t.schemaAt(None)
-    DeltaTable.partitionDefsOf(schema, partCols)
-  }
+  private def defs(s: DeltaSnapshot) = DeltaTable.partitionDefsOf(s.schema, s.partitionColumns)
   /** Source data schema: generated transform columns are the TARGET
     * codec's concern (hidden in Iceberg, regenerated for Delta). */
   private def schemaFor(asOf: Option[Long]): StructType = {
-    val (sch, partCols) = t.schemaAt(asOf)
-    val gen = DeltaTable.partitionDefsOf(sch, partCols)
-      .filterNot(_.isIdentity).map(_.fieldName).toSet
-    StructType(sch
+    val s = t.log.snapshot(asOf)
+    val gen = defs(s).filterNot(_.isIdentity).map(_.fieldName).toSet
+    StructType(s.schema
       .filterNot(f => gen.contains(f.name))
       .map(_.copy(metadata = Metadata.empty)))
   }
   def schema: StructType = schemaFor(None)
   override def schemaAtVersion(v: String): StructType = schemaFor(Some(v.toLong))
-  def partitionColumns: Seq[String] = defs.map(_.spec)
+  def partitionColumns: Seq[String] = defs(t.log.snapshot()).map(_.spec)
   def currentVersion: String = t.latestVersion.toString
   def versionExists(v: String): Boolean =
     v.toLongOption.exists(t.log.listVersions().contains)
@@ -422,7 +418,7 @@ private final class DeltaSource(t: DeltaTable) extends SyncSource {
   override def laterOf(a: String, b: String): String =
     if (a.toLong >= b.toLong) a else b
   override def recordKeyFields: Seq[String] =
-    t.log.metadataAt(None)._1.configuration.get(SyncEngine.RecordKeyProp)
+    t.log.snapshot().configuration.get(SyncEngine.RecordKeyProp)
       .toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
   /** The registration visible AT the synced version — its sketch
     * describes an ancestor of the row set the replay applies (the same
@@ -431,7 +427,7 @@ private final class DeltaSource(t: DeltaTable) extends SyncSource {
     * partition-statistics key rides only as a chained carry (Delta has
     * no native partition-rollup writer). */
   override def statisticsProps(version: String): Map[String, String] = {
-    val conf = t.log.metadataAt(version.toLongOption)._1.configuration
+    val conf = t.log.snapshot(version.toLongOption).configuration
     conf.get(DeltaTable.StatsPathKey).orElse(conf.get(SyncEngine.StatsPathProp))
       .map(p => Map(SyncEngine.StatsPathProp -> p)).getOrElse(Map.empty) ++
       conf.get(SyncEngine.PartitionStatsPathProp)
@@ -440,9 +436,8 @@ private final class DeltaSource(t: DeltaTable) extends SyncSource {
 
   /** Column-mapped sources: shared parquet carries col-<uuid> names. */
   override def physicalNames: Map[String, String] = {
-    val (schema, _) = t.schemaAt(None)
-    if (!t.log.metadataAt(None)._1.configuration
-        .get("delta.columnMapping.mode").exists(_ != "none")) Map.empty
+    val s = t.log.snapshot()
+    if (!s.columnMapped) Map.empty
     else {
       def walk(st: StructType, prefix: String): Seq[(String, String)] =
         st.fields.toSeq.flatMap { f =>
@@ -457,7 +452,7 @@ private final class DeltaSource(t: DeltaTable) extends SyncSource {
             case _ => Seq.empty
           })
         }
-      walk(schema, "").toMap
+      walk(s.schema, "").toMap
     }
   }
 }
@@ -467,7 +462,7 @@ private final class DeltaTarget(spark: SparkSession, val targetPath: String) ext
   private def table = DeltaTable.forPath(spark, targetPath)
   private def exists = table.log.latestVersion().nonEmpty
   def syncState(): Map[String, String] =
-    if (!exists) Map.empty else table.log.metadataAt(None)._1.configuration
+    table.log.latestSnapshot().fold(Map.empty[String, String])(_.configuration)
   def livePaths(): Set[String] =
     if (!exists) Set.empty else table.snapshotDataFiles().map(_.physicalPath).toSet
   // a batch replay pays ONE end-of-batch checkpoint instead of an

@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -16,6 +16,9 @@ import org.apache.parquet.schema.MessageType
 
 /**
  * Driver-side reads and writes of metadata files.
+ *
+ * In-place rewrites of a metadata file (`hoodie.properties`, Iceberg's
+ * version hint, the Delta key-index config) go through [[replace]].
  *
  * Whole-file reads of small metadata files: Hudi instants and
  * `hoodie.properties`, Delta commits and `_last_checkpoint`, Iceberg
@@ -37,6 +40,30 @@ object MetaFiles {
     val in = fs.open(path)
     try new String(in.readAllBytes(), StandardCharsets.UTF_8)
     finally in.close()
+  }
+
+  /** Replaces `target`'s content with `bytes` so a concurrent reader
+    * sees the old file or the new one, never a torn one: the bytes are
+    * written aside in the target's directory, then renamed over it. On a
+    * checksummed filesystem the write and the rename go through its raw
+    * filesystem with no `.crc` sidecar (a sidecar moves separately, so a
+    * reader could pair old bytes with a new checksum), and the target's
+    * old sidecar is deleted first. Where a plain rename does not replace
+    * (HDFS), `FileContext` renames with OVERWRITE, which is atomic there. */
+  def replace(fs: FileSystem, target: Path, bytes: Array[Byte]): Unit = {
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
+    val tmp = new Path(target.getParent, s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
+    val out = raw.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    fs match {
+      case c: ChecksumFileSystem => raw.delete(c.getChecksumFile(target), false)
+      case _ => ()
+    }
+    if (!raw.rename(tmp, target))
+      FileContext.getFileContext(raw.getUri, raw.getConf).rename(tmp, target, Options.Rename.OVERWRITE)
   }
 
   /** Rows of parquet `files`, read on the driver, projected to `columns`

@@ -275,12 +275,12 @@ class MetadataReplaySizeSpec extends SparkTestBase {
       "snapshotDataFiles" -> { w =>
         assert(w.t.snapshotDataFiles().map(f => name(f.physicalPath)).toSet == w.files)
       },
-      "metadataAt" -> { w =>
-        val (meta, _) = w.t.log.metadataAt(Some(w.base))
+      "snapshot metadata" -> { w =>
+        val meta = w.t.log.snapshot(Some(w.base)).metadata
         assert(meta.schemaString.contains("\"k\"") && meta.partitionColumns.isEmpty)
       },
-      "protocolAt" -> { w =>
-        assert(w.t.log.protocolAt(Some(w.base)).readerFeatures.exists(_.contains("v2Checkpoint")) ==
+      "snapshot protocol" -> { w =>
+        assert(w.t.log.snapshot(Some(w.base)).protocol.readerFeatures.exists(_.contains("v2Checkpoint")) ==
           (layout == V2))
       },
       "changesAsDF" -> { w =>

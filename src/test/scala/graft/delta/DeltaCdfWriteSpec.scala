@@ -32,9 +32,9 @@ class DeltaCdfWriteSpec extends SparkTestBase {
   test("setProperties enables CDF and upgrades the protocol to writer v4") {
     val dir = tmpDir("cdf_props")
     val t = cdfTable(dir)
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.minWriterVersion == 4 && p.writerFeatures.isEmpty)
-    assert(t.log.metadataAt(None)._1.configuration
+    assert(t.log.snapshot().metadata.configuration
       .get("delta.enableChangeDataFeed").contains("true"))
   }
 

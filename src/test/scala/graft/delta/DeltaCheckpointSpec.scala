@@ -52,7 +52,7 @@ class DeltaCheckpointSpec extends SparkTestBase {
     val before = t.toDF().count()
     t.checkpointV2(sidecarParts = 2)
     // the upgrade landed as its own commit BEFORE the checkpoint
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.minReaderVersion == 3)
     assert(p.readerFeatures.exists(_.contains("v2Checkpoint")))
     assert(p.writerFeatures.exists(_.contains("v2Checkpoint")))
@@ -67,7 +67,7 @@ class DeltaCheckpointSpec extends SparkTestBase {
     t.log.expireLogBefore(cpV)
     val t2 = DeltaTable.forPath(spark, s"$dir/t")
     assert(t2.toDF().count() == before)
-    assert(t2.log.protocolAt(None).readerFeatures.exists(_.contains("v2Checkpoint")))
+    assert(t2.log.snapshot().protocol.readerFeatures.exists(_.contains("v2Checkpoint")))
     // writes continue on top of a v2 base
     t2.append(src.limit(10), Seq.empty)
     assert(t2.toDF().count() == before + 10)
@@ -97,7 +97,7 @@ class DeltaCheckpointSpec extends SparkTestBase {
   }
 
   private def livePaths(t: DeltaTable): Set[String] =
-    t.log.snapshotFiles().map(_.path).toSet
+    t.log.snapshot().files.map(_.path).toSet
 
   /** Checkpoint shapes other writers emit, each a rewrite of this
     * engine's classic checkpoint: (label, table carries a DV, rewrite). */
@@ -193,7 +193,7 @@ class DeltaCheckpointSpec extends SparkTestBase {
       assert(livePaths(t2) == live)
       assert(t2.toDF().count() == before)
       assert(t2.schemaAt(None)._1.fieldNames.sameElements(Array("o_orderkey", "o_orderstatus")))
-      assert(t2.log.protocolAt(None).readerFeatures.exists(_.contains("v2Checkpoint")))
+      assert(t2.log.snapshot().protocol.readerFeatures.exists(_.contains("v2Checkpoint")))
     }
   }
 
@@ -223,7 +223,7 @@ class DeltaCheckpointSpec extends SparkTestBase {
     val cp = new Path(s"$dir/t/_delta_log/${f"${0L}%020d"}.checkpoint.parquet")
     assert(fs(dir).delete(cp, false))
     val e = intercept[IllegalArgumentException] {
-      DeltaTable.forPath(spark, s"$dir/t").log.resolveCheckpoint(None)
+      DeltaTable.forPath(spark, s"$dir/t").log.snapshot()
     }
     assert(e.getMessage.contains("v0"))
   }
@@ -242,8 +242,8 @@ class DeltaCheckpointSpec extends SparkTestBase {
         .filter(_.getScheme == "file").map(_.getThreadStatistics.getBytesRead).sum
     }
     def lookup(): Unit = {
-      assert(log.metadataAt(None)._2 == 2L)
-      assert(log.protocolAt(None).minReaderVersion == 1)
+      assert(log.snapshot().version == 2L)
+      assert(log.snapshot().protocol.minReaderVersion == 1)
     }
     val first = bytesRead()
     lookup()
@@ -263,7 +263,7 @@ class DeltaCheckpointSpec extends SparkTestBase {
     // a newer checkpoint is still resolved and read
     t.enableColumnMapping() // v3: protocol 2/5
     t.checkpoint()
-    assert(log.protocolAt(None).minReaderVersion == 2)
-    assert(log.metadataAt(None)._1.configuration.get("delta.columnMapping.mode").contains("name"))
+    assert(log.snapshot().protocol.minReaderVersion == 2)
+    assert(log.snapshot().metadata.configuration.get("delta.columnMapping.mode").contains("name"))
   }
 }

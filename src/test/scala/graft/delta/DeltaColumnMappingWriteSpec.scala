@@ -22,9 +22,9 @@ class DeltaColumnMappingWriteSpec extends SparkTestBase {
     val t = DeltaTable.create(spark, s"$dir/t", orders.repartition(2))
     val before = keys(t)
     t.enableColumnMapping()
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.minReaderVersion == 2 && p.minWriterVersion == 5)
-    val meta = t.log.metadataAt(None)._1
+    val meta = t.log.snapshot().metadata
     assert(meta.configuration.get("delta.columnMapping.mode").contains("name"))
     assert(meta.configuration("delta.columnMapping.maxColumnId").toLong == 3L)
     assert(keys(t) == before)
@@ -67,7 +67,7 @@ class DeltaColumnMappingWriteSpec extends SparkTestBase {
     t.addColumn(StructField("o_orderstatus", StringType))
     // fresh physical name + id: historical values do NOT resurrect
     assert(t.toDF().filter(col("o_orderstatus").isNotNull).count() == 0)
-    val meta = t.log.metadataAt(None)._1
+    val meta = t.log.snapshot().metadata
     val schema = DataType.fromJson(meta.schemaString).asInstanceOf[StructType]
     val readded = schema.fields.find(_.name == "o_orderstatus").get
     assert(readded.metadata.getString("delta.columnMapping.physicalName").startsWith("col-"))
@@ -94,6 +94,23 @@ class DeltaColumnMappingWriteSpec extends SparkTestBase {
     assert(keys(t) == all.filterNot(_ % 10 == 0)) // same key set
     val bumped = t.toDF().filter(col("o_orderkey") % 4 === 0)
     assert(bumped.count() == n)
+  }
+
+  test("compact and purgeDeletes keep a mapped table's renamed column") {
+    val dir = tmpDir("cm_rewrite")
+    val t = DeltaTable.create(spark, s"$dir/t", orders.repartition(3))
+    t.append(orders.repartition(3), Seq.empty)
+    t.enableColumnMapping()
+    t.renameColumn("o_orderkey", "key")
+    t.delete(col("key") % 5 === 0)
+    def live = t.toDF().select("key", "o_totalprice").collect().map(r => (r.getLong(0), r.get(1)))
+      .sortBy(_._1).toSeq
+    val before = live
+    assert(t.purgeDeletes().isDefined)
+    assert(live == before, "purgeDeletes changed the rows of the renamed column")
+    assert(t.compact(smallFileBytes = 1L << 30).isDefined)
+    assert(live == before, "compact changed the rows of the renamed column")
+    assert(t.toDF().filter(col("key").isNull).count() == 0)
   }
 
   test("partitioned mapped table: physical partition dirs, pruning intact") {

@@ -34,7 +34,7 @@ class DeltaIdentitySpec extends SparkTestBase {
   test("appends assign gap-free values from start, watermark advances per commit") {
     val dir = tmpDir("ident_basic")
     val t = DeltaTable.createEmpty(spark, s"$dir/t", schemaWithId())
-    assert(t.log.protocolAt(None).minWriterVersion == 6)
+    assert(t.log.snapshot().protocol.minWriterVersion == 6)
     import spark.implicits._
     t.append(Seq("a", "b", "c").toDF("tag"), Seq.empty)
     assert(ids(t) == Seq(100L, 110L, 120L))

@@ -22,7 +22,7 @@ class DeltaKeyIndexSpec extends SparkTestBase {
 
   /** Live data-file paths of the table (absolute). */
   private def liveFiles(t: DeltaTable, dir: String): Seq[String] =
-    t.log.snapshotFiles().map(a => new Path(s"$dir/${a.path}").toString)
+    t.log.snapshot().files.map(a => new Path(s"$dir/${a.path}").toString)
 
   /** Interleave keys across files: residue class by key so every file's
     * [min,max] spans the whole domain — range pruning keeps ALL files
@@ -284,11 +284,11 @@ class DeltaKeyIndexSpec extends SparkTestBase {
     val other = if (zone0 == "America/New_York") "UTC" else "America/New_York"
     val probe = t.toDF().select("ts").limit(20).localCheckpoint()
     val conf = spark.sparkContext.hadoopConfiguration
-    assert(t.keyIndexRouteFiles(Seq("ts"), probe).isDefined,
+    assert(t.keyIndexRouteFiles(t.log.snapshot(), Seq("ts"), probe).isDefined,
       "in the build zone the index must answer")
     try {
       spark.conf.set("spark.sql.session.timeZone", other)
-      assert(t.keyIndexRouteFiles(Seq("ts"), probe).isEmpty,
+      assert(t.keyIndexRouteFiles(t.log.snapshot(), Seq("ts"), probe).isEmpty,
         "a foreign session zone re-formats timestamp probes — the index must refuse")
       // a MERGE in the foreign zone lands correctly through the fallback
       val upd = t.toDF().limit(15).withColumn("o_totalprice", lit(8.25)).localCheckpoint()
@@ -304,7 +304,7 @@ class DeltaKeyIndexSpec extends SparkTestBase {
     // failed (safe); a rebuild restores exact routing
     t.buildKeyIndex("ts")
     assert(DeltaKeyIndex.usable(t.log, conf, s"$dir/t", t.latestVersion))
-    assert(t.keyIndexRouteFiles(Seq("ts"), probe).isDefined)
+    assert(t.keyIndexRouteFiles(t.log.snapshot(), Seq("ts"), probe).isDefined)
   }
 
   test("metadata-only key type change: routing refuses though the fence is covered") {
@@ -316,7 +316,7 @@ class DeltaKeyIndexSpec extends SparkTestBase {
     val t = DeltaTable.create(spark, s"$dir/t", interleaved)
     t.buildKeyIndex("o_orderkey")
     val probe = Seq(1L, 2L, 3L).toDF("o_orderkey")
-    assert(t.keyIndexRouteFiles(Seq("o_orderkey"), probe).isDefined)
+    assert(t.keyIndexRouteFiles(t.log.snapshot(), Seq("o_orderkey"), probe).isDefined)
     val widened = org.apache.spark.sql.types.StructType(t.toDF().schema.fields.map(f =>
       if (f.name == "o_orderkey") f.copy(dataType = org.apache.spark.sql.types.DoubleType)
       else f))
@@ -324,7 +324,7 @@ class DeltaKeyIndexSpec extends SparkTestBase {
     val conf = spark.sparkContext.hadoopConfiguration
     assert(DeltaKeyIndex.usable(t.log, conf, s"$dir/t", t.latestVersion),
       "the metadata-only commit carries no adds — the fence alone stays covered")
-    assert(t.keyIndexRouteFiles(Seq("o_orderkey"), probe).isEmpty,
+    assert(t.keyIndexRouteFiles(t.log.snapshot(), Seq("o_orderkey"), probe).isEmpty,
       "stored strings are bigint-formatted; a double-typed key must refuse")
     // an add under the changed type skips maintenance → fence fails
     t.append(orders.limit(3)
@@ -380,7 +380,7 @@ class DeltaKeyIndexSpec extends SparkTestBase {
     out.close()
     assert(DeltaKeyIndex.readConfig(conf, s"$dir/t").get.keyType.isEmpty)
     val probe = Seq(1L, 2L, 3L).toDF("o_orderkey")
-    assert(t.keyIndexRouteFiles(Seq("o_orderkey"), probe).isDefined,
+    assert(t.keyIndexRouteFiles(t.log.snapshot(), Seq("o_orderkey"), probe).isDefined,
       "a legacy config must route, not refuse")
     // an add-bearing commit: maintenance must index it AND backfill
     val extra = orders.limit(3)
@@ -392,7 +392,7 @@ class DeltaKeyIndexSpec extends SparkTestBase {
     assert(DeltaKeyIndex.usable(t.log, conf, s"$dir/t", t.latestVersion),
       "the post-upgrade commit must carry its batch — fence covered")
     // exactness is intact: the new keys route to their file
-    val hits = t.keyIndexRouteFiles(Seq("o_orderkey"), extra.select("o_orderkey"))
+    val hits = t.keyIndexRouteFiles(t.log.snapshot(), Seq("o_orderkey"), extra.select("o_orderkey"))
     assert(hits.isDefined && hits.get.nonEmpty)
   }
 

@@ -59,9 +59,9 @@ class DeltaProtocolSpec extends SparkTestBase {
     val dir = tmpDir("proto_upgrade")
     // generated-column partitioning => legacy writer v4 at create
     val t = DeltaTable.create(spark, s"$dir/t", orders, Seq("month(o_orderdate)"))
-    assert(t.log.protocolAt(None) == Protocol(1, 4))
+    assert(t.log.snapshot().protocol == Protocol(1, 4))
     t.delete(col("o_orderkey") % 10 === 0)
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.minReaderVersion == 3 && p.minWriterVersion == 7)
     assert(p.readerFeatures.get.contains("deletionVectors"))
     // the upgrade must not strip what minWriterVersion 4 implied
@@ -78,7 +78,7 @@ class DeltaProtocolSpec extends SparkTestBase {
     (2 to 10).foreach(i => t.append(orders.limit(10), Seq.empty)) // v10 checkpoints
     assert(t.log.lastCheckpoint().contains(10L))
     t.log.expireLogBefore(10L) // v0..v9 JSON gone, incl. the upgrade commit
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.readerFeatures.exists(_.contains("deletionVectors")),
       s"checkpoint lost the feature lists: $p")
     // this crashed before: the old code read the (now deleted) v0 JSON
@@ -92,7 +92,7 @@ class DeltaProtocolSpec extends SparkTestBase {
     val df = spark.range(0, 5).select(col("id"),
       lit("2024-03-01 10:30:00").cast(TimestampNTZType).as("ts"))
     val t = DeltaTable.create(spark, s"$dir/t", df)
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.minReaderVersion == 3)
     assert(p.readerFeatures.get == Seq("timestampNtz"))
     assert(p.writerFeatures.get.contains("timestampNtz"))
@@ -103,7 +103,7 @@ class DeltaProtocolSpec extends SparkTestBase {
   test("metadata-activated switches: appendOnly blocks deletes, constraints validate rows") {
     val dir = tmpDir("proto_meta")
     val t = DeltaTable.create(spark, s"$dir/t", orders.limit(100))
-    val meta = t.log.metadataAt(None)._1
+    val meta = t.log.snapshot().metadata
     val v = t.latestVersion + 1
     assert(t.log.commit(v, Seq(
       meta.copy(configuration = meta.configuration + ("delta.appendOnly" -> "true")),
@@ -129,7 +129,7 @@ class DeltaProtocolSpec extends SparkTestBase {
   test("column invariants validate like constraints; upserts validate too") {
     val dir = tmpDir("proto_inv")
     val t = DeltaTable.create(spark, s"$dir/t", orders.limit(50))
-    val meta = t.log.metadataAt(None)._1
+    val meta = t.log.snapshot().metadata
     val schema = t.schemaAt(None)._1
     val withInv = org.apache.spark.sql.types.StructType(schema.fields.map { f =>
       if (f.name == "o_orderkey")
@@ -157,7 +157,7 @@ class DeltaProtocolSpec extends SparkTestBase {
     val dir = tmpDir("proto_conflict")
     val t = DeltaTable.create(spark, s"$dir/t", orders.repartition(4))
     // the rewrite's stale view: all four files, no deletion vectors
-    val stale = t.log.snapshotFiles().map(_.path -> (None: Option[DeletionVectorDescriptor]))
+    val stale = t.log.snapshot().files.map(_.path -> (None: Option[DeletionVectorDescriptor]))
     val df = t.toDF()
     t.delete(col("o_orderkey") % 2 === 0) // racer lands: files now carry DVs
     val e = intercept[IllegalArgumentException](

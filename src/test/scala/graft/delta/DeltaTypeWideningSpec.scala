@@ -20,11 +20,11 @@ class DeltaTypeWideningSpec extends SparkTestBase {
     val dir = tmpDir("widen_basic")
     val t = DeltaTable.create(spark, s"$dir/t", items.repartition(2))
     val before = t.toDF().count()
-    val filesBefore = t.log.snapshotFiles().map(_.path).sorted
+    val filesBefore = t.log.snapshot().files.map(_.path).sorted
     val v = t.widenColumn("l_linenumber", LongType)
     assert(v == 1L)
     // no data moved
-    val filesAfter = t.log.snapshotFiles().map(_.path).sorted
+    val filesAfter = t.log.snapshot().files.map(_.path).sorted
     assert(filesAfter.sameElements(filesBefore))
     val (schema, _) = t.schemaAt(None)
     assert(schema("l_linenumber").dataType == LongType)
@@ -36,7 +36,7 @@ class DeltaTypeWideningSpec extends SparkTestBase {
     assert(tc(0).getString("fromType") == "integer" && tc(0).getString("toType") == "long")
     assert(!tc(0).contains("tableVersion") && !tc(0).contains("fieldPath"))
     // protocol carries the reader+writer feature
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.readerFeatures.exists(_.contains("typeWidening")))
     assert(p.writerFeatures.exists(_.contains("typeWidening")))
     assert(t.toDF().count() == before)
@@ -74,7 +74,7 @@ class DeltaTypeWideningSpec extends SparkTestBase {
     val tc = schema("l_linenumber").metadata.getMetadataArray("delta.typeChanges")
     assert(tc.length == 1)
     assert(tc(0).getString("fromType") == "integer" && tc(0).getString("toType") == "long")
-    val p = t.log.protocolAt(None)
+    val p = t.log.snapshot().protocol
     assert(p.readerFeatures.exists(_.contains("typeWidening")))
     assert(p.writerFeatures.exists(_.contains("typeWidening")))
     // mixed-width files read under the wide schema

@@ -502,7 +502,7 @@ class PuffinSpec extends SparkTestBase {
     val t = DeltaTable.create(spark, s"$dir/t", mk)
     t.writeStatistics(Seq("k"))
     val vAnalyzed = t.latestVersion // the registration commit
-    def conf() = t.log.metadataAt(None)._1.configuration
+    def conf() = t.log.snapshot().metadata.configuration
     val p1 = conf()(DeltaTable.StatsPathKey)
     t.append(mk, Seq.empty)
     t.writeStatistics(Seq("k")) // replace-on-reanalyze deletes p1

@@ -69,12 +69,12 @@ class NestedWidenSpec extends SparkTestBase {
   test("delta: nested widens are metadata-only, stamp the right anchor, and read exactly") {
     val dir = tmpDir("nested_widen_delta")
     val t = DeltaTable.create(spark, s"$dir/t", nestedDf(0))
-    val filesBefore = t.log.snapshotFiles().map(_.path).sorted
+    val filesBefore = t.log.snapshot().files.map(_.path).sorted
     t.widenColumn("s.x", LongType)
     t.widenColumn("arr.element", LongType)
     t.widenColumn("m.value", DoubleType)
     t.widenColumn("aos.element.q", LongType)
-    assert(t.log.snapshotFiles().map(_.path).sorted
+    assert(t.log.snapshot().files.map(_.path).sorted
       .sameElements(filesBefore)) // zero data rewrite
     val schema = t.schemaAt(None)._1
     // nested struct field: history on the field ITSELF, no fieldPath
@@ -100,7 +100,7 @@ class NestedWidenSpec extends SparkTestBase {
       && !qTc(0).contains("fieldPath"))
     assert(!schema("aos").metadata.contains("delta.typeChanges"))
     // protocol gate + pre-widen files read under the wide schema
-    assert(t.log.protocolAt(None).readerFeatures.exists(_.contains("typeWidening")))
+    assert(t.log.snapshot().protocol.readerFeatures.exists(_.contains("typeWidening")))
     val out = t.toDF().orderBy("id").collect()
     assert(out.map(_.getStruct(1).getLong(0)).toSeq == Seq(7L, 8L))
     assert(out(0).getSeq[Long](2) == Seq(1L, 2L))
@@ -138,7 +138,7 @@ class NestedWidenSpec extends SparkTestBase {
     val qTc = q.metadata.getMetadataArray("delta.typeChanges")
     assert(qTc.length == 1 && qTc(0).getString("fromType") == "integer"
       && qTc(0).getString("toType") == "long")
-    assert(t.log.protocolAt(None).readerFeatures.exists(_.contains("typeWidening")))
+    assert(t.log.snapshot().protocol.readerFeatures.exists(_.contains("typeWidening")))
     assert(t.toDF().filter($"id" === 50L).head
       .getSeq[org.apache.spark.sql.Row](4).head.getLong(0) == 7000000000L)
   }

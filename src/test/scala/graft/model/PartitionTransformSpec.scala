@@ -85,14 +85,14 @@ class PartitionTransformSpec extends SparkTestBase {
     def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
     // chunk k of n holds the files at positions k, k + n, ... of the
     // path-sorted manifest, so the chunks partition it
-    val sorted = t.log.snapshotFiles().map(_.path).sorted.map(name)
+    val sorted = t.log.snapshot().files.map(_.path).sorted.map(name)
     assert(sorted.size > 3)
     (0 until 3).foreach { k =>
       assert(t.scan.chunk(k, 3).toDF().inputFiles.map(name).toSet ==
         sorted.zipWithIndex.collect { case (n, i) if i % 3 == k => n }.toSet)
     }
     // files whose partition values are null, or missing from the map
-    val real = t.log.snapshotFiles()
+    val real = t.log.snapshot().files
     val nulls = AddFile("nulls.parquet",
       Map("o_orderdate_month" -> null, "o_orderstatus" -> null), 10L, 0L, dataChange = true)
     val missing = AddFile("missing.parquet", Map.empty, 10L, 0L, dataChange = true)

@@ -266,7 +266,7 @@ class StatsJoinSpec extends SparkTestBase {
       SyncEngine.targetFor(spark, "delta", s"$dir/tgt"))
     val tgt = graft.delta.DeltaTable.forPath(spark, s"$dir/tgt")
     // the carried pointer resolves to the target's ADOPTED copy
-    val carriedPath = tgt.log.metadataAt(None)._1.configuration(
+    val carriedPath = tgt.log.snapshot().metadata.configuration(
       graft.model.SyncCas.StatsPathProp)
     assert(carriedPath != e.path && carriedPath.contains("/tgt/"), carriedPath)
     assert(tgt.statisticsRegisters("k") == srcRegs)
@@ -290,7 +290,7 @@ class StatsJoinSpec extends SparkTestBase {
     SyncEngine.sync(SyncEngine.icebergSource(src),
       SyncEngine.targetFor(spark, "delta", s"$dir/tgt"))
     val tgt2 = graft.delta.DeltaTable.forPath(spark, s"$dir/tgt")
-    val carried2 = tgt2.log.metadataAt(None)._1.configuration(
+    val carried2 = tgt2.log.snapshot().metadata.configuration(
       graft.model.SyncCas.StatsPathProp)
     assert(carried2 != carriedPath && carried2.contains("/tgt/"), carried2)
     assert(!fs.exists(new Path(carriedPath)),

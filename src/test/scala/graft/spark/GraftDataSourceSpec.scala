@@ -150,19 +150,63 @@ class GraftDataSourceSpec extends SparkTestBase {
         checksum(even.filter(inRange)), s"$fmt versionAsOf")
     }
     // a column-mapped Delta table: its stats carry the physical names
-    // the relation reads, whatever the logical names are
+    // the read uses, whatever the logical names are. The relation would
+    // expose the physical names, so the DataSource refuses it
     val mapped = graft.delta.DeltaTable.forPath(spark, s"$dir/delta")
     mapped.enableColumnMapping()
     mapped.renameColumn("o_totalprice", "price")
-    val viaSource = spark.read.format("graft").load(s"$dir/delta").filter(inRange)
-    val n = scannedFiles(viaSource)
+    intercept[UnsupportedOperationException](spark.read.format("graft").load(s"$dir/delta"))
+    val viaMapped = mapped.toDF().filter(inRange)
+    val n = scannedFiles(viaMapped)
     assert(n > 0 && n < mapped.snapshotFileCount(None), s"column-mapped delta scanned $n files")
-    assert(checksum(viaSource) == checksum(o.filter(inRange)))
+    assert(checksum(viaMapped) == checksum(o.filter(inRange)))
     // the key's logical name now differs from the physical name of its stats
     mapped.renameColumn("o_orderkey", "key")
     val viaTable = mapped.toDF().filter(col("key").between(lo, hi))
     val m = scannedFiles(viaTable)
     assert(m > 0 && m < mapped.snapshotFileCount(None), s"renamed key scanned $m files")
     assert(checksum(viaTable) == checksum(o.filter(inRange)))
+  }
+
+  test("a table read the relation would change is refused, never read wrong") {
+    val dir = tmpDir("ds_refuse")
+    // 1,500 rows over three files per table
+    val rows = spark.range(0, 1500).repartition(3, col("id") % 3)
+      .select(col("id"), (col("id") % 3).as("k"))
+    def refused(path: String, fmt: String, toDF: => org.apache.spark.sql.DataFrame,
+        rows: Long, names: Seq[String]): Unit = {
+      assert(toDF.count() == rows && toDF.columns.toSeq == names)
+      val e = intercept[UnsupportedOperationException](spark.read.format("graft").load(path))
+      assert(e.getMessage.contains(path) && e.getMessage.contains(s"${fmt}Table.forPath"),
+        e.getMessage)
+    }
+
+    // deletion vectors on every file
+    val dAll = graft.delta.DeltaTable.create(spark, s"$dir/dv_all", rows)
+    dAll.delete(col("id") % 2 === 0)
+    refused(s"$dir/dv_all", "Delta", dAll.toDF(), 750, Seq("id", "k"))
+    // a write through the DataSource still lands on such a table
+    rows.limit(10).write.format("graft").option("format", "delta").mode("append")
+      .save(s"$dir/dv_all")
+    assert(dAll.toDF().count() == 760)
+    // deletion vectors on some files only
+    val dSome = graft.delta.DeltaTable.create(spark, s"$dir/dv_some", rows, Seq("k"))
+    dSome.delete(col("k") === 0 && col("id") % 2 === 0)
+    assert(dSome.scan.files().exists(_.deletionVector.isEmpty))
+    refused(s"$dir/dv_some", "Delta", dSome.toDF(), 1250, Seq("id", "k"))
+    // Iceberg position deletes
+    val ice = IcebergTable.create(spark, s"$dir/ice", rows)
+    ice.deleteWhere(col("id") < 100)
+    refused(s"$dir/ice", "Iceberg", ice.toDF(), 1400, Seq("id", "k"))
+    // a renamed column of a column-mapped Delta table
+    val mapped = graft.delta.DeltaTable.create(spark, s"$dir/mapped", rows)
+    mapped.enableColumnMapping()
+    mapped.renameColumn("id", "ident")
+    refused(s"$dir/mapped", "Delta", mapped.toDF(), 1500, Seq("ident", "k"))
+    // a plain table, latest and time-travelled, still reads as a relation
+    val plain = graft.delta.DeltaTable.create(spark, s"$dir/plain", rows)
+    plain.append(rows, Seq.empty)
+    assert(spark.read.format("graft").load(s"$dir/plain").count() == 3000)
+    assert(spark.read.format("graft").option("versionAsOf", "0").load(s"$dir/plain").count() == 1500)
   }
 }

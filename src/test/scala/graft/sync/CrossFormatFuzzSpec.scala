@@ -476,7 +476,7 @@ class CrossFormatFuzzSpec extends SparkTestBase {
       }
       def checkDelta(path: String, isTarget: Boolean): Unit = {
         val t = DeltaTable.forPath(spark, path)
-        val conf = t.log.metadataAt(None)._1.configuration
+        val conf = t.log.snapshot().metadata.configuration
         val ptrs = (DeltaTable.StatsPathKey +: carriedKeys).flatMap(conf.get)
         ptrs.foreach { p =>
           assert(exists(p), s"delta stats pointer dangles at $p after [$tag]\n$trace")

@@ -255,7 +255,7 @@ class SyncEngineSpec extends SparkTestBase {
       src.properties + ("hoodie.table.recordkey.fields" -> "o_orderkey"))
     SyncEngine.sync(SyncEngine.hudiSource(src), SyncEngine.deltaTarget(spark, s"$dir/d"))
     val d = DeltaTable.forPath(spark, s"$dir/d")
-    assert(d.log.metadataAt(None)._1.configuration(SyncEngine.RecordKeyProp) == "o_orderkey")
+    assert(d.log.snapshot().metadata.configuration(SyncEngine.RecordKeyProp) == "o_orderkey")
     // second hop: Delta -> Iceberg keeps the key; Iceberg -> Hudi would
     // restore the native convention (covered by HudiTarget creation)
     SyncEngine.sync(SyncEngine.deltaSource(d), SyncEngine.icebergTarget(spark, s"$dir/i"))

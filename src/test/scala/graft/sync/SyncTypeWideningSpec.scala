@@ -84,7 +84,7 @@ class SyncTypeWideningSpec extends SparkTestBase {
     // the narrower pre-widen files the target shares with the source
     val tc = d.schemaAt(None)._1("l_linenumber").metadata.getMetadataArray("delta.typeChanges")
     assert(tc.exists(e => e.getString("fromType") == "integer" && e.getString("toType") == "long"))
-    val p = d.log.protocolAt(None)
+    val p = d.log.snapshot().protocol
     assert(p.readerFeatures.exists(_.contains("typeWidening")))
     assert(p.writerFeatures.exists(_.contains("typeWidening")))
   }

@@ -5,13 +5,14 @@ import java.net.URI
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
 
 /** The local filesystem under the `counted` scheme. Each status,
   * existence probe or listing counts as one read op in Hadoop's FS
   * statistics, the way HDFS and object-store clients count metadata
   * calls; the local filesystem itself counts only bytes. The statuses
-  * a listing builds are part of that one call. */
+  * a listing builds are part of that one call. Listings and opens are
+  * also recorded by path, for [[CountedLocalFileSystem.calls]]. */
 class CountedLocalFileSystem extends RawLocalFileSystem {
   private val listing = ThreadLocal.withInitial[java.lang.Boolean](() => false)
 
@@ -28,8 +29,14 @@ class CountedLocalFileSystem extends RawLocalFileSystem {
     super.exists(p)
   }
 
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    CountedLocalFileSystem.record("open", p)
+    super.open(p, bufferSize)
+  }
+
   override def listStatus(p: Path): Array[FileStatus] = {
     statistics.incrementReadOps(1)
+    CountedLocalFileSystem.record("list", p)
     listing.set(true)
     try super.listStatus(p) finally listing.set(false)
   }
@@ -53,5 +60,22 @@ object CountedLocalFileSystem {
     val before = ops
     val result = body
     (result, ops - before)
+  }
+
+  private val recorded = new ThreadLocal[scala.collection.mutable.ArrayBuffer[(String, String)]]
+
+  private def record(op: String, p: Path): Unit =
+    Option(recorded.get).foreach(_ += (op -> p.toUri.getPath))
+
+  /** `body`'s result and the listings and opens (`"list"`/`"open"`, path)
+    * this thread made through the counted scheme meanwhile, in order. */
+  def calls[A](body: => A): (A, Seq[(String, String)]) = {
+    val outer = recorded.get
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    recorded.set(buf)
+    try {
+      val result = body
+      (result, buf.toSeq)
+    } finally recorded.set(outer)
   }
 }

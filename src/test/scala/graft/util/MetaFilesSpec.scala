@@ -99,7 +99,7 @@ class MetaFilesSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".scala")).toSeq
     // the deleted names, assembled so a grep of the tree finds no use of them
     val twins = sourceHits(sources, Seq("snapshotFiles", "fileSlices").map(_ + "DF"): _*)
-    assert(twins.isEmpty, "read live files through DeltaLog.snapshotFiles or " +
+    assert(twins.isEmpty, "read live files through DeltaLog.snapshot(...).files or " +
       "HudiTable.fileSlices:\n" + twins.mkString("\n"))
     // the checkpoint writer's one frame is built in checkpointAddsDF
     val deltaLog = srcMain.resolve("scala/graft/delta/DeltaLog.scala")
@@ -113,5 +113,42 @@ class MetaFilesSpec extends AnyFunSuite {
     }
     assert(frames.isEmpty, "DeltaLog builds a DataFrame only for the checkpoint write:\n" +
       frames.mkString("\n"))
+  }
+
+  test("one Delta snapshot: no per-fact replays of the log in src/main") {
+    val sources = Files.walk(srcMain).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    // the deleted names, assembled so a grep of the tree finds no use of them
+    val replays = sourceHits(sources, Seq("metadata", "protocol").map(_ + "At("): _*) ++
+      sourceHits(sources.filter(_.toString.contains("/graft/delta/")), "def snapshot" + "Files")
+    assert(replays.isEmpty, "resolve one DeltaLog.snapshot(asOf) and read its metadata, " +
+      "protocol and files:\n" + replays.mkString("\n"))
+  }
+
+  test("a rewritten hoodie.properties is read whole by concurrent readers") {
+    val table = dir.resolve("hudi_props").toUri.toString
+    val timeline = new graft.hudi.HudiTimeline(table, new Configuration())
+    // two maps of several checksum chunks each, so a torn read shows
+    val maps = Seq("a", "b").map(tag =>
+      (1 to 120).map(i => f"hoodie.key.$i%03d" -> s"$tag-value-$i").toMap)
+    timeline.writeProperties(maps(0))
+    @volatile var writing = true
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val readers = (1 to 3).map { _ =>
+      val t = new Thread(() =>
+        while (writing) {
+          try {
+            val read = timeline.readProperties()
+            if (!maps.contains(read)) errors.add(s"a partial map of ${read.size} keys")
+          } catch { case e: Exception => errors.add(e.toString) }
+        })
+      t.start()
+      t
+    }
+    try (1 to 300).foreach(i => timeline.writeProperties(maps(i % 2)))
+    finally { writing = false; readers.foreach(_.join()) }
+    if (!errors.isEmpty)
+      fail(s"${errors.size} torn reads, e.g. ${errors.asScala.take(3).mkString("; ")}")
+    assert(timeline.readProperties() == maps(0))
   }
 }
