@@ -71,7 +71,7 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
    *
    * Standard LogStore pattern: the commit body is fully written and
    * closed as a hidden temp file, then published with put-if-absent
-   * semantics (graft.util.AtomicPublish) — so a crash mid-write can
+   * semantics (graft.util.MetaFiles.createExclusive) — so a crash mid-write can
    * never leave a torn `%020d.json` that poisons later log replay, and
    * two racing writers can never both claim the same version. (On
    * object stores a real deployment would plug in a put-if-absent
@@ -81,14 +81,9 @@ final class DeltaLog(val tablePath: String, spark: SparkSession) {
     fs.mkdirs(logPath)
     val target = commitFile(v)
     if (fs.exists(target)) return false // cheap fast-path; publish still arbitrates races
-    val tmp = new Path(logPath, s".tmp_${java.util.UUID.randomUUID()}_$v.json")
-    val out = fs.create(tmp, /*overwrite=*/ true)
-    try {
-      val body = actions.map(DeltaActionCodec.toJsonLine).mkString("", "\n", "\n")
-      out.write(body.getBytes(StandardCharsets.UTF_8))
-    } finally out.close()
-    graft.util.AtomicPublish.putIfAbsent(
-      fs, spark.sparkContext.hadoopConfiguration, tmp, target)
+    val body = actions.map(DeltaActionCodec.toJsonLine).mkString("", "\n", "\n")
+    MetaFiles.createExclusive(
+      fs, spark.sparkContext.hadoopConfiguration, target, body.getBytes(StandardCharsets.UTF_8))
   }
 
   // ----------------------------------------------------------- checkpoints

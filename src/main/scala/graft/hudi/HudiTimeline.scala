@@ -255,11 +255,7 @@ final class HudiTimeline private (
     val inflightName =
       if (i.action == "commit") s"${i.time}.inflight" else s"${i.time}.${i.action}.inflight"
     touch(new Path(hoodieDir, inflightName))
-    val tmp = new Path(hoodieDir, s".tmp_${java.util.UUID.randomUUID()}_${i.fileName}")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    graft.util.AtomicPublish.putIfAbsent(fs, conf, tmp, target)
+    MetaFiles.createExclusive(fs, conf, target, json.getBytes(StandardCharsets.UTF_8))
   }
 
   /** Create an empty state-transition marker if absent. Markers are

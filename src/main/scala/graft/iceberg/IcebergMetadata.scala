@@ -125,6 +125,49 @@ final case class IcebergTableMetadata(
     require(c.nonEmpty, s"no snapshot at or before $tsMillis")
     c.maxBy(s => (s.timestampMs, s.sequenceNumber))
   }
+
+  /** The statistics entry of the CLOSEST ANALYZED ANCESTOR of a
+    * snapshot (current when omitted) — the planner convention: stats
+    * registered before later appends stay usable until re-analyzed. */
+  def statisticsFor(snapshotId: Option[Long]): Option[IcebergStatisticsFile] =
+    closestAnalyzed(snapshotId)(id => statistics.find(_.snapshotId == id))
+
+  /** The partition-statistics entry of the closest analyzed ancestor
+    * (same planner convention as [[statisticsFor]]). */
+  def partitionStatisticsFor(snapshotId: Option[Long]): Option[IcebergPartitionStatisticsFile] =
+    closestAnalyzed(snapshotId)(id => partitionStatistics.find(_.snapshotId == id))
+
+  private def closestAnalyzed[A](snapshotId: Option[Long])(entryOf: Long => Option[A]): Option[A] =
+    snapshotId.orElse(currentSnapshotId).iterator.flatMap(ancestry).flatMap(entryOf).nextOption()
+
+  /** `id`, then its parent, grandparent, ..., newest first; the walk ends
+    * at the first snapshot no longer in the table (expired history). */
+  def ancestry(id: Long): Iterator[Long] = {
+    val byId = snapshots.map(s => s.snapshotId -> s).toMap
+    Iterator.iterate(Option(id))(_.flatMap(byId.get).flatMap(_.parentId))
+      .takeWhile(_.isDefined).map(_.get)
+  }
+
+  /** The spec id and fields `proposed` resolves to: the known spec with
+    * the same (source, transform, name) fields — the default first, else
+    * a retired one reactivated — or a new spec whose fields keep the id
+    * of an identical field in ANY known spec (the spec's reuse rule),
+    * new fields continuing from last-partition-id. */
+  def resolveSpec(
+      proposed: Seq[IcebergPartitionFieldSpec]): (Int, Seq[IcebergPartitionFieldSpec]) = {
+    def key(f: IcebergPartitionFieldSpec) = (f.sourceId, f.transform, f.name)
+    if (proposed.map(key) == partitionSpec.map(key)) (defaultSpecId, partitionSpec)
+    else allSpecs.find(_._2.map(key) == proposed.map(key)).getOrElse {
+      val knownIds = allSpecs.flatMap(_._2).map(f => key(f) -> f.fieldId).toMap
+      var nextId = (999 +: allSpecs.flatMap(_._2.map(_.fieldId))).max
+      (allSpecs.map(_._1).max + 1, proposed.map { f =>
+        knownIds.get(key(f)) match {
+          case Some(id) => f.copy(fieldId = id)
+          case None => nextId += 1; f.copy(fieldId = nextId)
+        }
+      })
+    }
+  }
 }
 
 object IcebergMetadataCodec {
@@ -448,11 +491,8 @@ final class IcebergMetadataLog(val tablePath: String, sc: SparkContext) {
     fs.mkdirs(metadataDir)
     val target = versionFile(v)
     if (fs.exists(target)) return false
-    val tmp = new Path(metadataDir, s".tmp_${java.util.UUID.randomUUID()}_v$v.json")
-    val out = fs.create(tmp, true)
-    try out.write(IcebergMetadataCodec.toJson(metadata).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (graft.util.AtomicPublish.putIfAbsent(fs, sc.hadoopConfiguration, tmp, target)) {
+    if (graft.util.MetaFiles.createExclusive(fs, sc.hadoopConfiguration, target,
+        IcebergMetadataCodec.toJson(metadata).getBytes(StandardCharsets.UTF_8))) {
       graft.util.MetaFiles.replace(fs, hintFile, v.toString.getBytes(StandardCharsets.UTF_8))
       true
     } else false

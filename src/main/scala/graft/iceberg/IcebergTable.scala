@@ -19,6 +19,13 @@ import graft.util.{PhaseTimer, StagedWrites}
  * queries identically (the reference's core contract, ref
  * `ITOneTableClient.java:748-813`).
  *
+ * One operation reads one version: each read resolves `metadata.json`
+ * once and passes the parsed [[IcebergTableMetadata]] down to every
+ * helper, and each write takes its live entries and reads from the same
+ * `(version, metadata)` state whose `version + 1` slot it commits into.
+ * Nothing is kept across operations, so the next call sees a concurrent
+ * writer's commit.
+ *
  * Scale shape: snapshot reads and change reads reconcile the manifest
  * list and its manifests on the driver, as the reference plans through
  * the Iceberg library on one thread (ref
@@ -33,9 +40,14 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
 
   // ---------------------------------------------------------------- reads
 
-  def currentMetadata: IcebergTableMetadata =
-    log.readLatest().map(_._2).getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+  /** The latest (version, metadata): what one operation reads once and
+    * carries, and what a commit takes its `version + 1` slot from. */
+  private def latestState: (Long, IcebergTableMetadata) = log.readLatest().getOrElse(
+    throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+
+  /** The latest metadata. Every public read resolves it once and passes
+    * it down, so one operation reads one version. */
+  def currentMetadata: IcebergTableMetadata = latestState._2
 
   /** Snapshot ids in commit order. */
   def snapshotIds: Seq[Long] = currentMetadata.snapshotLog.map(_._2)
@@ -43,7 +55,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   def schema: StructType = currentMetadata.schema
 
   /** Spark-facing schema (iceberg field-id metadata stripped). */
-  def sparkSchema: StructType = StructType(schema.fields.map(f => f.copy(metadata = Metadata.empty)))
+  def sparkSchema: StructType = IcebergTable.sparkSchemaOf(schema)
 
   // ----------------------------------------------------------------- refs
 
@@ -60,8 +72,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     putRef(name, "branch", snapshotId)
 
   def dropRef(name: String): Unit = {
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (v, meta) = latestState
     require(meta.refs.contains(name), s"no ref $name on $tablePath")
     graft.model.ConcurrentSyncException.check(log.commit(v + 1, meta.copy(
       refs = meta.refs - name, lastUpdatedMs = System.currentTimeMillis())),
@@ -70,8 +81,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
 
   private def putRef(name: String, refType: String, snapshotId: Option[Long]): Unit = {
     require(name != "main", "`main` is managed by the table itself")
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (v, meta) = latestState
     val id = snapshotId.orElse(meta.currentSnapshotId).getOrElse(
       throw new IllegalStateException(s"no snapshot to ref on $tablePath"))
     meta.snapshot(id) // validates existence
@@ -99,8 +109,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * [[expireSnapshots]] retires them.
    */
   def rollbackTo(snapshotId: Long): Unit = {
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (v, meta) = latestState
     meta.snapshot(snapshotId) // validates existence
     val i = meta.snapshotLog.indexWhere(_._2 == snapshotId)
     require(i >= 0,
@@ -124,28 +133,10 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * (`col`, `year(col)`, `bucket[16](col)`, ...).
    */
   def evolvePartitionSpec(partitionSpecs: Seq[String]): Unit = {
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
-    val defs = graft.model.PartitionTransform.parseAll(partitionSpecs)
-    val proposed = IcebergTable.specFor(meta.schema, defs)
-    def key(f: IcebergPartitionFieldSpec) = (f.sourceId, f.transform, f.name)
-    if (proposed.map(key) == meta.partitionSpec.map(key)) return // no-op
-    // the spec's field-id reuse rule: a field identical to one in ANY
-    // known spec keeps that id; genuinely new fields continue from
-    // last-partition-id
-    val knownIds = meta.allSpecs.flatMap(_._2).map(f => key(f) -> f.fieldId).toMap
-    val (specId, specFields) =
-      meta.allSpecs.find(_._2.map(key) == proposed.map(key)) match {
-        case Some((id, fields)) => (id, fields) // reactivate a retired spec
-        case None =>
-          var nextId = (999 +: meta.allSpecs.flatMap(_._2.map(_.fieldId))).max
-          (meta.allSpecs.map(_._1).max + 1, proposed.map { f =>
-            knownIds.get(key(f)) match {
-              case Some(id) => f.copy(fieldId = id)
-              case None => nextId += 1; f.copy(fieldId = nextId)
-            }
-          })
-      }
+    val (v, meta) = latestState
+    val (specId, specFields) = meta.resolveSpec(IcebergTable.specFor(
+      meta.schema, graft.model.PartitionTransform.parseAll(partitionSpecs)))
+    if (specId == meta.defaultSpecId) return // no-op
     graft.model.ConcurrentSyncException.check(log.commit(v + 1, meta.copy(
       partitionSpec = specFields,
       defaultSpecId = specId,
@@ -169,8 +160,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * a widen at any sync source is applicable at every target).
    */
   def widenColumn(name: String, to: org.apache.spark.sql.types.DataType): Unit = {
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (v, meta) = latestState
     // dot-path walk (nested struct fields / array elements / map values);
     // every field along the path keeps its metadata, so the widened
     // field KEEPS ITS ID — the spec's promotion contract
@@ -207,10 +197,15 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * list names the clustering columns honestly and the property records
    * the interleave for engines that understand it. Returns the order id.
    */
-  def replaceSortOrder(cols: Seq[String], zorder: Boolean = false): Int = {
+  def replaceSortOrder(cols: Seq[String], zorder: Boolean = false): Int =
+    declareSortOrder(latestState, cols, zorder)._1
+
+  /** [[replaceSortOrder]] on `state`: the order id, and the state after
+    * the declaration (`state` itself when nothing changed). */
+  private def declareSortOrder(state: (Long, IcebergTableMetadata), cols: Seq[String],
+      zorder: Boolean): (Int, (Long, IcebergTableMetadata)) = {
     require(cols.nonEmpty, s"sort order on $tablePath needs at least one column")
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (v, meta) = state
     val fields = cols.map { c =>
       val f = meta.schema.fields.find(_.name == c).getOrElse(
         throw new IllegalArgumentException(s"no column $c in $tablePath"))
@@ -225,16 +220,17 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       if (zorder) meta.properties + (kindKey -> "zorder")
       else meta.properties - kindKey
     if (existing.nonEmpty && meta.defaultSortOrderId == id && meta.properties == props)
-      return id // already the declared default — no empty commit
-    graft.model.ConcurrentSyncException.check(log.commit(v + 1, meta.copy(
+      return (id, state) // already the declared default — no empty commit
+    val next = meta.copy(
       sortOrders =
         if (existing.nonEmpty) meta.sortOrders
         else meta.sortOrders :+ IcebergSortOrder(id, fields),
       defaultSortOrderId = id,
       properties = props,
-      lastUpdatedMs = System.currentTimeMillis())),
+      lastUpdatedMs = System.currentTimeMillis())
+    graft.model.ConcurrentSyncException.check(log.commit(v + 1, next),
       s"concurrent iceberg commit on $tablePath")
-    id
+    (id, (v + 1, next))
   }
 
   /** The default sort order's column names (empty = unsorted), plus
@@ -264,8 +260,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    */
   def writeStatistics(cols: Seq[String]): IcebergStatisticsFile = {
     require(cols.nonEmpty, s"writeStatistics on $tablePath needs at least one column")
-    val (_, meta0) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (_, meta0) = latestState
     val snap = meta0.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no current snapshot on $tablePath"))
     val fids = cols.map { c =>
@@ -280,7 +275,8 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // arithmetic over the collected registers — ANALYZE of a 100-TB
     // table costs one scan regardless of column count, not two jobs
     // per column
-    val regsByCol = graft.functions.PortableHll.stackedRegisters(toDF(), cols)
+    val regsByCol = graft.functions.PortableHll.stackedRegisters(
+      entriesDF(meta0, liveEntries(meta0, None)), cols)
     // an all-NULL column has zero registers and estimates ndv 0.00; the
     // blob also carries `graft.column` so consumers without stable
     // field ids (the Delta/Hudi planes) resolve carried sketches by name
@@ -313,51 +309,54 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     * half of [[writeStatistics]], separated so races are testable). */
   private[iceberg] def registerStatistics(
       snapshotId: Long, entry: IcebergStatisticsFile): IcebergStatisticsFile = {
-    val fsys = new Path(entry.path).getFileSystem(hconf)
-    // CAS loop: the stats file is immutable once written, so a lost
-    // race just re-reads the metadata and re-registers the same entry
+    registerAnalyzed(snapshotId, entry.path, "ANALYZE")(
+      _.statistics.map(e => e.snapshotId -> e.path),
+      m => m.copy(statistics = m.statistics.filterNot(_.snapshotId == snapshotId) :+ entry))
+    entry
+  }
+
+  /** The CAS loop of both statistics registrations: commit `register`'s
+    * metadata, which files `path` under `snapshotId` in place of the
+    * entry `registered` ((snapshot, path) pairs) lists for it, and
+    * delete the replaced file when owned and no longer referenced. The
+    * file is immutable once written, so a lost race re-reads and
+    * registers again. */
+  private def registerAnalyzed(snapshotId: Long, path: String, what: String)(
+      registered: IcebergTableMetadata => Seq[(Long, String)],
+      register: IcebergTableMetadata => IcebergTableMetadata): Unit = {
     var replaced: Option[String] = None
     var surviving: Set[String] = Set.empty
-    var registered = false
-    while (!registered) {
-      val (v, meta) = log.readLatest().get
+    var done = false
+    while (!done) {
+      val (v, meta) = latestState
       // a concurrent expireSnapshots may have killed the analyzed
       // snapshot between the scan and this commit — registering stats
       // for a dead snapshot would orphan the file forever (expiry only
       // cleans entries of snapshots it removes), so clean up and raise
       // the typed race signal: re-running ANALYZE targets the new head
       if (!meta.snapshots.exists(_.snapshotId == snapshotId)) {
-        fsys.delete(new Path(entry.path), false)
+        val p = new Path(path)
+        p.getFileSystem(hconf).delete(p, false)
         throw new graft.model.ConcurrentSyncException(
-          s"snapshot $snapshotId of $tablePath expired while ANALYZE was running")
+          s"snapshot $snapshotId of $tablePath expired while $what was running")
       }
-      val others = meta.statistics.filterNot(_.snapshotId == snapshotId)
-      replaced = meta.statistics.find(_.snapshotId == snapshotId).map(_.path)
-      surviving = others.map(_.path).toSet + entry.path
-      registered = log.commit(v + 1, meta.copy(
-        statistics = others :+ entry,
-        lastUpdatedMs = System.currentTimeMillis()))
+      val (mine, others) = registered(meta).partition(_._1 == snapshotId)
+      replaced = mine.headOption.map(_._2)
+      surviving = others.map(_._2).toSet + path
+      done = log.commit(v + 1, register(meta).copy(lastUpdatedMs = System.currentTimeMillis()))
     }
     // a re-analyze REPLACED the snapshot's previous entry: its file is
     // unreachable from any metadata now — delete it (when owned and not
     // shared), or it is orphaned permanently (expiry only deletes files
     // of entries still registered)
     replaced.foreach(deleteStatsFileIfOwned(_, surviving))
-    entry
   }
 
   /** The statistics entry of the CLOSEST ANALYZED ANCESTOR of a
     * snapshot (current when omitted) — the planner convention: stats
     * registered before later appends stay usable until re-analyzed. */
-  def statisticsFor(snapshotId: Option[Long] = None): Option[IcebergStatisticsFile] = {
-    val meta = currentMetadata
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    Iterator.iterate(snapshotId.orElse(meta.currentSnapshotId))(
-        _.flatMap(byId.get).flatMap(_.parentId))
-      .takeWhile(_.isDefined).map(_.get)
-      .flatMap(id => meta.statistics.find(_.snapshotId == id).iterator)
-      .nextOption()
-  }
+  def statisticsFor(snapshotId: Option[Long] = None): Option[IcebergStatisticsFile] =
+    currentMetadata.statisticsFor(snapshotId)
 
   /** The persisted HLL register set of `column` at the current
     * snapshot's statistics file: Seq of (bucket, rho) for present
@@ -367,7 +366,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val fid = meta.schema.fields.find(_.name == column)
       .flatMap(IcebergSchemas.fieldId).getOrElse(
         throw new IllegalArgumentException(s"no column $column in $tablePath"))
-    val entry = statisticsFor().getOrElse(
+    val entry = meta.statisticsFor(None).getOrElse(
       throw new IllegalStateException(s"no statistics for the current snapshot of $tablePath"))
     val blob = entry.blobs.find(b =>
       b.blobType == Puffin.HllBlobType && b.fields == Seq(fid)).getOrElse(
@@ -396,8 +395,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * only ever holds one row per partition, never the file list.
    */
   def writePartitionStatistics(): IcebergPartitionStatisticsFile = {
-    val (_, meta0) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (_, meta0) = latestState
     val snap = meta0.currentSnapshot.getOrElse(
       throw new IllegalStateException(s"no current snapshot on $tablePath"))
     // unified partition type: every known spec's fields in field-id
@@ -423,8 +421,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         }
     require(unified.nonEmpty,
       s"partition statistics on unpartitioned table $tablePath — nothing to roll up")
-    val manifests =
-      IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))
+    val manifests = manifestList(snap)
     val conf = new SerializableConfiguration(hconf)
     // ((partition canonical values, spec), 7 counters) — live election
     // then rollup, all executor-side
@@ -556,25 +553,10 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   private[iceberg] def registerPartitionStatistics(
       snapshotId: Long,
       entry: IcebergPartitionStatisticsFile): IcebergPartitionStatisticsFile = {
-    val fsys = new Path(entry.path).getFileSystem(hconf)
-    var replaced: Option[String] = None
-    var surviving: Set[String] = Set.empty
-    var registered = false
-    while (!registered) {
-      val (v, meta) = log.readLatest().get
-      if (!meta.snapshots.exists(_.snapshotId == snapshotId)) {
-        fsys.delete(new Path(entry.path), false)
-        throw new graft.model.ConcurrentSyncException(
-          s"snapshot $snapshotId of $tablePath expired while partition ANALYZE was running")
-      }
-      val others = meta.partitionStatistics.filterNot(_.snapshotId == snapshotId)
-      replaced = meta.partitionStatistics.find(_.snapshotId == snapshotId).map(_.path)
-      surviving = others.map(_.path).toSet + entry.path
-      registered = log.commit(v + 1, meta.copy(
-        partitionStatistics = others :+ entry,
-        lastUpdatedMs = System.currentTimeMillis()))
-    }
-    replaced.foreach(deleteStatsFileIfOwned(_, surviving))
+    registerAnalyzed(snapshotId, entry.path, "partition ANALYZE")(
+      _.partitionStatistics.map(e => e.snapshotId -> e.path),
+      m => m.copy(partitionStatistics =
+        m.partitionStatistics.filterNot(_.snapshotId == snapshotId) :+ entry))
     entry
   }
 
@@ -585,25 +567,18 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     * under the manifest that added it, so this over-estimates — the safe
     * direction for a broadcast fence (a stale ANALYZE under-estimates;
     * this bound catches the growth). None on an empty table. */
-  def currentRowCountUpperBound(): Option[Long] =
-    currentMetadata.currentSnapshot.map { snap =>
-      IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))
-        .filter(_.content == 0)
-        .map(m => m.addedRowsCount + m.existingRowsCount).sum
-    }
+  def currentRowCountUpperBound(): Option[Long] = rowCountUpperBound(currentMetadata)
+
+  private def rowCountUpperBound(meta: IcebergTableMetadata): Option[Long] =
+    meta.currentSnapshot.map(snap => manifestList(snap)
+      .filter(_.content == 0)
+      .map(m => m.addedRowsCount + m.existingRowsCount).sum)
 
   /** The partition-statistics entry of the closest analyzed ancestor
     * (same planner convention as [[statisticsFor]]). */
   def partitionStatisticsFor(
-      snapshotId: Option[Long] = None): Option[IcebergPartitionStatisticsFile] = {
-    val meta = currentMetadata
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    Iterator.iterate(snapshotId.orElse(meta.currentSnapshotId))(
-        _.flatMap(byId.get).flatMap(_.parentId))
-      .takeWhile(_.isDefined).map(_.get)
-      .flatMap(id => meta.partitionStatistics.find(_.snapshotId == id).iterator)
-      .nextOption()
-  }
+      snapshotId: Option[Long] = None): Option[IcebergPartitionStatisticsFile] =
+    currentMetadata.partitionStatisticsFor(snapshotId)
 
   /** Read a partition-statistics file back (the spec row shape). */
   def readPartitionStatistics(entry: IcebergPartitionStatisticsFile): DataFrame =
@@ -622,10 +597,13 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     * callers fall back to manifest planning. At 100 TB this is the
     * difference between COSTING a partition predicate from the rollup
     * and replaying every manifest to count. */
-  def estimatedRowsForPartition(pred: org.apache.spark.sql.Column): Option[Long] = {
+  def estimatedRowsForPartition(pred: org.apache.spark.sql.Column): Option[Long] =
+    estimatedRowsForPartition(currentMetadata, pred)
+
+  private[iceberg] def estimatedRowsForPartition(
+      meta: IcebergTableMetadata, pred: org.apache.spark.sql.Column): Option[Long] = {
     import org.apache.spark.sql.functions.{col, lit, sum, when}
-    val meta = currentMetadata
-    partitionStatisticsFor().map { e =>
+    meta.partitionStatisticsFor(None).map { e =>
       val r = readPartitionStatistics(e).agg(
         sum(when(pred, col("data_record_count")).otherwise(lit(0L))),
         sum(col("data_record_count"))).collect()(0)
@@ -640,7 +618,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         !graft.util.StatsFiles.isCarried(e.path)
       if (fresh || total <= 0L) matched
       else {
-        val current = currentRowCountUpperBound().getOrElse(total)
+        val current = rowCountUpperBound(meta).getOrElse(total)
         if (current <= total) matched
         else math.ceil(matched.toDouble * current / total).toLong
       }
@@ -648,12 +626,14 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   }
 
   /** Resolve a ref name to its snapshot id (`main` → current). */
-  def refSnapshot(name: String): Long =
+  def refSnapshot(name: String): Long = {
+    val meta = currentMetadata
     if (name == "main")
-      currentMetadata.currentSnapshotId.getOrElse(
+      meta.currentSnapshotId.getOrElse(
         throw new IllegalStateException(s"empty iceberg table: $tablePath"))
-    else currentMetadata.refs.getOrElse(name,
+    else meta.refs.getOrElse(name,
       throw new IllegalArgumentException(s"no ref $name on $tablePath")).snapshotId
+  }
 
   /** Time travel by ref name: `VERSION AS OF 'tag'` semantics. */
   def scanRef(name: String): IcebergScanBuilder = scanAsOf(refSnapshot(name))
@@ -674,7 +654,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   def detail(): DataFrame = {
     import spark.implicits._
     val m = currentMetadata
-    val data = liveEntries(None).filter(_.content == ManifestEntry.ContentData)
+    val data = liveEntries(m, None).filter(_.content == ManifestEntry.ContentData)
     Seq((
       "iceberg", m.tableUuid, tablePath, m.lastUpdatedMs,
       m.partitionSpec.map(f => s"${f.transform}(${f.name})"),
@@ -688,7 +668,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     * metadata table): content kind, path, partition, counts, size. */
   def filesDF(): DataFrame = {
     import spark.implicits._
-    liveEntries(None).map(e =>
+    liveEntries(currentMetadata, None).map(e =>
       (e.content, e.filePath, e.fileFormat, e.partitionValues, e.recordCount, e.fileSizeBytes,
         e.sequenceNumber))
       .toDF("content", "file_path", "file_format", "partition", "record_count",
@@ -703,7 +683,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   def partitionsDF(): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    liveEntries(None)
+    liveEntries(currentMetadata, None)
       .map(e => (
         e.partitionValues.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("/"),
         e.content, e.recordCount, e.fileSizeBytes))
@@ -721,9 +701,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     * current snapshot — the observable for [[rewriteManifests]]. */
   def manifestsDF(): DataFrame = {
     import spark.implicits._
-    val snap = currentMetadata.currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"empty iceberg table: $tablePath"))
-    IcebergManifests.readManifestList(hconf, new Path(snap.manifestList)).map { m =>
+    manifestList(snapshotOf(currentMetadata, None)).map { m =>
       (m.manifestPath, m.manifestLength, m.content, m.sequenceNumber, m.minSequenceNumber,
         m.addedSnapshotId, m.addedFilesCount, m.existingFilesCount, m.deletedFilesCount,
         m.addedRowsCount, m.existingRowsCount, m.deletedRowsCount)
@@ -736,8 +714,6 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   def scan: IcebergScanBuilder = new IcebergScanBuilder(spark, this, None)
   def scanAsOf(snapshotId: Long): IcebergScanBuilder =
     new IcebergScanBuilder(spark, this, Some(snapshotId))
-  def scanAsOfTimestamp(tsMillis: Long): IcebergScanBuilder =
-    new IcebergScanBuilder(spark, this, Some(currentMetadata.snapshotForTimestamp(tsMillis).snapshotId))
 
   def toDF(snapshotAsOf: Option[Long] = None): DataFrame =
     (snapshotAsOf match {
@@ -745,25 +721,56 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       case None => scan
     }).toDF()
 
+  /** Snapshot `asOf` of `meta`, the current one when None. */
+  private def snapshotOf(meta: IcebergTableMetadata, asOf: Option[Long]): IcebergSnapshot =
+    asOf.map(meta.snapshot).orElse(meta.currentSnapshot).getOrElse(
+      throw new IllegalStateException(s"empty iceberg table: $tablePath"))
+
+  /** The manifests `snap`'s manifest list names. */
+  private[graft] def manifestList(snap: IcebergSnapshot): Seq[ManifestFileInfo] =
+    IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))
+
   /** All entries of the given manifests, read on the driver — the
     * per-snapshot change paths' input. */
-  private def readEntries(infos: Seq[ManifestFileInfo]): Seq[ManifestEntry] =
+  private def manifestEntries(infos: Seq[ManifestFileInfo]): Seq[ManifestEntry] =
     infos.map(_.manifestPath).distinct.flatMap(p => IcebergManifests.readManifest(hconf, new Path(p)))
 
-  /** Live manifest entries of a snapshot, reconciled on the driver: per
-    * path the [[ManifestEntry.supersedes]] winner — a carried add
+  /** The entries `snap` itself wrote — its adds and its removals, stamped
+    * with its id — from the manifests it added. */
+  private def entriesAddedBy(snap: IcebergSnapshot): Seq[ManifestEntry] =
+    manifestEntries(manifestList(snap).filter(_.addedSnapshotId == snap.snapshotId))
+      .filter(_.snapshotId == snap.snapshotId)
+
+  /** Snapshots after `fromExclusive` up to `toInclusive`, both resolved
+    * through the snapshot log of `meta`. */
+  private def snapshotsBetween(
+      meta: IcebergTableMetadata, fromExclusive: Long, toInclusive: Long): Seq[IcebergSnapshot] = {
+    val ids = meta.snapshotLog.map(_._2)
+    val fromIdx = ids.indexOf(fromExclusive)
+    val toIdx = ids.indexOf(toInclusive)
+    require(fromIdx >= 0 && toIdx > fromIdx, s"bad snapshot range on $tablePath")
+    ids.slice(fromIdx + 1, toIdx + 1).map(meta.snapshot)
+  }
+
+  /** Live manifest entries of snapshot `asOf` of `meta` (current when
+    * None); see [[liveIn]]. */
+  private[iceberg] def liveEntries(
+      meta: IcebergTableMetadata,
+      asOf: Option[Long],
+      pred: ManifestEntry => Boolean = _ => true): Seq[ManifestEntry] =
+    liveIn(manifestList(snapshotOf(meta, asOf)), pred)
+
+  /** Live entries of a snapshot's `manifests`, reconciled on the driver:
+    * per path the [[ManifestEntry.supersedes]] winner — a carried add
     * manifest plus a later delete manifest for the same file resolves
     * to deleted. `pred` (partition pruning from the scan builder)
     * runs after reconciliation: a delete entry must cancel its add even
     * when neither matches the predicate. Sorted by path. */
-  private[iceberg] def liveEntries(
-      snapshotId: Option[Long],
+  private def liveIn(
+      manifests: Seq[ManifestFileInfo],
       pred: ManifestEntry => Boolean = _ => true): Seq[ManifestEntry] = {
-    val meta = currentMetadata
-    val snap = snapshotId.map(meta.snapshot).orElse(meta.currentSnapshot).getOrElse(
-      throw new IllegalStateException(s"empty iceberg table: $tablePath"))
     val state = scala.collection.mutable.HashMap[String, ManifestEntry]()
-    readEntries(IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))).foreach { e =>
+    manifestEntries(manifests).foreach { e =>
       if (state.get(e.filePath).forall(cur => !ManifestEntry.supersedes(cur, e))) state(e.filePath) = e
     }
     state.valuesIterator
@@ -778,32 +785,20 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    */
   def changesAsDF(fromSnapshotExclusive: Long, toSnapshotInclusive: Long): DataFrame = {
     val meta = currentMetadata
-    val ids = meta.snapshotLog.map(_._2)
-    val fromIdx = ids.indexOf(fromSnapshotExclusive)
-    val toIdx = ids.indexOf(toSnapshotInclusive)
-    require(fromIdx >= 0 && toIdx > fromIdx, s"bad snapshot range on $tablePath")
-    val targets = ids.slice(fromIdx + 1, toIdx + 1).toSet
-    val manifestInfos = ids.slice(fromIdx + 1, toIdx + 1)
-      .flatMap(id => IcebergManifests.readManifestList(hconf, new Path(meta.snapshot(id).manifestList)))
-      .filter(m => targets.contains(m.addedSnapshotId))
-    val added = readEntries(manifestInfos)
-      .filter(e => e.status == ManifestEntry.StatusAdded && targets.contains(e.snapshotId) &&
+    val added = snapshotsBetween(meta, fromSnapshotExclusive, toSnapshotInclusive)
+      .flatMap(entriesAddedBy)
+      .filter(e => e.status == ManifestEntry.StatusAdded &&
         // the change feed reports added DATA; delete files added in the
         // range are row-level tombstones, not new rows
         e.content == ManifestEntry.ContentData)
       .groupBy(_.filePath).map(_._2.head).toSeq.sortBy(_.filePath)
-    readFiles(added)
+    readFiles(meta, added)
   }
 
-  /** Data read with iceberg v2 row-level deletes applied: position
-    * deletes anti-join their `(file_path, pos)` pairs against the scan's
-    * row positions (applicable when `delete.seq >= data.seq`); equality
-    * deletes anti-match on their key columns against data files with
-    * `data.seq < delete.seq` (null keys match null values, per spec). */
   /** Number of live data files — sizes the streaming source's
     * initial-snapshot chunking. */
   def snapshotFileCount(asOf: Option[Long] = None): Int =
-    liveEntries(asOf).count(_.content == ManifestEntry.ContentData)
+    liveEntries(currentMetadata, asOf).count(_.content == ManifestEntry.ContentData)
 
   /** Deterministic slice `chunk` of `totalChunks` over the snapshot's
     * live data files (modulo over the path-sorted entry list); every
@@ -813,26 +808,35 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   def snapshotChunkDF(asOf: Option[Long], chunk: Int, totalChunks: Int): DataFrame = {
     require(totalChunks > 0 && chunk >= 0 && chunk < totalChunks,
       s"bad snapshot chunk $chunk/$totalChunks")
-    val (dels, data) = liveEntries(asOf).partition(_.content > 0)
+    val meta = currentMetadata
+    val (dels, data) = liveEntries(meta, asOf).partition(_.content > 0)
     val mine = data.sortBy(_.filePath)
       .zipWithIndex.collect { case (e, i) if i % totalChunks == chunk => e }
     if (mine.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sparkSchema)
-    else readEntries(mine ++ dels)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        IcebergTable.sparkSchemaOf(meta.schema))
+    else entriesDF(meta, mine ++ dels)
   }
 
-  private[iceberg] def readEntries(entries: Seq[ManifestEntry]): DataFrame = {
+  /** Rows of `entries` (data and delete files) under `meta`, v2 deletes
+    * applied. */
+  private[iceberg] def entriesDF(meta: IcebergTableMetadata, entries: Seq[ManifestEntry]): DataFrame = {
     val (dels, data) = entries.partition(_.content > 0)
-    if (dels.isEmpty) readFiles(data) else applyDeletes(data, dels)
+    if (dels.isEmpty) readFiles(meta, data) else applyDeletes(meta, data, dels)
   }
 
+  /** Data read with iceberg v2 row-level deletes applied: position
+    * deletes anti-join their `(file_path, pos)` pairs against the scan's
+    * row positions (applicable when `delete.seq >= data.seq`); equality
+    * deletes anti-match on their key columns against data files with
+    * `data.seq < delete.seq` (null keys match null values, per spec). */
   private def applyDeletes(
+      meta: IcebergTableMetadata,
       data: Seq[ManifestEntry], dels: Seq[ManifestEntry],
       /** keep __graft_file/__graft_pos/__graft_dseq (change-feed joins) */
       keepPositions: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
-    val meta = currentMetadata
-    val logical = sparkSchema
+    val logical = IcebergTable.sparkSchemaOf(meta.schema)
     require(meta.properties.get("schema.name-mapping.default")
         .map(IcebergSchemas.physicalNamesFromMapping).forall(_.isEmpty),
       s"v2 deletes on a column-mapped (name-mapping) table are not supported: $tablePath")
@@ -846,7 +850,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         StructField("__graft_dseq", LongType)))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], shape)
     }
-    val dataDF = readFiles(data, withRowPositions = true)
+    val dataDF = readFiles(meta, data, withRowPositions = true)
     // per-data-file sequence numbers ride a broadcast join keyed on the
     // scan's _metadata file path form
     val seqDF = spark.createDataFrame(
@@ -876,30 +880,37 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val eqGroups = dels.filter(_.content == ManifestEntry.ContentEqualityDeletes)
       .groupBy(e => (e.sequenceNumber, e.equalityIds)).toSeq.sortBy(_._1._1)
     eqGroups.foreach { case ((seq, ids), files) =>
-      val byId = logical.fields.flatMap(f =>
-        IcebergSchemas.fieldId(meta.schema(f.name)).map(_ -> f)).toMap
-      val cols = ids.map(id => byId.getOrElse(id,
-        throw new IllegalStateException(s"equality id $id not in schema of $tablePath")).name)
-      val delSchema = StructType(cols.map(c =>
-        StructField(c, logical(c).dataType, nullable = true)))
-      val keys = readDeleteFiles(files, delSchema)
-        .distinct()
-        .select(cols.map(c => col(s"`$c`").as(s"__eq_$c")).toSeq: _*)
-        .withColumn("__eq_hit", lit(1))
-      val cond = cols.map(c => col(s"`$c`") <=> col(s"__eq_$c")).reduce(_ && _)
+      val (keys, cond) = equalityKeys(meta, ids, files)
+      val hits = keys.withColumn("__eq_hit", lit(1))
       // same cardinality gate as the position-delete path: an upsert's
       // equality-delete key set is O(|source|), and broadcasting it
       // unconditionally would OOM the driver after a large upsert
       val small = files.map(_.recordCount).sum <= 4000000L
-      val right = if (small) broadcast(keys) else keys
+      val right = if (small) broadcast(hits) else hits
       out = out.join(right, cond, "left_outer")
         .filter(col("__eq_hit").isNull || col("__graft_dseq") >= lit(seq))
-        .drop(cols.map(c => s"__eq_$c") :+ "__eq_hit": _*)
+        .drop(hits.columns.toSeq: _*)
     }
     if (keepPositions)
       out.select((logical.fieldNames.toSeq ++
         Seq("__graft_file", "__graft_pos", "__graft_dseq")).map(n => col(s"`$n`")): _*)
     else out.select(logical.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
+  }
+
+  /** The distinct key rows of equality-delete `files`, whose key columns
+    * are the field `ids` of `meta`'s schema, as `__eq_<column>` columns,
+    * and the null-safe condition matching them against a table row. */
+  private def equalityKeys(meta: IcebergTableMetadata, ids: Seq[Int],
+      files: Seq[ManifestEntry]): (DataFrame, org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions.col
+    val byId = meta.schema.fields.flatMap(f => IcebergSchemas.fieldId(f).map(_ -> f)).toMap
+    val fields = ids.map(id => byId.getOrElse(id,
+      throw new IllegalStateException(s"equality id $id not in schema of $tablePath")))
+    val keys = readDeleteFiles(files,
+        StructType(fields.map(f => StructField(f.name, f.dataType, nullable = true))))
+      .distinct()
+      .select(fields.map(f => col(s"`${f.name}`").as(s"__eq_${f.name}")): _*)
+    (keys, fields.map(f => col(s"`${f.name}`") <=> col(s"__eq_${f.name}")).reduce(_ && _))
   }
 
   /**
@@ -915,33 +926,26 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
   def changeFeed(fromSnapshotExclusive: Long, toSnapshotInclusive: Long): DataFrame = {
     import org.apache.spark.sql.functions._
     val meta = currentMetadata
-    val ids = meta.snapshotLog.map(_._2)
-    val fromIdx = ids.indexOf(fromSnapshotExclusive)
-    val toIdx = ids.indexOf(toSnapshotInclusive)
-    require(fromIdx >= 0 && toIdx > fromIdx, s"bad snapshot range on $tablePath")
-    val logical = sparkSchema
+    val logical = IcebergTable.sparkSchemaOf(meta.schema)
     def finish(df: DataFrame, t: String, sid: Long): DataFrame =
       df.select(logical.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
         .withColumn("_change_type", lit(t))
         .withColumn("_commit_snapshot_id", lit(sid))
-    val conf = new SerializableConfiguration(hconf)
-    val parts: Seq[DataFrame] = ids.slice(fromIdx + 1, toIdx + 1).flatMap { sid =>
-      val snap = meta.snapshot(sid)
-      val added = readEntries(
-          IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))
-            .filter(_.addedSnapshotId == sid))
-        .filter(e => e.status == ManifestEntry.StatusAdded && e.snapshotId == sid)
+    val parts: Seq[DataFrame] =
+      snapshotsBetween(meta, fromSnapshotExclusive, toSnapshotInclusive).flatMap { snap =>
+      val sid = snap.snapshotId
+      val added = entriesAddedBy(snap).filter(_.status == ManifestEntry.StatusAdded)
       val inserts = added.filter(_.content == ManifestEntry.ContentData)
       val insertDF =
-        if (inserts.isEmpty) None else Some(finish(readFiles(inserts), "insert", sid))
+        if (inserts.isEmpty) None else Some(finish(readFiles(meta, inserts), "insert", sid))
       val newDels = added.filter(_.content > 0)
       val delDF =
         if (newDels.isEmpty) None
         else {
           // the parent's live rows, existing deletes applied, positions kept
-          val parentEntries = snap.parentId.map(p => liveEntries(Some(p))).getOrElse(Seq.empty)
+          val parentEntries = snap.parentId.map(p => liveEntries(meta, Some(p))).getOrElse(Seq.empty)
           val (pDels, pData) = parentEntries.partition(_.content > 0)
-          var parent = applyDeletes(pData, pDels, keepPositions = true)
+          val parent = applyDeletes(meta, pData, pDels, keepPositions = true)
           val pos = newDels.filter(_.content == ManifestEntry.ContentPositionDeletes)
           val posHits =
             if (pos.isEmpty) None
@@ -952,15 +956,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
             }
           val eqHits = newDels.filter(_.content == ManifestEntry.ContentEqualityDeletes)
             .groupBy(_.equalityIds).toSeq.map { case (eqIds, files) =>
-              val byId = logical.fields.flatMap(f =>
-                IcebergSchemas.fieldId(meta.schema(f.name)).map(_ -> f)).toMap
-              val cols = eqIds.map(id => byId(id).name)
-              val delSchema = StructType(cols.map(c =>
-                StructField(c, logical(c).dataType, nullable = true)))
-              val keys = readDeleteFiles(files, delSchema)
-                .distinct()
-                .select(cols.map(c => col(s"`$c`").as(s"__eq_$c")).toSeq: _*)
-              val cond = cols.map(c => col(s"`$c`") <=> col(s"__eq_$c")).reduce(_ && _)
+              val (keys, cond) = equalityKeys(meta, eqIds, files)
               parent.filter(col("__graft_dseq") < snap.sequenceNumber)
                 .join(broadcast(keys), cond, "left_semi")
             }
@@ -984,10 +980,10 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       dels.map(e => graft.model.InternalDataFile(e.filePath, fileSizeBytes = e.fileSizeBytes)),
       schema, Seq.empty, withRowPositions = positions)
 
-  private[iceberg] def readFiles(
+  private def readFiles(
+      meta: IcebergTableMetadata,
       entries: Seq[ManifestEntry],
       withRowPositions: Boolean = false): DataFrame = {
-    val meta = currentMetadata
     // only identity partition columns live in the path (and in the
     // manifest partition struct with their source type); transform
     // (hidden) partition sources are ordinary data columns in the files.
@@ -1000,7 +996,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       meta.allSpecs.flatMap(_._2).filter(_.transform == "identity").map(_.name).toSet
     def identityColsOf(e: ManifestEntry): Seq[String] =
       e.partitionValues.keySet.intersect(allIdentityCols).toSeq.sorted
-    val logical = sparkSchema
+    val logical = IcebergTable.sparkSchemaOf(meta.schema)
     // honor the table's name mapping: entries whose first listed name
     // differs from the schema name mean the parquet files speak that
     // PHYSICAL name (column-mapped sync sources) — read physically,
@@ -1018,7 +1014,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     }
     if (entries.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
-    val basePath = meta.properties.getOrElse("graft.converted.from", tablePath)
+    val basePath = dataRoot(meta)
     // data files may mix formats (ref FileFormat.java:26-30) and, under
     // spec evolution, identity sets; plan one relation per (format,
     // identity-set) group over the shared index machinery and union
@@ -1065,8 +1061,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * which this engine does not fabricate silently).
    */
   def fastForward(branch: String): Unit = {
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (v, meta) = latestState
     if (!fastForwardCommit(v, meta, branch))
       // for a DIRECT caller a lost slot is a concurrent commit — typed,
       // never classified by message text (graft-wide race posture)
@@ -1087,10 +1082,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // walk parents from the branch head down to main's current snapshot;
     // the walk ends (rather than throwing) at an expired ancestor — the
     // chain below main's head is legitimately expirable history
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    val chain = Iterator.iterate(Option(head.snapshotId))(
-        _.flatMap(byId.get).flatMap(_.parentId))
-      .takeWhile(_.isDefined).map(_.get).toSeq
+    val chain = meta.ancestry(head.snapshotId).toSeq
     meta.currentSnapshotId.foreach { cur =>
       require(chain.contains(cur),
         s"branch $branch does not descend from the current snapshot of " +
@@ -1132,16 +1124,12 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       attempts += 1
       require(attempts <= 16,
         s"publishBranch($branch) on $tablePath lost the commit race $attempts times")
-      val (v0, meta) = log.readLatest().getOrElse(
-        throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+      val (v0, meta) = latestState
       val head = meta.refs.getOrElse(branch,
         throw new IllegalArgumentException(s"no ref $branch on $tablePath"))
       require(head.refType == "branch", s"$branch is a ${head.refType}; only branches publish")
       val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-      def chainFrom(id: Long): Seq[Long] =
-        Iterator.iterate(Option(id))(_.flatMap(byId.get).flatMap(_.parentId))
-          .takeWhile(_.isDefined).map(_.get).toSeq
-      val chain = chainFrom(head.snapshotId)
+      val chain = meta.ancestry(head.snapshotId).toSeq
       // every CAS loss below is TYPED (graft.model.ConcurrentSyncException
       // from syncCommit/createBranch, a structural `false` from
       // fastForwardCommit) — the classifier is the type, never message
@@ -1162,7 +1150,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         // fork-point snapshot stays pinned and LIVE — the log still
         // records it as published main history, so it must never become
         // a cherry-pick candidate
-        val mainAncestry = meta.currentSnapshotId.map(chainFrom(_).toSet).getOrElse(Set.empty) ++
+        val mainAncestry = meta.currentSnapshotId.map(meta.ancestry(_).toSet).getOrElse(Set.empty) ++
           meta.snapshotLog.map(_._2)
         val candidates = chain.takeWhile(!mainAncestry(_)).reverse // oldest first
         // validate the WHOLE lineage before committing any of it
@@ -1184,9 +1172,9 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
           .flatMap(x => scala.util.Try(x.toLong).toOption).toSet ++
           IcebergTable.cherryPickedIds(meta)
         val mainLive: Set[String] =
-          liveEntries(None).map(e => new Path(e.filePath).toUri.toString).toSet
+          liveEntries(meta, None).map(e => new Path(e.filePath).toUri.toString).toSet
         val pending = candidates.filterNot(published)
-          .map(id => id -> changeSet(id)).filterNot {
+          .map(id => id -> changeSet(meta, id)).filterNot {
           case (_, (adds, _)) =>
             adds.nonEmpty && adds.forall(f =>
               mainLive.contains(new Path(f.physicalPath).toUri.toString))
@@ -1204,7 +1192,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
           var publishedIds = published
           pending.foreach { case (id, (adds, _)) =>
             publishedIds += id
-            syncCommit(sparkSchema, defs, dataRoot, adds, Seq.empty,
+            syncCommit(IcebergTable.sparkSchemaOf(meta.schema), defs, dataRoot(meta), adds, Seq.empty,
               Map(IcebergTable.CherryPickedIdsProp ->
                 publishedIds.toSeq.sorted.mkString(",")),
               extraSummary = Map(IcebergTable.CherryPickedFromKey -> id.toString))
@@ -1241,8 +1229,9 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         * (graft.util.ZOrder); takes precedence over sortBy. */
       zorderBy: Seq[String] = Seq.empty): Option[Long] = {
     import org.apache.spark.sql.functions.col
-    val live = liveEntries(None)
-    val (dels, dataLive) = live.partition(_.content > 0)
+    val state = latestState
+    val meta = state._2
+    val (dels, dataLive) = liveEntries(meta, None).partition(_.content > 0)
     val smalls = dataLive.groupBy(_.partitionValues).values.flatMap { g =>
       val s = g.filter(_.fileSizeBytes < smallFileBytes)
       if (s.size >= 2) s else Seq.empty
@@ -1251,15 +1240,17 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // delete-aware rewrite: compacted output materializes the deletes;
     // leftover delete files become inert (their targets are gone or
     // their sequence no longer outranks the rewritten files)
-    val df = readEntries(smalls ++ dels)
+    val df = entriesDF(meta, smalls ++ dels)
     val n = math.max(1, math.ceil(smalls.map(_.fileSizeBytes).sum.toDouble / targetFileBytes).toInt)
-    val partCols = log.readLatest().toSeq
-      .flatMap(p => IcebergTable.defsOf(p._2)).filter(_.isIdentity).map(_.fieldName)
+    val partCols = IcebergTable.defsOf(meta).filter(_.isIdentity).map(_.fieldName)
     // a sorted/z-ordered rewrite DECLARES its layout in the table
     // metadata (spec sort-orders + default-sort-order-id) before the
-    // rewrite commits, so downstream writers and engines see the order
-    if (zorderBy.nonEmpty) replaceSortOrder(zorderBy, zorder = true)
-    else if (sortBy.nonEmpty) replaceSortOrder(sortBy)
+    // rewrite commits, so downstream writers and engines see the order;
+    // the rewrite commits on the state that declaration left
+    val declared =
+      if (zorderBy.nonEmpty) declareSortOrder(state, zorderBy, zorder = true)._2
+      else if (sortBy.nonEmpty) declareSortOrder(state, sortBy, zorder = false)._2
+      else state
     val arranged =
       if (zorderBy.nonEmpty) graft.util.ZOrder.arrange(df, zorderBy, n)
       else if (sortBy.nonEmpty)
@@ -1267,7 +1258,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       else if (partCols.nonEmpty) df.repartition(n, partCols.map(col): _*)
       else df.repartition(n)
     Some(write(arranged, Seq.empty, overwrite = false,
-      replacing = smalls, consumedDeletes = dels))
+      replacing = smalls, consumedDeletes = dels, state = Some(declared)))
   }
 
   /**
@@ -1284,18 +1275,17 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // re-read parent would let a concurrent rewrite land in between and
     // leave these position deletes pointing at replaced files — inert,
     // silently resurrecting the rows (no version conflict would fire)
-    val prevState = this.log.readLatest()
-    val meta = prevState.map(_._2).getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val state = latestState
+    val meta = state._2
     val current = meta.currentSnapshotId.getOrElse(
       throw new IllegalStateException(s"empty iceberg table: $tablePath"))
-    val data = liveEntries(None).filter(_.content == ManifestEntry.ContentData)
+    val data = liveEntries(meta, None).filter(_.content == ManifestEntry.ContentData)
     if (data.isEmpty) return current
     require(data.forall(e => Option(e.fileFormat).forall(_.equalsIgnoreCase("parquet"))),
       s"position deletes need parquet row indexes; $tablePath has non-parquet data files")
     // PHYSICAL rows: re-marking an already position-deleted row is
     // idempotent (both tombstones resolve to the same position)
-    val dataDF = readFiles(data, withRowPositions = true)
+    val dataDF = readFiles(meta, data, withRowPositions = true)
     val matched = dataDF.filter(predicate).select(
       col("__graft_file").as("file_path"), col("__graft_pos").as("pos"))
     val defs = IcebergTable.defsOf(meta)
@@ -1335,7 +1325,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val entries = stats.map(st =>
       IcebergTable.entryFor(st, meta.schema, defs, tablePath)
         .copy(content = ManifestEntry.ContentPositionDeletes))
-    commitSnapshot(prevState, meta.schema, defs, entries, Seq.empty,
+    commitSnapshot(Some(state), meta.schema, defs, entries, Seq.empty,
       carryPrevious = true, operation = "delete",
       extraProps = Map.empty)
       .getOrElse(throw new graft.model.ConcurrentSyncException(
@@ -1377,9 +1367,8 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // pinned like deleteWhere: equality deletes are value-based and
     // would survive a racing rewrite, but committing against the read
     // state keeps the concurrency contract uniform (losers retry)
-    val prevState = log.readLatest()
-    val meta = prevState.map(_._2).getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val state = latestState
+    val meta = state._2
     val current = meta.currentSnapshotId.getOrElse(
       throw new IllegalStateException(s"empty iceberg table: $tablePath"))
     val schemaByName = meta.schema.fields.map(f => f.name -> f).toMap
@@ -1400,7 +1389,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val entries = stats.map(st =>
       IcebergTable.entryFor(st, meta.schema, defs, tablePath)
         .copy(content = ManifestEntry.ContentEqualityDeletes, equalityIds = ids))
-    commitSnapshot(prevState, meta.schema, defs, entries, Seq.empty,
+    commitSnapshot(Some(state), meta.schema, defs, entries, Seq.empty,
       carryPrevious = true, operation = "delete", extraProps = Map.empty)
       .getOrElse(throw new graft.model.ConcurrentSyncException(
         s"concurrent commit detected on $tablePath; re-run deleteByEquality"))
@@ -1417,8 +1406,10 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * keys would all land as new rows.
    */
   def upsert(df: DataFrame, keyCols: Seq[String]): Long = {
-    val meta = currentMetadata
-    if (meta.currentSnapshotId.isEmpty) return append(df)
+    val state = latestState
+    val meta = state._2
+    if (meta.currentSnapshotId.isEmpty)
+      return write(df, Seq.empty, overwrite = false, state = Some(state))
     val schemaByName = meta.schema.fields.map(f => f.name -> f).toMap
     val ids = keyCols.map { n =>
       val f = schemaByName.getOrElse(n,
@@ -1436,15 +1427,16 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       IcebergTable.entryFor(st, meta.schema, defs, tablePath)
         .copy(content = ManifestEntry.ContentEqualityDeletes, equalityIds = ids))
     write(df, Seq.empty, overwrite = false, extraAdds = delEntries,
-      operationOverride = Some("overwrite"))
+      operationOverride = Some("overwrite"), state = Some(state))
   }
 
   /** Materialize all v2 deletes: rewrite exactly the data files they
     * still apply to (deletes applied), drop every delete file, one
     * commit — after which metadata-only sync is possible again. */
   def purgeDeletes(): Option[Long] = {
-    import org.apache.spark.sql.functions.col
-    val all = liveEntries(None)
+    val state = latestState
+    val meta = state._2
+    val all = liveEntries(meta, None)
     val dels = all.filter(_.content > 0)
     if (dels.isEmpty) return None
     val data = all.filter(_.content == ManifestEntry.ContentData)
@@ -1460,9 +1452,9 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val affected = data.filter(e =>
       posTargets.contains(new Path(e.filePath).toString) ||
         e.sequenceNumber < maxEqSeq)
-    val df = applyDeletes(affected, dels)
+    val df = applyDeletes(meta, affected, dels)
     Some(write(df, Seq.empty, overwrite = false,
-      replacing = affected ++ dels, consumedDeletes = dels))
+      replacing = affected ++ dels, consumedDeletes = dels, state = Some(state)))
   }
 
   private[iceberg] def write(
@@ -1481,8 +1473,11 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
         * equality-delete files). */
       extraAdds: Seq[ManifestEntry] = Seq.empty,
       operationOverride: Option[String] = None,
-      toBranch: Option[String] = None): Long = {
-    val prev = log.readLatest()
+      toBranch: Option[String] = None,
+      /** The state the caller read its inputs from; the first commit
+        * attempt takes its slot from it. */
+      state: Option[(Long, IcebergTableMetadata)] = log.readLatest()): Long = {
+    val prev = state
     // inherit the table's partition spec when the caller doesn't repeat
     // it; a mismatching explicit spec is an error, never a silent wipe
     val defs = (prev.map(p => IcebergTable.defsOf(p._2)),
@@ -1548,10 +1543,12 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     while (result < 0) {
       attempt += 1
       val removes =
-        if (overwrite && prevState.exists(_._2.currentSnapshotId.nonEmpty)) liveEntries(None)
+        if (overwrite && prevState.exists(_._2.currentSnapshotId.nonEmpty))
+          liveEntries(prevState.get._2, None)
         else if (replacing.nonEmpty) {
           val rs = replacing.map(_.filePath).toSet
-          val live = liveEntries(None)
+          val live = liveEntries(prevState.map(_._2).getOrElse(
+            throw new IllegalStateException(s"not an iceberg table: $tablePath")), None)
           val liveReplaced = live.filter(e => rs.contains(e.filePath))
           require(liveReplaced.size == rs.size,
             s"compaction conflict at $tablePath: a concurrent commit removed " +
@@ -1655,111 +1652,28 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     }.getOrElse(0)
     // partition-spec evolution: a commit whose (source, transform) field
     // list differs from the previous default spec registers a NEW spec
-    // id; fields identical to a previously-known spec field KEEP that
-    // field's id (the spec's reuse rule), new fields continue from
-    // last-partition-id
+    // id ([[IcebergTableMetadata.resolveSpec]])
     val (specId, specFields) = {
       val proposed = IcebergTable.specFor(idSchema, defs)
-      prev.map(_._2) match {
-        case None => (0, proposed)
-        case Some(m) =>
-          def key(f: IcebergPartitionFieldSpec) = (f.sourceId, f.transform, f.name)
-          val knownIds = m.allSpecs.flatMap(_._2).map(f => key(f) -> f.fieldId).toMap
-          if (proposed.map(key) == m.partitionSpec.map(key)) (m.defaultSpecId, m.partitionSpec)
-          else m.allSpecs.find(_._2.map(key) == proposed.map(key)) match {
-            case Some((id, fields)) => (id, fields) // back to a retired spec
-            case None =>
-              var nextId = (999 +: m.allSpecs.flatMap(_._2.map(_.fieldId))).max
-              val reconciled = proposed.map { f =>
-                knownIds.get(key(f)) match {
-                  case Some(id) => f.copy(fieldId = id)
-                  case None => nextId += 1; f.copy(fieldId = nextId)
-                }
-              }
-              ((m.allSpecs.map(_._1).max + 1), reconciled)
-          }
-      }
+      prev.fold((0, proposed))(_._2.resolveSpec(proposed))
     }
-    // transform partition fields store ordinal ints (Iceberg spec:
-    // year/month/day/hour result type is int); identity stores the
-    // source type
-    val partFieldTypes = specFields.map { f =>
-      val sf = idSchema.fields.find(x => IcebergSchemas.fieldId(x).contains(f.sourceId)).get
-      // identity and truncate[W] store the source type; time transforms
-      // and bucket[N] store the spec's int ordinal/bucket
-      val dt =
-        if (f.transform == "identity" || f.transform.startsWith("truncate[")) sf.dataType
-        else IntegerType
-      (f.name, dt, f.fieldId)
-    }
-    val entrySchema = IcebergManifests.entrySchema(partFieldTypes)
-    val metaDir = log.metadataDir
-    // header properties Iceberg's ManifestReader requires alongside
-    // format-version/content
-    val manifestHeaders = Map(
-      "schema" -> IcebergSchemas.toJson(idSchema, schemaId).toString,
-      "partition-spec" -> IcebergMetadataCodec.specJson(specFields, specId),
-      "partition-spec-id" -> specId.toString)
-
-    val stamped = adds.map(_.copy(snapshotId = snapshotId, sequenceNumber = seq))
     // a manifest holds either data files or delete files, never both
     // (spec: manifest-list `content`); a mixed commit (upsert = equality
-    // deletes + new data in ONE snapshot) writes one manifest per kind
-    val addManifests: Seq[ManifestFileInfo] = PhaseTimer.time("iceberg:manifest-write") {
-      val groups =
-        if (stamped.isEmpty) Seq(0 -> Seq.empty[ManifestEntry]) // removes-only commit
-        else stamped.groupBy(e => if (e.content > 0) 1 else 0).toSeq.sortBy(_._1)
-      groups.map { case (content, group) =>
-        val addManifest = new Path(metaDir, s"${UUID.randomUUID()}-m0-c$content.avro")
-        val addLen = IcebergManifests.writeManifest(
-          hconf, addManifest, entrySchema, group,
-          manifestHeaders + ("content" -> (if (content == 1) "deletes" else "data")))
-        ManifestFileInfo(
-          manifestPath = addManifest.toString,
-          manifestLength = addLen,
-          sequenceNumber = seq,
-          minSequenceNumber = seq,
-          addedSnapshotId = snapshotId,
-          addedFilesCount = group.size,
-          existingFilesCount = 0,
-          deletedFilesCount = 0,
-          addedRowsCount = group.map(_.recordCount).sum,
-          existingRowsCount = 0L,
-          deletedRowsCount = 0L,
-          content = content,
-          partitionSpecId = specId)
-      }
-    }
-
-    // delete manifest: the removed files stamped deleted at this commit's
-    // sequence number — liveEntries' latest-sequence-wins replay resolves
-    // them dead even when their add manifests are still carried
-    val deleteManifests: Seq[ManifestFileInfo] = PhaseTimer.time("iceberg:manifest-write") {
-      val dead = removes.map(_.copy(
-        status = ManifestEntry.StatusDeleted, snapshotId = snapshotId, sequenceNumber = seq))
-      // tombstoned data files and tombstoned delete files go into
-      // separate manifests (spec: a manifest's content is uniform)
-      dead.groupBy(e => if (e.content > 0) 1 else 0).toSeq.sortBy(_._1).map {
-        case (content, group) =>
-          val delManifest = new Path(metaDir, s"${UUID.randomUUID()}-m1-c$content.avro")
-          val delLen = IcebergManifests.writeManifest(
-            hconf, delManifest, entrySchema, group,
-            manifestHeaders + ("content" -> (if (content == 1) "deletes" else "data")))
-          ManifestFileInfo(
-            manifestPath = delManifest.toString,
-            manifestLength = delLen,
-            sequenceNumber = seq,
-            minSequenceNumber = seq,
-            addedSnapshotId = snapshotId,
-            addedFilesCount = 0,
-            existingFilesCount = 0,
-            deletedFilesCount = group.size,
-            addedRowsCount = 0L,
-            existingRowsCount = 0L,
-            deletedRowsCount = group.map(_.recordCount).sum,
-            content = content,
-            partitionSpecId = specId)
-      }
+    // deletes + new data in ONE snapshot) writes one manifest per kind.
+    // Removed files go to delete manifests, stamped deleted at this
+    // commit's sequence number — liveEntries' latest-sequence-wins replay
+    // resolves them dead even when their add manifests are still carried
+    val stamped = adds.map(_.copy(snapshotId = snapshotId, sequenceNumber = seq))
+    val dead = removes.map(_.copy(
+      status = ManifestEntry.StatusDeleted, snapshotId = snapshotId, sequenceNumber = seq))
+    def byContent(es: Seq[ManifestEntry]) =
+      es.groupBy(e => if (e.content > 0) 1 else 0).toSeq.sortBy(_._1)
+    val written: Seq[ManifestFileInfo] = PhaseTimer.time("iceberg:manifest-write") {
+      // a removes-only commit still writes an (empty) add manifest
+      (if (stamped.isEmpty) Seq(0 -> Seq.empty[ManifestEntry]) else byContent(stamped))
+        .map { case (c, g) => writeManifest("m0", idSchema, schemaId, specId, specFields, c, g, snapshotId, seq) } ++
+        byContent(dead)
+          .map { case (c, g) => writeManifest("m1", idSchema, schemaId, specId, specFields, c, g, snapshotId, seq) }
     }
     // a branch write stacks on the BRANCH head (falling back to main
     // for a fresh branch); a main write stacks on the current snapshot
@@ -1770,15 +1684,14 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val carried: Seq[ManifestFileInfo] = PhaseTimer.time("iceberg:manifest-list-carry") {
       prev match {
         case Some((_, m)) if carryPrevious && parentSnapshotId.nonEmpty =>
-          IcebergManifests.readManifestList(
-            hconf, new Path(m.snapshot(parentSnapshotId.get).manifestList))
+          manifestList(m.snapshot(parentSnapshotId.get))
         case _ => Seq.empty
       }
     }
 
-    val listPath = new Path(metaDir, s"snap-$snapshotId-1-${UUID.randomUUID()}.avro")
+    val listPath = new Path(log.metadataDir, s"snap-$snapshotId-1-${UUID.randomUUID()}.avro")
     PhaseTimer.time("iceberg:manifest-list-write") {
-      IcebergManifests.writeManifestList(hconf, listPath, (addManifests ++ deleteManifests) ++ carried)
+      IcebergManifests.writeManifestList(hconf, listPath, written ++ carried)
     }
 
     val snap = IcebergSnapshot(
@@ -1865,6 +1778,49 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     }
   }
 
+  /** Writes `entries` — one content kind (0 data, 1 deletes) under spec
+    * `specId` of `schema` — as one manifest tagged `tag`, and returns its
+    * manifest-list entry, added by snapshot `snapshotId` at `seq`. */
+  private def writeManifest(tag: String, schema: StructType, schemaId: Int, specId: Int,
+      specFields: Seq[IcebergPartitionFieldSpec], content: Int, entries: Seq[ManifestEntry],
+      snapshotId: Long, seq: Long): ManifestFileInfo = {
+    // identity and truncate[W] partition fields store the source type;
+    // time transforms and bucket[N] store the spec's int ordinal/bucket
+    val partFieldTypes = specFields.map { f =>
+      val sf = schema.fields.find(x => IcebergSchemas.fieldId(x).contains(f.sourceId))
+        .getOrElse(throw new IllegalStateException(s"partition source field ${f.sourceId} " +
+          s"of spec $specId missing from the schema of $tablePath"))
+      val dt =
+        if (f.transform == "identity" || f.transform.startsWith("truncate[")) sf.dataType
+        else IntegerType
+      (f.name, dt, f.fieldId)
+    }
+    val path = new Path(log.metadataDir, s"${UUID.randomUUID()}-$tag-c$content.avro")
+    // header properties Iceberg's ManifestReader requires alongside
+    // format-version
+    val length = IcebergManifests.writeManifest(
+      hconf, path, IcebergManifests.entrySchema(partFieldTypes), entries, Map(
+        "schema" -> IcebergSchemas.toJson(schema, schemaId).toString,
+        "partition-spec" -> IcebergMetadataCodec.specJson(specFields, specId),
+        "partition-spec-id" -> specId.toString,
+        "content" -> (if (content == 1) "deletes" else "data")))
+    def withStatus(status: Int) = entries.filter(_.status == status)
+    ManifestFileInfo(
+      manifestPath = path.toString,
+      manifestLength = length,
+      sequenceNumber = seq,
+      minSequenceNumber = (seq +: entries.map(_.sequenceNumber)).min,
+      addedSnapshotId = snapshotId,
+      addedFilesCount = withStatus(ManifestEntry.StatusAdded).size,
+      existingFilesCount = withStatus(ManifestEntry.StatusExisting).size,
+      deletedFilesCount = withStatus(ManifestEntry.StatusDeleted).size,
+      addedRowsCount = withStatus(ManifestEntry.StatusAdded).map(_.recordCount).sum,
+      existingRowsCount = withStatus(ManifestEntry.StatusExisting).map(_.recordCount).sum,
+      deletedRowsCount = withStatus(ManifestEntry.StatusDeleted).map(_.recordCount).sum,
+      content = content,
+      partitionSpecId = specId)
+  }
+
   /**
    * rewrite_manifests (Iceberg maintenance): collapse the current
    * snapshot's manifest list into ONE consolidated manifest per content
@@ -1878,10 +1834,9 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * stay intact.
    */
   def rewriteManifests(): Option[Long] = {
-    val (v, meta) = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val (v, meta) = latestState
     val current = meta.currentSnapshot.getOrElse(return None)
-    val manifests = IcebergManifests.readManifestList(hconf, new Path(current.manifestList))
+    val manifests = manifestList(current)
     // already tight: one manifest per (content kind, partition spec) is
     // the floor the per-spec rewrite below can reach
     if (manifests.size <=
@@ -1910,42 +1865,10 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     val rewritten: Seq[ManifestFileInfo] =
       live.groupBy { case (sid, e) => (if (e.content > 0) 1 else 0, sid) }
         .toSeq.sortBy(_._1).map { case ((content, sid), tagged) =>
-          val group = tagged.map(_._2)
           val specFields = specsById.getOrElse(sid, throw new IllegalStateException(
             s"manifest references unknown partition spec $sid on $tablePath"))
-          val partFieldTypes = specFields.map { f =>
-            val sf = meta.schema.fields
-              .find(x => IcebergSchemas.fieldId(x).contains(f.sourceId))
-              .getOrElse(throw new IllegalStateException(
-                s"partition source field ${f.sourceId} of spec $sid missing from " +
-                  s"current schema of $tablePath; cannot rewrite manifests"))
-            val dt =
-              if (f.transform == "identity" || f.transform.startsWith("truncate[")) sf.dataType
-              else IntegerType
-            (f.name, dt, f.fieldId)
-          }
-          val entrySchema = IcebergManifests.entrySchema(partFieldTypes)
-          val manifestHeaders = Map(
-            "schema" -> IcebergSchemas.toJson(meta.schema, meta.currentSchemaId).toString,
-            "partition-spec" -> IcebergMetadataCodec.specJson(specFields),
-            "partition-spec-id" -> sid.toString,
-            "content" -> (if (content == 1) "deletes" else "data"))
-          val mp = new Path(log.metadataDir, s"${UUID.randomUUID()}-rw-s$sid-c$content.avro")
-          val len = IcebergManifests.writeManifest(hconf, mp, entrySchema, group, manifestHeaders)
-          ManifestFileInfo(
-            manifestPath = mp.toString,
-            manifestLength = len,
-            sequenceNumber = seq,
-            minSequenceNumber = group.map(_.sequenceNumber).min,
-            addedSnapshotId = snapshotId,
-            addedFilesCount = 0,
-            existingFilesCount = group.size,
-            deletedFilesCount = 0,
-            addedRowsCount = 0L,
-            existingRowsCount = group.map(_.recordCount).sum,
-            deletedRowsCount = 0L,
-            content = content,
-            partitionSpecId = sid)
+          writeManifest(s"rw-s$sid", meta.schema, meta.currentSchemaId, sid, specFields,
+            content, tagged.map(_._2), snapshotId, seq)
         }
     val listPath = new Path(log.metadataDir, s"snap-$snapshotId-1-${UUID.randomUUID()}.avro")
     IcebergManifests.writeManifestList(hconf, listPath, rewritten)
@@ -1979,8 +1902,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * falls back to a full sync via the retention fence.
    */
   def expireSnapshots(olderThanMs: Long): Int = {
-    val prev = log.readLatest().getOrElse(
-      throw new IllegalStateException(s"not an iceberg table: $tablePath"))
+    val prev = latestState
     val (v, meta) = prev
     val current = meta.currentSnapshotId.getOrElse(
       throw new IllegalStateException(s"no current snapshot on $tablePath"))
@@ -1989,14 +1911,10 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
     // its whole unpublished lineage down to where it meets main's
     // ancestry, or fastForward's parent-chain walk would hit an expired
     // snapshot and strand the branch
-    val byId = meta.snapshots.map(s => s.snapshotId -> s).toMap
-    def chainFrom(id: Long): Iterator[Long] =
-      Iterator.iterate(Option(id))(_.flatMap(byId.get).flatMap(_.parentId))
-        .takeWhile(_.isDefined).map(_.get)
-    val mainAncestry = chainFrom(current).toSet
+    val mainAncestry = meta.ancestry(current).toSet
     val branchLineage = meta.refs.values.filter(_.refType == "branch")
       .flatMap { r =>
-        val (unpublished, rest) = chainFrom(r.snapshotId).span(!mainAncestry(_))
+        val (unpublished, rest) = meta.ancestry(r.snapshotId).span(!mainAncestry(_))
         unpublished.toSeq ++ rest.take(1) // fork point (or main head) included
       }.toSet
     val pinned = meta.refs.values.map(_.snapshotId).toSet ++ branchLineage + current
@@ -2047,9 +1965,7 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       dryRun: Boolean = false): Seq[String] = {
     val meta = currentMetadata
     val conf = new SerializableConfiguration(hconf)
-    val manifestPaths = meta.snapshots
-      .flatMap(s => IcebergManifests.readManifestList(hconf, new Path(s.manifestList)))
-      .map(_.manifestPath).distinct
+    val manifestPaths = meta.snapshots.flatMap(manifestList).map(_.manifestPath).distinct
     val referenced: Set[String] =
       if (manifestPaths.isEmpty) Set.empty
       else spark.sparkContext
@@ -2085,10 +2001,17 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
    * list before the metadata json, narrowing the window; the repair
    * covers foreign writers and partial filesystem loss.)
    */
-  def recoverIfCorrupt(): Boolean = {
-    val prev = log.readLatest()
-    if (prev.isEmpty) return false
-    val (v, meta) = prev.get
+  def recoverIfCorrupt(): Boolean = log.readLatest().exists(s => recovered(s) ne s._2)
+
+  /** The latest metadata after [[recoverIfCorrupt]]'s repair, from one
+    * `metadata.json` read; None for a missing table. */
+  private[graft] def recoveredMetadata: Option[IcebergTableMetadata] =
+    log.readLatest().map(recovered)
+
+  /** `state`'s metadata, or the metadata the repair commits over it when
+    * its current snapshot is corrupt. */
+  private def recovered(state: (Long, IcebergTableMetadata)): IcebergTableMetadata = {
+    val (v, meta) = state
     val fsys = new Path(tablePath).getFileSystem(hconf)
     meta.currentSnapshot match {
       case Some(snap) if !fsys.exists(new Path(snap.manifestList)) =>
@@ -2114,42 +2037,33 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
           liveStats.map(_.path).toSet ++ livePStats.map(_.path)
         deadStats.foreach(s => deleteStatsFileIfOwned(s.path, survivingStatPaths))
         deadPStats.foreach(s => deleteStatsFileIfOwned(s.path, survivingStatPaths))
-        true
-      case _ => false
+        next
+      case _ => meta
     }
   }
 
   // ----------------------------------------------------------------- sync
 
-  /** Partition defs of the spec the CURRENT snapshot's manifests
-    * uniformly use. After a rollback across a partition-spec evolution,
-    * the DEFAULT spec can describe a layout none of the live files use —
-    * sync must describe the live file set's spec, or targets record
-    * partition columns that match nothing. Mixed-spec snapshots return
-    * the default (the file-level single-spec guard refuses those syncs
-    * anyway). */
-  private[graft] def liveSpecDefs: Seq[graft.model.PartitionFieldDef] = {
-    val meta = currentMetadata
-    val specId = meta.currentSnapshot.map { snap =>
-      val ids = IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))
-        .filter(_.content == 0).map(_.partitionSpecId).distinct
-      if (ids.size == 1) ids.head else meta.defaultSpecId
-    }.getOrElse(meta.defaultSpecId)
-    val fields = meta.allSpecs.find(_._1 == specId).map(_._2).getOrElse(meta.partitionSpec)
-    IcebergTable.defsForFields(meta, fields)
-  }
-
   /** Root the data files live under (for cross-format sync targets). */
-  def dataRoot: String =
-    currentMetadata.properties.getOrElse("graft.converted.from", tablePath)
+  def dataRoot: String = dataRoot(currentMetadata)
+
+  private[graft] def dataRoot(meta: IcebergTableMetadata): String =
+    meta.properties.getOrElse("graft.converted.from", tablePath)
 
   /** Current snapshot as canonical data-file descriptors: bounds decoded
     * back to canonical stat strings by field id — stats are translated,
     * never recomputed from footers (reference sync contract). */
   def snapshotDataFiles(): Seq[graft.model.InternalDataFile] = {
     val meta = currentMetadata
+    snapshotDataFiles(meta, manifestList(snapshotOf(meta, None)))
+  }
+
+  /** [[snapshotDataFiles]] of `meta`, whose current snapshot lists
+    * `manifests`. */
+  private[graft] def snapshotDataFiles(meta: IcebergTableMetadata,
+      manifests: Seq[ManifestFileInfo]): Seq[graft.model.InternalDataFile] = {
     val defs = IcebergTable.defsOf(meta)
-    val entries = liveEntries(None)
+    val entries = liveIn(manifests)
     require(entries.forall(_.content == ManifestEntry.ContentData),
       s"cannot metadata-sync $tablePath: snapshot contains v2 delete files other " +
         "formats cannot express; run purgeDeletes() first")
@@ -2158,23 +2072,22 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
 
   /** One snapshot's adds + removed paths — the incremental replay unit
     * (ref `IcebergSourceClient.java:170-196`). */
-  def changeSet(snapshotId: Long): (Seq[graft.model.InternalDataFile], Seq[String]) = {
-    val meta = currentMetadata
-    val snap = meta.snapshot(snapshotId)
-    val entries = readEntries(
-        IcebergManifests.readManifestList(hconf, new Path(snap.manifestList))
-          .filter(_.addedSnapshotId == snapshotId))
-      .filter(_.snapshotId == snapshotId)
+  def changeSet(snapshotId: Long): (Seq[graft.model.InternalDataFile], Seq[String]) =
+    changeSet(currentMetadata, snapshotId)
+
+  private[graft] def changeSet(meta: IcebergTableMetadata,
+      snapshotId: Long): (Seq[graft.model.InternalDataFile], Seq[String]) = {
+    val entries = entriesAddedBy(meta.snapshot(snapshotId))
     if (entries.isEmpty) return (Seq.empty, Seq.empty)
-    val schemaAt = meta // bounds decode against current schema by field id
     val defs = IcebergTable.defsOf(meta)
     if (!entries.forall(e =>
         e.content == ManifestEntry.ContentData || e.status == ManifestEntry.StatusDeleted))
       throw new graft.model.UnsyncableChangeException(
         s"cannot metadata-sync snapshot $snapshotId of $tablePath: it adds v2 delete " +
           "files other formats cannot express; run purgeDeletes() first")
+    // bounds decode against the current schema, by field id
     val adds = entries.filter(_.status == ManifestEntry.StatusAdded)
-      .map(e => IcebergTable.internalFile(e, schemaAt.schema, defs))
+      .map(e => IcebergTable.internalFile(e, meta.schema, defs))
     val removed = entries.filter(_.status == ManifestEntry.StatusDeleted)
       // decoded-path contract (see internalFile): remove paths must match
       // the raw physicalPath form targets registered — toUri.toString
@@ -2216,33 +2129,12 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
       case None => IcebergSchemas.assignFieldIds(schema)
     }
     val entries = PhaseTimer.time("iceberg:entry-build") { adds.map { f =>
-      val byName = f.columnStats.map(c => c.column -> c).toMap
-      val fields = idSchema.fields.filterNot(x => identityCols.contains(x.name))
-      var valueCounts = Map.empty[Int, Long]
-      var nullCounts = Map.empty[Int, Long]
-      var lower = Map.empty[Int, Array[Byte]]
-      var upper = Map.empty[Int, Array[Byte]]
-      fields.foreach { sf =>
-        val id = IcebergSchemas.fieldId(sf).get
-        byName.get(sf.name).foreach { c =>
-          if (c.numValues >= 0) valueCounts += id -> c.numValues
-          if (c.numNulls >= 0) nullCounts += id -> c.numNulls
-          def enc(v: String): Option[Array[Byte]] =
-            try Some(IcebergSchemas.encodeBound(sf.dataType, v)) catch { case _: Exception => None }
-          c.minValue.flatMap(enc).foreach(b => lower += id -> b)
-          c.maxValue.flatMap(enc).foreach(b => upper += id -> b)
-        }
-      }
-      ManifestEntry(
-        status = ManifestEntry.StatusAdded,
-        snapshotId = 0L,
-        sequenceNumber = 0L,
+      IcebergTable.addedEntry(
         // raw (decoded) path in the manifest: iceberg file_path is a
         // plain string, and the scan opens it verbatim — an encoded URI
         // here breaks on the first escapable partition value
-        filePath = new Path(f.physicalPath).toString,
-        fileFormat = f.fileFormat,
-        partitionValues = f.partitionValues.collect {
+        new Path(f.physicalPath).toString, f.fileFormat,
+        f.partitionValues.collect {
           // canonical human strings in → identity as-is, transform
           // values re-encoded as Iceberg ordinals
           case (k, v) if defByName.contains(k) =>
@@ -2250,17 +2142,12 @@ final class IcebergTable private (spark: SparkSession, val log: IcebergMetadataL
             k -> (if (v == null || !d.isTime) v
                   else graft.model.PartitionTransform.toOrdinal(d.granularity, v).toString)
         },
-        recordCount = f.recordCount,
-        fileSizeBytes = f.fileSizeBytes,
-        valueCounts = valueCounts,
-        nullCounts = nullCounts,
-        lowerBounds = lower,
-        upperBounds = upper)
+        f.recordCount, f.fileSizeBytes, idSchema, identityCols, f.columnStats)
     } }
     val removeSet = removePaths.map(p => new Path(p).toUri.toString).toSet
     val removes =
       if (removeSet.isEmpty || prev.forall(_._2.currentSnapshotId.isEmpty)) Seq.empty
-      else liveEntries(None).filter(e =>
+      else liveEntries(prev.get._2, None).filter(e =>
         removeSet.contains(new Path(e.filePath).toUri.toString))
     // a Puffin pointer riding the property channel (the source's
     // closest-analyzed-ancestor sketch, valid for exactly the row set
@@ -2525,6 +2412,24 @@ object IcebergTable {
       IcebergPartitionFieldSpec(d.fieldName, d.transform, IcebergSchemas.fieldId(f).get, 1000 + i)
     }
 
+  /** Spark-facing form of `schema` (iceberg field-id metadata stripped). */
+  private[graft] def sparkSchemaOf(schema: StructType): StructType =
+    StructType(schema.fields.map(f => f.copy(metadata = Metadata.empty)))
+
+  /** Partition defs of the spec a snapshot's data `manifests` uniformly
+    * use. After a rollback across a partition-spec evolution, the
+    * DEFAULT spec can describe a layout none of the live files use —
+    * sync must describe the live file set's spec, or targets record
+    * partition columns that match nothing. Mixed-spec (or empty)
+    * snapshots return the default (the file-level single-spec guard
+    * refuses those syncs anyway). */
+  private[graft] def liveSpecDefs(
+      m: IcebergTableMetadata, manifests: Seq[ManifestFileInfo]): Seq[graft.model.PartitionFieldDef] = {
+    val ids = manifests.filter(_.content == 0).map(_.partitionSpecId).distinct
+    val specId = if (ids.size == 1) ids.head else m.defaultSpecId
+    defsForFields(m, m.allSpecs.find(_._1 == specId).map(_._2).getOrElse(m.partitionSpec))
+  }
+
   /** Reconstruct partition field defs from a table's current spec. */
   private[graft] def defsOf(m: IcebergTableMetadata): Seq[graft.model.PartitionFieldDef] =
     defsForFields(m, m.partitionSpec)
@@ -2548,27 +2453,6 @@ object IcebergTable {
       fileFormat: String = "parquet"): ManifestEntry = {
     val partitionColumns = defs.map(_.fieldName)
     val defByName = defs.map(d => d.fieldName -> d).toMap
-    val byName = st.columns.map(c => c.column -> c).toMap
-    // identity partition columns carry no per-file stats (they live in
-    // the path); transform SOURCE columns are ordinary data columns and
-    // keep theirs
-    val identityCols = defs.filter(_.isIdentity).map(_.fieldName).toSet
-    val fields = idSchema.fields.filterNot(f => identityCols.contains(f.name))
-    var valueCounts = Map.empty[Int, Long]
-    var nullCounts = Map.empty[Int, Long]
-    var lower = Map.empty[Int, Array[Byte]]
-    var upper = Map.empty[Int, Array[Byte]]
-    fields.foreach { f =>
-      val id = IcebergSchemas.fieldId(f).get
-      byName.get(f.name).foreach { c =>
-        valueCounts += id -> c.numValues
-        if (c.numNulls >= 0) nullCounts += id -> c.numNulls
-        def enc(v: String): Option[Array[Byte]] =
-          try Some(IcebergSchemas.encodeBound(f.dataType, v)) catch { case _: Exception => None }
-        c.minValue.flatMap(enc).foreach(b => lower += id -> b)
-        c.maxValue.flatMap(enc).foreach(b => upper += id -> b)
-      }
-    }
     val rel = {
       val base = new Path(baseForPartitions).toUri.getPath.stripSuffix("/") + "/"
       new Path(st.path).toUri.getPath.stripPrefix(base)
@@ -2588,15 +2472,46 @@ object IcebergTable {
         Some(k -> canonical)
       case _ => None
     }).toMap
+    addedEntry(st.path, fileFormat, partValues, st.recordCount, st.fileSizeBytes,
+      idSchema, defs.filter(_.isIdentity).map(_.fieldName).toSet, st.columns)
+  }
+
+  /** An added manifest entry for one data file: field-id keyed value and
+    * null counts and spec-encoded bounds from its canonical column
+    * `stats`, for the fields of `idSchema` outside `identityCols`.
+    * Identity partition columns carry no per-file stats (they live in
+    * the path); transform SOURCE columns are ordinary data columns and
+    * keep theirs. Unknown counts (< 0) and bounds a field's type cannot
+    * encode are left out. */
+  private[iceberg] def addedEntry(
+      path: String, fileFormat: String, partitionValues: Map[String, String],
+      recordCount: Long, fileSizeBytes: Long, idSchema: StructType,
+      identityCols: Set[String], stats: Seq[graft.model.ColumnStatRow]): ManifestEntry = {
+    val byName = stats.map(c => c.column -> c).toMap
+    var valueCounts = Map.empty[Int, Long]
+    var nullCounts = Map.empty[Int, Long]
+    var lower = Map.empty[Int, Array[Byte]]
+    var upper = Map.empty[Int, Array[Byte]]
+    idSchema.fields.filterNot(f => identityCols.contains(f.name)).foreach { f =>
+      val id = IcebergSchemas.fieldId(f).get
+      byName.get(f.name).foreach { c =>
+        if (c.numValues >= 0) valueCounts += id -> c.numValues
+        if (c.numNulls >= 0) nullCounts += id -> c.numNulls
+        def enc(v: String): Option[Array[Byte]] =
+          try Some(IcebergSchemas.encodeBound(f.dataType, v)) catch { case _: Exception => None }
+        c.minValue.flatMap(enc).foreach(b => lower += id -> b)
+        c.maxValue.flatMap(enc).foreach(b => upper += id -> b)
+      }
+    }
     ManifestEntry(
       status = ManifestEntry.StatusAdded,
       snapshotId = 0L,
       sequenceNumber = 0L,
-      filePath = st.path,
+      filePath = path,
       fileFormat = fileFormat,
-      partitionValues = partValues,
-      recordCount = st.recordCount,
-      fileSizeBytes = st.fileSizeBytes,
+      partitionValues = partitionValues,
+      recordCount = recordCount,
+      fileSizeBytes = fileSizeBytes,
       valueCounts = valueCounts,
       nullCounts = nullCounts,
       lowerBounds = lower,
@@ -2729,15 +2644,16 @@ final class IcebergScanBuilder(
           acc && col(s"partition.`$c`").cast("string").isin(vs.toSeq: _*)
       }
     }
-    table.estimatedRowsForPartition(pred)
+    table.estimatedRowsForPartition(meta, pred)
   }
 
   /** Pruned entry list: partition predicates (human strings → ordinals)
     * run inside the driver fold of [[IcebergTable.liveEntries]], then
     * min/max skipping ([[graft.sources.StatsSkipping]]) on each survivor's
     * decoded bounds. */
-  def files(): Seq[ManifestEntry] = {
-    val meta = table.currentMetadata
+  def files(): Seq[ManifestEntry] = files(table.currentMetadata)
+
+  private def files(meta: IcebergTableMetadata): Seq[ManifestEntry] = {
     val schemaByName = meta.schema.fields.map(f => f.name -> f).toMap
     val defs = IcebergTable.defsOf(meta)
     val defByName = defs.map(d => d.fieldName -> d).toMap
@@ -2777,7 +2693,7 @@ final class IcebergScanBuilder(
         }
       }
     val wanted = partIn ++ derivedPartIn
-    val entries = table.liveEntries(asOfSnapshot, e =>
+    val entries = table.liveEntries(meta, asOfSnapshot, e =>
       wanted.forall { case (c, values) =>
         e.partitionValues.get(c) match {
           // an entry whose partition struct LACKS the field entirely
@@ -2806,7 +2722,8 @@ final class IcebergScanBuilder(
   }
 
   def toDF(): DataFrame = {
-    val df = table.readEntries(files())
+    val meta = table.currentMetadata
+    val df = table.entriesDF(meta, files(meta))
     // spec: a snapshot read presents the SNAPSHOT'S schema, not the
     // current one — time travel to a pre-evolution snapshot must not
     // grow later columns (or keep later drops). Projection by name;
@@ -2815,7 +2732,6 @@ final class IcebergScanBuilder(
     asOfSnapshot match {
       case None => df
       case Some(id) =>
-        val meta = table.currentMetadata
         if (meta.snapshot(id).schemaId == meta.currentSchemaId) df
         else {
           import org.apache.spark.sql.functions.{col, lit}

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{Metadata, StructType}
 
 import graft.delta.{DeltaSnapshot, DeltaTable}
 import graft.hudi.HudiTable
-import graft.iceberg.IcebergTable
+import graft.iceberg.{IcebergTable, IcebergTableMetadata, ManifestFileInfo}
 import graft.model.InternalDataFile
 import graft.util.PhaseTimer
 
@@ -141,7 +141,7 @@ object SyncEngine {
       // backlog = commits after the watermark PLUS previously-inflight
       // commits that have since completed (their times may sort BELOW
       // the watermark — the late-data case)
-      val lateCompleted = target.inflightFor(source.sourceId).filter(source.isCompleted)
+      val lateCompleted = SyncTarget.inflightIn(st0, source.sourceId).filter(source.isCompleted)
       val pending = (lateCompleted ++ source.versionsAfter(wm.get)).distinct
       var added, removed = 0
       var highWater = wm.get
@@ -362,12 +362,7 @@ trait SyncTarget {
       .flatMap(_ => st.get(SyncEngine.VersionProp))
   }
   /** In-flight versions recorded at the last sync from `sourceId`. */
-  final def inflightFor(sourceId: String): Seq[String] = {
-    val st = syncState()
-    if (!st.get(SyncEngine.SourceIdProp).contains(sourceId)) Seq.empty
-    else st.get(SyncEngine.InflightProp).toSeq
-      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-  }
+  final def inflightFor(sourceId: String): Seq[String] = SyncTarget.inflightIn(syncState(), sourceId)
   /** Currently-live physical paths (empty for a fresh target). */
   def livePaths(): Set[String]
   /** Batch replay bracket: targets may defer per-commit maintenance
@@ -387,6 +382,14 @@ trait SyncTarget {
         * throws [[graft.model.ConcurrentSyncException]] on mismatch, so
         * a concurrent sync can never stack a stale diff. */
       cas: Option[graft.model.SyncCas] = None): Unit
+}
+
+private[sync] object SyncTarget {
+  /** In-flight versions the sync state `st` records for `sourceId`. */
+  def inflightIn(st: Map[String, String], sourceId: String): Seq[String] =
+    if (!st.get(SyncEngine.SourceIdProp).contains(sourceId)) Seq.empty
+    else st.get(SyncEngine.InflightProp).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 }
 
 // ---------------------------------------------------------------- Delta
@@ -491,18 +494,22 @@ private final class DeltaTarget(spark: SparkSession, val targetPath: String) ext
 // -------------------------------------------------------------- Iceberg
 
 private final class IcebergSource(t: IcebergTable) extends SyncSource {
+  /** The running attempt's view of `t`; a fresh one per call outside an
+    * attempt. */
+  private def view: IcebergSource.View =
+    SyncAttempt.view(this)(new IcebergSource.View(t)).getOrElse(new IcebergSource.View(t))
+  private def meta = view.meta
+  private def snapshotIds: Seq[Long] = meta.snapshotLog.map(_._2)
   def format = FormatTable.Iceberg.name
   def sourceId = s"iceberg:${t.tablePath}"
-  def dataRoot: String = t.dataRoot
-  def schema: StructType = t.sparkSchema
-  // the LIVE file set's spec, not the default: a rollback across a spec
-  // evolution leaves the default describing a layout no live file uses
-  def partitionColumns: Seq[String] = t.liveSpecDefs.map(_.spec)
-  def currentVersion: String = t.snapshotIds.last.toString
+  def dataRoot: String = t.dataRoot(meta)
+  def schema: StructType = IcebergTable.sparkSchemaOf(meta.schema)
+  def partitionColumns: Seq[String] = view.partitionColumns
+  def currentVersion: String = snapshotIds.last.toString
   def versionExists(v: String): Boolean =
-    v.toLongOption.exists(t.snapshotIds.contains)
+    v.toLongOption.exists(snapshotIds.contains)
   def versionsAfter(v: String): Seq[String] = {
-    val ids = t.snapshotIds
+    val ids = snapshotIds
     val i = ids.indexOf(v.toLong)
     if (i < 0) Seq.empty else ids.drop(i + 1).map(_.toString)
   }
@@ -522,49 +529,65 @@ private final class IcebergSource(t: IcebergTable) extends SyncSource {
         "compact the table onto its current spec before syncing")
     files
   }
-  def snapshotFiles(): Seq[InternalDataFile] = guardSingleSpec(t.snapshotDataFiles())
+  def snapshotFiles(): Seq[InternalDataFile] = {
+    val v = view
+    guardSingleSpec(t.snapshotDataFiles(v.meta, v.manifests))
+  }
   def changes(v: String): (Seq[InternalDataFile], Seq[String]) = {
-    val (adds, removes) = t.changeSet(v.toLong)
+    val (adds, removes) = t.changeSet(meta, v.toLong)
     (guardSingleSpec(adds), removes)
   }
   override def laterOf(a: String, b: String): String = {
-    val ids = t.snapshotIds
+    val ids = snapshotIds
     if (ids.indexOf(a.toLong) >= ids.indexOf(b.toLong)) a else b
   }
   override def recordKeyFields: Seq[String] =
-    t.currentMetadata.properties.get(SyncEngine.RecordKeyProp)
+    meta.properties.get(SyncEngine.RecordKeyProp)
       .toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
   /** The synced version's closest analyzed ancestor — its sketches are
     * computed over exactly the row set the sync replays, so they stay
     * valid on every target. Column (Puffin) and partition statistics
     * ride as separate keys; either may be absent. */
   override def statisticsProps(version: String): Map[String, String] = {
+    val m = meta
     val id = version.toLongOption
-    id.flatMap(i => t.statisticsFor(Some(i)))
+    id.flatMap(i => m.statisticsFor(Some(i)))
       .map(e => Map(SyncEngine.StatsPathProp -> e.path)).getOrElse(Map.empty) ++
-      id.flatMap(i => t.partitionStatisticsFor(Some(i)))
+      id.flatMap(i => m.partitionStatisticsFor(Some(i)))
         .map(e => Map(SyncEngine.PartitionStatsPathProp -> e.path)).getOrElse(Map.empty)
+  }
+}
+
+private object IcebergSource {
+  /** An Iceberg source as one sync attempt reads it: `metadata.json`
+    * once, and the current snapshot's manifest list — behind both the
+    * snapshot files and the live partition spec — at most once. A commit
+    * landing after the read is left to the next sync. */
+  final class View(t: IcebergTable) {
+    val meta: IcebergTableMetadata = t.currentMetadata
+    lazy val manifests: Seq[ManifestFileInfo] =
+      meta.currentSnapshot.fold(Seq.empty[ManifestFileInfo])(t.manifestList)
+    // the LIVE file set's spec, not the default: a rollback across a spec
+    // evolution leaves the default describing a layout no live file uses
+    lazy val partitionColumns: Seq[String] = IcebergTable.liveSpecDefs(meta, manifests).map(_.spec)
   }
 }
 
 private final class IcebergTarget(spark: SparkSession, val targetPath: String) extends SyncTarget {
   def format = FormatTable.Iceberg.name
   private def table = IcebergTable.forPath(spark, targetPath)
-  private def exists = table.log.latestVersion().nonEmpty
   /** Repair a corrupt current snapshot BEFORE consulting sync state:
     * recovery clears the watermark, so the engine plans a full sync
     * over the rolled-back table (ref `IcebergClient.java:251-286`). */
   def syncState(): Map[String, String] =
-    if (!exists) Map.empty
-    else { table.recoverIfCorrupt(); table.currentMetadata.properties }
-  def livePaths(): Set[String] =
-    if (!exists) Set.empty
-    else {
-      table.recoverIfCorrupt()
+    table.recoveredMetadata.fold(Map.empty[String, String])(_.properties)
+  def livePaths(): Set[String] = {
+    val t = table
+    t.recoveredMetadata
       // recovery of a first-and-only snapshot leaves no current snapshot
-      if (table.currentMetadata.currentSnapshotId.isEmpty) Set.empty
-      else table.snapshotDataFiles().map(_.physicalPath).toSet
-    }
+      .flatMap(m => m.currentSnapshot.map(s => t.snapshotDataFiles(m, t.manifestList(s))))
+      .fold(Set.empty[String])(_.map(_.physicalPath).toSet)
+  }
   def commit(
       schema: StructType, partitionColumns: Seq[String], sourceDataRoot: String,
       adds: Seq[InternalDataFile], removePaths: Seq[String],

@@ -18,7 +18,10 @@ import org.apache.parquet.schema.MessageType
  * Driver-side reads and writes of metadata files.
  *
  * In-place rewrites of a metadata file (`hoodie.properties`, Iceberg's
- * version hint, the Delta key-index config) go through [[replace]].
+ * version hint, the Delta key-index config) go through [[replace]]. The
+ * commit point of each commit log (a Delta JSON commit, an Iceberg
+ * `vN.metadata.json`, a completed Hudi instant) goes through
+ * [[createExclusive]].
  *
  * Whole-file reads of small metadata files: Hudi instants and
  * `hoodie.properties`, Delta commits and `_last_checkpoint`, Iceberg
@@ -64,6 +67,19 @@ object MetaFiles {
     }
     if (!raw.rename(tmp, target))
       FileContext.getFileContext(raw.getUri, raw.getConf).rename(tmp, target, Options.Rename.OVERWRITE)
+  }
+
+  /** Creates `target` holding `bytes` unless it exists; false when it
+    * does. The bytes are written aside in the target's directory, so a
+    * crash mid-write never leaves a torn target, then published with
+    * put-if-absent ([[AtomicPublish]]), so of two racing writers exactly
+    * one wins. The publish consumes the file written aside whether it
+    * wins or loses. */
+  def createExclusive(fs: FileSystem, conf: Configuration, target: Path, bytes: Array[Byte]): Boolean = {
+    val tmp = new Path(target.getParent, s".tmp_${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    AtomicPublish.putIfAbsent(fs, conf, tmp, target)
   }
 
   /** Rows of parquet `files`, read on the driver, projected to `columns`

@@ -19,7 +19,7 @@ class IcebergConflictSpec extends SparkTestBase {
     val dir = tmpDir("ice_conflict")
     val t = IcebergTable.create(spark, s"$dir/t", orders.repartition(4))
     // the rewrite's stale view: four data files, no delete files yet
-    val stale = t.liveEntries(None)
+    val stale = t.liveEntries(t.currentMetadata, None)
     val df = t.toDF()
     t.deleteWhere(col("o_orderkey") % 2 === 0) // racer's position deletes land
     val e = intercept[IllegalArgumentException](
@@ -33,7 +33,7 @@ class IcebergConflictSpec extends SparkTestBase {
   test("replace aborts on a racing EQUALITY delete (global scope conflicts everywhere)") {
     val dir = tmpDir("ice_conflict_eq")
     val t = IcebergTable.create(spark, s"$dir/t", orders.repartition(3))
-    val stale = t.liveEntries(None)
+    val stale = t.liveEntries(t.currentMetadata, None)
     val df = t.toDF()
     val someKeys = orders.select("o_orderkey").limit(10)
     t.deleteByEquality(someKeys)

@@ -375,7 +375,7 @@ class IcebergTableSpec extends SparkTestBase {
     val expectBucket = graft.functions.IcebergMurmur3
       .bucketValue(org.apache.spark.sql.types.LongType, key.toString, 4).toString
     assert(pruned.forall(_.partitionValues("o_custkey_bucket") == expectBucket))
-    assert(t.readFiles(pruned).filter(col("o_custkey") === key).count() ==
+    assert(t.entriesDF(t.currentMetadata, pruned).filter(col("o_custkey") === key).count() ==
       src.filter(col("o_custkey") === key).count())
     // truncate pruning: priority equality scans only its prefix dirs
     val pr = src.select("o_orderpriority").head.getString(0)

@@ -5,7 +5,7 @@ import java.net.URI
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FileStatus, FileSystem, Path, RawLocalFileSystem}
 
 /** The local filesystem under the `counted` scheme. Each status,
   * existence probe or listing counts as one read op in Hadoop's FS
@@ -42,13 +42,20 @@ class CountedLocalFileSystem extends RawLocalFileSystem {
   }
 }
 
+/** [[CountedLocalFileSystem]] behind `FileContext`, which the commit
+  * logs' put-if-absent publish renames through on any scheme but
+  * `file`, so a table under the counted scheme can be written. */
+class CountedFs(uri: URI, conf: Configuration) extends DelegateToFileSystem(
+  uri, new CountedLocalFileSystem, conf, CountedLocalFileSystem.Scheme, false)
+
 object CountedLocalFileSystem {
   val Scheme = "counted"
 
   /** `local` (an absolute local path) under the counted scheme, after
-    * registering the scheme in `conf`. */
+    * registering the scheme in `conf` for `FileSystem` and `FileContext`. */
   def path(conf: Configuration, local: String): String = {
     conf.set(s"fs.$Scheme.impl", classOf[CountedLocalFileSystem].getName)
+    conf.set(s"fs.AbstractFileSystem.$Scheme.impl", classOf[CountedFs].getName)
     s"$Scheme://${new Path(local).toUri.getPath}"
   }
 

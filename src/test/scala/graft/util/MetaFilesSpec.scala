@@ -125,6 +125,25 @@ class MetaFilesSpec extends AnyFunSuite {
       "protocol and files:\n" + replays.mkString("\n"))
   }
 
+  test("createExclusive publishes a target once and leaves no file written aside") {
+    val sub = Files.createDirectory(dir.resolve("exclusive"))
+    val target = new Path(sub.resolve("v1.metadata.json").toUri)
+    val conf = new Configuration()
+    assert(MetaFiles.createExclusive(fs, conf, target, "first".getBytes(UTF_8)))
+    assert(!MetaFiles.createExclusive(fs, conf, target, "second".getBytes(UTF_8)))
+    assert(new String(onDisk(target), UTF_8) == "first")
+    val left = Files.list(sub).iterator.asScala.map(_.getFileName.toString).toSeq
+    assert(left == Seq("v1.metadata.json"), s"files left beside the target: $left")
+  }
+
+  test("commit logs publish only through MetaFiles.createExclusive in src/main") {
+    val sources = Files.walk(srcMain).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("MetaFiles.scala")).toSeq
+    val hits = sourceHits(sources, "AtomicPublish.putIfAbsent(")
+    assert(hits.isEmpty, "publish a commit-log file through MetaFiles.createExclusive:\n" +
+      hits.mkString("\n"))
+  }
+
   test("a rewritten hoodie.properties is read whole by concurrent readers") {
     val table = dir.resolve("hudi_props").toUri.toString
     val timeline = new graft.hudi.HudiTimeline(table, new Configuration())
